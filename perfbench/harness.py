@@ -42,9 +42,12 @@ def prepare_env(root: str, work: str) -> None:
     os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p)
-    # every JVM, spark-submit's launcher included: no hsperfdata in /tmp
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    # the driver JVM and spark-submit's launcher JVM: temp files in the
+    # work dir and no hsperfdata in /tmp
+    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    os.environ["SPARK_LAUNCHER_OPTS"] = java_opts
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--driver-java-options", shlex.quote(java_opts),
         "--conf", shlex.quote(
             f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"),
         # the traced run maps every job and stage back to its span at
