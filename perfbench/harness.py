@@ -214,12 +214,40 @@ class Ops:
         return [s if ok else math.inf for k, s, ok, _ in self.records
                 if kinds is None or k in kinds]
 
-    def throughput(self) -> float:
-        """Items per second: the median over operations of each one's
-        items divided by its time (a failed operation counts as 0), so one
-        stalled operation in a short run does not swing the figure."""
-        return median([n / s if ok and s > 0 else 0.0
-                       for _, s, ok, n in self.records])
+    def weights(self, mix: dict[str, float] | None) -> list[float]:
+        """Per record: its kind's share in ``mix`` divided by the number of
+        records of that kind, so every kind counts by its share of the
+        intended mix however many of it the run sent before its deadline
+        (a run that stops mid-deck would otherwise move a percentile that
+        falls between two kinds). Without a mix every record weighs 1."""
+        if not mix:
+            return [1.0] * len(self.records)
+        n: dict[str, int] = {}
+        for r in self.records:
+            n[r[0]] = n.get(r[0], 0) + 1
+        return [mix.get(r[0], 0.0) / n[r[0]] for r in self.records]
+
+    def percentile(self, q: float, mix=None) -> float:
+        """Weighted nearest-rank latency percentile (q in 0..100); a
+        failed operation counts as infinitely slow."""
+        pairs = sorted(zip(self.latencies(), self.weights(mix)))
+        total = sum(w for _, w in pairs)
+        acc = 0.0
+        for v, w in pairs:
+            acc += w
+            if acc >= q / 100 * total - 1e-12:
+                return v
+        return math.nan
+
+    def throughput(self, mix=None) -> float:
+        """Items per second of operation time: all items the operations
+        handled over the summed time they took, each record weighted as
+        in :meth:`weights` (a failed operation adds its time but no
+        items), so slow operations weigh in full."""
+        w = self.weights(mix)
+        busy = sum(wi * r[1] for wi, r in zip(w, self.records))
+        items = sum(wi * r[3] for wi, r in zip(w, self.records) if r[2])
+        return items / busy if busy > 0 else math.nan
 
 
 def more(ops: Ops, deadline: float, clock) -> bool:
@@ -350,7 +378,10 @@ class Tracer:
     def spark_counts(self) -> None:
         """Attach Spark job, task, shuffle-write/read byte and input-row
         counts to every span (self counts: jobs launched while the span was
-        the innermost one on the main thread)."""
+        the innermost one on the main thread), split the summed task time
+        of its stages into ``task_ms_write`` (stages that write output
+        rows) and ``task_ms_other``, and keep each job's wall interval
+        (epoch ms) in ``job_intervals``."""
         if self.sc is None or not self.spans:
             return
         sc = self.sc
@@ -365,10 +396,13 @@ class Tracer:
         for i in range(stages.size()):
             s = stages.apply(i)
             per_stage[s.stageId()] = (s.numTasks(), s.shuffleWriteBytes(),
-                                      s.shuffleReadBytes(), s.inputRecords())
+                                      s.shuffleReadBytes(), s.inputRecords(),
+                                      s.executorRunTime(),
+                                      s.outputRecords() > 0)
         for s in self.spans:
             s.update(jobs=0, tasks=0, shuffle_write=0, shuffle_read=0,
-                     input_rows=0)
+                     input_rows=0, task_ms_write=0, task_ms_other=0,
+                     job_intervals=[])
         jobs = store.jobsList(None)
         for i in range(jobs.size()):
             j = jobs.apply(i)
@@ -380,6 +414,10 @@ class Tracer:
                 continue
             rec = self.spans[idx]
             rec["jobs"] += 1
+            start, end = j.submissionTime(), j.completionTime()
+            if start.isDefined() and end.isDefined():
+                rec["job_intervals"].append((start.get().getTime(),
+                                             end.get().getTime()))
             ids = j.stageIds()
             for k in range(ids.size()):
                 st = per_stage.get(ids.apply(k))
@@ -389,6 +427,20 @@ class Tracer:
                 rec["shuffle_write"] += st[1]
                 rec["shuffle_read"] += st[2]
                 rec["input_rows"] += st[3]
+                rec["task_ms_write" if st[5] else "task_ms_other"] += st[4]
+
+    def outside_jobs(self, idx: int) -> float:
+        """Seconds of span ``idx`` during which none of the Spark jobs
+        launched under it ran (driver-side work such as file renames)."""
+        iv = sorted(iv for i in self.subtree(idx)
+                    for iv in self.spans[i].get("job_intervals", ()))
+        busy, end = 0.0, -math.inf
+        for a, b in iv:
+            if b > end:
+                busy += b - max(a, end)
+                end = b
+        s = self.spans[idx]
+        return max(0.0, s["end"] - s["start"] - busy / 1000)
 
     def subtree(self, idx: int) -> list[int]:
         """``idx`` and every span nested under it."""

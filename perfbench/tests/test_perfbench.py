@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -30,8 +31,10 @@ SCRATCH = os.path.join(ROOT, ".perfbench_work", f"tests-{os.getpid()}")
 
 @pytest.fixture
 def scratch(request):
-    """A fresh directory inside the checkout, removed afterwards."""
-    d = os.path.join(SCRATCH, request.node.name)
+    """A fresh directory inside the checkout, removed afterwards (named
+    without the brackets of a parametrized test: Spark reads them as a
+    glob)."""
+    d = os.path.join(SCRATCH, re.sub(r"[^\w.-]", "_", request.node.name))
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     yield d
@@ -54,8 +57,8 @@ def test_metric_tables_match_benchmark_json():
     assert [(m["name"], m["unit"]) for m in spec["end_to_end"]] == \
         list(run.END_TO_END)
     assert [(m["name"], m["unit"]) for m in spec["per_layer"]] == \
-        list(run.PER_LAYER)
-    assert {w["name"] for w in spec["workloads"]} <= set(WORKLOADS)
+        run.per_layer()
+    assert [w["name"] for w in spec["workloads"]] == list(run.LISTED)
 
 
 @pytest.mark.parametrize("trace", [0, 1])
@@ -68,7 +71,7 @@ def test_every_metric_is_emitted_with_its_unit(workload, trace):
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] and result["failed"] == 0
     assert result["attempted"] >= 1
-    want = run.PER_LAYER if trace else run.END_TO_END
+    want = run.per_layer() if trace else run.END_TO_END
     assert {n: m["unit"] for n, m in result["metrics"].items()} == dict(want)
     assert all(isinstance(m["value"], float)
                for m in result["metrics"].values())
@@ -80,7 +83,13 @@ def test_every_metric_is_emitted_with_its_unit(workload, trace):
     assert {"nproc", "local_n", "loadavg", "steal_share"} <= set(
         detail["env"])
     if trace:
-        assert "trace.overhead_ms_per_op" in detail["layer_metrics"]
+        layers = detail["layer_metrics"]
+        assert {n for n, _ in run.workload_class(workload).layers} <= set(
+            layers)
+        assert "trace.overhead_ms_per_op" in layers
+        assert layers["session.start_s"] > 0
+        if run.workload_class(workload).uses_python_workers:
+            assert layers["session.python_worker_warmup_s"] > 0
 
 
 def test_missing_package_fails_without_a_result(scratch):
@@ -120,6 +129,51 @@ def _ran(workload: str, spark, work: str, seconds: float):
     wl.check()
     assert ops.failed == 0, "clean output must pass its check"
     return wl, ops
+
+
+class _Counter:
+    """A clock that advances by 1000 s at every reading, far more than any
+    operation takes: ``run(1000 * n + 500, clock)`` sends ``n``
+    operations."""
+
+    def __init__(self):
+        self.t = 0
+
+    def __call__(self) -> int:
+        self.t += 1000
+        return self.t
+
+
+#: operations a traced pass needs to reach every layer of a workload: all
+#: six entities and one snapshot swap; two request decks with a runtime
+#: model list after three and after four writes
+TRACED_OPS = {"etl_upsert": 8, "autoapi_read_write": 60,
+              "curation_batch": 1, "event_stream": 2}
+
+
+@pytest.mark.parametrize("workload", WORKLOADS)
+def test_exercised_layer_metrics_are_above_zero(workload, spark, scratch):
+    """Each layer metric a workload declares is above 0 once a traced pass
+    has reached that layer (the tracing overhead is a difference of two
+    times and is not declared by any workload)."""
+    ops = harness.Ops()
+    tracer = harness.Tracer(spark.sparkContext, enabled=True)
+    wl = run.workload_class(workload)(scratch, 5, True, ops, tracer)
+    wl.generate()
+    wl.setup(spark)
+    for point in wl.trace_points():
+        tracer.patch(*point)
+    try:
+        wl.run(1000 * TRACED_OPS[workload] + 500, _Counter())
+    finally:
+        tracer.unpatch()
+        tracer.enabled = False
+    tracer.spark_counts()
+    wl.check()
+    assert len(ops.records) == TRACED_OPS[workload] and ops.failed == 0
+    got = wl.layer_metrics()
+    assert {n: got.get(n) for n, _ in wl.layers
+            if not got.get(n, 0) > 0} == {}
 
 
 def test_corrupt_etl_store_is_caught(spark, scratch):

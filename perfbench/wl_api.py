@@ -5,9 +5,17 @@ envelope, Zipf-skewed point reads and SQL over parquet models, plus put and
 delete writes on a runtime model interleaved with reads of that model.
 
 ``Engine.put`` is lazy: each write stacks an anti-join onto the model's
-lineage and defers its cost to later reads. Every ``CYCLE`` requests the
-runtime model is declared again from its initial rows (outside the timed
-region), so the lineage depth a read sees depends only on the seed."""
+lineage and defers its cost to later reads. The client lists the runtime
+model right after declaring it and again after each write (it refreshes
+its view), so those lists see every lineage depth from 0 to
+``WRITES_PER_CYCLE``; then the model is declared again from its initial
+rows (outside the timed region), so the depth a request sees depends only
+on the seed.
+
+The traffic shape (the ``MIX`` counts, Zipf s=1.1 for point reads, the
+refresh after every write, ``WRITES_PER_CYCLE``) is an assumption of this
+benchmark, not a measured trace; perfbench/README.md says which metrics
+move with each part of it."""
 
 from __future__ import annotations
 
@@ -18,20 +26,26 @@ import random
 from . import gen
 from .harness import median, more
 
-CYCLE = 50
-
-#: (kind, count) in every deck of 25 requests; each deck is shuffled by
-#: the seed, so every run sends the same mix in a different order
+#: (kind, count) in every deck of 23 requests; each deck is shuffled by
+#: the seed, so every run sends the same mix in a different order. The
+#: runtime-model lists are not in the deck: one follows every declaration
+#: and every write.
 MIX = (("eq_filter", 3), ("range_filter", 2), ("tag_search", 2),
        ("text_search", 2), ("group_options", 1), ("page_envelope", 2),
        ("read", 4), ("sql", 2), ("put", 2), ("delete", 1),
-       ("runtime_list", 2), ("runtime_read", 2))
+       ("runtime_read", 2))
+#: writes applied to the runtime model before it is declared again
+WRITES_PER_CYCLE = 4
+#: requests per deck by kind, runtime-model lists included: one after each
+#: of the deck's writes, one after each declaration
+DECK_MIX = {**dict(MIX), "runtime_list": 3 + 3 / WRITES_PER_CYCLE}
 LIST_KINDS = ("eq_filter", "range_filter", "tag_search", "text_search",
               "group_options", "page_envelope")
 WRITE_KINDS = ("put", "delete")
 #: runtime-model list latency is reported per bucket of writes applied
-#: to the model since it was declared
-BUCKETS = ((0, 3, "w00-03"), (4, 7, "w04-07"), (8, 10 ** 9, "w08-plus"))
+#: to the model since it was declared; every cycle lists once at depth 0
+#: and twice in each other bucket
+BUCKETS = ((0, 0, "w0"), (1, 2, "w1-2"), (3, WRITES_PER_CYCLE, "w3-4"))
 
 TICKETS = {"name": "tickets", "keys": {
     "tid": {"type": "string", "modifiers": [{"name": "id"}]},
@@ -49,7 +63,20 @@ _WORDS = ("spark", "line", "scan", "sort", "hash", "table", "stream", "key",
 class AutoApi:
     name = "autoapi_read_write"
     uses_python_workers = False
-    warmup_s = 16.0
+    warmup_s = 12.0
+    mix = DECK_MIX
+    #: the per-layer metrics this workload reports with ``--trace 1``
+    layers = (
+        ("catalog.load_table_ms", "ms"),
+        ("catalog.load_table_calls_per_op", "count"),
+        ("listquery.plan_ms", "ms"),
+        *((f"listquery.exec_ms.{k}", "ms") for k in LIST_KINDS),
+        ("listquery.jobs_per_op", "count"), ("listquery.tasks_per_op", "count"),
+        ("listquery.rows_read_per_row_returned", "ratio"),
+        ("engine.put_ms", "ms"), ("engine.read_ms", "ms"),
+        ("engine.sql_ms", "ms"),
+        *((f"engine.runtime_list_ms.{b}", "ms") for _, _, b in BUCKETS),
+    )
 
     def __init__(self, work: str, seed: int, tiny: bool, ops, tracer):
         self.sf = os.path.join(work, "api", "sf")
@@ -90,7 +117,6 @@ class AutoApi:
         self.zipf_cust = gen.Zipf(self.rng, range(self.n_cust))
         self.samples = []
         self.deck: list[str] = []
-        self.pos = 0
         self._declare_tickets()
 
     def _declare_tickets(self) -> None:
@@ -98,6 +124,7 @@ class AutoApi:
                                              self.initial_tickets])
         self.mirror = {r["tid"]: dict(r) for r in self.initial_tickets}
         self.writes = 0
+        self.refresh = True      # the next request lists the model
 
     def trace_points(self):
         from servihabitat_etl_spyke_spark import catalog, engine
@@ -108,6 +135,9 @@ class AutoApi:
 
     def _draw(self) -> tuple[str, dict]:
         rng = self.rng
+        if self.refresh:
+            self.refresh = False
+            return "runtime_list", {"status": rng.choice(_STATUSES)}
         if not self.deck:
             self.deck = [k for k, n in MIX for _ in range(n)]
             rng.shuffle(self.deck)
@@ -161,8 +191,6 @@ class AutoApi:
             p = {"ids": [rng.choice(sorted(self.mirror))
                          if self.mirror and rng.random() < 0.9
                          else "t-missing"]}
-        elif kind == "runtime_list":
-            p = {"status": rng.choice(_STATUSES)}
         else:  # runtime_read
             p = {"id": (rng.choice(sorted(self.mirror))
                         if self.mirror and rng.random() < 0.9
@@ -200,9 +228,8 @@ class AutoApi:
 
     def run(self, deadline: float, clock) -> None:
         while more(self.ops, deadline, clock):
-            if self.pos and self.pos % CYCLE == 0:
+            if self.writes == WRITES_PER_CYCLE and not self.refresh:
                 self._declare_tickets()
-            self.pos += 1
             kind, p = self._draw()
             writes_before = self.writes
             self.tracer.op_id = len(self.ops.records)
@@ -211,6 +238,7 @@ class AutoApi:
             ok = self.ops.records[-1][2]
             if kind in WRITE_KINDS:
                 self.writes += 1
+                self.refresh = True
                 self._apply_to_mirror(kind, p)
             self.samples.append({"kind": kind, "p": p, "out": out, "ok": ok,
                                  "span": sp,
@@ -308,11 +336,11 @@ class AutoApi:
 
     def metrics(self) -> dict:
         from .harness import percentile
-        lat = self.ops.latencies()
+        ops, mix = self.ops, self.mix
         return {
-            "api_ops_per_s": (self.ops.throughput(), "1/s"),
-            "api_p50_ms": (1000 * percentile(lat, 50), "ms"),
-            "api_p90_ms": (1000 * percentile(lat, 90), "ms"),
+            "api_ops_per_s": (ops.throughput(mix), "1/s"),
+            "api_p50_ms": (1000 * ops.percentile(50, mix), "ms"),
+            "api_p90_ms": (1000 * ops.percentile(90, mix), "ms"),
             "api_write_p50_ms": (
                 1000 * percentile(self.ops.latencies(WRITE_KINDS), 50), "ms"),
         }
@@ -322,8 +350,9 @@ class AutoApi:
         out = {
             "catalog.load_table_ms": 1000 * median(
                 tr.durations("catalog.load_table")),
-            "catalog.load_table_calls": float(
-                len(tr.durations("catalog.load_table"))),
+            "catalog.load_table_calls_per_op": len(
+                tr.durations("catalog.load_table"))
+            / max(1, len(self.ops.records)),
             "listquery.plan_ms": 1000 * median(
                 tr.durations("listquery.plan")),
         }

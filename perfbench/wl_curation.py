@@ -23,6 +23,13 @@ class Curation:
     name = "curation_batch"
     uses_python_workers = True
     warmup_s = 8.0
+    mix = None
+    #: the per-layer metrics this workload reports with ``--trace 1``
+    layers = (
+        *((f"curation.{q}_s", "s") for q in CHAIN),
+        ("curation.shuffle_write_mb", "MB"), ("curation.tasks", "count"),
+        ("dedup.candidate_pairs_per_confirmed_pair", "ratio"),
+    )
 
     def __init__(self, work: str, seed: int, tiny: bool, ops, tracer):
         self.sf = os.path.join(work, "curation", "sf")

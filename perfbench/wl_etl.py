@@ -19,7 +19,16 @@ from .harness import dir_bytes, median, more
 class EtlUpsert:
     name = "etl_upsert"
     uses_python_workers = False
-    warmup_s = 8.0
+    warmup_s = 6.0
+    #: every entity's batches count alike
+    mix = {f"etl.{e}": 1.0 for e in gen.ENTITIES}
+    #: the per-layer metrics this workload reports with ``--trace 1``
+    layers = (
+        *((f"etl.pipeline_task_ms.{e}", "ms") for e in gen.ENTITIES),
+        ("etl.merge_write_task_ms", "ms"), ("etl.swap_driver_ms", "ms"),
+        ("etl.bytes_written_per_input_byte", "ratio"),
+        ("etl.shuffle_mb", "MB"),
+    )
 
     def __init__(self, work: str, seed: int, tiny: bool, ops, tracer):
         self.dir = os.path.join(work, "etl")
@@ -68,10 +77,7 @@ class EtlUpsert:
 
     def trace_points(self):
         etl = self.etl
-        return [(etl, "run_entity_pipeline", "etl.run_entity_pipeline"),
-                (etl, "upsert_into_path", "etl.upsert_into_path"),
-                (etl, "keyed_upsert", "etl.keyed_upsert"),
-                (etl, "overwrite_via_tmp", "etl.swap_write")]
+        return [(etl, "overwrite_via_tmp", "etl.swap")]
 
     # -- timed loop ---------------------------------------------------------
 
@@ -140,7 +146,7 @@ class EtlUpsert:
                                    else cum_in.get(o["entity"], 0)
                                    + o["in_bytes"])
         return {
-            "etl_rows_per_s": (self.ops.throughput(), "1/s"),
+            "etl_rows_per_s": (self.ops.throughput(self.mix), "1/s"),
             "etl_batch_p50_s": (median(list(rounds.values())), "s"),
             "etl_store_bytes_per_input_byte": (
                 sum(last_store.values()) / max(1, sum(cum_in.values())),
@@ -149,17 +155,24 @@ class EtlUpsert:
         }
 
     def layer_metrics(self) -> dict:
+        """Per entity batch, from Spark's status store: the summed task
+        time of the stages that write no rows (scan, decode, entity
+        transform, in-batch dedup) and of the stage that writes the new
+        snapshot (anti-join against the stored rows, union, parquet
+        write); the swap's driver time outside Spark jobs (recovery check,
+        stale stamp, renames, removal of the old snapshot)."""
         tr = self.tracer
+        traced = [o for o in self.op_log if o["span"] is not None]
         out = {}
         for e in gen.ENTITIES:
-            out[f"etl.pipeline_ms.{e}"] = 1000 * median(
-                [s["end"] - s["start"] for s in tr.spans
-                 if s["name"] == "etl.op" and s.get("entity") == e])
-        out["etl.keyed_upsert_ms"] = 1000 * median(
-            tr.durations("etl.upsert_into_path"))
-        out["etl.swap_write_ms"] = 1000 * median(
-            tr.durations("etl.swap_write"))
-        traced = [o for o in self.op_log if o["span"] is not None]
+            out[f"etl.pipeline_task_ms.{e}"] = median(
+                [tr.total(o["span"]["idx"], "task_ms_other")
+                 for o in traced if o["entity"] == e])
+        out["etl.merge_write_task_ms"] = median(
+            [tr.total(o["span"]["idx"], "task_ms_write") for o in traced])
+        out["etl.swap_driver_ms"] = 1000 * median(
+            [tr.outside_jobs(s["idx"]) for s in tr.spans
+             if s["name"] == "etl.swap" and s["end"] is not None])
         out["etl.bytes_written_per_input_byte"] = (
             sum(o["store_bytes"] for o in traced)
             / max(1, sum(o["in_bytes"] for o in traced)))

@@ -33,7 +33,17 @@ QUERIES = ("state_machine", "tumbling", "sink")
 class EventStream:
     name = "event_stream"
     uses_python_workers = True
-    warmup_s = 10.0
+    warmup_s = 8.0
+    mix = None
+    #: the per-layer metrics this workload reports with ``--trace 1``
+    layers = (
+        ("streaming.add_batch_ms", "ms"),
+        ("streaming.state_rows_total", "count"),
+        ("streaming.state_memory_mb", "MB"),
+        ("streaming.input_rows_per_batch", "count"),
+        ("streaming.sink_merge_ms", "ms"),
+        ("etl.bytes_written_per_input_byte", "ratio"),
+    )
 
     def __init__(self, work: str, seed: int, tiny: bool, ops, tracer):
         self.dir = os.path.join(work, "stream")
@@ -61,10 +71,8 @@ class EventStream:
 
     def setup(self, spark) -> None:
         from servihabitat_etl_spyke_spark import streaming
-        from servihabitat_etl_spyke_spark.operators import etl
         from servihabitat_etl_spyke_spark.streaming import sinks
-        self.spark, self.streaming, self.sinks, self.etl = (
-            spark, streaming, sinks, etl)
+        self.spark, self.streaming, self.sinks = spark, streaming, sinks
         self.op_log = []
         self.progress = []
         self._reset()
@@ -118,8 +126,7 @@ class EventStream:
         self.landed += 1
 
     def trace_points(self):
-        return [(self.sinks, "upsert_into_path", "streaming.sink_merge"),
-                (self.etl, "overwrite_via_tmp", "etl.swap_write")]
+        return [(self.sinks, "upsert_into_path", "streaming.sink_merge")]
 
     # -- sinks --------------------------------------------------------------
 
@@ -258,7 +265,6 @@ class EventStream:
                 [p.numInputRows for _, p in data]),
             "streaming.sink_merge_ms": 1000 * median(
                 tr.durations("streaming.sink_merge")),
-            "etl.swap_write_ms": 1000 * median(tr.durations("etl.swap_write")),
             "etl.bytes_written_per_input_byte": (
                 sum(o["store_bytes"] for o in self.op_log)
                 / max(1, sum(o["rows_bytes"] for o in self.op_log))),
