@@ -18,10 +18,25 @@ import traceback
 import pandas as pd
 
 
+#: CPUs the run is confined to: the driver, the JVM and every thread and
+#: process they start
+BENCH_CPUS = 1
+
+
+def pin_cpus() -> None:
+    """Confine this process, and so everything it starts later, to the last
+    ``BENCH_CPUS`` CPUs it may use. On a few vCPUs of a shared host a
+    Spark operation hands work between a dozen threads; spread over vCPUs,
+    each hand-off waits whenever the host has descheduled the vCPU it goes
+    to, so operations slowed by up to 60% when the host was busy. On one
+    CPU a busy host slows every thread alike."""
+    cpus = sorted(os.sched_getaffinity(0))[-BENCH_CPUS:]
+    os.sched_setaffinity(0, cpus)
+
+
 def spark_width() -> int:
-    """``local[n]`` width: every core the process may use, at most 4 (the
-    benchmark's inputs are small; wider only adds scheduling noise)."""
-    return max(1, min(4, len(os.sched_getaffinity(0))))
+    """``local[n]`` width: one task thread per CPU the run may use."""
+    return len(os.sched_getaffinity(0))
 
 
 def prepare_env(root: str, work: str) -> None:
@@ -43,11 +58,16 @@ def prepare_env(root: str, work: str) -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p)
     # the driver JVM and spark-submit's launcher JVM: temp files in the
-    # work dir and no hsperfdata in /tmp
+    # work dir and no hsperfdata in /tmp. The driver JVM compiles with C1
+    # only: every run starts a fresh JVM, and C2 was still compiling Spark
+    # 50 s into a run, its compiler threads taking more CPU than the
+    # engine's own, so a run measured how far the JIT had got (C1 reaches
+    # its steady speed within the warm-up; see README.md)
     java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    driver_opts = f"{java_opts} -XX:TieredStopAtLevel=1"
     os.environ["SPARK_LAUNCHER_OPTS"] = java_opts
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
-        "--driver-java-options", shlex.quote(java_opts),
+        "--driver-java-options", shlex.quote(driver_opts),
         "--conf", shlex.quote(
             f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"),
         # the traced run maps every job and stage back to its span at
@@ -228,16 +248,26 @@ class Ops:
         return [mix.get(r[0], 0.0) / n[r[0]] for r in self.records]
 
     def percentile(self, q: float, mix=None) -> float:
-        """Weighted nearest-rank latency percentile (q in 0..100); a
-        failed operation counts as infinitely slow."""
+        """Weighted latency percentile (q in 0..100): each record stands
+        at the middle of its weight on the cumulative weight, and the
+        percentile is interpolated between the two records around it, so
+        it moves smoothly rather than jumping from one record to the next.
+        A failed operation counts as infinitely slow."""
         pairs = sorted(zip(self.latencies(), self.weights(mix)))
         total = sum(w for _, w in pairs)
-        acc = 0.0
+        if not total:
+            return math.nan
+        at = q / 100 * total
+        acc, prev = 0.0, None
         for v, w in pairs:
-            acc += w
-            if acc >= q / 100 * total - 1e-12:
-                return v
-        return math.nan
+            mid = acc + w / 2
+            if at <= mid:
+                if prev is None or math.isinf(v):
+                    return v
+                v0, at0 = prev
+                return v0 + (v - v0) * (at - at0) / (mid - at0)
+            prev, acc = (v, mid), acc + w
+        return pairs[-1][0]
 
     def throughput(self, mix=None) -> float:
         """Items per second of operation time: all items the operations

@@ -11,8 +11,8 @@ times, sample counts, the workload's own named metrics) and, last, the
 result ``{"correct", "attempted", "failed", "metrics"}``.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` reports the
-per-layer metrics: the workload runs ``--seconds`` untraced, is set up
-again, and runs ``--seconds`` traced; the tracing overhead is the
+per-layer metrics: the workload runs half of ``--seconds`` untraced, is
+set up again, and runs the other half traced; the tracing overhead is the
 per-operation difference between the two passes over the same
 operations. Exit status: 0 when every output check passed, 1 when one
 failed, 2 when the engine package is missing from the checkout."""
@@ -130,7 +130,7 @@ def bench(args, work: str) -> tuple[dict, dict]:
     phase("warmup")
     layers: dict[str, float] = {}
     if args.trace:
-        wl.run(clock() + args.seconds, clock)
+        wl.run(clock() + args.seconds / 2, clock)
         base = [r[1] for r in ops.records]
         ops = wl.ops = harness.Ops()
         wl.setup(spark)
@@ -138,7 +138,7 @@ def bench(args, work: str) -> tuple[dict, dict]:
         for point in wl.trace_points():
             tracer.patch(*point)
         try:
-            wl.run(clock() + args.seconds, clock)
+            wl.run(clock() + args.seconds / 2, clock)
         finally:
             tracer.unpatch()
             tracer.enabled = False
@@ -217,6 +217,7 @@ def main(argv=None) -> int:
 
     work = os.path.join(ROOT, ".perfbench_work",
                         f"{args.workload}-{os.getpid()}")
+    harness.pin_cpus()
     harness.prepare_env(ROOT, work)
     # a terminated run still stops Spark and removes its scratch space
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))

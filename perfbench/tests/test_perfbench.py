@@ -145,8 +145,8 @@ class _Counter:
 
 
 #: operations a traced pass needs to reach every layer of a workload: all
-#: six entities and one snapshot swap; two request decks with a runtime
-#: model list after three and after four writes
+#: six entities and one snapshot swap; two request decks, which list the
+#: runtime model at every lineage depth
 TRACED_OPS = {"etl_upsert": 8, "autoapi_read_write": 60,
               "curation_batch": 1, "event_stream": 2}
 

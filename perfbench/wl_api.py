@@ -2,15 +2,15 @@
 one closed-loop client. A seeded mix of list requests (equality filter,
 range filter, tagged search, free-text search), group options, the page
 envelope, Zipf-skewed point reads and SQL over parquet models, plus put and
-delete writes on a runtime model interleaved with reads of that model.
+delete writes on a runtime model, each followed by a list of that model.
 
 ``Engine.put`` is lazy: each write stacks an anti-join onto the model's
 lineage and defers its cost to later reads. The client lists the runtime
 model right after declaring it and again after each write (it refreshes
 its view), so those lists see every lineage depth from 0 to
 ``WRITES_PER_CYCLE``; then the model is declared again from its initial
-rows (outside the timed region), so the depth a request sees depends only
-on the seed.
+rows (outside the timed region). A list's cost grows steeply with depth,
+so each depth is its own request kind in the mix.
 
 The traffic shape (the ``MIX`` counts, Zipf s=1.1 for point reads, the
 refresh after every write, ``WRITES_PER_CYCLE``) is an assumption of this
@@ -26,26 +26,26 @@ import random
 from . import gen
 from .harness import median, more
 
-#: (kind, count) in every deck of 23 requests; each deck is shuffled by
+#: (kind, count) in every deck of 21 requests; each deck is shuffled by
 #: the seed, so every run sends the same mix in a different order. The
 #: runtime-model lists are not in the deck: one follows every declaration
 #: and every write.
 MIX = (("eq_filter", 3), ("range_filter", 2), ("tag_search", 2),
        ("text_search", 2), ("group_options", 1), ("page_envelope", 2),
-       ("read", 4), ("sql", 2), ("put", 2), ("delete", 1),
-       ("runtime_read", 2))
+       ("read", 4), ("sql", 2), ("put", 2), ("delete", 1))
 #: writes applied to the runtime model before it is declared again
-WRITES_PER_CYCLE = 4
-#: requests per deck by kind, runtime-model lists included: one after each
-#: of the deck's writes, one after each declaration
-DECK_MIX = {**dict(MIX), "runtime_list": 3 + 3 / WRITES_PER_CYCLE}
+WRITES_PER_CYCLE = 2
+WRITE_KINDS = ("put", "delete")
+#: runtime-model list latency is reported per lineage depth (writes
+#: applied since the model was declared); each cycle lists once at each
+DEPTHS = tuple(f"w{d}" for d in range(WRITES_PER_CYCLE + 1))
+#: requests per deck by kind: the deck's writes start
+#: ``writes / WRITES_PER_CYCLE`` cycles, each with one list per depth
+DECK_MIX = {**dict(MIX), **{
+    f"runtime_list.{d}": sum(n for k, n in MIX if k in WRITE_KINDS)
+    / WRITES_PER_CYCLE for d in DEPTHS}}
 LIST_KINDS = ("eq_filter", "range_filter", "tag_search", "text_search",
               "group_options", "page_envelope")
-WRITE_KINDS = ("put", "delete")
-#: runtime-model list latency is reported per bucket of writes applied
-#: to the model since it was declared; every cycle lists once at depth 0
-#: and twice in each other bucket
-BUCKETS = ((0, 0, "w0"), (1, 2, "w1-2"), (3, WRITES_PER_CYCLE, "w3-4"))
 
 TICKETS = {"name": "tickets", "keys": {
     "tid": {"type": "string", "modifiers": [{"name": "id"}]},
@@ -63,7 +63,7 @@ _WORDS = ("spark", "line", "scan", "sort", "hash", "table", "stream", "key",
 class AutoApi:
     name = "autoapi_read_write"
     uses_python_workers = False
-    warmup_s = 12.0
+    warmup_s = 15.0
     mix = DECK_MIX
     #: the per-layer metrics this workload reports with ``--trace 1``
     layers = (
@@ -75,7 +75,7 @@ class AutoApi:
         ("listquery.rows_read_per_row_returned", "ratio"),
         ("engine.put_ms", "ms"), ("engine.read_ms", "ms"),
         ("engine.sql_ms", "ms"),
-        *((f"engine.runtime_list_ms.{b}", "ms") for _, _, b in BUCKETS),
+        *((f"engine.runtime_list_ms.{d}", "ms") for d in DEPTHS),
     )
 
     def __init__(self, work: str, seed: int, tiny: bool, ops, tracer):
@@ -187,14 +187,10 @@ class AutoApi:
                     self.next_tid += 1
                 rows.append(self._ticket(rng, tid))
             p = {"rows": rows}
-        elif kind == "delete":
+        else:  # delete
             p = {"ids": [rng.choice(sorted(self.mirror))
                          if self.mirror and rng.random() < 0.9
                          else "t-missing"]}
-        else:  # runtime_read
-            p = {"id": (rng.choice(sorted(self.mirror))
-                        if self.mirror and rng.random() < 0.9
-                        else "t-missing")}
         return kind, p
 
     def _execute(self, kind: str, p: dict):
@@ -220,11 +216,9 @@ class AutoApi:
             return eng.put("tickets", p["rows"])
         if kind == "delete":
             return eng.delete("tickets", p["ids"])
-        if kind == "runtime_list":
-            return [tuple(r) for r in eng.list(
-                "tickets", filter={"status": p["status"]}, order_by="score",
-                order_direction="desc", items_per_page=20).collect()]
-        return eng.read("tickets", p["id"])
+        return [tuple(r) for r in eng.list(      # runtime_list
+            "tickets", filter={"status": p["status"]}, order_by="score",
+            order_direction="desc", items_per_page=20).collect()]
 
     def run(self, deadline: float, clock) -> None:
         while more(self.ops, deadline, clock):
@@ -233,8 +227,10 @@ class AutoApi:
             kind, p = self._draw()
             writes_before = self.writes
             self.tracer.op_id = len(self.ops.records)
+            label = (f"{kind}.w{writes_before}" if kind == "runtime_list"
+                     else kind)
             with self.tracer.span(f"api.{kind}", writes=writes_before) as sp:
-                out = self.ops.call(kind, lambda: self._execute(kind, p))
+                out = self.ops.call(label, lambda: self._execute(kind, p))
             ok = self.ops.records[-1][2]
             if kind in WRITE_KINDS:
                 self.writes += 1
@@ -255,15 +251,12 @@ class AutoApi:
                 self.mirror.pop(i, None)
 
     def _mirror_answer(self, kind: str, p: dict):
-        if kind == "runtime_list":
-            rows = sorted((r for r in self.mirror.values()
-                           if r["status"] == p["status"]),
-                          key=lambda r: (-r["score"], r["tid"]))[:20]
-            return [tuple(r[c] for c in _TICKET_COLS) for r in rows]
-        if kind == "runtime_read":
-            r = self.mirror.get(p["id"])
-            return dict(r) if r else None
-        return None
+        if kind != "runtime_list":
+            return None
+        rows = sorted((r for r in self.mirror.values()
+                       if r["status"] == p["status"]),
+                      key=lambda r: (-r["score"], r["tid"]))[:20]
+        return [tuple(r[c] for c in _TICKET_COLS) for r in rows]
 
     # -- output check -------------------------------------------------------
 
@@ -278,7 +271,7 @@ class AutoApi:
                 if not s["ok"] or s["kind"] in WRITE_KINDS:
                     continue
                 self.ops.checked += 1
-                want = (s["expect"] if s["kind"].startswith("runtime")
+                want = (s["expect"] if s["kind"] == "runtime_list"
                         else self._duck_answer(con, s["kind"], s["p"]))
                 if not _same(want, s["out"]):
                     self.ops.mismatch(f"{s['kind']} {s['p']}: want "
@@ -372,16 +365,14 @@ class AutoApi:
         out["listquery.tasks_per_op"] = tasks / max(1, len(listed))
         out["listquery.rows_read_per_row_returned"] = rows_in / max(1,
                                                                     rows_out)
-        for name, kinds in (("engine.put_ms", ("put",)),
-                            ("engine.read_ms", ("read", "runtime_read")),
-                            ("engine.sql_ms", ("sql",))):
-            out[name] = 1000 * median(
-                [d for k in kinds for d in tr.durations(f"api.{k}")])
-        for lo, hi, label in BUCKETS:
-            out[f"engine.runtime_list_ms.{label}"] = 1000 * median(
+        for name, kind in (("engine.put_ms", "put"),
+                           ("engine.read_ms", "read"),
+                           ("engine.sql_ms", "sql")):
+            out[name] = 1000 * median(tr.durations(f"api.{kind}"))
+        for d, depth in enumerate(DEPTHS):
+            out[f"engine.runtime_list_ms.{depth}"] = 1000 * median(
                 [s["end"] - s["start"] for s in tr.spans
-                 if s["name"] == "api.runtime_list"
-                 and lo <= s["writes"] <= hi])
+                 if s["name"] == "api.runtime_list" and s["writes"] == d])
         return out
 
 

@@ -2,8 +2,15 @@
 entities go through ``operators.etl.run_entity_pipeline`` and
 ``upsert_into_path``: an initial load, then incremental batches whose ids
 overlap the loaded ones. Every batch rewrites the entity's whole store
-through the snapshot swap. When the last batch is applied the stores are
-dropped and the sequence starts again."""
+through the snapshot swap. When an entity's last batch is applied its
+store is dropped and its sequence starts again.
+
+An initial load costs about half an incremental batch, so the entities'
+sequences are staggered: the client sends the entities in turn, and in
+each round of six operations entity ``k`` applies batch ``round + k``
+(modulo the batch count). Every round then holds each batch index once,
+and a run that stops mid-sequence sends the same mix of loads and merges
+as one that does not."""
 
 from __future__ import annotations
 
@@ -19,9 +26,7 @@ from .harness import dir_bytes, median, more
 class EtlUpsert:
     name = "etl_upsert"
     uses_python_workers = False
-    warmup_s = 6.0
-    #: every entity's batches count alike
-    mix = {f"etl.{e}": 1.0 for e in gen.ENTITIES}
+    warmup_s = 15.0
     #: the per-layer metrics this workload reports with ``--trace 1``
     layers = (
         *((f"etl.pipeline_task_ms.{e}", "ms") for e in gen.ENTITIES),
@@ -38,8 +43,11 @@ class EtlUpsert:
             self.n_batches, self.initial, self.rows = 3, 40, 15
         else:
             self.n_batches, self.initial, self.rows = 6, 500, 500
+        #: operation kinds are batch indexes, and every index counts alike
+        self.mix = {f"etl.b{b}": 1.0 for b in range(self.n_batches)}
         self.lines: dict[str, list[list[str]]] = {}
         self.files: dict[str, list[str]] = {}
+        self.first: dict[str, int] = {}     # entity -> first batch in store
         self.applied: dict[str, int] = {}   # entity -> last batch in store
         self.op_log: list[dict] = []        # per op: entity, batch, bytes
 
@@ -66,13 +74,9 @@ class EtlUpsert:
         from servihabitat_etl_spyke_spark.operators import etl
         self.spark, self.etl = spark, etl
         self.op_log = []
-        self.cycle = 0
-        self._drop_stores()
-
-    def _drop_stores(self) -> None:
         shutil.rmtree(os.path.join(self.dir, "store"), ignore_errors=True)
         os.makedirs(os.path.join(self.dir, "store"))
-        self.applied = {}
+        self.first, self.applied = {}, {}
         self.pos = 0
 
     def trace_points(self):
@@ -88,24 +92,26 @@ class EtlUpsert:
         etl.upsert_into_path(self.spark, df, self.store(entity))
 
     def run(self, deadline: float, clock) -> None:
-        per_cycle = self.n_batches * len(gen.ENTITIES)
+        n = len(gen.ENTITIES)
         while more(self.ops, deadline, clock):
-            if self.pos == per_cycle:           # start the sequence again
-                self._drop_stores()
-                self.cycle += 1
-            batch, k = divmod(self.pos, len(gen.ENTITIES))
+            rnd, k = divmod(self.pos, n)
             entity = gen.ENTITIES[k]
+            batch = (rnd + k) % self.n_batches
             self.pos += 1
+            restart = entity not in self.first or batch == 0
+            if restart:                     # the entity's sequence starts
+                shutil.rmtree(self.store(entity), ignore_errors=True)
+                self.first[entity] = batch
             src = self.files[entity][batch]
             self.tracer.op_id = len(self.ops.records)
             with self.tracer.span("etl.op", entity=entity) as sp:
-                self.ops.call(f"etl.{entity}",
+                self.ops.call(f"etl.b{batch}",
                               lambda: self._one(entity, batch),
                               items=len(self.lines[entity][batch]))
             self.applied[entity] = batch
             self.op_log.append({
-                "entity": entity, "batch": batch, "cycle": self.cycle,
-                "in_bytes": os.path.getsize(src),
+                "entity": entity, "batch": batch, "round": rnd,
+                "restart": restart, "in_bytes": os.path.getsize(src),
                 "store_bytes": dir_bytes(self.store(entity)),
                 "span": sp})
 
@@ -115,7 +121,8 @@ class EtlUpsert:
         import pyarrow.parquet as pq
         for entity, last in sorted(self.applied.items()):
             self.ops.checked += 1
-            want = fold(entity, self.lines[entity][:last + 1])
+            want = fold(entity,
+                        self.lines[entity][self.first[entity]:last + 1])
             got = {r["id"]: r for r in
                    pq.read_table(self.store(entity)).to_pylist()}
             self.compare(entity, want, got)
@@ -134,20 +141,22 @@ class EtlUpsert:
     # -- metrics ------------------------------------------------------------
 
     def metrics(self) -> dict:
-        rounds: dict[tuple, float] = {}
+        rounds: dict[int, float] = {}
         for rec, o in zip(self.ops.records, self.op_log):
-            key = (o["cycle"], o["batch"])
-            rounds[key] = rounds.get(key, 0.0) + rec[1]
+            rounds[o["round"]] = rounds.get(o["round"], 0.0) + rec[1]
+        n = len(gen.ENTITIES)
+        whole = [t for r, t in rounds.items()
+                 if sum(o["round"] == r for o in self.op_log) == n]
         in_b = sum(o["in_bytes"] for o in self.op_log)
         last_store = {o["entity"]: o["store_bytes"] for o in self.op_log}
         cum_in: dict[str, int] = {}
         for o in self.op_log:
-            cum_in[o["entity"]] = (o["in_bytes"] if o["batch"] == 0
+            cum_in[o["entity"]] = (o["in_bytes"] if o["restart"]
                                    else cum_in.get(o["entity"], 0)
                                    + o["in_bytes"])
         return {
             "etl_rows_per_s": (self.ops.throughput(self.mix), "1/s"),
-            "etl_batch_p50_s": (median(list(rounds.values())), "s"),
+            "etl_batch_p50_s": (median(whole), "s"),
             "etl_store_bytes_per_input_byte": (
                 sum(last_store.values()) / max(1, sum(cum_in.values())),
                 "ratio"),
