@@ -1,31 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` runs at a
+given scale factor and is compared against the matching
+``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive value hash; mirrored by ``tests/test_oracle_parity.py``).
 
-Implementation lives in ``servihabitat_etl_spyke_spark/`` — this module is a
-thin re-export of its query catalog.
-
-Rotation: the driver's correctness harness checks the FIRST 50 entries of
-``queries()`` each round, while the full registry holds 200+ (the
-test-enforced count lives in README's coverage line).  Every oracled
-query is verified every round by the identical local mirror
-(``tests/test_oracle_parity.py``); the dict order below exists only to
-choose which 50 get *driver-side* evidence this round:
-
-- r1–r6: never-driver-checked names first (``_WINDOW`` pinned the current
-  round's tier), auto-retiring green names via ``_DRIVER_VERIFIED``.  The
-  registry CLOSED in r6: every name has green driver evidence, zero
-  failures ever recorded.
-- r7+ (this file): ROLLING RE-VERIFICATION.  With every name verified,
-  ordering verified names by registration order would re-check the same
-  first-50 forever and let a regression in an old operator hide behind
-  stale r1 evidence.  Verified names are therefore ordered by evidence
-  AGE — oldest CORRECTNESS round first — so driver evidence refreshes on
-  a ~5-round cycle (50 per round).  Names whose LATEST evidence is
-  a failure, and new never-checked names, still jump the queue.
+Implementation lives in ``servihabitat_etl_spyke_spark/``; this module is a
+thin re-export of its query catalog, in registration order.
 """
 
 from __future__ import annotations
@@ -37,162 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from servihabitat_etl_spyke_spark import queries as _catalog
 
 
-def _evidence() -> dict[str, tuple[int, bool]]:
-    """name -> (latest round with driver evidence, was that evidence
-    green).  Green = full hash match, or a clean rows-only run
-    (err == 'no_oracle' with rows > 0 — a zero-row rows-only run is a
-    broken approx query and must NOT count as green).  Reading the
-    LATEST round per name (files sorted by round number) means a name
-    that was green in r3 but failed in r5 correctly re-enters the
-    front of the window instead of hiding behind the old green row."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    ev: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if not isinstance(r, dict):
-                continue
-            green = bool(
-                (r.get("rows_match") and r.get("schema_match")
-                 and r.get("hash_match"))
-                or (r.get("err") == "no_oracle"
-                    and (r.get("spark_rows") or 0) > 0))
-            prev = ev.get(name)
-            if prev is None or rnd >= prev[0]:
-                ev[name] = (rnd, green)
-    return ev
-
-
-_EVIDENCE = _evidence()
-_DRIVER_VERIFIED = frozenset(n for n, (_, green) in _EVIDENCE.items()
-                             if green)
-
-# Names pinned to the FRONT of this round's window (new operators built
-# this round, or names needing urgent re-verification).  The rolling
-# age-ordered tier below fills the remaining driver-window slots with
-# the oldest-evidence names.
-_WINDOW: list[str] = [
-    # r8-built: the persisted IVF index table (assignment + probe list
-    # in one UDF pass — the stored_sig pattern for the ANN leg;
-    # rows-only by nature, k-means codebook not SQL-expressible)
-    "ann_ivf_index_build",
-]
-
-# Names whose REGISTERED IMPLEMENTATION changed (the query body itself,
-# not just internals), mapped to the round the change shipped in: they
-# jump the queue like new builds so the change gets fresh driver
-# evidence instead of riding an older green.  SELF-EXPIRING: once the
-# name's evidence round reaches the changed-in round (the driver
-# re-verified the new implementation), it returns to the age-ordered
-# tier — no manual cleanup next round.
-_REVERIFY: dict[str, int] = {
-    # Pruned in r11 (VERDICT r10 optional #7): the r8/r9 sweeps'
-    # 151-entry lane drained to these six over rounds 8-10 — the 145
-    # entries whose driver evidence already reached their changed-in
-    # round were inert (the self-expiry rule made them no-ops) and
-    # are removed; the change history they narrated (r8 trailing
-    # presentational-sort sweep, r9 IVF persisted-index consumers and
-    # similarity-internal sort sweep) lives in PLANS.md and the git
-    # log of this file. The six below are the last r8-changed names
-    # whose evidence still predates the change (r4-r7 greens); they
-    # lead the r11 window and self-expire when the driver re-records
-    # them.
-    "dedup_exact": 8,
-    "q18_large_orders": 8,
-    "snapshot_time_travel": 8,
-    "scale_bucketed_join": 8,
-    "corpus_profile": 8,
-    "text_bpe_tokenize": 8,
-    # r11 optimization round: connected_components gained a size-routed
-    # driver union-find fast path (identical labels, pytest-pinned
-    # against the distributed loop and an independent union-find), and
-    # ann_knn_graph_incremental's stored-graph build now reads the
-    # persisted ivf_index instead of re-running assignment (byte-equal,
-    # test_knn_graph_ivf_from_index_byte_equal). Outputs unchanged;
-    # fresh driver evidence anyway, ordered by bench cost. (The CC
-    # consumers this block listed re-enter below at 12 — their feeding
-    # operator changed again.)
-    "ann_knn_graph_incremental": 11,
-    # r11 continued: semantic_dedup/_lsh compute assignment + unit
-    # vectors in one corpus pass (join removed, same rows);
-    # minhash_lsh_neardup_windowed carries the day column through the
-    # signature instead of joining it back onto the banded table.
-    "dedup_semantic_lsh": 11,
-    "dedup_semantic": 11,
-    "dedup_minhash_windowed": 11,
-    # r12 optimization round 2: dedup_clusters_incremental's two LSH
-    # candidate+verify passes now share one banded-table economy and
-    # one verify pass (value-identical split, oracle hash green);
-    # profile_columns' exact path aggregates a materialized projection
-    # twice instead of one Expand-planned mixed aggregate;
-    # unigram_lm/bigram_lm fold scalar totals (and lm_score's min_p
-    # probe) into the model-build materialization action;
-    # connected_components folds its null check into the pair-count
-    # action and restricts the driver leg to fixed-width integer ids
-    # (labels unchanged — pytest-pinned). Outputs identical; fresh
-    # driver evidence anyway, ordered by bench cost.
-    "profile_columns": 12,
-    "dedup_clusters_incremental": 12,
-    "text_lm_score": 12,
-    "text_bigram_lm_score": 12,
-    "dedup_clusters": 12,
-    "dedup_canonical": 12,
-    "dedup_cluster_sample": 12,
-    "dedup_cluster_sizes": 12,
-    "dedup_snapshot_incremental": 12,
-    "multimodal_audio_dedup": 12,
-    "multimodal_video_dedup": 12,
-}
-
-
-def _rotated(d: dict) -> dict:
-    """Stable reorder for the driver's first-50 correctness window:
-
-    tier 0   — ``_WINDOW`` names without green evidence (listed
-               order): this round's new builds;
-    tier 0.5 — ``_REVERIFY`` names whose evidence predates the round
-               their implementation changed in (listed order);
-               self-expires once the driver re-records them at or
-               after that round;
-    tier 1   — never-driver-checked names and names whose LATEST
-               driver evidence is a failure (registration order):
-               regressions and stragglers re-enter here automatically;
-    tier 2   — verified names, OLDEST evidence round first
-               (registration order as tie-break): rolling
-               re-verification, ~5-round refresh cycle at 50/round.
-    """
-    pos = {n: i for i, n in enumerate(_WINDOW)}
-    rev = {n: i for i, n in enumerate(_REVERIFY)}
-    reg = {n: i for i, n in enumerate(d)}
-
-    def tier(name: str) -> tuple[float, int, int]:
-        if name in pos and name not in _DRIVER_VERIFIED:
-            return (0, pos[name], 0)
-        if name in rev and \
-                _EVIDENCE.get(name, (0, False))[0] < _REVERIFY[name]:
-            return (0.5, rev[name], 0)
-        if name not in _DRIVER_VERIFIED:
-            return (1, reg.get(name, 0), 0)
-        return (2, _EVIDENCE[name][0], reg.get(name, 0))
-
-    return dict(sorted(d.items(), key=lambda kv: tier(kv[0])))
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-style pricing summary) on sf0.001."""
     return _catalog.q1_pricing_summary(spark, "/root/testdata/sf0.001")
@@ -200,9 +25,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _rotated(dict(_catalog.QUERIES))
+    return dict(_catalog.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted => rows-only check)."""
-    return _rotated(dict(_catalog.ORACLES))
+    return dict(_catalog.ORACLES)

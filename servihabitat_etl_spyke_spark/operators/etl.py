@@ -456,17 +456,16 @@ def overwrite_via_tmp(df: DataFrame, path: str) -> None:
 
 
 def upsert_into_path(spark: SparkSession, incoming: DataFrame, path: str,
-                     key: str = "id") -> DataFrame:
+                     key: str = "id") -> None:
     """MERGE-into-table emulation against a parquet path: read-if-exists
     (through the swap-recovery check), upsert, write back atomically via
     the rename swap (a transactional table format replaces all of this
-    with one MERGE INTO in production)."""
+    with one MERGE INTO in production). Readers load ``path`` themselves."""
     if recover_snapshot(path):
         existing = spark.read.parquet(path)
         overwrite_via_tmp(keyed_upsert(existing, incoming, key), path)
     else:
         keyed_upsert(None, incoming, key).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------

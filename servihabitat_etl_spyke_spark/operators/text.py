@@ -251,9 +251,11 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
 # -- unigram LM scoring -------------------------------------------------------
 
 
-def unigram_lm(docs: DataFrame, text_col: str = "text",
-               with_min_p: bool = False):
-    """Corpus unigram model: (tok, p) with p = count / corpus total.
+def unigram_lm(docs: DataFrame, text_col: str = "text"
+               ) -> tuple[DataFrame, float | None]:
+    """Corpus unigram model ``(lm, min_p)``: ``lm`` is (tok, p) with
+    p = count / corpus total, ``min_p`` the rarest in-vocab probability
+    (``None`` for an empty corpus).
 
     One explode + one token-keyed aggregation (a single shuffle whose
     width is the vocabulary, not the corpus). The scalar total rides
@@ -263,10 +265,9 @@ def unigram_lm(docs: DataFrame, text_col: str = "text",
     exchange and re-ran the total subplan per consumer — a corpus
     total is one long, it belongs on the driver, not in the plan.
 
-    ``with_min_p=True`` additionally returns the rarest in-vocab
-    probability — ``(lm, min_p)`` — computed in that same action, so a
-    scorer that needs the OOV floor (:func:`lm_score`'s default) skips
-    its probe action entirely.
+    ``min_p`` is computed in that same action, so a scorer that needs
+    the OOV floor (:func:`lm_score`'s default) skips its probe action
+    entirely when handed it.
 
     Cache note: the returned model DataFrame PINS a persisted
     vocabulary-sized intermediate for the session (every scoring
@@ -285,13 +286,11 @@ def unigram_lm(docs: DataFrame, text_col: str = "text",
     # broadcast-join form's column/column division
     lm = counts.select(
         "tok", (F.col("_c") / F.lit(total).cast("long")).alias("p"))
-    if with_min_p:
-        # double/double division, matching what min() over the lm's p
-        # column (Spark long->double cast then divide) would return
-        min_p = (float(min_c) / float(total)) \
-            if (min_c is not None and total) else None
-        return lm, min_p
-    return lm
+    # double/double division, matching what min() over the lm's p
+    # column (Spark long->double cast then divide) would return
+    min_p = (float(min_c) / float(total)) \
+        if (min_c is not None and total) else None
+    return lm, min_p
 
 
 def lm_score(docs: DataFrame, lm: DataFrame, id_col: str = "doc_id",
@@ -320,8 +319,8 @@ def lm_score(docs: DataFrame, lm: DataFrame, id_col: str = "doc_id",
     is orders below any quality-filter threshold."""
     import math
     if oov_logprob is None:
-        # ``min_p`` precomputed by the model build (e.g.
-        # unigram_lm(..., with_min_p=True)'s materialization action)
+        # ``min_p`` precomputed by the model build (e.g. the second
+        # value unigram_lm returns from its materialization action)
         # skips this probe action entirely (r12, guide §1.2)
         if min_p is None:
             min_p = lm.agg(F.min("p")).first()[0]

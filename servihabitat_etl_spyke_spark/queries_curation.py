@@ -210,7 +210,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the OOV floor's min_p rides the model build's materialization
     # action (r12) — lm_score skips its probe action
-    lm, min_p = unigram_lm(docs, with_min_p=True)
+    lm, min_p = unigram_lm(docs)
     out = lm_score(docs, lm, min_p=min_p)
     # no presentational global orderBy (r8 sweep) — see
     # curate_dsir_weights

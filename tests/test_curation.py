@@ -142,7 +142,7 @@ def test_lm_score_common_tokens_score_higher(spark):
         (1, "the the the the"),          # most frequent token
         (2, "the the rare1 rare2"),
     ])
-    lm = unigram_lm(docs)
+    lm, _ = unigram_lm(docs)
     out = {r["doc_id"]: r for r in lm_score(docs, lm).collect()}
     assert out[1]["avg_logprob"] > out[2]["avg_logprob"]
     assert out[1]["n_scored"] == 4 and out[2]["n_scored"] == 4
@@ -163,7 +163,7 @@ def test_lm_score_keeps_all_oov_docs(spark):
     from servihabitat_etl_spyke_spark.operators.text import (lm_score,
                                                              unigram_lm)
     known = _docs(spark, [(1, "the cat sat"), (2, "the dog ran")])
-    lm = unigram_lm(known)
+    lm, _ = unigram_lm(known)
     gibberish = _docs(spark, [(9, "zxqv wvut qqqq")])
     out = lm_score(gibberish, lm).collect()
     assert len(out) == 1 and out[0]["doc_id"] == 9
@@ -401,7 +401,7 @@ def test_bigram_lm_penalizes_scrambled_order(spark):
            bigram_score(probe, bigrams, backoff).collect()}
     assert got[100] > got[101] > got[102]
     # the unigram proxy CANNOT separate fluent from scrambled (same bag)
-    uni = unigram_lm(train)
+    uni, _ = unigram_lm(train)
     ug = {r["doc_id"]: r["avg_logprob"] for r in
           lm_score(probe, uni).collect()}
     assert abs(ug[100] - ug[101]) < 1e-9

@@ -115,8 +115,8 @@ def test_upsert_into_path_full_cycle(spark, tmp_path):
     v1 = spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "v"])
     upsert_into_path(spark, v1, path)
     v2 = spark.createDataFrame([("2", "B"), ("3", "c")], ["id", "v"])
-    snap = upsert_into_path(spark, v2, path)
-    out = {r["id"]: r["v"] for r in snap.collect()}
+    assert upsert_into_path(spark, v2, path) is None
+    out = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert out == {"1": "a", "2": "B", "3": "c"}
 
 
