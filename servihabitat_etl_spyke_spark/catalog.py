@@ -72,19 +72,3 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     inputs should simply skip spread()."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, key)
-
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name)
-            for name in names
-            if os.path.exists(table_path(sf_dir, name))}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Register every table as a temp view so ``spark.sql`` can see them."""
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -17,14 +17,49 @@ ETL / streaming entry points — all over one SparkSession.
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
-from .catalog import load_table, register_views
+from .catalog import TABLES, load_table, table_path
 from .model import Model
 from .plans.listquery import ListParams, list_page, list_query
 from .session import get_spark
+from .sources.sheets import (arrow_relation, sheet_rows, sheet_upsert,
+                             string_schema)
+
+
+def _internal_rows(rows, schema: T.StructType) -> list[tuple]:
+    """Validate and convert rows exactly as ``createDataFrame(list,
+    schema)`` does — the same type verifier (a mistyped value is a
+    TypeError), the same name-to-position converter for dicts and Rows,
+    the same ``toInternal`` (timestamps become epoch micros) — so an
+    Arrow-built relation stores the values the list path would."""
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    out = []
+    for row in rows:
+        verify(row)
+        out.append(schema.toInternal(convert(row)))
+    return out
+
+
+def _stamp(path: str) -> tuple:
+    """What a held parquet table is keyed by: ``(ino, size, mtime_ns)`` of
+    the path and, for a directory table, of every entry under it (part
+    files and partition subdirectories alike). FileNotFoundError when the
+    path does not exist."""
+    def one(p):
+        st = os.stat(p)
+        return p, st.st_ino, st.st_size, st.st_mtime_ns
+    out = [one(path)]
+    if os.path.isdir(path):
+        for root, dirs, files in os.walk(path):
+            out.extend(one(os.path.join(root, n)) for n in dirs + files)
+    return tuple(sorted(out))
 
 
 class Engine:
@@ -32,18 +67,25 @@ class Engine:
         self.spark = spark
         self.sf_dir = sf_dir
         self._models: dict[str, Model] = {}
-        # runtime-declared tables (create_model): name -> DataFrame.
-        # Shadows same-named parquet — latest declaration wins, like the
-        # reference's put handler overwriting an existing object schema.
-        self._runtime_tables: dict[str, DataFrame] = {}
+        # runtime-declared tables (create_model): name -> DataFrame, or
+        # None for a row-held model whose relation is rebuilt from its
+        # rows on the next table() call. Shadows same-named parquet —
+        # latest declaration wins, like the reference's put handler
+        # overwriting an existing object schema.
+        self._runtime_tables: dict[str, DataFrame | None] = {}
+        # runtime models declared from rows (a list, a sheet's header +
+        # rows, or nothing): name -> (schema, internal rows), the store
+        # that put/delete update in the driver
+        self._rows: dict[str, tuple[T.StructType, list[tuple]]] = {}
         # storage backend per runtime model (objectsAPI.ts:169 analog)
         self._storage: dict[str, str] = {}
         # named parameterized automations (UD1, protolib automations)
         self._automations: dict = {}
-        # bumped on EVERY register_model call (a len()-based check would
-        # miss same-name re-registration and never refresh the SQL views)
-        self._registry_version = 0
-        self._views_version = -1  # forces first-use view registration
+        # parquet tables resolved once: name -> (_stamp of the table
+        # path, DataFrame); filled lazily by table()
+        self._held: dict[str, tuple[tuple, DataFrame]] = {}
+        # SQL temp view name -> the relation it was registered from
+        self._views: dict[str, DataFrame] = {}
 
     @classmethod
     def local(cls, sf_dir: str, cpus: int | None = None) -> "Engine":
@@ -57,7 +99,6 @@ class Engine:
         """Runtime DDL analog (objects bundle, objectsAPI.ts:133-193): a new
         model becomes queryable immediately — no codegen, just metadata."""
         self._models[model.name] = model
-        self._registry_version += 1
 
     def create_model(self, spec, data: list | DataFrame | None = None,
                      bind_to: str | None = None,
@@ -97,27 +138,25 @@ class Engine:
                 raise ValueError("sheet storage keeps its own rows; "
                                  "bind_to applies to native storage")
             from pyspark.sql import functions as F
-            from .sources.sheets import sheet_from_rows
             declared = list(m.fields)
             if isinstance(data, DataFrame):
                 if set(data.columns) != set(declared):
                     raise ValueError(
                         f"sheet bootstrap columns {sorted(data.columns)} "
                         f"!= declared keys {sorted(declared)}")
-                sdf = data.select([F.col(c).cast("string").alias(c)
-                                   for c in declared])
-            elif data:
-                # header + rows, the getSpreadSheetElements shape
-                sdf = sheet_from_rows(self.spark, data)
-                if set(sdf.columns) != set(declared):
-                    raise ValueError(
-                        f"sheet header {sdf.columns} != declared keys "
-                        f"{sorted(declared)}")
-                sdf = sdf.select(*declared)
+                self._store(m.name, data.select(
+                    [F.col(c).cast("string").alias(c) for c in declared]))
             else:
-                sdf = self.spark.createDataFrame(
-                    [], ", ".join(f"`{c}` string" for c in declared))
-            self._runtime_tables[m.name] = sdf
+                # header + rows, the getSpreadSheetElements shape
+                header, rows = sheet_rows(data) if data else (declared, [])
+                if set(header) != set(declared):
+                    raise ValueError(
+                        f"sheet header {header} != declared keys "
+                        f"{sorted(declared)}")
+                pos = [header.index(c) for c in declared]
+                self._store(m.name, rows=(
+                    string_schema(declared),
+                    [tuple(r[i] for i in pos) for r in rows]))
             self._storage[m.name] = "sheet"
             self.register_model(m)
             return m
@@ -127,7 +166,7 @@ class Engine:
             if missing:
                 raise ValueError(
                     f"bind_to={bind_to!r} lacks declared keys {missing}")
-            self._runtime_tables[m.name] = df.select(*m.fields)
+            self._store(m.name, df.select(*m.fields))
         elif isinstance(data, DataFrame):
             declared = set(m.fields)
             if set(data.columns) != declared:
@@ -138,19 +177,29 @@ class Engine:
             # gid under a declared long would silently send numeric
             # filters down the cross-family string path and sort
             # lexicographically ('10' < '2'); the list-of-rows branch
-            # already enforces the schema via createDataFrame
+            # already enforces the schema via the type verifier
             got = {f.name: f.dataType for f in data.schema.fields}
             for f in m.schema.fields:
                 if got[f.name] != f.dataType:
                     raise ValueError(
                         f"bootstrap column {f.name!r} is {got[f.name]}, "
                         f"declared {f.dataType}; cast it before create_model")
-            self._runtime_tables[m.name] = data.select(*m.fields)
+            self._store(m.name, data.select(*m.fields))
         else:
-            self._runtime_tables[m.name] = self.spark.createDataFrame(
-                data or [], schema=m.schema)
+            self._store(m.name, rows=(
+                m.schema, _internal_rows(data or [], m.schema)))
         self.register_model(m)
         return m
+
+    def _store(self, name: str, df: DataFrame | None = None,
+               rows: tuple[T.StructType, list[tuple]] | None = None) -> None:
+        """Set a runtime model's store: a DataFrame (bind_to, DataFrame
+        bootstrap), or (schema, internal rows) held in the driver."""
+        self._runtime_tables[name] = df
+        if rows is None:
+            self._rows.pop(name, None)
+        else:
+            self._rows[name] = rows
 
     def register_default_models(self) -> None:
         from .queries import CUSTOMER, DOCUMENTS, EVENTS, ORDERS
@@ -161,44 +210,47 @@ class Engine:
             rows: list[dict] | DataFrame) -> None:
         """Keyed update-else-append into a runtime model's store (the S6
         point upsert / S9 sheet put, batched): rows whose id exists are
-        replaced in place, new ids append. Sheet-backed models coerce
-        every value to string first (sheet semantics); both backends use
-        the same anti-join upsert shape."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window as W
-        from .sources.sheets import sheet_upsert
+        replaced in place, new ids append, and a duplicate id within one
+        batch keeps its LAST row (the reference's sequential db.put loop).
+        A null id matches no stored row, so null-id rows are only appended.
+        Sheet-backed models coerce every value to string first (sheet
+        semantics). DataFrame input is cast to the model's column types
+        and collected, so a batch is always rows in the driver.
+
+        A model declared from rows keeps them in the driver: the replace
+        runs there and no Spark job runs, so a write costs the same
+        whether or not a list follows it; the next ``table()`` call builds
+        one local relation from the new rows. A ``bind_to`` or
+        DataFrame-declared model stays lazy: the write is the
+        ``sheet_upsert`` anti-join union over its current plan, which
+        grows by one level per write."""
         if model_name not in self._runtime_tables:
             raise KeyError(f"{model_name!r} is not a runtime model")
         m = self._models[model_name]
-        cur = self._runtime_tables[model_name]
-        is_sheet = self._storage.get(model_name) == "sheet"
+        held = self._rows.get(model_name)
+        schema = held[0] if held else self._runtime_tables[model_name].schema
+        cols = schema.names
         if isinstance(rows, DataFrame):
-            upd = rows
-        elif is_sheet:
+            from pyspark.sql import functions as F
+            rows = rows.select([F.col(c).cast(schema[c].dataType).alias(c)
+                                for c in cols]).collect()
+        elif self._storage.get(model_name) == "sheet":
             # None -> '' (an EMPTY cell), never the text 'None' — the same
             # null contract SheetTransport.put documents for the wire path
-            upd = self.spark.createDataFrame(
-                [tuple("" if r[c] is None else str(r[c])
-                       for c in cur.columns) for r in rows],
-                ", ".join(f"`{c}` string" for c in cur.columns))
+            rows = [tuple("" if r[c] is None else str(r[c]) for c in cols)
+                    for r in rows]
         else:
-            upd = self.spark.createDataFrame(
-                [tuple(r[c] for c in cur.columns) for r in rows],
-                cur.schema)
-        if is_sheet:
-            upd = upd.select([F.col(c).cast("string").alias(c)
-                              for c in cur.columns])
-        # LAST-wins within the batch (the reference's sequential db.put
-        # loop): sheet_upsert unions the updates verbatim, so duplicate
-        # ids in one batch would BOTH persist, breaking the keyed-store
-        # invariant; keep the final occurrence per id
-        upd = (upd.withColumn("_o", F.monotonically_increasing_id())
-               .withColumn("_rn", F.row_number().over(
-                   W.partitionBy(m.id_field).orderBy(F.col("_o").desc())))
-               .filter(F.col("_rn") == 1).drop("_o", "_rn"))
-        self._runtime_tables[model_name] = sheet_upsert(
-            cur, upd, m.id_field)
-        self._registry_version += 1   # refresh SQL views on next use
+            rows = [tuple(r[c] for c in cols) for r in rows]
+        # every row is validated before the last-wins pass drops any
+        key = cols.index(m.id_field)
+        last = {r[key]: r for r in _internal_rows(rows, schema)}
+        if held is None:
+            upd = arrow_relation(self.spark, list(last.values()), schema)
+            self._runtime_tables[model_name] = sheet_upsert(
+                self._runtime_tables[model_name], upd, m.id_field)
+            return
+        kept = [r for r in held[1] if r[key] is None or r[key] not in last]
+        self._store(model_name, rows=(schema, kept + list(last.values())))
 
     def read(self, model_name: str, item_id, view: str = "read") -> dict | None:
         """Point read by id (the AutoAPI GET-one endpoint): one row as a
@@ -218,29 +270,81 @@ class Engine:
     def delete(self, model_name: str, item_ids: list) -> None:
         """Keyed delete from a runtime model's store (the AutoAPI DELETE
         endpoint; the reference's cascade hooks are the flow callbacks —
-        compose them before calling): one anti-join, same shape as the
-        upsert's replace half."""
+        compose them before calling): drops the rows whose id, cast to
+        string by Spark, is ``str()`` of a listed id. Like ``put``, a
+        row-held model is filtered in the driver (a string or integral id
+        casts as ``str()`` does; any other id type has Spark cast the held
+        ids first) and any other model gets a lazy filter."""
         from pyspark.sql import functions as F
         if model_name not in self._runtime_tables:
             raise KeyError(f"{model_name!r} is not a runtime model")
         m = self._models[model_name]
-        cur = self._runtime_tables[model_name]
-        gone = [str(i) for i in item_ids]
+        gone = {str(i) for i in item_ids}
         idc = F.col(m.id_field).cast("string")
-        # NULL-id rows must survive: ~isin(...) is NULL (not true) for a
-        # NULL id and filter drops NULL predicates, so deleting one key
-        # would silently destroy every null-id row
-        self._runtime_tables[model_name] = cur.filter(
-            idc.isNull() | ~idc.isin(gone))
-        self._registry_version += 1
+        held = self._rows.get(model_name)
+        if held is None:
+            # NULL-id rows must survive: ~isin(...) is NULL (not true) for
+            # a NULL id and filter drops NULL predicates, so deleting one
+            # key would silently destroy every null-id row
+            self._runtime_tables[model_name] = self._runtime_tables[
+                model_name].filter(idc.isNull() | ~idc.isin(list(gone)))
+            return
+        schema, rows = held
+        key = schema.names.index(m.id_field)
+        if isinstance(schema[key].dataType, (T.StringType, T.IntegralType)):
+            ids = [None if r[key] is None else str(r[key]) for r in rows]
+        else:
+            # a local relation keeps its row order through a projection
+            ids = [r[0] for r in self.table(model_name).select(idc)
+                   .collect()]
+        self._store(model_name, rows=(schema, [
+            r for r, i in zip(rows, ids) if i is None or i not in gone]))
 
     def model(self, name: str) -> Model:
         return self._models[name]
 
     def table(self, name: str) -> DataFrame:
+        """The relation the Engine holds for ``name``: the runtime model's
+        current version, else the parquet table, resolved once.
+
+        A row-held runtime model is built into one Arrow-backed local
+        relation on the first call after a write, and that relation is
+        returned until the next write.
+
+        A parquet table is loaded on first use and held, keyed by the
+        inode, size and mtime of its path and, for a directory table, of
+        every file and subdirectory under it (``_stamp``); it is loaded
+        again only when that key changes. A Spark ``mode("overwrite")``,
+        an append into a partition directory and a rewritten single file
+        all change it. A same-size rewrite in place within one mtime tick
+        does not: a writer that rewrites files in place should swap the
+        table in instead (``etl.overwrite_via_tmp``). A missing path is
+        not held: the load raises Spark's PATH_NOT_FOUND as before."""
         if name in self._runtime_tables:
-            return self._runtime_tables[name]
-        return load_table(self.spark, self.sf_dir, name)
+            df = self._runtime_tables[name]
+            if df is None:
+                df = arrow_relation(self.spark, self._rows[name][1],
+                                    self._rows[name][0])
+                self._runtime_tables[name] = df
+            return df
+        df = self._parquet(name)
+        if df is None:
+            return load_table(self.spark, self.sf_dir, name)
+        return df
+
+    def _parquet(self, name: str) -> DataFrame | None:
+        """The held parquet relation for ``name``; None when its path
+        does not exist."""
+        try:
+            key = _stamp(table_path(self.sf_dir, name))
+        except FileNotFoundError:
+            self._held.pop(name, None)
+            return None
+        held = self._held.get(name)
+        if held is None or held[0] != key:
+            held = (key, load_table(self.spark, self.sf_dir, name))
+            self._held[name] = held
+        return held[1]
 
     # -- query surfaces -----------------------------------------------------
 
@@ -294,36 +398,18 @@ class Engine:
                          params)
 
     def sql(self, statement: str) -> DataFrame:
-        """ANSI SQL over the standard tables AND every registered model
-        (views refresh when the model registry grows, so runtime-registered
-        models are immediately SQL-visible)."""
-        if self._views_version != self._registry_version:
-            from pyspark.errors import AnalysisException
-            # parquet views are static — register once per engine, not
-            # once per registry bump (a put()->sql() loop would re-read
-            # every table's footer each iteration otherwise)
-            if self._views_version < 0:
-                register_views(self.spark, self.sf_dir)
-            if not hasattr(self, "_registered_views"):
-                self._registered_views: set[str] = set()
-            for name in self._models:
-                # parquet-backed models are as static as the standard
-                # views — register each ONCE; only RUNTIME tables change
-                # between registry bumps, so skip the eager footer
-                # re-read per put()->sql() iteration for everything
-                # already registered
-                if (name in self._registered_views
-                        and name not in self._runtime_tables):
-                    continue
-                try:
-                    self.table(name).createOrReplaceTempView(name)
-                    self._registered_views.add(name)
-                except AnalysisException as e:
-                    # only "no backing file yet" is benign; schema
-                    # corruption / permission errors must surface
-                    if "PATH_NOT_FOUND" not in str(e):
-                        raise
-            self._views_version = self._registry_version
+        """ANSI SQL over the standard tables AND every registered model,
+        served from the relations ``table()`` holds: a view is registered
+        again only when its relation changed (a write, a re-declaration,
+        a rewritten parquet table, a backing file that appeared), so SQL
+        sees what ``list`` sees. A name with no backing file yet has no
+        view."""
+        for name in dict.fromkeys((*TABLES, *self._models)):
+            df = (self.table(name) if name in self._runtime_tables
+                  else self._parquet(name))
+            if df is not None and self._views.get(name) is not df:
+                df.createOrReplaceTempView(name)
+                self._views[name] = df
         return self.spark.sql(statement)
 
     def register_automation(self, name: str, fn) -> None:

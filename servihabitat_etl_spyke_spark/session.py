@@ -22,6 +22,20 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's ``MemTotal`` (``/proc/meminfo``), capped at 48g; 48g
+    where the host size is unknown. A driver heap allowed to grow past
+    the host's memory ends in an OOM kill, not a faster job."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(48 * 1024, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "48g"
+
+
 def get_spark(app_name: str = "servihabitat_etl_spyke_spark",
               cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
@@ -36,7 +50,9 @@ def get_spark(app_name: str = "servihabitat_etl_spyke_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # the stage-progress bar writes \r-spam to stdout, which corrupts
         # single-line JSON protocols (the bench driver reads a stdout tail)

@@ -14,12 +14,33 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 
-def sheet_from_rows(spark: SparkSession,
-                    rows: Sequence[Sequence[str]]) -> DataFrame:
-    """Zip ``rows[0]`` (header) with the remaining rows.
+def string_schema(columns: Sequence[str]) -> T.StructType:
+    """Every column STRING: a sheet has no types."""
+    return T.StructType([T.StructField(c, T.StringType()) for c in columns])
+
+
+def arrow_relation(spark: SparkSession, rows: Sequence[tuple],
+                   schema: T.StructType) -> DataFrame:
+    """Rows of internal values (strings as-is; dates as epoch days and
+    timestamps as epoch micros, what ``StructType.toInternal`` gives) as
+    an Arrow-backed local relation: a LocalRelation plan with no pickled
+    Python RDD behind it, so querying it never starts a Python worker."""
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=to_arrow_type(f.dataType))
+         for c, f in zip(cols, schema.fields)], names=schema.names)
+    return spark.createDataFrame(table, schema=schema)
+
+
+def sheet_rows(rows: Sequence[Sequence[str]]
+               ) -> tuple[list[str], list[tuple[str, ...]]]:
+    """Split ``rows[0]`` (header) from the remaining rows.
 
     Mirrors getSpreadSheetElements: short rows pad with ``''``, extra cells
     beyond the header are dropped, and every value stays a string (sheets
@@ -49,9 +70,15 @@ def sheet_from_rows(spark: SparkSession,
     if len(set(header)) != len(header):
         raise ValueError(f"duplicate sheet header names: {header}")
     n = len(header)
-    data = [tuple((list(map(str, r)) + [""] * n)[:n]) for r in rows[1:]]
-    schema = ", ".join(f"`{h}` string" for h in header)
-    return spark.createDataFrame(data, schema)
+    return header, [tuple((list(map(str, r)) + [""] * n)[:n])
+                    for r in rows[1:]]
+
+
+def sheet_from_rows(spark: SparkSession,
+                    rows: Sequence[Sequence[str]]) -> DataFrame:
+    """``sheet_rows`` as an all-string Arrow-backed relation."""
+    header, data = sheet_rows(rows)
+    return arrow_relation(spark, data, string_schema(header))
 
 
 def read_sheet(spark: SparkSession, path: str) -> DataFrame:

@@ -305,3 +305,246 @@ def test_r6_engine_and_source_guards(spark, tmp_path):
                                "id long, prompt string, completion string")
     with pytest.raises(ValueError, match="already exists"):
         llm_enrich(df, "prompt", client=lambda xs: xs)
+
+
+# -- runtime-model writes: bounded cost and parity with a keyed fold --------
+
+def _plan_nodes(df) -> int:
+    def count(plan) -> int:
+        kids = plan.children()
+        return 1 + sum(count(kids.apply(i)) for i in range(kids.size()))
+    return count(df._jdf.queryExecution().analyzed())
+
+
+def _fold(store: list[tuple], op: str, arg: list, key: int) -> list[tuple]:
+    """Pure-Python keyed store: put replaces each id's row (the LAST row
+    of a batch wins) and appends new ids; delete drops ids whose string
+    form is listed. Null-id rows are never matched, so they survive both."""
+    if op == "put":
+        batch = {r[key]: r for r in arg}
+        return [r for r in store
+                if r[key] is None or r[key] not in batch] + list(batch.values())
+    gone = {str(i) for i in arg}
+    return [r for r in store if r[key] is None or str(r[key]) not in gone]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_runtime_model_write_cost_is_bounded(spark, sf_dir):
+    """Thirty alternating writes leave the model's analyzed plan exactly
+    as large as right after declaration (each write updates the rows the
+    Engine holds and the next request gets one local relation, not a
+    plan stacked onto the lineage), and every list in between equals the
+    keyed fold. A burst of writes with no request between them runs no
+    Spark job."""
+    import random
+    rng = random.Random(7)
+    e = Engine(spark, sf_dir)
+    store = [(f"k{i}", rng.randrange(100)) for i in range(40)]
+    e.create_model({"name": "flat", "keys": {
+        "k": {"modifiers": [{"name": "id"}]},
+        "n": {"type": "number", "params": ["int"]}}},
+        data=[{"k": k, "n": n} for k, n in store])
+    nodes = _plan_nodes(e.table("flat"))
+    for step in range(30):
+        if step % 2 == 0:
+            batch = [(f"k{rng.randrange(60)}", rng.randrange(100))
+                     for _ in range(rng.randint(1, 3))]
+            e.put("flat", [{"k": k, "n": n} for k, n in batch])
+            store = _fold(store, "put", batch, 0)
+        else:
+            ids = [f"k{rng.randrange(60)}"]
+            e.delete("flat", ids)
+            store = _fold(store, "delete", ids, 0)
+        assert _plan_nodes(e.table("flat")) == nodes, step
+        assert _rows(e.list("flat", all_rows=True)) == sorted(store,
+                                                              key=repr)
+
+    def last_job():
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(),
+                   default=-1)
+
+    before = last_job()
+    for i in range(20):
+        e.put("flat", [{"k": f"k{i}", "n": i}])
+        e.delete("flat", [f"k{i + 1}"])
+        store = _fold(_fold(store, "put", [(f"k{i}", i)], 0),
+                      "delete", [f"k{i + 1}"], 0)
+    assert last_job() == before
+    assert _rows(e.table("flat")) == sorted(store, key=repr)
+
+
+_PARITY_KINDS = ("string", "long", "double", "sheet", "dataframe",
+                 "null_id", "date")
+
+
+@pytest.mark.parametrize("kind", _PARITY_KINDS)
+def test_runtime_model_write_parity(spark, sf_dir, kind):
+    """Seeded random put/delete sequences against the keyed fold, per id
+    type and storage: string/long/double ids, a sheet model (None is
+    stored as ''), DataFrame-input puts, duplicate ids within a batch
+    (last wins), null-id rows that survive deletes, and a date field
+    whose stored values equal createDataFrame(list)'s."""
+    import datetime as dt
+    import random
+    rng = random.Random(_PARITY_KINDS.index(kind))
+    id_type = {"long": ("number", ["int"]), "double": ("number", [])}.get(
+        kind, ("string", []))
+    spec = {"name": f"par_{kind}", "keys": {
+        "id": {"type": id_type[0], "params": id_type[1],
+               "modifiers": [{"name": "id"}]},
+        "v": {"type": "date" if kind == "date" else "string"}}}
+    mk_id = {"long": lambda i: i, "double": lambda i: i + 0.5}.get(
+        kind, lambda i: f"i{i}")
+
+    def mk_v():
+        if kind == "date":
+            return dt.datetime(2024, 1, 1) + dt.timedelta(
+                seconds=rng.randrange(10 ** 7), microseconds=rng.randrange(
+                    10 ** 6))
+        return rng.choice(("a", "b", None))
+
+    def stored(v):
+        return "" if kind == "sheet" and v is None else v
+
+    start = [(mk_id(i), mk_v()) for i in range(6)]
+    if kind == "sheet":
+        e_data = [["id", "v"]] + [[i, stored(v)] for i, v in start]
+        store = [(i, stored(v)) for i, v in start]
+    elif kind == "null_id":
+        start.append((None, "null-row"))
+        e_data = spark.createDataFrame(start, "id string, v string")
+        store = list(start)
+    else:
+        e_data = [{"id": i, "v": v} for i, v in start]
+        store = list(start)
+    e = Engine(spark, sf_dir)
+    m = e.create_model(spec, data=e_data,
+                       storage="sheet" if kind == "sheet" else "native")
+    for _ in range(8):
+        if rng.random() < 0.6:
+            batch = [(mk_id(rng.randrange(9)), mk_v())
+                     for _ in range(rng.randint(1, 4))]
+            if kind == "null_id" and rng.random() < 0.5:
+                batch.append((None, "new-null"))
+            if kind == "dataframe":
+                e.put(m.name, spark.createDataFrame(batch,
+                                                    "id string, v string"))
+            else:
+                e.put(m.name, [{"id": i, "v": v} for i, v in batch])
+            store = _fold(store, "put", [(i, stored(v)) for i, v in batch], 0)
+        else:
+            ids = [mk_id(rng.randrange(9)) for _ in range(rng.randint(1, 2))]
+            e.delete(m.name, ids)
+            store = _fold(store, "delete", ids, 0)
+        assert _rows(e.table(m.name)) == sorted(store, key=repr)
+    if kind == "date":
+        assert _rows(e.table(m.name)) == _rows(
+            spark.createDataFrame(store, m.schema))
+
+
+def test_bound_model_writes_stay_lazy(spark, tmp_path):
+    """A bind_to model is never collected into the driver: after a put
+    and a delete its plan still scans the parquet table, and its rows
+    equal the keyed fold."""
+    spark.createDataFrame([(i, f"v{i}") for i in range(5)],
+                          "bid long, v string") \
+        .write.parquet(str(tmp_path / "bound.parquet"))
+    e = Engine(spark, str(tmp_path))
+    e.create_model({"name": "b", "keys": {
+        "bid": {"type": "number", "params": ["int"],
+                "modifiers": [{"name": "id"}]},
+        "v": {}}}, bind_to="bound")
+    store = [(i, f"v{i}") for i in range(5)]
+    e.put("b", [{"bid": 2, "v": "two"}, {"bid": 9, "v": "nine"},
+                {"bid": 9, "v": "NINE"}])
+    store = _fold(store, "put", [(2, "two"), (9, "nine"), (9, "NINE")], 0)
+    e.delete("b", [0, 9])
+    store = _fold(store, "delete", [0, 9], 0)
+    plan = e.table("b")._jdf.queryExecution().analyzed().toString()
+    assert "parquet" in plan.lower() and "LocalRelation" in plan
+    assert _rows(e.table("b")) == sorted(store, key=repr)
+
+
+def test_runtime_model_rows_are_type_checked(spark, sf_dir):
+    e = Engine(spark, sf_dir)
+    spec = {"name": "typed", "keys": {
+        "id": {"modifiers": [{"name": "id"}]},
+        "n": {"type": "number", "params": ["int"]}}}
+    with pytest.raises(TypeError):
+        e.create_model(spec, data=[{"id": "a", "n": "not-a-number"}])
+    e.create_model(spec, data=[{"id": "a", "n": 1}])
+    with pytest.raises(TypeError):
+        # the bad row is dropped by last-wins, but still checked
+        e.put("typed", [{"id": "b", "n": "x"}, {"id": "b", "n": 2}])
+    assert _rows(e.table("typed")) == [("a", 1)]
+
+
+def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
+                                                 monkeypatch):
+    """An unchanged parquet table is loaded once however many requests
+    read it; after a rewrite (Spark overwrite of a directory table, an
+    in-place rewrite of a single-file table, an append into a partition
+    directory) the next list, read and sql all see the new rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from servihabitat_etl_spyke_spark import engine as engine_mod
+
+    loads = []
+    real = engine_mod.load_table
+
+    def counting(spark_, sf, name):
+        loads.append(name)
+        return real(spark_, sf, name)
+
+    monkeypatch.setattr(engine_mod, "load_table", counting)
+    d_path, f_path = tmp_path / "dir_t.parquet", tmp_path / "file_t.parquet"
+    spark.createDataFrame([(1, "a"), (2, "b")], "wid long, v string") \
+        .write.parquet(str(d_path))
+    pq.write_table(pa.table({"wid": [1], "v": ["x"]}), str(f_path))
+    e = Engine(spark, str(tmp_path))
+    for name in ("dir_t", "file_t"):
+        e.register_model(model(name, FieldSpec("wid", is_id=True),
+                               FieldSpec("v"), default_order_by="wid"))
+
+    def seen(name, wid):
+        return ([tuple(r) for r in e.list(name, all_rows=True).collect()],
+                e.read(name, wid),
+                [tuple(r) for r in
+                 e.sql(f"SELECT wid, v FROM {name} ORDER BY wid").collect()])
+
+    for _ in range(10):
+        e.list("dir_t", items_per_page=1).collect()
+    assert loads == ["dir_t"]
+    assert seen("dir_t", 1) == ([(1, "a"), (2, "b")], {"wid": 1, "v": "a"},
+                                [(1, "a"), (2, "b")])
+    assert seen("file_t", 1) == ([(1, "x")], {"wid": 1, "v": "x"}, [(1, "x")])
+    assert sorted(loads) == ["dir_t", "file_t"]
+
+    spark.createDataFrame([(3, "c")], "wid long, v string") \
+        .write.mode("overwrite").parquet(str(d_path))
+    pq.write_table(pa.table({"wid": [7, 8], "v": ["y", "z"]}), str(f_path))
+    assert seen("dir_t", 3) == ([(3, "c")], {"wid": 3, "v": "c"}, [(3, "c")])
+    assert seen("file_t", 8) == ([(7, "y"), (8, "z")], {"wid": 8, "v": "z"},
+                                 [(7, "y"), (8, "z")])
+    assert sorted(loads) == ["dir_t", "dir_t", "file_t", "file_t"]
+
+    # an append inside an existing partition directory leaves the table
+    # directory's own mtime as it was; it is still seen
+    p_path = tmp_path / "part_t.parquet"
+    spark.createDataFrame([(1, "a", 0)], "wid long, v string, p int") \
+        .write.partitionBy("p").parquet(str(p_path))
+    e.register_model(model("part_t", FieldSpec("wid", is_id=True),
+                           FieldSpec("v"), default_order_by="wid"))
+    assert e.list("part_t", all_rows=True).count() == 1
+    top = os.stat(p_path).st_mtime_ns
+    pq.write_table(pa.table({"wid": [2], "v": ["b"]}),
+                   str(p_path / "p=0" / "appended.parquet"))
+    assert os.stat(p_path).st_mtime_ns == top
+    assert e.list("part_t", all_rows=True).count() == 2
+    assert e.sql("SELECT count(*) FROM part_t").collect()[0][0] == 2
