@@ -600,21 +600,6 @@ def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
     return hashed.select(F.col(id_col), packed.cast("long").alias("simhash"))
 
 
-def simhash_buckets(fingerprints: DataFrame, half_bits: int = 16,
-                    id_col: str = "doc_id") -> DataFrame:
-    """Hamming-candidate buckets: docs agreeing on either 16-bit half
-    are candidates. Pigeonhole over TWO blocks guarantees all pairs at
-    TOTAL Hamming distance <= 1 (one differing bit can ruin only one
-    half); a pair with one flipped bit in EACH half (distance 2)
-    matches neither index — for distance-d recall use
-    :func:`simhash_neardup` with bands > d."""
-    mask = (1 << half_bits) - 1
-    return fingerprints.select(
-        F.col(id_col), F.col("simhash"),
-        (F.col("simhash").bitwiseAND(F.lit(mask))).alias("lo"),
-        F.shiftright("simhash", half_bits).bitwiseAND(F.lit(mask)).alias("hi"))
-
-
 # -- embedding-cosine near-dup --------------------------------------------------
 
 

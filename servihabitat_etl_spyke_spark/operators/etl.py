@@ -23,6 +23,7 @@ Re-expresses the reference's S3 -> transform -> DynamoDB automation
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -282,190 +283,68 @@ def cascade_delete(parent: DataFrame, children: DataFrame, fk_col: str,
     return parent_after, children_after
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5 analog: persist the snapshot (CREATE TABLE IF NOT EXISTS +
-    PutItem loop becomes one parquet write)."""
-    df.write.mode(mode).parquet(path)
-
-
-# name of the zero-byte file a swap writes into the OUTGOING snapshot
-# directory right before renaming it to '._old' (see recover_snapshot).
-# Underscore-prefixed, so parquet readers skip it (the Hadoop
-# hidden-file convention — _SUCCESS rides in data dirs the same way).
-_STALE_MARK = "_stale_snapshot"
-
-
-def _gc_tree(d: str) -> None:
-    """Retire a directory ATOMICALLY before deleting it: rename to a
-    ``._gc`` trash name — which no heal path ever re-enters — then
-    rmtree the trash. A bare rmtree of a stamped ``._old`` is not
-    atomic: a crash mid-delete can remove the ``_stale_snapshot`` mark
-    before the data files, and the next :func:`recover_snapshot` would
-    take the legacy gen-1 branch and rename that partial,
-    stamp-stripped N-1 directory over an absent ``path`` — resurrecting
-    partial stale data as committed, the exact double fault the stamp
-    protocol guards against (r10 ADVICE). After the rename, the worst a
-    crash can leave is ``._gc`` litter, swept by the next call here (or
-    by recover_snapshot for abandoned stores)."""
-    import shutil
-
-    trash = d.rstrip("/") + "._gc"
-    shutil.rmtree(trash, ignore_errors=True)   # a prior crash's litter
-    try:
-        os.rename(d, trash)
-    except OSError:
-        # d already gone: nothing to retire. Rename REFUSED with d
-        # still present (undeletable ._gc litter, open handle): a bare
-        # rmtree here would reopen the exact stamp-stripping window
-        # this function closes (r10 review) — delete in place with the
-        # stamp LAST, so a crash mid-delete leaves the partial still
-        # marked stale and the heal paths still refuse it.
-        if not os.path.isdir(d):
-            return
-        for entry in os.listdir(d):
-            if entry == _STALE_MARK:
-                continue
-            p = os.path.join(d, entry)
-            try:
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            except OSError:
-                pass
-        # the final sweep may only run once the stamp is PROVABLY the
-        # last thing left (r11, r10 ADVICE): rmtree deletes children in
-        # arbitrary order, so with any undeletable data entry surviving
-        # the loop above it could strip the stamp first and leave an
-        # UNstamped partial for recover_snapshot's legacy branch to
-        # resurrect — the exact double fault this function closes. If
-        # anything but the stamp survived, leave the stamp standing so
-        # the partial stays marked stale; the next call (or heal) can
-        # finish the job when the entry becomes deletable.
-        try:
-            survivors = [e for e in os.listdir(d) if e != _STALE_MARK]
-        except OSError:
-            return
-        if not survivors:
-            shutil.rmtree(d, ignore_errors=True)   # stamp + dir, last
-        return
-    shutil.rmtree(trash, ignore_errors=True)
-
-
 def recover_snapshot(path: str) -> bool:
     """Heal an interrupted :func:`overwrite_via_tmp` swap at ``path`` and
-    report whether a committed snapshot now exists there.
+    report whether a committed snapshot exists there.
 
     Every exists-check that gates a merge-vs-bootstrap decision in this
-    package goes through here, so a crash mid-swap can never be
-    mistaken for an empty store (which would silently re-bootstrap over
-    surviving state). States, by the gen-2 stamp-BEFORE-swap protocol
-    (r9 ADVICE: the gen-1 protocol stamped ``._old`` only after the
-    second rename, leaving an UNstamped ``._old`` in the
-    rename-to-stamp gap — an external loss of ``path`` then resurrected
-    the N-1 snapshot as committed, the exact double-fault the stamp
-    exists to prevent; the stamp now travels INTO ``._old`` with the
-    rename, so no unstamped window exists at all):
+    package goes through here, so a crash mid-swap is never mistaken
+    for an empty store. The states a crash can leave:
 
-    - ``path`` present: committed; a surviving ``._old`` (cleanup
-      crash) is dropped, and an orphaned ``._tmp`` (crash during a
-      staging write, or between the stamp and the first rename — its
-      contents were never committed) is dropped too, so an abandoned
-      store never holds a dead snapshot's worth of disk (r9 ADVICE);
-    - ``path`` absent, STAMPED ``._old`` + ``._tmp`` present: crash
-      between the two renames. The staged successor is complete by
-      protocol (the stamp is written only after the staging write
-      returns), so the swap is rolled FORWARD — ``._tmp`` becomes
-      ``path`` — never the stamped N-1 resurrected;
-    - ``path`` absent, STAMPED ``._old``, no ``._tmp``: the double
-      fault (post-swap cleanup crash, then ``path`` lost externally)
-      — report absent, drop the stale ``._old``;
-    - ``path`` absent, UNstamped ``._old``: a gen-1 mid-swap residue
-      (no stamp existed before the first rename back then) — restore
-      it, the legacy heal.
+    ``path``  ``._old``  ``._tmp``  action
+    absent    present    present    rename ``._tmp`` to ``path``
+    (every other combination)       drop ``._tmp`` and ``._old``
 
-    Every ``._old`` deletion goes through :func:`_gc_tree` (rename to
-    ``._gc`` first — r10 ADVICE: a crash mid-rmtree could strip the
-    stamp off a half-deleted ``._old`` and feed the legacy gen-1
-    branch partial data); ``._gc`` litter from a crashed delete is
-    swept here so an abandoned store does not hold it forever. A
-    partial ``._tmp`` needs no such guard: the roll-forward branch
-    requires a stamped ``._old``, which :func:`overwrite_via_tmp`
-    creates only AFTER the staging write returned — no reachable state
-    renames a half-deleted ``._tmp`` into ``path``."""
-    import shutil
-
+    The first row is a crash between the swap's two renames: ``._tmp``
+    is complete, because ``._old`` is only created after the staging
+    write returned, so the swap rolls forward. In every other state a
+    ``._tmp`` is an unfinished staging write and an ``._old`` a
+    snapshot already replaced (or lost together with ``path``), so
+    both are garbage. A partially deleted ``._old`` is never restored,
+    and a killed first write leaves the store absent."""
     tmp = path.rstrip("/") + "._tmp"
     old = path.rstrip("/") + "._old"
-    exists = os.path.exists(path)
-    if os.path.exists(old):
-        if exists:
-            _gc_tree(old)
-        elif os.path.exists(os.path.join(old, _STALE_MARK)):
-            if os.path.exists(tmp):
-                os.rename(tmp, path)           # roll the swap forward
-                exists = True
-            _gc_tree(old)
-        else:
-            os.rename(old, path)               # legacy gen-1 heal
-            exists = True
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)  # orphaned staging dir
-    if os.path.exists(old + "._gc"):
-        shutil.rmtree(old + "._gc", ignore_errors=True)
-    return exists
+    if (not os.path.exists(path) and os.path.exists(old)
+            and os.path.exists(tmp)):
+        os.rename(tmp, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    return os.path.exists(path)
 
 
 def overwrite_via_tmp(df: DataFrame, path: str) -> None:
-    """Overwrite the parquet snapshot at ``path`` with a plan that READS
-    from ``path``: stage the new data to a sibling ``._tmp`` (overwriting
-    the source while its scan is live would corrupt it), stamp the
-    outgoing snapshot stale, then swap directories — ``path`` ->
-    ``._old``, ``._tmp`` -> ``path`` — and drop ``._old``. The data is
-    written ONCE per merge (the pre-r8 shape re-read the tmp and ran a
-    second full Spark write into the final path, doubling write I/O per
-    micro-batch and leaving the snapshot deleted-then-half-written if
-    that second job crashed).
+    """Replace the parquet snapshot at ``path`` with ``df``, which may
+    read from ``path`` itself, or create it if absent:
 
-    Crash windows (all healed by :func:`recover_snapshot`): during the
-    staging write ``path`` is untouched and the orphaned ``._tmp`` is
-    dropped; between the stamp and the first rename ``path`` is intact
-    (a lingering in-place stamp is vacuous — recover only reads stamps
-    off ``._old`` — and readers skip underscore files); between the
-    renames ``path`` is briefly absent but the stamped ``._old`` plus
-    the complete ``._tmp`` roll the swap forward; after the second
-    rename a stale ``._old`` is dropped on the next recover. The stamp
-    precedes the swap (r9 ADVICE), so there is NO window that leaves an
-    unstamped ``._old`` — the double-fault resurrection claim holds for
-    every crash point, not just cleanup crashes; ``._old`` deletions
-    rename to ``._gc`` first so a crash mid-delete cannot strip the
-    stamp off a surviving partial (r10 ADVICE, see :func:`_gc_tree`).
-    At scale the store is a transactional table format and this is one
-    MERGE INTO."""
+    1. :func:`recover_snapshot` heals any earlier interrupted swap;
+    2. ``df`` is written once, to ``path._tmp``;
+    3. if ``path`` exists it is renamed to ``path._old``;
+    4. ``path._tmp`` is renamed to ``path``;
+    5. ``path._old`` is removed.
+
+    After :func:`recover_snapshot`, a crash in step 2 or 3 leaves the
+    old snapshot (or no store) at ``path``, and a crash in step 4 or 5
+    leaves the new one; never a partial write. At scale the store is a
+    transactional table format and this is one MERGE INTO."""
     tmp = path.rstrip("/") + "._tmp"
     old = path.rstrip("/") + "._old"
     recover_snapshot(path)
     df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):        # unreachable after recover; defensive
-        _gc_tree(old)
     if os.path.exists(path):
-        # stamp the OUTGOING snapshot BEFORE it becomes '._old' — the
-        # stamp rides the rename, so '._old' is born marked stale
-        open(os.path.join(path, _STALE_MARK), "w").close()
         os.rename(path, old)
     os.rename(tmp, path)
-    if os.path.exists(old):
-        _gc_tree(old)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def upsert_into_path(spark: SparkSession, incoming: DataFrame, path: str,
                      key: str = "id") -> None:
-    """MERGE-into-table emulation against a parquet path: read-if-exists
-    (through the swap-recovery check), upsert, write back atomically via
-    the rename swap (a transactional table format replaces all of this
-    with one MERGE INTO in production). Readers load ``path`` themselves."""
-    if recover_snapshot(path):
-        existing = spark.read.parquet(path)
-        overwrite_via_tmp(keyed_upsert(existing, incoming, key), path)
-    else:
-        keyed_upsert(None, incoming, key).write.mode("overwrite").parquet(path)
+    """MERGE-into-table emulation against a parquet path: read the
+    committed snapshot if there is one (:func:`recover_snapshot`),
+    apply :func:`keyed_upsert`, and swap the result in with
+    :func:`overwrite_via_tmp`, the first write included. Readers load
+    ``path`` themselves."""
+    existing = spark.read.parquet(path) if recover_snapshot(path) else None
+    overwrite_via_tmp(keyed_upsert(existing, incoming, key), path)
 
 
 # ---------------------------------------------------------------------------

@@ -42,10 +42,6 @@ def token_count_bpe(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_RE), 0))
 
 
-def _count_in(toks: Column, words: list[str]) -> Column:
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-
 def _count_in_lower(toks: Column, words: list[str]) -> Column:
     """Case-insensitive marker/stopword count: tokens lowercase before
     the membership test — an ALL-CAPS or title-case English doc contains

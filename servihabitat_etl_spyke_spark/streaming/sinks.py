@@ -130,8 +130,10 @@ def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
                 additive: bool) -> StreamingQuery:
     """Shared MERGE-into-parquet sink: each micro-batch reduces to its
     own partial (``partial_fn(batch)``), merges with the stored state
-    (``merge_fn(existing, partial)``), and overwrites atomically — the
-    one body behind the rollup/CMS/HLL/top-k/funnel sinks.
+    (``merge_fn(existing, partial)``) if a snapshot is stored, and
+    swaps the result in with ``overwrite_via_tmp`` (the first batch's
+    write included, so a crash never leaves a half-written store) —
+    the one body behind the rollup/CMS/HLL/top-k/funnel sinks.
 
     ``additive=True`` marks merges that DOUBLE-COUNT on micro-batch
     replay (sums; foreachBatch is at-least-once): those record the last
@@ -156,10 +158,8 @@ def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
             return                      # replayed batch: already merged
         part = partial_fn(batch)
         if _recover_snapshot(path):
-            merged = merge_fn(spark.read.parquet(path), part)
-            _overwrite_via_tmp(merged, path)
-        else:
-            part.write.mode("overwrite").parquet(path)
+            part = merge_fn(spark.read.parquet(path), part)
+        _overwrite_via_tmp(part, path)
         if additive:
             _commit_batch_marker(marker, bid)
 
@@ -375,8 +375,8 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
       APPENDS its own index rows — old rows never rewrite. Written
       FIRST, see the crash-window note.
     - ``graph_path``: the stored graph (query_id, neighbor_id, rank,
-      score) — overwritten atomically per batch via the tmp-stage
-      pattern of ``_merge_sink``.
+      score) — every write, the day-1 one included, is staged and
+      swapped in by ``overwrite_via_tmp``, as in ``_merge_sink``.
 
     ``validate`` forwards to the operator; a legitimately-small
     bootstrap corpus (fewer than k+1 vectors in the first batch) needs
@@ -423,8 +423,8 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
     transaction.
 
     Disaster recovery (r8 review): the graph-exists check goes through
-    ``recover_snapshot`` (a crash mid-rename-swap heals to the last
-    committed graph), and a graph that is GENUINELY gone while the
+    ``recover_snapshot`` (a crash mid-swap heals to the complete old or
+    new graph), and a graph that is GENUINELY gone while the
     index survives — external deletion, a lost volume — no longer
     silently re-bootstraps from one micro-batch (which would also
     OVERWRITE the index, losing every stored vector): the index holds
@@ -538,9 +538,11 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                                        with_score=True, ordered=False)
             _overwrite_via_tmp(graph, graph_path)
         elif not has_graph:
-            # day-1 bootstrap: the first batch IS the corpus. Both
-            # writes are mode=overwrite, so a crash anywhere in here
-            # re-bootstraps cleanly on replay.
+            # day-1 bootstrap: the first batch IS the corpus. The index
+            # is written first; a crash in the graph write leaves the
+            # index and no graph, so the replay takes the index-rebuild
+            # branch above. (The index write is a direct overwrite, not
+            # a swap: a hard kill inside it is not healed.)
             (_sim.ivf_index(rows, centroids, n_probe, id_col, vec_col)
              .write.partitionBy("centroid_id").mode("overwrite")
              .parquet(index_path))
@@ -548,7 +550,7 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
                                        with_score=True, ordered=False)
-            graph.write.mode("overwrite").parquet(graph_path)
+            _overwrite_via_tmp(graph, graph_path)
         else:
             if not os.path.exists(index_path):
                 # the converse loss is NOT recoverable: the index holds

@@ -21,3 +21,43 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def kill_next_parquet_write(monkeypatch, tmp_path):
+    """Arm ``DataFrameWriter.parquet`` so that its next call leaves, at its
+    target, what a driver killed mid-write leaves there, then raises:
+
+    - ``"temporary"``: only Spark's ``_temporary/`` (killed before job
+      commit);
+    - ``"partial"``: one of two part files and no ``_SUCCESS`` (killed
+      partway through job commit).
+
+    Later calls write normally."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def arm(how: str) -> None:
+        def killed(writer, path, *args, **kwargs):
+            monkeypatch.setattr(DataFrameWriter, "parquet", real)
+            if how == "temporary":
+                os.makedirs(os.path.join(path, "_temporary", "0"),
+                            exist_ok=True)
+            else:
+                side = str(tmp_path / "killed_write")
+                df = writer._df
+                real(df.repartitionByRange(2, df.columns[0])
+                     .write.mode("overwrite"), side)
+                parts = sorted(f for f in os.listdir(side)
+                               if f.startswith("part-"))
+                assert len(parts) == 2
+                os.makedirs(path, exist_ok=True)
+                shutil.copy(os.path.join(side, parts[0]), path)
+            raise RuntimeError("simulated driver kill during a parquet write")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", killed)
+
+    return arm

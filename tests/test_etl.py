@@ -317,19 +317,18 @@ def test_entity_pipeline_drops_itemless_lines(spark, tmp_path):
     assert snap.count() == 1
 
 
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
 def test_overwrite_via_tmp_rename_swap_and_recovery(spark, tmp_path):
-    """r8 review: the snapshot overwrite is a single staged write plus a
-    directory rename swap. The pre-r8 shape re-read the staged tmp and
-    ran a SECOND full Spark write into the final path — double write
-    I/O on every merge-sink micro-batch and every upsert_into_path
-    call, and a crash DURING that second job deleted the last committed
-    state (its docstring only covered a crash BETWEEN the writes).
-    Witnessed here:
+    """The snapshot overwrite is a single staged write plus a directory
+    rename swap. Witnessed here:
 
     - a merge whose plan READS the target lands the right content and
       leaks neither '._tmp' nor '._old';
-    - the swap's one vulnerable window (between the two renames: path
-      absent, '._old' holding the committed state) heals through
+    - a crash between the two renames ('._old' holding the previous
+      snapshot, '._tmp' the complete successor) rolls forward through
       recover_snapshot;
     - a completed swap whose '._old' cleanup died heals by dropping the
       stale '._old', keeping the NEW data;
@@ -348,23 +347,26 @@ def test_overwrite_via_tmp_rename_swap_and_recovery(spark, tmp_path):
     merged = spark.read.parquet(path).unionByName(
         spark.createDataFrame([("2", "b")], ["id", "v"]))
     overwrite_via_tmp(merged, path)
-    want = [("1", "a"), ("2", "b")]
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
+    assert _rows(spark, path) == [("1", "a"), ("2", "b")]
     assert not os.path.exists(path + "._tmp")
     assert not os.path.exists(path + "._old")
 
-    # interrupted swap: path -> ._old happened, tmp -> path did not
+    # interrupted swap: path -> ._old happened, the complete ._tmp was
+    # not renamed in
+    spark.createDataFrame(
+        [("1", "a"), ("2", "b"), ("3", "c")], ["id", "v"]).write.parquet(
+        path + "._tmp")
     os.rename(path, path + "._old")
     assert recover_snapshot(path)
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
+    assert _rows(spark, path) == [("1", "a"), ("2", "b"), ("3", "c")]
     assert not os.path.exists(path + "._old")
+    assert not os.path.exists(path + "._tmp")
 
     # completed swap, stale ._old left behind: the NEW data must win
     shutil.copytree(path, path + "._old")
     overwrite_via_tmp(
         spark.read.parquet(path).filter("id = '2'"), path)
-    assert sorted(map(tuple,
-                      spark.read.parquet(path).collect())) == [("2", "b")]
+    assert _rows(spark, path) == [("2", "b")]
     assert not os.path.exists(path + "._old")
 
     # genuinely absent store: no false recovery
@@ -374,63 +376,63 @@ def test_overwrite_via_tmp_rename_swap_and_recovery(spark, tmp_path):
     fresh = str(tmp_path / "fresh")
     overwrite_via_tmp(
         spark.createDataFrame([("9", "z")], ["id", "v"]), fresh)
-    assert sorted(map(tuple,
-                      spark.read.parquet(fresh).collect())) == [("9", "z")]
+    assert _rows(spark, fresh) == [("9", "z")]
     assert not os.path.exists(fresh + "._tmp")
 
 
 def test_recover_snapshot_does_not_resurrect_stale_old(spark, tmp_path):
-    """r8 review double-fault: a swap whose '._old' cleanup crashed
-    leaves a STALE previous snapshot next to the committed one; if the
-    committed path is then lost externally, recover must NOT revive the
-    stale '._old' as if it were committed state (an N-1 snapshot revived
-    that way silently diverges — the batch marker says N applied). A
-    completed swap stamps '._old' stale before deleting it, so recover
-    distinguishes mid-swap (restore) from post-swap garbage (drop,
-    report absent)."""
+    """Double fault: a swap whose '._old' cleanup crashed leaves a STALE
+    previous snapshot next to the committed one; if the committed path
+    is then lost externally, recover must NOT revive the stale '._old'
+    as committed state (an N-1 snapshot revived that way silently
+    diverges — the batch marker says N applied). An '._old' is only
+    ever rolled past, never restored: without a complete '._tmp' beside
+    it, the store reads as absent."""
     import os
 
     from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, overwrite_via_tmp, recover_snapshot)
+        overwrite_via_tmp, recover_snapshot)
 
     path = str(tmp_path / "snap")
     spark.createDataFrame([("1", "a")], ["id", "v"]).write.parquet(path)
     overwrite_via_tmp(
         spark.createDataFrame([("2", "b")], ["id", "v"]), path)
 
-    # post-swap stale ._old (cleanup crashed after the stamp), then the
-    # committed path is lost externally
-    os.makedirs(path + "._old")
-    open(os.path.join(path + "._old", _STALE_MARK), "w").close()
+    # post-swap stale ._old (cleanup crashed), then the committed path
+    # is lost externally
+    spark.createDataFrame([("1", "a")], ["id", "v"]).write.parquet(
+        path + "._old")
     os.rename(path, str(tmp_path / "gone"))
     assert not recover_snapshot(path)       # absent, NOT resurrected
     assert not os.path.exists(path + "._old")
 
-    # contrast: an UNstamped ._old with path absent is the mid-swap
-    # window and must restore
+    # even the latest snapshot at ._old with no ._tmp is not restored:
+    # the swap never leaves that state, so only an external loss can
     os.rename(str(tmp_path / "gone"), path + "._old")
+    assert not recover_snapshot(path)
+    assert not os.path.exists(path + "._old")
+
+    # contrast: ._old beside a complete ._tmp is the between-renames
+    # crash, and rolls FORWARD to the staged successor
+    spark.createDataFrame([("1", "a")], ["id", "v"]).write.parquet(
+        path + "._old")
+    spark.createDataFrame([("2", "b")], ["id", "v"]).write.parquet(
+        path + "._tmp")
     assert recover_snapshot(path)
-    assert sorted(map(tuple,
-                      spark.read.parquet(path).collect())) == [("2", "b")]
+    assert _rows(spark, path) == [("2", "b")]
 
 
 def test_overwrite_via_tmp_stamps_before_swap_and_rolls_forward(
         spark, tmp_path, monkeypatch):
-    """r9 ADVICE (etl.py #2): the gen-1 protocol stamped '._old' only
-    AFTER the second rename — a crash between os.rename(tmp, path) and
-    the stamp left an UNstamped '._old', and an external loss of path
-    then resurrected N-1 as committed (the exact double-fault the stamp
-    claims to prevent). Gen-2 stamps the outgoing snapshot BEFORE the
-    first rename, so '._old' is born stale-marked in every window.
-    Witnessed by crashing the swap between the two renames (the
-    narrowest window): '._old' must already carry the stamp, and
-    recover must roll the swap FORWARD to the complete staged successor
-    — never revive the stamped N-1."""
+    """Witnessed by crashing the swap between the two renames (the
+    narrowest window): '._old' holds N-1, '._tmp' the complete
+    successor, and recover must roll the swap FORWARD to the staged
+    successor — never revive N-1."""
     import os
 
     from servihabitat_etl_spyke_spark.operators import etl as etl_mod
     from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, overwrite_via_tmp, recover_snapshot)
+        overwrite_via_tmp, recover_snapshot)
 
     path = str(tmp_path / "snap")
     spark.createDataFrame([("1", "a")], ["id", "v"]).write.parquet(path)
@@ -448,209 +450,136 @@ def test_overwrite_via_tmp_stamps_before_swap_and_rolls_forward(
             spark.createDataFrame([("2", "b")], ["id", "v"]), path)
     monkeypatch.setattr(etl_mod.os, "rename", real_rename)
 
-    # the crash state: path absent, ._old STAMPED (stamp rode the first
-    # rename), ._tmp complete
+    # the crash state: path absent, ._old and a complete ._tmp present
     assert not os.path.exists(path)
-    assert os.path.exists(os.path.join(path + "._old", _STALE_MARK))
+    assert os.path.exists(path + "._old")
     assert os.path.exists(path + "._tmp")
 
-    # recover rolls FORWARD: the staged successor commits, the stamped
-    # N-1 is dropped, nothing resurrects
+    # recover rolls FORWARD: the staged successor commits, N-1 is
+    # dropped, nothing resurrects
     assert recover_snapshot(path)
-    assert sorted(map(tuple,
-                      spark.read.parquet(path).collect())) == [("2", "b")]
+    assert _rows(spark, path) == [("2", "b")]
     assert not os.path.exists(path + "._old")
     assert not os.path.exists(path + "._tmp")
 
 
-def test_gc_tree_crash_mid_delete_cannot_strip_the_stamp(tmp_path,
-                                                         monkeypatch):
-    """r10 ADVICE: a bare rmtree of a stamped '._old' is not atomic — a
-    crash mid-delete can remove the _stale_snapshot mark before the
-    data files, and the next recover would take the legacy gen-1
-    branch and rename the partial, stamp-stripped N-1 over an absent
-    path, resurrecting partial stale data as committed. Deletions now
-    rename to '._old._gc' FIRST (atomic), so a crashed delete leaves
-    only trash no heal path ever re-enters; the litter is swept by the
-    next recover."""
+@pytest.mark.parametrize("crash,survivor", [
+    ("staging_write", "old"),
+    ("first_rename", "old"),
+    ("second_rename", "new"),
+    ("old_removal", "new"),
+    ("old_removal_then_path_lost", None),
+])
+def test_overwrite_via_tmp_crash_windows(spark, tmp_path, monkeypatch,
+                                         kill_next_parquet_write, crash,
+                                         survivor):
+    """Crash overwrite_via_tmp at each step of the swap, then heal with
+    recover_snapshot: a crash during the staging write or before the
+    first rename keeps exactly the old rows, a crash between the renames
+    or during the removal of '._old' gives exactly the new rows. A
+    partially deleted '._old' is never restored: if the committed path
+    is then lost too, the store reads as absent."""
     import os
     import shutil
 
     from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, recover_snapshot)
+        overwrite_via_tmp, recover_snapshot)
 
     path = str(tmp_path / "snap")
-    # the double-fault state: path absent, stamped '._old' present
-    os.makedirs(path + "._old")
-    open(os.path.join(path + "._old", _STALE_MARK), "w").close()
-    with open(os.path.join(path + "._old", "part-0.parquet"), "w") as fh:
-        fh.write("stale N-1 data")
+    old_rows = [("1", "a"), ("2", "b")]
+    new_rows = [("1", "a"), ("3", "c")]
+    (spark.createDataFrame(old_rows, ["id", "v"]).repartition(2)
+     .write.parquet(path))
+    new = (spark.read.parquet(path).filter("id = '1'")
+           .unionByName(spark.createDataFrame([("3", "c")], ["id", "v"])))
 
-    real_rmtree = shutil.rmtree
+    real_rename, real_rmtree = os.rename, shutil.rmtree
 
-    def crash_mid_delete(d, ignore_errors=False, **kw):
-        if str(d).endswith("._gc"):
-            # simulate the worst-ordered partial delete: the stamp
-            # file dies, the data files survive
-            mark = os.path.join(str(d), _STALE_MARK)
-            if os.path.exists(mark):
-                os.remove(mark)
-            return None
-        return real_rmtree(d, ignore_errors=ignore_errors, **kw)
+    def rename(src, dst):
+        if (crash == "first_rename" and src == path) or (
+                crash == "second_rename" and src == path + "._tmp"):
+            raise OSError("simulated crash at rename")
+        return real_rename(src, dst)
 
-    monkeypatch.setattr(shutil, "rmtree", crash_mid_delete)
-    assert not recover_snapshot(path)      # absent, not resurrected
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    def rmtree(p, *args, **kwargs):
+        if str(p) == path + "._old" and os.path.isdir(p):
+            parts = sorted(f for f in os.listdir(p)
+                           if f.startswith("part-"))
+            os.remove(os.path.join(p, parts[0]))
+            raise OSError("simulated crash while removing ._old")
+        return real_rmtree(p, *args, **kwargs)
 
-    # the crashed delete left TRASH, never a stamp-stripped '._old'
-    # that the legacy gen-1 branch would restore as committed
+    if crash == "staging_write":
+        kill_next_parquet_write("partial")
+    monkeypatch.setattr(os, "rename", rename)
+    if crash.startswith("old_removal"):
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises((OSError, RuntimeError), match="simulated"):
+        overwrite_via_tmp(new, path)
+    monkeypatch.undo()
+    if crash == "old_removal_then_path_lost":
+        assert os.path.isdir(path + "._old")    # the partial N-1
+        shutil.rmtree(path)
+
+    assert recover_snapshot(path) == (survivor is not None)
+    if survivor is not None:
+        want = old_rows if survivor == "old" else new_rows
+        assert _rows(spark, path) == want
+    else:
+        assert not os.path.exists(path)
     assert not os.path.exists(path + "._old")
-    assert os.path.exists(
-        os.path.join(path + "._old._gc", "part-0.parquet"))
+    assert not os.path.exists(path + "._tmp")
 
-    # the next recover sweeps the litter and still reports absent
+
+@pytest.mark.parametrize("how", ["temporary", "partial"])
+def test_upsert_into_path_killed_first_write_leaves_store_absent(
+        spark, tmp_path, kill_next_parquet_write, how):
+    """A driver killed during the FIRST write of a store (its bootstrap)
+    leaves only Spark's '_temporary/', or some part files and no
+    '_SUCCESS'. The first write is staged like every other, so the
+    store reads as absent afterwards — never as a committed empty or
+    half-written snapshot — and the retried batch sequence lands
+    exactly the keyed fold of the batches."""
+    import os
+
+    from servihabitat_etl_spyke_spark.operators.etl import recover_snapshot
+
+    path = str(tmp_path / "store")
+    batches = [[("p1", "a"), ("p2", "b"), ("p3", "c"), ("p4", "d")],
+               [("p2", "B"), ("p5", "e")]]
+
+    kill_next_parquet_write(how)
+    with pytest.raises(RuntimeError, match="simulated driver kill"):
+        upsert_into_path(
+            spark, spark.createDataFrame(batches[0], ["id", "v"]), path)
     assert not recover_snapshot(path)
-    assert not os.path.exists(path + "._old._gc")
     assert not os.path.exists(path)
 
-
-def test_gc_tree_rename_refused_deletes_stamp_last(tmp_path, monkeypatch):
-    """r10 review follow-up: when the trash rename itself is REFUSED
-    (undeletable '._gc' litter, open handle) the fallback must not be
-    a bare rmtree of the stamped dir — that reopens the exact
-    stamp-stripping window _gc_tree closes. The in-place fallback
-    deletes data files FIRST and the stamp last, so a crash mid-delete
-    leaves the partial still marked stale and no heal path restores
-    it."""
-    import os
-    import shutil
-
-    from servihabitat_etl_spyke_spark.operators import etl as etl_mod
-    from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, _gc_tree)
-
-    d = str(tmp_path / "snap._old")
-    os.makedirs(d)
-    open(os.path.join(d, _STALE_MARK), "w").close()
-    with open(os.path.join(d, "part-0.parquet"), "w") as fh:
-        fh.write("stale data")
-
-    real_rename = os.rename
-
-    def refuse(src, dst):
-        raise OSError("simulated ENOTEMPTY on the trash name")
-
-    # crash the FINAL dir delete so the mid-fallback state is visible
-    real_rmtree = shutil.rmtree
-    calls = []
-
-    def crash_final(p, ignore_errors=False, **kw):
-        if str(p) == d:
-            calls.append(p)
-            return None                      # simulated crash
-        return real_rmtree(p, ignore_errors=ignore_errors, **kw)
-
-    monkeypatch.setattr(etl_mod.os, "rename", refuse)
-    monkeypatch.setattr(shutil, "rmtree", crash_final)
-    _gc_tree(d)
-    monkeypatch.setattr(etl_mod.os, "rename", real_rename)
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-
-    # the data file died first; the stamp SURVIVED the simulated crash
-    # — the partial is still marked stale, so recover_snapshot will
-    # drop it, never restore it
-    assert calls, "fallback never reached the final delete"
-    assert not os.path.exists(os.path.join(d, "part-0.parquet"))
-    assert os.path.exists(os.path.join(d, _STALE_MARK))
-
-
-def test_gc_tree_survivor_entry_keeps_the_stamp(tmp_path, monkeypatch):
-    """r11 (r10 ADVICE): in the rename-refused fallback, the final
-    stamp+dir sweep may only run once the stamp is PROVABLY the last
-    entry left. With any data entry surviving its own deletion (EBUSY,
-    open handle), rmtree — which deletes children in arbitrary order —
-    could strip the stamp while the undeletable entry lives on,
-    leaving an UNstamped partial for recover_snapshot's legacy gen-1
-    branch to resurrect. The stamp must stay standing instead."""
-    import os
-    import shutil
-
-    from servihabitat_etl_spyke_spark.operators import etl as etl_mod
-    from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, _gc_tree)
-
-    d = str(tmp_path / "snap._old")
-    os.makedirs(d)
-    open(os.path.join(d, _STALE_MARK), "w").close()
-    with open(os.path.join(d, "part-0.parquet"), "w") as fh:
-        fh.write("stale data")
-    with open(os.path.join(d, "part-1.parquet"), "w") as fh:
-        fh.write("stale data too")
-
-    def refuse_rename(src, dst):
-        raise OSError("simulated ENOTEMPTY on the trash name")
-
-    real_unlink = os.unlink
-
-    def refuse_one(p, *a, **kw):
-        if str(p).endswith("part-1.parquet"):
-            raise OSError("simulated EBUSY")
-        return real_unlink(p, *a, **kw)
-
-    # any rmtree of the stamped dir itself would be the regression
-    real_rmtree = shutil.rmtree
-    swept = []
-
-    def watch_sweep(p, ignore_errors=False, **kw):
-        if str(p) == d:
-            swept.append(p)
-            return None
-        return real_rmtree(p, ignore_errors=ignore_errors, **kw)
-
-    monkeypatch.setattr(etl_mod.os, "rename", refuse_rename)
-    monkeypatch.setattr(etl_mod.os, "unlink", refuse_one)
-    monkeypatch.setattr(shutil, "rmtree", watch_sweep)
-    _gc_tree(d)
-    monkeypatch.setattr(etl_mod.os, "unlink", real_unlink)
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-
-    # the deletable entry died, the survivor lives — and the STAMP
-    # stayed with it: the partial is still marked stale, and the final
-    # sweep never ran against the stamped dir
-    assert not swept, "final sweep ran despite a surviving data entry"
-    assert not os.path.exists(os.path.join(d, "part-0.parquet"))
-    assert os.path.exists(os.path.join(d, "part-1.parquet"))
-    assert os.path.exists(os.path.join(d, _STALE_MARK))
-
-    # once the entry becomes deletable, the next call finishes the job
-    _gc_tree(d)
-    assert not os.path.exists(d)
+    for batch in batches:                   # the retry, then the next
+        upsert_into_path(
+            spark, spark.createDataFrame(batch, ["id", "v"]), path)
+    want = {}
+    for batch in batches:
+        want.update(batch)
+    assert _rows(spark, path) == sorted(want.items())
 
 
 def test_recover_snapshot_drops_orphaned_tmp(spark, tmp_path):
-    """r9 ADVICE (etl.py #4): a crash DURING the staging write leaves a
-    '._tmp' holding a full snapshot's worth of uncommitted data; the
-    old recover never touched it, so an abandoned store leaked it
-    forever. recover now drops the orphan (committed state untouched),
-    and a stale in-place stamp from the stamp-to-first-rename window is
-    invisible to readers (underscore convention)."""
+    """A crash DURING the staging write leaves a '._tmp' holding a full
+    snapshot's worth of uncommitted data; recover drops the orphan and
+    leaves the committed state untouched."""
     import os
 
-    from servihabitat_etl_spyke_spark.operators.etl import (
-        _STALE_MARK, recover_snapshot)
+    from servihabitat_etl_spyke_spark.operators.etl import recover_snapshot
 
     path = str(tmp_path / "snap")
     spark.createDataFrame([("1", "a")], ["id", "v"]).write.parquet(path)
     spark.createDataFrame([("9", "x")], ["id", "v"]).write.parquet(
         path + "._tmp")
-    # crash between the stamp and the first rename also leaves the
-    # live path stamped — vacuous, and readers must skip it
-    open(os.path.join(path, _STALE_MARK), "w").close()
 
     assert recover_snapshot(path)
     assert not os.path.exists(path + "._tmp")     # orphan dropped
-    assert sorted(map(tuple,
-                      spark.read.parquet(path).collect())) == [("1", "a")]
+    assert _rows(spark, path) == [("1", "a")]
 
     # an abandoned store (no committed path at all) also sheds its
     # orphan staging dir instead of holding it until a write that

@@ -336,6 +336,51 @@ def test_stream_rollup_upsert_matches_batch(spark, sf_dir, tmp_path):
     assert got2 == {k: 2 * cnt for k, (cnt, _s) in g.items()}
 
 
+@pytest.mark.parametrize("how", ["temporary", "partial"])
+def test_stream_rollup_upsert_killed_first_write(spark, tmp_path,
+                                                 kill_next_parquet_write,
+                                                 how):
+    """A driver killed during the sink's FIRST store write leaves only
+    Spark's '_temporary/', or some part files and no '_SUCCESS'. The
+    first write is staged like every other, so the store reads as
+    absent, and the replayed micro-batch (same checkpoint) lands
+    exactly the pure-Python rollup of the events — not a failing read
+    of a half-written store, nor a double count of its surviving rows."""
+    import datetime as dt
+    import os
+
+    from servihabitat_etl_spyke_spark.operators.etl import recover_snapshot
+    from servihabitat_etl_spyke_spark.streaming.sinks import (
+        stream_rollup_upsert)
+
+    events = [(dt.datetime(2024, 1, 1, h, m), et, float(h * 10 + m))
+              for h in (1, 2, 3) for m in (5, 40) for et in ("a", "b")]
+    schema = "ts timestamp, event_type string, value double"
+    src, store = str(tmp_path / "src"), str(tmp_path / "rollup")
+    spark.createDataFrame(events, schema).write.parquet(src)
+
+    def run():
+        return stream_rollup_upsert(
+            spark.readStream.schema(schema).parquet(src), store,
+            str(tmp_path / "ckpt")).awaitTermination(120)
+
+    kill_next_parquet_write(how)
+    with pytest.raises(Exception, match="simulated driver kill"):
+        run()
+    assert not recover_snapshot(store)
+    assert not os.path.exists(store)
+
+    run()                                   # the replay
+    want = {}
+    for ts, et, v in events:
+        k = (ts.replace(minute=0), et)
+        cnt, total = want.get(k, (0, 0.0))
+        want[k] = (cnt + 1, total + v)
+    got = {(r["win_start"], r["event_type"]): (r["cnt"], r["sum_value"])
+           for r in spark.read.parquet(store).collect()}
+    assert got == want
+
+
 def test_stream_incremental_neardup_matches_batch(spark, sf_dir, tmp_path):
     """Ingest-time near-dup: the crawl (doc_id % 5 == 0) arrives as a
     stream and must find exactly the new-vs-corpus pairs the batch
@@ -1247,12 +1292,14 @@ def test_stream_knn_graph_upsert_rebuilds_lost_graph_from_index(
 def test_stream_knn_graph_upsert_heals_interrupted_swap(
         spark, sf_dir, tmp_path):
     """The rename-swap's one vulnerable window, witnessed at the sink:
-    the graph dir renamed to '._old' with the new dir never renamed in
-    (a crash between overwrite_via_tmp's two renames). The exists-check
-    goes through recover_snapshot, so the next micro-batch restores the
-    committed graph and runs the NORMAL incremental path — not the
-    bootstrap, not the disaster rebuild."""
+    the graph dir renamed to '._old' with the complete staged graph at
+    '._tmp' never renamed in (a crash between overwrite_via_tmp's two
+    renames). The exists-check goes through recover_snapshot, so the
+    next micro-batch rolls the swap forward and runs the NORMAL
+    incremental path — not the bootstrap, not the disaster rebuild."""
     import os
+    import shutil
+    import warnings as _warnings
 
     from servihabitat_etl_spyke_spark.operators import similarity as SIM
     from servihabitat_etl_spyke_spark.streaming.sinks import (
@@ -1270,16 +1317,21 @@ def test_stream_knn_graph_upsert_heals_interrupted_swap(
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
                        with_score=True, ordered=False).write.parquet(gp))
-    os.rename(gp, gp + "._old")             # mid-swap crash state
+    shutil.copytree(gp, gp + "._tmp")       # mid-swap crash state:
+    os.rename(gp, gp + "._old")             # between the two renames
 
     src = tmp_path / "feed"
     src.mkdir()
     day1.coalesce(1).write.parquet(str(src / "d1.parquet"))
-    q = stream_knn_graph_upsert(
-        spark.readStream.schema(day1.schema)
-        .parquet(str(src / "d1.parquet")),
-        gp, ip, cp, cents, k=5, n_probe=2)
-    q.awaitTermination(180)
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        q = stream_knn_graph_upsert(
+            spark.readStream.schema(day1.schema)
+            .parquet(str(src / "d1.parquet")),
+            gp, ip, cp, cents, k=5, n_probe=2)
+        q.awaitTermination(180)
+    assert not any("rebuilding the graph" in str(w.message)
+                   for w in caught)
 
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                  for r in spark.read.parquet(gp).collect())
@@ -1287,6 +1339,7 @@ def test_stream_knn_graph_upsert_heals_interrupted_swap(
         emb, k=5, n_probe=2, centroids=cents).collect()))
     assert got == want and want
     assert not os.path.exists(gp + "._old")
+    assert not os.path.exists(gp + "._tmp")
 
 
 def test_stream_knn_graph_upsert_disaster_rebuild_mixed_batch(
