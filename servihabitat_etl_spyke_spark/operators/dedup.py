@@ -543,10 +543,24 @@ def incremental_neardup(new_docs: DataFrame, stored_docs: DataFrame,
                                  text_col, n).localCheckpoint()
     if stored_sig is None:
         stored_sig = minhash_signatures(stored_docs, k, id_col, text_col, n)
+    cand = incremental_candidate_pairs(new_sig, stored_sig, bands, rows,
+                                       id_col).persist()
+    cand.count()
+    docs_all = stored_docs.unionByName(new_docs)
+    return verify_pairs(docs_all, cand, threshold, id_col, text_col, n)
+
+
+def incremental_candidate_pairs(new_sig: DataFrame, stored_sig: DataFrame,
+                                bands: int = 4, rows: int = 4,
+                                id_col: str = "doc_id") -> DataFrame:
+    """LSH candidates involving at least one NEW doc: the new batch's band
+    table BROADCASTS against the bands of stored ∪ new, so the stored
+    band table streams map-side and is never shuffled. Emits distinct
+    (id_a, id_b), id_a < id_b, new-vs-new pairs included."""
     bn = band_signatures(new_sig, bands, rows, id_col).alias("a")
     bt = band_signatures(stored_sig.unionByName(new_sig), bands, rows,
                          id_col).alias("b")
-    cand = (F.broadcast(bn)
+    return (F.broadcast(bn)
             .join(bt, (F.col("a.band") == F.col("b.band"))
                   & (F.col("a.key") == F.col("b.key"))
                   & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
@@ -554,11 +568,7 @@ def incremental_neardup(new_docs: DataFrame, stored_docs: DataFrame,
                             F.col(f"b.{id_col}")).alias("id_a"),
                     F.greatest(F.col(f"a.{id_col}"),
                                F.col(f"b.{id_col}")).alias("id_b"))
-            .distinct()
-            .persist())
-    cand.count()
-    docs_all = stored_docs.unionByName(new_docs)
-    return verify_pairs(docs_all, cand, threshold, id_col, text_col, n)
+            .distinct())
 
 
 # -- SimHash ---------------------------------------------------------------------------

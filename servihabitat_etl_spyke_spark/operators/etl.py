@@ -22,6 +22,7 @@ Re-expresses the reference's S3 -> transform -> DynamoDB automation
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
@@ -283,6 +284,9 @@ def cascade_delete(parent: DataFrame, children: DataFrame, fk_col: str,
     return parent_after, children_after
 
 
+_COMMIT_FILE = "_commit.json"
+
+
 def recover_snapshot(path: str) -> bool:
     """Heal an interrupted :func:`overwrite_via_tmp` swap at ``path`` and
     report whether a committed snapshot exists there.
@@ -296,8 +300,9 @@ def recover_snapshot(path: str) -> bool:
     (every other combination)       drop ``._tmp`` and ``._old``
 
     The first row is a crash between the swap's two renames: ``._tmp``
-    is complete, because ``._old`` is only created after the staging
-    write returned, so the swap rolls forward. In every other state a
+    is complete, commit record included, because ``._old`` is only
+    created after the staging write returned, so the swap rolls
+    forward. In every other state a
     ``._tmp`` is an unfinished staging write and an ``._old`` a
     snapshot already replaced (or lost together with ``path``), so
     both are garbage. A partially deleted ``._old`` is never restored,
@@ -312,24 +317,42 @@ def recover_snapshot(path: str) -> bool:
     return os.path.exists(path)
 
 
-def overwrite_via_tmp(df: DataFrame, path: str) -> None:
+def read_commit(path: str) -> dict:
+    """The ``commit`` record that :func:`overwrite_via_tmp` swapped in
+    with the snapshot at ``path``, or ``{}`` when there is none. Call
+    :func:`recover_snapshot` first."""
+    try:
+        with open(os.path.join(path, _COMMIT_FILE)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
+
+
+def overwrite_via_tmp(df: DataFrame, path: str,
+                      commit: dict | None = None) -> None:
     """Replace the parquet snapshot at ``path`` with ``df``, which may
     read from ``path`` itself, or create it if absent:
 
     1. :func:`recover_snapshot` heals any earlier interrupted swap;
-    2. ``df`` is written once, to ``path._tmp``;
+    2. ``df`` is written once, to ``path._tmp``, and ``commit``, when
+       given, as ``path._tmp/_commit.json`` (:func:`read_commit`);
     3. if ``path`` exists it is renamed to ``path._old``;
     4. ``path._tmp`` is renamed to ``path``;
     5. ``path._old`` is removed.
 
     After :func:`recover_snapshot`, a crash in step 2 or 3 leaves the
     old snapshot (or no store) at ``path``, and a crash in step 4 or 5
-    leaves the new one; never a partial write. At scale the store is a
-    transactional table format and this is one MERGE INTO."""
+    leaves the new one; never a partial write. The record swaps in with
+    the data it describes; readers of the parquet skip ``_`` files. At
+    scale the store is a transactional table format and this is one
+    MERGE INTO."""
     tmp = path.rstrip("/") + "._tmp"
     old = path.rstrip("/") + "._old"
     recover_snapshot(path)
     df.write.mode("overwrite").parquet(tmp)
+    if commit is not None:
+        with open(os.path.join(tmp, _COMMIT_FILE), "w") as fh:
+            json.dump(commit, fh)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)

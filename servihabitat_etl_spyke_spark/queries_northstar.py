@@ -2959,36 +2959,16 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the whole economy of the incremental design (re-shingling the
     # stored corpus per stage would cost 3 extra corpus scans)
     stored_sig = D.minhash_signatures(old).persist()
-    # r12 (guide §1.2, §2.4): the stored-corpus clustering pass and the
-    # incremental probe used to run TWO separate candidate+verify
-    # pipelines (minhash_lsh_neardup + incremental_neardup) — two
-    # candidate persist/count actions and two exact-Jaccard verify
-    # passes whose corpus-side work overlaps on every stored doc in a
-    # candidate pair. They now share ONE banded table economy and ONE
-    # verify pass: candidates from both legs are tagged and unioned,
+    # the stored-corpus clustering pass and the incremental probe share
+    # ONE candidate materialization and ONE exact-Jaccard verify pass:
+    # candidates from both legs (the operators' own band joins) are
+    # tagged and unioned — the groupBy subsumes each helper's distinct —
     # verified once against the combined corpus (a pair's Jaccard
     # depends only on its two docs, so the shared verify is
     # value-identical — oracle hash green), then split back by tag.
     new_sig = D.minhash_signatures(new).localCheckpoint()
-    banded_stored = D.band_signatures(stored_sig)
-    banded_new = D.band_signatures(new_sig)
-    a, b = banded_stored.alias("a"), banded_stored.alias("b")
-    cand_old = (  # == lsh_candidate_pairs(stored_sig)
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b")))
-    bt = banded_stored.unionByName(banded_new).alias("t")
-    bn = banded_new.alias("n")
-    cand_new = (  # == incremental_neardup's broadcast band probe
-        F.broadcast(bn)
-        .join(bt, (F.col("n.band") == F.col("t.band"))
-              & (F.col("n.key") == F.col("t.key"))
-              & (F.col("n.doc_id") != F.col("t.doc_id")))
-        .select(F.least(F.col("n.doc_id"), F.col("t.doc_id")).alias("id_a"),
-                F.greatest(F.col("n.doc_id"),
-                           F.col("t.doc_id")).alias("id_b")))
+    cand_old = D.lsh_candidate_pairs(stored_sig)
+    cand_new = D.incremental_candidate_pairs(new_sig, stored_sig)
     cand = (cand_old
             .select("id_a", "id_b", F.lit(1).alias("_stored"),
                     F.lit(0).alias("_new"))

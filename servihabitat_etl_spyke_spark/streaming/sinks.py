@@ -7,6 +7,21 @@ The Spark twin is a micro-batched MERGE: every trigger applies the batch's
 rows to the table with last-writer-wins-per-key semantics — the same
 `keyed_upsert` used by the batch ETL (operators/etl.py), so batch and
 streaming ingestion share one code path and one semantics.
+
+foreachBatch is at-least-once: a batch whose sink call crashed is
+replayed with the same id on restart (``stream_keyed_upsert`` needs no
+guard: a keyed last-wins replay is idempotent). The merge sinks below
+commit each batch with ONE snapshot swap (``overwrite_via_tmp``) that
+carries the record ``{"batches": {query_id: last applied batch id}}``
+inside the store (``read_commit``), so data and replay record land
+together:
+
+- a batch id at or below the record's entry for this query is skipped;
+- anything else is merged and committed with the record advanced.
+
+The query id comes from the checkpoint's metadata: a restart on the
+same checkpoint keeps it, and a fresh checkpoint at any path starts a
+new entry, so a deliberate second ingestion applies.
 """
 
 from __future__ import annotations
@@ -15,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.etl import overwrite_via_tmp as _overwrite_via_tmp
+from ..operators.etl import read_commit as _read_commit
 from ..operators.etl import recover_snapshot as _recover_snapshot
 from ..operators.etl import upsert_into_path
 
@@ -95,73 +111,41 @@ def stream_dedup(stream: DataFrame, keys: list[str], *,
             .dropDuplicatesWithinWatermark(keys))
 
 
-def _last_applied_batch(marker: str) -> int:
-    """The batch id recorded by :func:`_commit_batch_marker`, or -1
-    when absent/unreadable — the shared half of the replay-skip
-    protocol (one implementation; _merge_sink and the kNN-graph sink
-    must never drift on marker semantics)."""
-    import json
-    import os
-
-    if not os.path.exists(marker):
-        return -1
-    try:
-        with open(marker) as fh:
-            return json.load(fh).get("batch_id", -1)
-    except (OSError, ValueError):
-        return -1
-
-
-def _commit_batch_marker(marker: str, bid: int) -> None:
-    """Atomically record ``bid`` as applied (tmp write + os.replace) —
-    committed AFTER the data writes, so the remaining at-least-once
-    window is the gap between data and marker (see _merge_sink)."""
-    import json
-    import os
-
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_id": bid}, fh)
-    os.replace(tmp, marker)
+def _writer_id(batch: DataFrame) -> str:
+    """The id the commit record files a micro-batch under: the stream's
+    query id, kept in the checkpoint's metadata — stable across restarts
+    on one checkpoint, new for a fresh checkpoint at any path."""
+    return batch.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId")
 
 
 def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
-                partial_fn, merge_fn, *, available_now: bool,
-                additive: bool) -> StreamingQuery:
-    """Shared MERGE-into-parquet sink: each micro-batch reduces to its
-    own partial (``partial_fn(batch)``), merges with the stored state
-    (``merge_fn(existing, partial)``) if a snapshot is stored, and
-    swaps the result in with ``overwrite_via_tmp`` (the first batch's
-    write included, so a crash never leaves a half-written store) —
-    the one body behind the rollup/CMS/HLL/top-k/funnel sinks.
+                partial_fn, merge_fn, *,
+                available_now: bool) -> StreamingQuery:
+    """Shared MERGE-into-parquet sink, the one body behind the
+    rollup/CMS/HLL/top-k/funnel sinks. Each micro-batch:
 
-    ``additive=True`` marks merges that DOUBLE-COUNT on micro-batch
-    replay (sums; foreachBatch is at-least-once): those record the last
-    applied batch id in a marker INSIDE the checkpoint directory and
-    SKIP an already-applied batch id on replay. The marker lives with
-    the checkpoint, not the data path, because batch ids are a
-    per-checkpoint sequence — a deliberate second ingestion into the
-    same store under a fresh checkpoint restarts at batch 0 and MUST
-    apply. The marker commits after the data, so the remaining
-    at-least-once window is a crash in the gap between the two writes —
-    a transactional table format closes it completely (one MERGE INTO
-    with the batch id in the transaction); this is the documented local
-    emulation. Idempotent merges (max, rank-cut re-merge) need no
-    marker — replay is a no-op by algebra."""
-    import os
+    1. heals ``path`` and skips a batch id its record already holds;
+    2. reduces to its own partial (``partial_fn(batch)``), merged with
+       the stored snapshot if one exists (``merge_fn(existing, part)``);
+    3. swaps the result in with ``overwrite_via_tmp``, the first write
+       included, carrying the record advanced to this batch id.
 
-    marker = os.path.join(checkpoint, "_merge_sink_last_batch")
+    A crash before the swap's first rename replays the batch onto the
+    old snapshot; a crash after it finds the batch recorded. Every merge
+    is applied once, additive or not."""
 
     def apply_batch(batch: DataFrame, bid: int) -> None:
-        spark = batch.sparkSession
-        if additive and bid <= _last_applied_batch(marker):
+        qid = _writer_id(batch)
+        has = _recover_snapshot(path)
+        batches = _read_commit(path).get("batches", {})
+        if bid <= batches.get(qid, -1):
             return                      # replayed batch: already merged
         part = partial_fn(batch)
-        if _recover_snapshot(path):
-            part = merge_fn(spark.read.parquet(path), part)
-        _overwrite_via_tmp(part, path)
-        if additive:
-            _commit_batch_marker(marker, bid)
+        if has:
+            part = merge_fn(batch.sparkSession.read.parquet(path), part)
+        _overwrite_via_tmp(part, path,
+                           commit={"batches": {**batches, qid: bid}})
 
     writer = (stream.writeStream
               .foreachBatch(apply_batch)
@@ -187,8 +171,7 @@ def stream_rollup_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     At scale the store is a transactional table and the merge is one
     ``MERGE INTO``; the parquet read-union-overwrite here is the local
-    emulation, same as ``upsert_into_path``. Additive merge — replay
-    guarded by the ``_merge_sink`` batch-id marker."""
+    emulation, same as ``upsert_into_path``."""
     from pyspark.sql import functions as F
 
     def partial(batch: DataFrame) -> DataFrame:
@@ -207,7 +190,7 @@ def stream_rollup_upsert(stream: DataFrame, path: str, checkpoint: str, *,
                      F.sum("sum_value").alias("sum_value")))
 
     return _merge_sink(stream, path, checkpoint, partial, merge,
-                       available_now=available_now, additive=True)
+                       available_now=available_now)
 
 
 def stream_cms_upsert(stream: DataFrame, path: str, checkpoint: str, *,
@@ -223,8 +206,7 @@ def stream_cms_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     Same MERGE-into-parquet emulation as ``stream_rollup_upsert``; at
     scale the sink is a transactional table and this is one MERGE INTO
-    keyed by (r, c). Additive merge — replay guarded by the
-    ``_merge_sink`` batch-id marker."""
+    keyed by (r, c)."""
     from pyspark.sql import functions as F
 
     from ..operators.scale import cms_sketch
@@ -235,7 +217,7 @@ def stream_cms_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     return _merge_sink(stream, path, checkpoint,
                        lambda b: cms_sketch(b, item_col, d=d, w=w), merge,
-                       available_now=available_now, additive=True)
+                       available_now=available_now)
 
 
 def stream_hll_upsert(stream: DataFrame, path: str, checkpoint: str, *,
@@ -246,8 +228,7 @@ def stream_hll_upsert(stream: DataFrame, path: str, checkpoint: str, *,
     stored sketch by per-bucket max — "distinct items ever seen" over an
     endless stream with 2^b rows of state, and the stored table equals
     the batch sketch of everything seen (twin test asserts register
-    equality). Same MERGE-into-parquet emulation as the CMS sink —
-    max-merge is idempotent under replay, so no batch marker needed."""
+    equality). Same MERGE-into-parquet emulation as the CMS sink."""
     from pyspark.sql import functions as F
 
     from ..operators.scale import hll_registers
@@ -259,7 +240,7 @@ def stream_hll_upsert(stream: DataFrame, path: str, checkpoint: str, *,
     return _merge_sink(stream, path, checkpoint,
                        lambda batch: hll_registers(batch, item_col, b=b),
                        merge,
-                       available_now=available_now, additive=False)
+                       available_now=available_now)
 
 
 def stream_topk_upsert(stream: DataFrame, path: str, checkpoint: str, *,
@@ -278,8 +259,7 @@ def stream_topk_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     Same MERGE-into-parquet emulation as ``stream_rollup_upsert``; at
     scale the sink is a transactional table and this is one MERGE INTO
-    keyed by (group, rank). The id-dedup re-merge is idempotent under
-    replay, so no batch marker needed."""
+    keyed by (group, rank)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
@@ -306,7 +286,7 @@ def stream_topk_upsert(stream: DataFrame, path: str, checkpoint: str, *,
         stream, path, checkpoint,
         lambda batch: _cut(batch.select(group_col, id_col, order_col)),
         lambda existing, part: _cut(existing.unionByName(part)),
-        available_now=available_now, additive=False)
+        available_now=available_now)
 
 
 def stream_funnel_upsert(stream: DataFrame, path: str, checkpoint: str, *,
@@ -324,8 +304,7 @@ def stream_funnel_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     Same MERGE-into-parquet emulation as the other sinks; at scale the
     sink is a transactional table and this is one MERGE INTO keyed by
-    stage. Additive merge — replay guarded by the ``_merge_sink``
-    batch-id marker."""
+    stage."""
     from pyspark.sql import functions as F
 
     from ..operators.curation import gate_kill_counts
@@ -336,7 +315,7 @@ def stream_funnel_upsert(stream: DataFrame, path: str, checkpoint: str, *,
 
     return _merge_sink(stream, path, checkpoint,
                        lambda batch: gate_kill_counts(batch, gates), merge,
-                       available_now=available_now, additive=True)
+                       available_now=available_now)
 
 
 def read_funnel(spark, path: str, gates) -> DataFrame:
@@ -361,87 +340,49 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
     a STREAM and every micro-batch folds into the persisted kNN graph
     via ``knn_graph_ivf_incremental`` — the same fixed-codebook,
     index-fed, touched-query-only update the batch operator runs
-    nightly, kept exactly equal to a full rebuild (the batch operator's
-    exactness twin carries over; the stream-vs-batch equality is pinned
-    in tests).
+    nightly, kept exactly equal to a full rebuild (the stream-vs-batch
+    equality is pinned in tests).
 
-    State layout (both paths are what a day-1 bootstrap would write;
-    like the module's other sinks this is the LOCAL-FILESYSTEM
-    emulation — the exists/marker checks are driver-local, so point
-    both paths at local disk; a DFS deployment swaps this sink for a
-    transactional table format):
+    State layout (like the module's other sinks this is the
+    LOCAL-FILESYSTEM emulation: the file checks are driver-local, so
+    point both paths at local disk; a DFS deployment swaps this sink
+    for a transactional table format):
     - ``index_path``: the ``ivf_index`` table, partitioned by
       ``centroid_id`` (the documented pruning layout); each batch
-      APPENDS its own index rows — old rows never rewrite. Written
-      FIRST, see the crash-window note.
+      APPENDS its own index rows — old rows never rewrite.
     - ``graph_path``: the stored graph (query_id, neighbor_id, rank,
-      score) — every write, the day-1 one included, is staged and
-      swapped in by ``overwrite_via_tmp``, as in ``_merge_sink``.
+      score). Its swap is the batch's one commit, and its record holds
+      ``batches`` (as in ``_merge_sink``) and ``index_files``, the
+      index data files the graph was built over.
 
     ``validate`` forwards to the operator; a legitimately-small
     bootstrap corpus (fewer than k+1 vectors in the first batch) needs
     ``validate=False`` exactly as the operator documents — note that
-    also disables the disjointness tripwire below.
+    also disables the operator's own old/new disjointness probe.
 
-    Replay protection is MANDATORY here, not optional (foreachBatch is
-    at-least-once, and this merge is not replay-idempotent): the last
-    applied batch id is recorded in a marker inside the checkpoint
-    directory and an already-applied id SKIPS (the ``additive=True``
-    contract of ``_merge_sink``). The marker commits after the data,
-    so a crash can strand a partially-applied batch — and the sink
-    SELF-HEALS every such window on replay (r8 review: an earlier
-    index-append-first order failed loud, which turned a transient
-    graph-write failure into a permanent poison pill). The index is
-    appended before the graph overwrite, both writes are job-atomic
-    (parquet output commit), and the replay of an uncommitted batch id
-    probes which writes already landed:
+    Each micro-batch, after ``recover_snapshot(graph_path)``:
+    - a batch id the record holds for this query is skipped;
+    - an index data file the record does not list is an append whose
+      graph commit never landed, and is deleted. A graph without a
+      record (hand-seeded) takes every present index file as committed;
+    - graph and index present: batch rows whose id is already indexed
+      (an old feed under a fresh checkpoint, a re-sent vector) drop
+      out; a remaining id found in the graph raises (the stores have
+      diverged); the rest runs through the operator against the
+      stored index, is appended to the index, and the graph swaps in;
+    - no graph, no index: day-1 bootstrap — the batch is the corpus;
+    - no graph, index present (a lost graph, or a day-1 crash before
+      the graph commit): the graph is rebuilt from the index, which
+      holds every ingested vector, plus the batch's unindexed rows
+      (warning emitted, full-rebuild cost). By the operator's exactness
+      twin the rebuild equals the incrementally maintained graph;
+    - index lost, graph present: unrecoverable (the graph holds no
+      vectors); raises a named error.
 
-    - no batch id in the index → fresh batch, normal path;
-    - ALL batch ids in the index, EVERY id in the graph (either edge
-      endpoint — crash in the data→marker gap) → fully applied; just
-      commit the marker;
-    - ALL in the index, SOME ids absent from both graph endpoints
-      (crash during/after the graph write — including a replayed
-      MIXED batch whose old-generation ids are long in the graph) →
-      exactly the absent ids are re-merged through an index VIEW
-      excluding them (anti-join, the pre-append state) and the
-      re-append is skipped. The probe is PER-ROW, never any-id (r9
-      ADVICE: an any-id membership probe declared a crashed mixed
-      batch applied on its old ids alone, silently dropping the
-      fresh vectors from the graph). An applied vector with no edges
-      at all also reads as absent — its re-merge is the identity;
-    - SOME ids in the index (a mixed batch: an old feed replayed under
-      a fresh checkpoint after the original checkpoint was lost) →
-      the indexed ids are old corpus; only the genuinely-new rows are
-      ingested — never silently declared applied;
-    - any non-indexed id in the graph (either endpoint) → impossible
-      under this write order; raises loudly as corruption.
-
-    The diagnosis is per-row (batch-sized semi/anti-joins plus limit-1
-    probes) — the same cost class as the operator's own validation. A
-    transactional table format replaces all of this with one
-    transaction.
-
-    Disaster recovery (r8 review): the graph-exists check goes through
-    ``recover_snapshot`` (a crash mid-swap heals to the complete old or
-    new graph), and a graph that is GENUINELY gone while the
-    index survives — external deletion, a lost volume — no longer
-    silently re-bootstraps from one micro-batch (which would also
-    OVERWRITE the index, losing every stored vector): the index holds
-    every ingested vector, so it doubles as the recovery corpus and the
-    sink rebuilds the full graph from it (warning emitted; full-rebuild
-    cost, disaster path only). By the operator's exactness twin the
-    rebuild is byte-equal to the graph the incremental path maintained.
-    The rebuild appends index rows PER-ROW (after a checkpoint loss a
-    replayed batch may mix old and new ids — all-or-nothing would drop
-    the new vectors from the index forever), and enforces the same
-    index-n_probe contract the incremental operator does —
-    unconditionally, mirroring the operator's ungated guard (r9
-    ADVICE: an earlier docstring said "under validate", which the code
-    never was). The converse loss — index gone, graph intact — is genuinely
-    unrecoverable (the graph holds no vectors) and raises a named,
-    actionable error instead of a raw path error on every replay.
+    The day-1 index write is a direct overwrite, so a hard kill inside
+    it is not healed.
     """
+    import contextlib
     import os
     import warnings
 
@@ -449,20 +390,13 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
 
     from ..operators import similarity as _sim
 
-    marker = os.path.join(checkpoint, "_knn_graph_last_batch")
-
-    # once-per-STREAM index-width pin (r11, r10 ADVICE): the uniformity
-    # validation (_index_n_probe) is an O(stored-index) aggregate, and
-    # running it every micro-batch re-scans an index whose only writer
-    # during the stream is this sink's own guard-checked appends — the
-    # re-validation added cost, not safety. The FIRST batch that loads
-    # the stored index validates uniformity and pins the width here;
-    # later batches pass the pinned width to the operator (its
-    # width-vs-request check still runs on the attested value). The pin
-    # dies with the stream — a restart re-validates once. None = not
-    # yet pinned (also the empty-index reading, which pins nothing:
-    # re-checking an empty store is free, and the sink's own append
-    # makes the next check the last).
+    # once-per-STREAM index-width pin: the uniformity validation
+    # (_index_n_probe) is an O(stored-index) aggregate, and the index's
+    # only writer during the stream is this sink's own guard-checked
+    # appends. The FIRST batch that loads the stored index validates
+    # uniformity and pins the width; later batches pass the pinned width
+    # to the operator (its width-vs-request check still runs on it). A
+    # restart re-validates once. None = not yet pinned.
     pinned = {"width": None}
 
     def _pinned_index_width(index: DataFrame) -> int | None:
@@ -471,39 +405,52 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                 index, "stream_knn_graph_upsert")
         return pinned["width"]
 
-    def _contains_any(store: DataFrame, ids: DataFrame, col: str) -> bool:
-        return bool(store.select(F.col(col))
-                    .join(F.broadcast(ids), col, "left_semi")
-                    .limit(1).collect())
+    def _index_files() -> list[str]:
+        found = []
+        for root, dirs, files in os.walk(index_path):
+            dirs[:] = [d for d in dirs if d[0] not in "_."]
+            found += [os.path.relpath(os.path.join(root, f), index_path)
+                      for f in files if f[0] not in "_."]
+        return sorted(found)
+
+    def _write_index(rows: DataFrame, mode: str) -> None:
+        (_sim.ivf_index(rows, centroids, n_probe, id_col, vec_col)
+         .write.partitionBy("centroid_id").mode(mode).parquet(index_path))
+
+    def _unindexed(rows: DataFrame, index: DataFrame) -> DataFrame:
+        present = (index.select(id_col)
+                   .join(F.broadcast(rows.select(id_col)), id_col,
+                         "left_semi"))
+        return (rows.join(F.broadcast(present), id_col, "left_anti")
+                .localCheckpoint())
 
     def apply_batch(batch: DataFrame, bid: int) -> None:
         spark = batch.sparkSession
-        if bid <= _last_applied_batch(marker):
+        qid = _writer_id(batch)
+        has_graph = _recover_snapshot(graph_path)
+        rec = _read_commit(graph_path)
+        batches = rec.get("batches", {})
+        if bid <= batches.get(qid, -1):
             return                      # replayed batch: already merged
+        if "index_files" in rec:        # roll back a stranded append
+            for f in set(_index_files()) - set(rec["index_files"]):
+                head, name = os.path.split(os.path.join(index_path, f))
+                os.remove(os.path.join(head, name))
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(head, f".{name}.crc"))
         rows = batch.select(id_col, vec_col).localCheckpoint()
         if rows.isEmpty():
             return
-        has_graph = _recover_snapshot(graph_path)
         if not has_graph and os.path.exists(index_path):
-            # graph lost, index intact: rebuild from the index (the
-            # recovery corpus) — bootstrapping here would overwrite the
-            # index with one batch's rows. Pin the pre-append corpus
-            # BEFORE the index append so the plan can't see the batch's
-            # own rows twice; keep the index-before-graph write order so
-            # a crash anywhere in here replays into a handled state.
             warnings.warn(
                 f"stream_knn_graph_upsert: stored graph at {graph_path}"
                 f" is missing but the index at {index_path} survives —"
                 f" rebuilding the graph from the index (disaster-"
                 f"recovery path, full-rebuild cost)", stacklevel=2)
             stored = spark.read.parquet(index_path)
-            # mirror the incremental operator's probe-width guard
-            # (UNgated there too): rebuilding with a different n_probe
-            # than the index was built with would silently change
-            # which cells' members are candidates AND append
-            # mixed-n_probe rows (r10: uniformity-checked — a mixed
-            # index means a writer bypassed this very guard; r11: the
-            # check runs once per stream via the pinned-width cache)
+            # the incremental operator's probe-width guard, ungated
+            # there too: a different n_probe would change which cells'
+            # members are candidates AND append mixed-width rows
             built = _pinned_index_width(stored)
             np_eff = min(n_probe, len(centroids))
             if built is not None and built != np_eff:
@@ -513,50 +460,27 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                     f"n_probe={n_probe} (effective {np_eff}) was "
                     f"requested — rebuild the index or match the "
                     f"request")
-            ids = rows.select(id_col)
+            # pin the corpus before the append, so the plan cannot see
+            # the batch's own rows twice; only unindexed rows append
             corpus = (stored.select(F.col(id_col), F.col(vec_col))
-                      .join(F.broadcast(ids), id_col, "left_anti")
+                      .join(F.broadcast(rows.select(id_col)), id_col,
+                            "left_anti")
                       .unionByName(rows).localCheckpoint())
-            # append PER-ROW, not all-or-nothing: after a checkpoint
-            # loss the replayed batch may MIX previously-ingested ids
-            # with genuinely-new ones (the normal path's job-atomic
-            # append guarantee doesn't hold across checkpoint
-            # generations), and skipping the whole append would drop
-            # the new vectors from the index forever
-            present = (stored.select(id_col)
-                       .join(F.broadcast(ids), id_col, "left_semi"))
-            missing = rows.join(F.broadcast(present), id_col,
-                                "left_anti")
+            missing = _unindexed(rows, stored)
             if not missing.isEmpty():
-                (_sim.ivf_index(missing, centroids, n_probe, id_col,
-                                vec_col)
-                 .write.partitionBy("centroid_id").mode("append")
-                 .parquet(index_path))
+                _write_index(missing, "append")
             graph = _sim.knn_graph_ivf(corpus, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
                                        with_score=True, ordered=False)
-            _overwrite_via_tmp(graph, graph_path)
         elif not has_graph:
-            # day-1 bootstrap: the first batch IS the corpus. The index
-            # is written first; a crash in the graph write leaves the
-            # index and no graph, so the replay takes the index-rebuild
-            # branch above. (The index write is a direct overwrite, not
-            # a swap: a hard kill inside it is not healed.)
-            (_sim.ivf_index(rows, centroids, n_probe, id_col, vec_col)
-             .write.partitionBy("centroid_id").mode("overwrite")
-             .parquet(index_path))
+            _write_index(rows, "overwrite")
             graph = _sim.knn_graph_ivf(rows, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
                                        with_score=True, ordered=False)
-            _overwrite_via_tmp(graph, graph_path)
         else:
             if not os.path.exists(index_path):
-                # the converse loss is NOT recoverable: the index holds
-                # the vectors and cannot be rebuilt from the graph
-                # (scores aren't coordinates). Name the state instead
-                # of poisoning every replay with a raw path error.
                 raise RuntimeError(
                     f"stream_knn_graph_upsert: stored graph at "
                     f"{graph_path} exists but the index at "
@@ -566,112 +490,37 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                     f"to re-bootstrap from the next batch")
             old_graph = spark.read.parquet(graph_path)
             old_index = spark.read.parquet(index_path)
-            # validate the FULL stored index once per stream; later
-            # batches hand the operator the pinned width instead of
-            # paying the O(index) uniformity aggregate again (r11)
             index_width = _pinned_index_width(old_index)
-            ids = rows.select(id_col)
-            # batch ids already in the index — ≤ batch-sized, pinned
-            # once to drive the PER-ROW diagnosis below (r8 review: the
-            # old any-id probes misread two states — see branches)
-            present = (old_index.select(id_col)
-                       .join(F.broadcast(ids), id_col, "left_semi")
-                       .localCheckpoint())
-            # graph membership must probe BOTH edge endpoints: a batch
-            # whose vectors landed only as NEIGHBORS of old queries
-            # (possible when their own probed cells were otherwise
-            # empty) has no query_id rows, and a query-only probe would
-            # misread a fully-applied batch as index-stranded, re-merge
-            # it against the already-updated graph, and hand those
-            # neighbors duplicate edges
-            graph_ids = (old_graph.select(F.col("query_id")
-                                          .alias(id_col))
-                         .unionByName(old_graph.select(
-                             F.col("neighbor_id").alias(id_col))))
-            rows_eff, skip_append = rows, False
-
-            def _diverged() -> RuntimeError:
-                return RuntimeError(
+            rows = _unindexed(rows, old_index)
+            if rows.isEmpty():
+                return
+            ids = F.broadcast(rows.select(id_col))
+            if (old_graph.select(F.col("query_id").alias(id_col))
+                    .unionByName(old_graph.select(
+                        F.col("neighbor_id").alias(id_col)))
+                    .join(ids, id_col, "left_semi").limit(1).collect()):
+                raise RuntimeError(
                     f"stream_knn_graph_upsert: batch {bid} has ids in "
-                    f"the stored graph but not the index — impossible "
-                    f"under this sink's write order; the stores have "
-                    f"diverged (manual intervention required)")
-
-            if not present.isEmpty():
-                fresh = rows.join(F.broadcast(present), id_col,
-                                  "left_anti")
-                if fresh.isEmpty():
-                    # PER-ROW graph probe (r9 ADVICE, medium): ids in
-                    # the index but absent from BOTH graph endpoints
-                    # are stranded by a crash between the index append
-                    # and the graph commit. The old ANY-id membership
-                    # probe misread exactly one window: a MIXED batch
-                    # (old + new ids under a fresh checkpoint) that
-                    # appended its fresh ids and crashed before the
-                    # graph overwrite — on replay all its ids are
-                    # indexed and its OLD-generation ids match the
-                    # graph, so the batch was declared applied and the
-                    # fresh vectors never became graph queries (silent
-                    # divergence from the full rebuild).
-                    stranded = (ids.join(graph_ids, id_col, "left_anti")
-                                .localCheckpoint())
-                    if stranded.isEmpty():
-                        # every batch id is in the graph: fully applied
-                        # — crash landed in the data→marker gap; only
-                        # the marker is stale
-                        _commit_batch_marker(marker, bid)
-                        return
-                    # re-merge ONLY the stranded rows, through an index
-                    # VIEW excluding them (exactly the pre-append
-                    # state); their index rows landed before the crash,
-                    # so the re-append is skipped. (A fully-applied
-                    # vector that produced no edges AT ALL also reads
-                    # as stranded — its re-merge is the identity, so
-                    # the heal stays exact.)
-                    rows_eff = (rows.join(F.broadcast(stranded), id_col,
-                                          "left_semi").localCheckpoint())
-                    ids = rows_eff.select(id_col)
-                    old_index = old_index.join(F.broadcast(ids), id_col,
-                                               "left_anti")
-                    skip_append = True
-                else:
-                    # MIXED batch: some ids indexed, some genuinely
-                    # new — only reachable by replaying an old feed
-                    # under a FRESH checkpoint, where batch boundaries
-                    # no longer match historical appends. The indexed
-                    # ids are old corpus now; ingest ONLY the new rows
-                    # (the old all-or-nothing diagnosis declared the
-                    # whole batch applied and silently dropped the new
-                    # vectors forever). Assumes prior checkpoint
-                    # generations committed their data — the marker
-                    # that proved it died with the old checkpoint.
-                    rows_eff = fresh.localCheckpoint()
-                    ids = rows_eff.select(id_col)
-                    if _contains_any(graph_ids, ids, id_col):
-                        raise _diverged()
-            elif _contains_any(graph_ids, ids, id_col):
-                raise _diverged()
+                    f"the stored graph but not the index — the stores "
+                    f"have diverged (manual intervention required)")
             # the operator call validates against (and materializes its
             # candidate set from) the pre-append index view — it must
             # run before the append below, or the batch would collide
             # with its own index rows
-            new_graph = _sim.knn_graph_ivf_incremental(
-                None, old_graph, rows_eff, centroids, k=k,
+            graph = _sim.knn_graph_ivf_incremental(
+                None, old_graph, rows, centroids, k=k,
                 n_probe=n_probe, id_col=id_col, vec_col=vec_col,
                 with_score=True, validate=validate,
                 old_index=old_index, ordered=False,
                 index_width_checked=index_width)
-            if not skip_append:
-                (_sim.ivf_index(rows_eff, centroids, n_probe, id_col,
-                                vec_col)
-                 .write.partitionBy("centroid_id").mode("append")
-                 .parquet(index_path))
-            _overwrite_via_tmp(new_graph, graph_path)
+            _write_index(rows, "append")
+        _overwrite_via_tmp(graph, graph_path, commit={
+            "batches": {**batches, qid: bid},
+            "index_files": _index_files()})
         # every branch that reaches here left the store at the
         # effective width (bootstrap wrote it; the others validated it
         # against the request) — pin it so no later batch re-scans
         pinned["width"] = min(n_probe, len(centroids))
-        _commit_batch_marker(marker, bid)
 
     writer = (stream.writeStream
               .foreachBatch(apply_batch)

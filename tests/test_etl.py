@@ -475,21 +475,25 @@ def test_overwrite_via_tmp_crash_windows(spark, tmp_path, monkeypatch,
                                          survivor):
     """Crash overwrite_via_tmp at each step of the swap, then heal with
     recover_snapshot: a crash during the staging write or before the
-    first rename keeps exactly the old rows, a crash between the renames
-    or during the removal of '._old' gives exactly the new rows. A
-    partially deleted '._old' is never restored: if the committed path
-    is then lost too, the store reads as absent."""
+    first rename keeps exactly the old rows and the old commit record,
+    a crash between the renames or during the removal of '._old' gives
+    exactly the new rows and the new record. A partially deleted
+    '._old' is never restored: if the committed path is then lost too,
+    the store reads as absent."""
+    import json
     import os
     import shutil
 
     from servihabitat_etl_spyke_spark.operators.etl import (
-        overwrite_via_tmp, recover_snapshot)
+        overwrite_via_tmp, read_commit, recover_snapshot)
 
     path = str(tmp_path / "snap")
     old_rows = [("1", "a"), ("2", "b")]
     new_rows = [("1", "a"), ("3", "c")]
     (spark.createDataFrame(old_rows, ["id", "v"]).repartition(2)
      .write.parquet(path))
+    with open(os.path.join(path, "_commit.json"), "w") as fh:
+        json.dump({"gen": "old"}, fh)
     new = (spark.read.parquet(path).filter("id = '1'")
            .unionByName(spark.createDataFrame([("3", "c")], ["id", "v"])))
 
@@ -515,7 +519,7 @@ def test_overwrite_via_tmp_crash_windows(spark, tmp_path, monkeypatch,
     if crash.startswith("old_removal"):
         monkeypatch.setattr(shutil, "rmtree", rmtree)
     with pytest.raises((OSError, RuntimeError), match="simulated"):
-        overwrite_via_tmp(new, path)
+        overwrite_via_tmp(new, path, commit={"gen": "new"})
     monkeypatch.undo()
     if crash == "old_removal_then_path_lost":
         assert os.path.isdir(path + "._old")    # the partial N-1
@@ -525,8 +529,10 @@ def test_overwrite_via_tmp_crash_windows(spark, tmp_path, monkeypatch,
     if survivor is not None:
         want = old_rows if survivor == "old" else new_rows
         assert _rows(spark, path) == want
+        assert read_commit(path) == {"gen": survivor}
     else:
         assert not os.path.exists(path)
+        assert read_commit(path) == {}
     assert not os.path.exists(path + "._old")
     assert not os.path.exists(path + "._tmp")
 
@@ -562,6 +568,8 @@ def test_upsert_into_path_killed_first_write_leaves_store_absent(
     for batch in batches:
         want.update(batch)
     assert _rows(spark, path) == sorted(want.items())
+    # the ETL path passes no commit record and writes no extra file
+    assert not os.path.exists(os.path.join(path, "_commit.json"))
 
 
 def test_recover_snapshot_drops_orphaned_tmp(spark, tmp_path):

@@ -381,6 +381,122 @@ def test_stream_rollup_upsert_killed_first_write(spark, tmp_path,
     assert got == want
 
 
+@pytest.fixture()
+def crash_next_sink_swap(monkeypatch, kill_next_parquet_write):
+    """Arm the next store swap of a stream sink
+    (``sinks._overwrite_via_tmp``) to crash, once:
+
+    - ``"before"``: raise before the swap starts;
+    - ``"inside"``: kill its staging write (only ``_temporary/`` left),
+      so it raises before the first rename;
+    - ``"after"``: raise after the swap returned.
+
+    Later swaps run normally."""
+    from servihabitat_etl_spyke_spark.streaming import sinks
+
+    real = sinks._overwrite_via_tmp
+
+    def arm(when: str) -> None:
+        def crashing(*args, **kwargs):
+            monkeypatch.setattr(sinks, "_overwrite_via_tmp", real)
+            if when == "inside":
+                kill_next_parquet_write("temporary")
+            if when != "before":
+                real(*args, **kwargs)
+            raise RuntimeError(f"simulated crash {when} the store swap")
+
+        monkeypatch.setattr(sinks, "_overwrite_via_tmp", crashing)
+
+    return arm
+
+
+def _additive_sink_case(spark, name):
+    """``(start, schema, rows, read, twin)`` for one additive merge sink:
+    ``start(stream, store, checkpoint)`` starts it, ``read(store)`` reads
+    the store and ``twin(rows)`` is what one application of ``rows``
+    must leave there."""
+    import datetime as dt
+
+    from servihabitat_etl_spyke_spark.operators.curation import gate_funnel
+    from servihabitat_etl_spyke_spark.operators.scale import cms_sketch
+    from servihabitat_etl_spyke_spark.streaming import sinks
+
+    if name == "rollup":
+        schema = "ts timestamp, event_type string, value double"
+
+        def twin(rows):                     # pure-Python rollup
+            out = {}
+            for ts, et, v in rows:
+                k = (ts.replace(minute=0), et)
+                cnt, total = out.get(k, (0, 0.0))
+                out[k] = (cnt + 1, total + v)
+            return spark.createDataFrame(
+                [k + v for k, v in out.items()],
+                "win_start timestamp, event_type string, cnt long, "
+                "sum_value double")
+
+        rows = [(dt.datetime(2024, 1, 1, h, m), et, float(h * 10 + m))
+                for h in (1, 2) for m in (5, 40) for et in ("a", "b")]
+        return (sinks.stream_rollup_upsert, schema, rows,
+                spark.read.parquet, twin)
+    if name == "cms":
+        schema = "item string"
+        return (lambda st, p, c: sinks.stream_cms_upsert(st, p, c, d=4, w=64),
+                schema, [(f"i{j % 5}",) for j in range(20)],
+                spark.read.parquet,
+                lambda rows: cms_sketch(spark.createDataFrame(rows, schema),
+                                        "item", d=4, w=64))
+
+    def gates():
+        return [("a_ok", F.col("a") >= 20), ("c_ok", F.col("c") >= 10)]
+
+    schema = "doc_id long, a long, c long"
+    return (lambda st, p, c: sinks.stream_funnel_upsert(st, p, c,
+                                                        gates=gates()),
+            schema, [(1, 10, 5), (2, 30, 5), (3, 30, 50), (4, 25, 50)],
+            lambda p: sinks.read_funnel(spark, p, gates()),
+            lambda rows: gate_funnel(spark.createDataFrame(rows, schema),
+                                     gates()))
+
+
+@pytest.mark.parametrize("name", ["rollup", "cms", "funnel"])
+def test_additive_sink_replay_after_swap_crash_applies_once(
+        spark, tmp_path, crash_next_sink_swap, name):
+    """A crash right after an additive sink's store swap returned leaves
+    the batch merged in the store while Spark has not committed it, so
+    the restart on the same checkpoint replays it. The batch id swaps in
+    with the data, so the replay is skipped and the store equals ONE
+    application of the events (each rollup count 2, not 4). A
+    checkpoint removed and re-created at the same path is a new query:
+    the deliberate re-ingestion applies and every count doubles."""
+    import os
+    import shutil
+
+    start, schema, rows, read, twin = _additive_sink_case(spark, name)
+    src, store, ckpt = (str(tmp_path / n) for n in ("src", "store", "ckpt"))
+    spark.createDataFrame(rows, schema).write.parquet(src)
+
+    def run():
+        start(spark.readStream.schema(schema).parquet(src), store,
+              ckpt).awaitTermination(120)
+
+    def assert_store_is(want):
+        got = read(store).select(*want.columns)
+        assert (sorted(map(tuple, got.collect()))
+                == sorted(map(tuple, want.collect())))
+
+    crash_next_sink_swap("after")
+    with pytest.raises(Exception, match="simulated crash after"):
+        run()
+    run()                                   # the replay
+    assert_store_is(twin(rows))
+
+    shutil.rmtree(ckpt)
+    os.makedirs(ckpt)
+    run()
+    assert_store_is(twin(rows + rows))
+
+
 def test_stream_incremental_neardup_matches_batch(spark, sf_dir, tmp_path):
     """Ingest-time near-dup: the crawl (doc_id % 5 == 0) arrives as a
     stream and must find exactly the new-vs-corpus pairs the batch
@@ -1102,24 +1218,36 @@ def test_stream_knn_graph_upsert_custom_columns_and_validate(
     assert got == want and want
 
 
-def test_stream_knn_graph_upsert_self_heals_stranded_windows(
-        spark, sf_dir, tmp_path):
-    """r8 review: a transient failure between the index append and the
-    graph overwrite used to poison-pill the stream (every replay
-    tripped the disjointness guard). The sink now probes which writes
-    landed and self-heals. Both stranded states are built manually and
-    replayed through a real stream:
-
-    - index-appended / graph-missing -> the operator consumes the
-      pre-append index view, the re-append is skipped (batch rows
-      appear in the index exactly ONCE), and the graph lands equal to
-      the rebuild;
-    - fully-applied / marker-missing -> the batch commits the marker
-      and touches nothing (graph bytes already correct)."""
+def _index_data_files(index_path):
+    """Relative paths of the data files under a partitioned index."""
     import os
-    import time as _time
 
+    found = []
+    for root, dirs, files in os.walk(index_path):
+        dirs[:] = [d for d in dirs if d[0] not in "_."]
+        found += [os.path.relpath(os.path.join(root, f), index_path)
+                  for f in files if f[0] not in "_."]
+    return sorted(found)
+
+
+def test_stream_knn_graph_upsert_self_heals_stranded_windows(
+        spark, sf_dir, tmp_path, crash_next_sink_swap):
+    """Crashes of the real sink around its one commit, the graph swap.
+    Each store is bootstrapped from the base vectors by the sink, then
+    the day-1 batch crashes and is replayed through a real stream:
+
+    - window A, the swap's staging write killed after the index append:
+      the replay deletes the index files the graph's record does not
+      list, re-merges the batch, and lands the full rebuild with each
+      day-1 id indexed once;
+    - window B, a crash after the swap returned: the record holds the
+      batch id, so the replay leaves the graph unchanged;
+    - window C, a crash before the swap under checkpoint c1, then a
+      MIXED feed (old + day-1 ids) under a fresh checkpoint c2: the
+      stranded append is rolled back, only the day-1 rows are new, and
+      the graph equals the full rebuild."""
     from servihabitat_etl_spyke_spark.operators import similarity as SIM
+    from servihabitat_etl_spyke_spark.operators.etl import read_commit
     from servihabitat_etl_spyke_spark.streaming.sinks import (
         stream_knn_graph_upsert)
 
@@ -1133,101 +1261,62 @@ def test_stream_knn_graph_upsert_self_heals_stranded_windows(
     want = sorted(map(tuple, SIM.knn_graph_ivf(
         emb, k=5, n_probe=2, centroids=cents).collect()))
 
-    src = tmp_path / "replay_feed"
-    src.mkdir()
-    day1.coalesce(1).write.parquet(str(src / "d1.parquet"))
+    def paths(tag):
+        return str(tmp_path / f"{tag}_g"), str(tmp_path / f"{tag}_i")
 
-    def run_stream(tag):
-        q = stream_knn_graph_upsert(
-            spark.readStream.schema(day1.schema)
-            .parquet(str(src / "d1.parquet")),
-            str(tmp_path / f"{tag}_g"), str(tmp_path / f"{tag}_i"),
-            str(tmp_path / f"{tag}_c"), cents, k=5, n_probe=2)
-        q.awaitTermination(180)
+    def run(tag, ckpt, feed):
+        gp, ip = paths(tag)
+        stream_knn_graph_upsert(
+            spark.readStream.schema(emb.schema)
+            .parquet(str(tmp_path / feed / "*.parquet")),
+            gp, ip, str(tmp_path / ckpt), cents, k=5,
+            n_probe=2).awaitTermination(180)
 
-    def seed_base(tag):
-        (SIM.ivf_index(base, cents, n_probe=2)
-         .write.partitionBy("centroid_id")
-         .parquet(str(tmp_path / f"{tag}_i")))
-        (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                           with_score=True, ordered=False)
-         .write.parquet(str(tmp_path / f"{tag}_g")))
+    def bootstrap_then_crash_day1(tag, when):
+        base.coalesce(1).write.parquet(str(tmp_path / tag / "b0.parquet"))
+        run(tag, f"{tag}_c", tag)
+        day1.coalesce(1).write.parquet(str(tmp_path / tag / "b1.parquet"))
+        crash_next_sink_swap(when)
+        with pytest.raises(Exception, match="simulated"):
+            run(tag, f"{tag}_c", tag)
 
-    # --- window A: index appended, graph write crashed -------------
-    seed_base("wa")
-    (SIM.ivf_index(day1, cents, n_probe=2)
-     .write.partitionBy("centroid_id").mode("append")
-     .parquet(str(tmp_path / "wa_i")))          # the stranded append
-    run_stream("wa")
-    got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in spark.read.parquet(
-                     str(tmp_path / "wa_g")).collect())
-    assert got == want and want
-    idx = spark.read.parquet(str(tmp_path / "wa_i"))
-    assert idx.join(day1.select("vec_id"), "vec_id",
-                    "left_semi").count() == n_day1   # appended ONCE
+    def graph(tag):
+        return sorted((r["query_id"], r["neighbor_id"], r["rank"])
+                      for r in spark.read.parquet(paths(tag)[0]).collect())
 
-    # --- window B: fully applied, marker write crashed --------------
-    seed_base("wb")
-    g1 = SIM.knn_graph_ivf_incremental(
-        None, spark.read.parquet(str(tmp_path / "wb_g")), day1, cents,
-        k=5, n_probe=2, with_score=True,
-        old_index=spark.read.parquet(str(tmp_path / "wb_i")))
-    from servihabitat_etl_spyke_spark.operators.etl import (
-        overwrite_via_tmp)
-    (SIM.ivf_index(day1, cents, n_probe=2)
-     .write.partitionBy("centroid_id").mode("append")
-     .parquet(str(tmp_path / "wb_i")))
-    overwrite_via_tmp(g1, str(tmp_path / "wb_g"))
-    before = sorted(map(tuple, spark.read.parquet(
-        str(tmp_path / "wb_g")).collect()))
-    run_stream("wb")
-    after = sorted(map(tuple, spark.read.parquet(
-        str(tmp_path / "wb_g")).collect()))
-    assert after == before
-    assert sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in spark.read.parquet(
-                      str(tmp_path / "wb_g")).collect()) == want
-    idx = spark.read.parquet(str(tmp_path / "wb_i"))
-    assert idx.join(day1.select("vec_id"), "vec_id",
-                    "left_semi").count() == n_day1
-    marker = os.path.join(str(tmp_path / "wb_c"),
-                          "_knn_graph_last_batch")
-    assert os.path.exists(marker)       # the no-op replay committed it
+    def assert_day1_indexed_once(tag):
+        gp, ip = paths(tag)
+        idx = spark.read.parquet(ip)
+        assert idx.join(day1.select("vec_id"), "vec_id",
+                        "left_semi").count() == n_day1
+        assert _index_data_files(ip) == read_commit(gp)["index_files"]
 
-    # --- window C (r9 ADVICE, medium): MIXED batch, fresh ids index-
-    # appended, graph write crashed. A replayed old feed under a fresh
-    # checkpoint carries old-generation ids (long in the index AND
-    # graph) alongside new ids; the crash strands the new ids'
-    # index rows. The old ANY-id graph probe matched the batch's OLD
-    # ids and declared it fully applied — marker committed, fresh
-    # vectors never merged into the graph (silent divergence from the
-    # rebuild). The per-row stranded probe must re-merge exactly the
-    # absent ids through the pre-append index view.
-    seed_base("wc")
-    old_part = base.filter(F.col("vec_id") % 7 == 1)   # old-generation
-    mixed = old_part.unionByName(day1)
-    (SIM.ivf_index(day1, cents, n_probe=2)
-     .write.partitionBy("centroid_id").mode("append")
-     .parquet(str(tmp_path / "wc_i")))          # the stranded append
-    src2 = tmp_path / "replay_feed_mixed"
-    src2.mkdir()
-    mixed.coalesce(1).write.parquet(str(src2 / "m.parquet"))
-    q = stream_knn_graph_upsert(
-        spark.readStream.schema(mixed.schema)
-        .parquet(str(src2 / "m.parquet")),
-        str(tmp_path / "wc_g"), str(tmp_path / "wc_i"),
-        str(tmp_path / "wc_c"), cents, k=5, n_probe=2)
-    q.awaitTermination(180)
-    got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in spark.read.parquet(
-                     str(tmp_path / "wc_g")).collect())
-    assert got == want and want          # the fresh vectors ARE merged
-    idx = spark.read.parquet(str(tmp_path / "wc_i"))
-    assert idx.join(day1.select("vec_id"), "vec_id",
-                    "left_semi").count() == n_day1   # appended ONCE
-    assert os.path.exists(os.path.join(str(tmp_path / "wc_c"),
-                                       "_knn_graph_last_batch"))
+    # --- window A: index appended, graph swap killed ----------------
+    bootstrap_then_crash_day1("wa", "inside")
+    gp, ip = paths("wa")                    # the stranded append landed
+    assert set(_index_data_files(ip)) > set(read_commit(gp)["index_files"])
+    run("wa", "wa_c", "wa")                 # the replay
+    assert graph("wa") == want and want
+    assert_day1_indexed_once("wa")
+
+    # --- window B: graph swapped, crash before Spark's commit --------
+    bootstrap_then_crash_day1("wb", "after")
+    before = sorted(map(tuple, spark.read.parquet(paths("wb")[0])
+                        .collect()))
+    run("wb", "wb_c", "wb")
+    assert sorted(map(tuple, spark.read.parquet(paths("wb")[0])
+                      .collect())) == before
+    assert graph("wb") == want
+    assert_day1_indexed_once("wb")
+    assert list(read_commit(paths("wb")[0])["batches"].values()) == [1]
+
+    # --- window C: stranded append, then a mixed feed, fresh checkpoint
+    bootstrap_then_crash_day1("wc", "before")
+    mixed = base.filter(F.col("vec_id") % 7 == 1).unionByName(day1)
+    mixed.coalesce(1).write.parquet(str(tmp_path / "wc2" / "m.parquet"))
+    run("wc", "wc_c2", "wc2")
+    assert graph("wc") == want              # the fresh vectors ARE merged
+    assert_day1_indexed_once("wc")
 
 
 def test_stream_knn_graph_upsert_rebuilds_lost_graph_from_index(
@@ -1462,68 +1551,55 @@ def test_stream_knn_graph_upsert_disaster_rebuild_nprobe_guard(
 
 
 def test_stream_knn_graph_upsert_replay_of_neighbor_only_batch(
-        spark, tmp_path):
-    """r8 review: the fully-applied-batch diagnosis probed only
-    query_id, but a batch whose vectors landed ONLY as NEIGHBORS of
-    old queries (their own probed cells otherwise empty) has no query
-    rows — the replay misread it as index-stranded, re-merged against
-    the already-updated graph, and handed those neighbors DUPLICATE
-    edges (two of the query's k slots). The probe now covers both edge
-    endpoints. Hand-built euclidean geometry pins the premise: new
-    vector v is assigned to a cell no old vector occupies, old anchors
-    probe that cell, so the applied graph holds v only as neighbor."""
-    import os
-
-    from servihabitat_etl_spyke_spark.operators import similarity as SIM
-    from servihabitat_etl_spyke_spark.operators.etl import (
-        overwrite_via_tmp)
+        spark, tmp_path, crash_next_sink_swap):
+    """A batch whose vectors land ONLY as NEIGHBORS of old queries
+    (their own probed cells otherwise empty) has no query rows; a replay
+    that re-merged it against the already-updated graph would hand
+    those neighbors duplicate edges (two of the query's k slots).
+    Hand-built euclidean geometry pins the premise: new vector v is
+    assigned to a cell no old vector occupies, and old anchors probe
+    that cell. The sink crashes after the graph swap of v's batch; the
+    replay finds the batch id in the graph's record and changes
+    nothing."""
+    from servihabitat_etl_spyke_spark.operators.etl import read_commit
     from servihabitat_etl_spyke_spark.streaming.sinks import (
         stream_knn_graph_upsert)
 
     cents = [[10.0, 0.0], [10.0, 6.0], [0.0, 10.0]]
-    old = spark.createDataFrame(
-        [(1, [1.0, 9.0]), (2, [0.5, 9.5])],
-        "vec_id long, embedding array<double>")
-    vrow = spark.createDataFrame(
-        [(9, [10.0, 5.5])], "vec_id long, embedding array<double>")
+    schema = "vec_id long, embedding array<double>"
+    old = spark.createDataFrame([(1, [1.0, 9.0]), (2, [0.5, 9.5])], schema)
+    vrow = spark.createDataFrame([(9, [10.0, 5.5])], schema)
 
     gp, ip, cp = (str(tmp_path / n) for n in ("g", "i", "c"))
-    (SIM.ivf_index(old, cents, n_probe=2)
-     .write.partitionBy("centroid_id").parquet(ip))
-    g0 = SIM.knn_graph_ivf(old, k=2, n_probe=2, centroids=cents,
-                           with_score=True, ordered=False)
-    g0.write.parquet(gp)
-    # apply the batch FULLY by hand (validate=False: the 2-vector
-    # corpus has stored max rank 1 < k)
-    g1 = SIM.knn_graph_ivf_incremental(
-        None, spark.read.parquet(gp), vrow, cents, k=2, n_probe=2,
-        validate=False, old_index=spark.read.parquet(ip),
-        with_score=True, ordered=False).localCheckpoint()
-    # premise guard: v is a neighbor somewhere, a query nowhere
-    assert g1.filter(F.col("query_id") == 9).count() == 0
-    assert g1.filter(F.col("neighbor_id") == 9).count() > 0
-    (SIM.ivf_index(vrow, cents, n_probe=2)
-     .write.partitionBy("centroid_id").mode("append").parquet(ip))
-    overwrite_via_tmp(g1, gp)
-    want = sorted(map(tuple, spark.read.parquet(gp).collect()))
-    # ... and the marker write crashed. Replay the batch:
-    src = tmp_path / "feed"
-    src.mkdir()
-    vrow.coalesce(1).write.parquet(str(src / "d1.parquet"))
-    q = stream_knn_graph_upsert(
-        spark.readStream.schema(vrow.schema)
-        .parquet(str(src / "d1.parquet")),
-        gp, ip, cp, cents, k=2, n_probe=2, validate=False)
-    q.awaitTermination(120)
 
+    def run():
+        # validate=False: the 2-vector corpus has stored max rank 1 < k
+        stream_knn_graph_upsert(
+            spark.readStream.schema(schema)
+            .parquet(str(tmp_path / "feed" / "*.parquet")),
+            gp, ip, cp, cents, k=2, n_probe=2,
+            validate=False).awaitTermination(120)
+
+    old.coalesce(1).write.parquet(str(tmp_path / "feed" / "b0.parquet"))
+    run()                                   # bootstrap from old
+    vrow.coalesce(1).write.parquet(str(tmp_path / "feed" / "b1.parquet"))
+    crash_next_sink_swap("after")
+    with pytest.raises(Exception, match="simulated crash after"):
+        run()
+    applied = spark.read.parquet(gp)
+    # premise guard: v is a neighbor somewhere, a query nowhere
+    assert applied.filter(F.col("query_id") == 9).count() == 0
+    assert applied.filter(F.col("neighbor_id") == 9).count() > 0
+    want = sorted(map(tuple, applied.collect()))
+
+    run()                                   # the replay
     after = spark.read.parquet(gp)
     assert sorted(map(tuple, after.collect())) == want  # untouched
-    # the old bug's signature: duplicate (query, neighbor) pairs
     assert (after.groupBy("query_id", "neighbor_id").count()
             .filter("count > 1").count() == 0)
     idx = spark.read.parquet(ip)
     assert idx.filter(F.col("vec_id") == 9).count() == 1
-    assert os.path.exists(os.path.join(cp, "_knn_graph_last_batch"))
+    assert list(read_commit(gp)["batches"].values()) == [1]
 
 
 def test_stream_knn_graph_upsert_mixed_batch_fresh_checkpoint(
