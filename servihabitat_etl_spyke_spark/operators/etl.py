@@ -7,17 +7,20 @@ Re-expresses the reference's S3 -> transform -> DynamoDB automation
 
 - S1 S3 JSON-lines scan: the reference streams an S3 object through
   ``readline`` in 25-line callback batches (``s3-connector.ts:215-252``);
-  here it's one ``spark.read.json`` — line-delimited JSON is Spark's native
-  mode, and partition parallelism replaces the batching (at 100 TB the scan
-  fans out across executors; nothing touches the driver).
+  here it's one ``spark.read.text`` scan decoded in a single projection —
+  partition parallelism replaces the batching (at 100 TB the scan fans
+  out across executors; nothing touches the driver).
 - DynamoDB-JSON decode: typed attributes ``{S,N,BOOL,SS,L,M}`` become plain
   columns (SURVEY.md §1.2 "second wire format").
 - Entity transforms (``ETL.ts:13-64``): promotions dedup-merge (J3),
   checklists empty-string sanitize (F9), managements rename+enum (F7/F8),
   identity for products/clients/activitys.
 - S4/S6 keyed upsert: the DynamoDB BatchWrite/PutItem sink is a keyed
-  overwrite — emulated as new-version-wins anti-join union (no Delta in this
-  environment; with Delta it's a single MERGE INTO).
+  overwrite — emulated as one keyed aggregate over the stored and incoming
+  rows in which the newest version of each key wins, written once (no Delta
+  in this environment; with Delta it's a single MERGE INTO). The store is
+  read with the schema in its parquet footer, so an incremental batch runs
+  two Spark jobs: the merge's shuffle-map stage and the write.
 """
 
 from __future__ import annotations
@@ -177,41 +180,28 @@ def run_entity_pipeline(spark: SparkSession, entity: str, src_path: str) -> Data
     """The full load_from_s3_to_dynamodb pipeline for one entity
     (``etl.ts:46-53``): scan -> decode -> transform. Returns the cleansed
     DataFrame ready for :func:`keyed_upsert`."""
-    attrs = ENTITY_ATTRS[entity]
-    raw = read_jsonl(spark, src_path)
-    # ingestion order: partition-monotonic id preserves line order per file
-    raw = raw.withColumn("_ingest_order", F.monotonically_increasing_id())
+    # ingestion order: partition-monotonic id preserves line order per file.
     # _ingest_order rides through EVERY entity (not just promotions):
     # keyed_upsert resolves same-key collisions within a batch by LAST
     # write (PutItem overwrite order = file line order) and silently
-    # degrades to an arbitrary dropDuplicates winner without it; the
-    # promotions transform consumes the column, keyed_upsert strips it
-    if entity == "checklists":
-        # decode status as a RAW string so the sanitizer can distinguish the
-        # malformed '' case from a real list before parsing
-        attrs = {n: t for n, t in attrs.items() if n != "status"}
-        decoded = raw.select(
-            F.col("_ingest_order"),
-            *[_DYNAMO_DECODERS[t](
-                F.get_json_object("line", f"$.Item.{n}.{t}")).alias(n)
-              for n, t in attrs.items()],
-            F.get_json_object("line", "$.Item.status.L").alias("status_raw"),
-        )
-        # reference parity (etl.ts:48-49): a line whose JSON.parse is
-        # falsy or has no Item writes NOTHING — an undropped all-null row
-        # would land in keyed_upsert, whose left_anti join can never
-        # match a NULL key, so every later batch would KEEP the old
-        # null-id row and union a fresh one (one garbage row per upsert)
-        return checklists_transform(decoded.filter(F.col("id").isNotNull()))
-    cols = [F.get_json_object("line", f"$.Item.{n}.{t}").alias(f"_raw_{n}")
-            for n, t in attrs.items()]
-    decoded = raw.select(F.col("_ingest_order"), *cols)
-    decoded = decoded.select(
-        F.col("_ingest_order"),
-        *[_DYNAMO_DECODERS[t](F.col(f"_raw_{n}")).alias(n)
-          for n, t in attrs.items()])
-    # same Item-less-line drop as the checklists branch (etl.ts:48-49)
-    return ENTITY_TRANSFORMS[entity](decoded.filter(F.col("id").isNotNull()))
+    # degrades to an arbitrary winner without it; the promotions
+    # transform consumes the column, keyed_upsert strips it
+    cols = [F.monotonically_increasing_id().alias("_ingest_order")]
+    for n, t in ENTITY_ATTRS[entity].items():
+        raw = F.get_json_object("line", f"$.Item.{n}.{t}")
+        if entity == "checklists" and n == "status":
+            # decode status as a RAW string so the sanitizer can tell the
+            # malformed '' case from a real list before parsing
+            cols.append(raw.alias("status_raw"))
+        else:
+            cols.append(_DYNAMO_DECODERS[t](raw).alias(n))
+    # reference parity (etl.ts:48-49): a line whose JSON.parse is falsy or
+    # has no Item writes NOTHING — an undropped all-null row would reach
+    # keyed_upsert, which keeps every stored null-key row apart, so each
+    # later batch would add one more garbage row
+    decoded = (read_jsonl(spark, src_path).select(*cols)
+               .filter(F.col("id").isNotNull()))
+    return ENTITY_TRANSFORMS[entity](decoded)
 
 
 # ---------------------------------------------------------------------------
@@ -222,31 +212,50 @@ def keyed_upsert(existing: DataFrame | None, incoming: DataFrame,
                  key: str = "id") -> DataFrame:
     """Upsert-by-key snapshot: incoming rows replace existing rows with the
     same key; within incoming, the LAST write wins per key (DynamoDB PutItem
-    overwrite semantics, ``dynamo-connector.ts:91-107``).
+    overwrite semantics, ``dynamo-connector.ts:91-107``). Without an
+    ``_ingest_order`` column one arbitrary whole incoming row wins, as
+    ``dropDuplicates([key])`` would pick it.
 
     With a transactional table format this is ``MERGE INTO``; as pure
-    DataFrames it's existing ANTI-JOIN incoming ∪ incoming — one broadcast
-    (incoming keys are the small side in steady-state ETL) or shuffled
-    anti-join, no driver involvement.
+    DataFrames it is ONE keyed aggregate: existing rows ranked ``(0,
+    null)`` and incoming rows ranked ``(1, _ingest_order)`` are unioned by
+    name (so a missing or extra column raises and int/long widen as
+    ``unionByName`` does) and each key keeps its highest-ranked row. One
+    shuffle and no driver involvement; the stored rows cross the
+    exchange too. NULL keys match nothing: every existing null-key row
+    survives on its own and the incoming ones collapse to one. The
+    result has the key first, then the other columns in the existing
+    store's order (in incoming's on a first write, which without
+    ``_ingest_order`` keeps incoming's order as it is).
     """
-    if "_ingest_order" in incoming.columns:
-        payload = [c for c in incoming.columns
-                   if c not in (key, "_ingest_order")]
-        # ONE max_by over a struct of the whole payload: per-column
-        # max_by(c, order) would pick each column independently, and two
-        # rows tying on _ingest_order could interleave fields into a
-        # merged row that never existed
-        deduped = (incoming.groupBy(key)
-                   .agg(F.max_by(F.struct(*payload), "_ingest_order")
-                        .alias("_w"))
-                   .select(key, *[F.col(f"_w.{c}").alias(c)
-                                  for c in payload]))
-    else:
-        deduped = incoming.dropDuplicates([key])
-    if existing is None:
-        return deduped
-    kept = existing.join(deduped.select(key), on=key, how="left_anti")
-    return kept.unionByName(deduped)
+    ordered = "_ingest_order" in incoming.columns
+    data = [c for c in incoming.columns if c != "_ingest_order"]
+    no_order = F.lit(None).cast("long")
+
+    def rank(side: int, order: Column) -> Column:
+        return F.struct(F.lit(side).alias("side"),
+                        order.alias("order")).alias("_rank")
+
+    merged = incoming.select(
+        *data, rank(1, F.col("_ingest_order") if ordered else no_order),
+        no_order.alias("_slot"))
+    if existing is not None:
+        data = existing.columns
+        # _slot is unique per stored null-key row, so those never group
+        # with each other or with an incoming row
+        slot = F.when(F.col(key).isNull(), F.monotonically_increasing_id())
+        merged = existing.select(*data, rank(0, no_order),
+                                 slot.alias("_slot")).unionByName(merged)
+    cols = (data if existing is None and not ordered
+            else [key, *[c for c in data if c != key]])
+    # ONE max_by over a struct of the whole payload: per-column max_by
+    # would pick each column independently, and two rows tying on rank
+    # could interleave fields into a merged row that never existed
+    values = [c for c in cols if c != key]
+    return (merged.groupBy(key, "_slot")
+            .agg(F.max_by(F.struct(*values), "_rank").alias("_w"))
+            .select(*[F.col(key) if c == key else F.col(f"_w.{c}").alias(c)
+                      for c in cols]))
 
 
 def cascade_delete(parent: DataFrame, children: DataFrame, fk_col: str,
@@ -328,6 +337,30 @@ def read_commit(path: str) -> dict:
         return {}
 
 
+#: where Spark's parquet writer files the row schema in a footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """Read the committed snapshot at ``path`` without a schema-inference
+    job: the schema is the one Spark wrote into the footer of its first
+    data file, read on the driver. A store whose files carry no such
+    footer key (written by another tool), or that has no data file at its
+    top level, is read with ``spark.read.parquet``'s inference. Call
+    :func:`recover_snapshot` first."""
+    import pyarrow.parquet as pq
+
+    files = sorted(f for f in os.listdir(path) if f[0] not in "_."
+                   and os.path.isfile(os.path.join(path, f)))
+    meta = (pq.read_metadata(os.path.join(path, files[0])).metadata or {}
+            if files else {})
+    reader = spark.read
+    if _SPARK_SCHEMA_KEY in meta:
+        reader = reader.schema(
+            T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY])))
+    return reader.parquet(path)
+
+
 def overwrite_via_tmp(df: DataFrame, path: str,
                       commit: dict | None = None) -> None:
     """Replace the parquet snapshot at ``path`` with ``df``, which may
@@ -362,11 +395,13 @@ def overwrite_via_tmp(df: DataFrame, path: str,
 def upsert_into_path(spark: SparkSession, incoming: DataFrame, path: str,
                      key: str = "id") -> None:
     """MERGE-into-table emulation against a parquet path: read the
-    committed snapshot if there is one (:func:`recover_snapshot`),
-    apply :func:`keyed_upsert`, and swap the result in with
-    :func:`overwrite_via_tmp`, the first write included. Readers load
-    ``path`` themselves."""
-    existing = spark.read.parquet(path) if recover_snapshot(path) else None
+    committed snapshot if there is one (:func:`recover_snapshot`,
+    :func:`read_snapshot`), apply :func:`keyed_upsert`, and swap the
+    result in with :func:`overwrite_via_tmp`, the first write included.
+    An incremental batch runs two Spark jobs, the merge's shuffle-map
+    stage and the write, plus whatever the transform of ``incoming``
+    shuffles. Readers load ``path`` themselves."""
+    existing = read_snapshot(spark, path) if recover_snapshot(path) else None
     overwrite_via_tmp(keyed_upsert(existing, incoming, key), path)
 
 

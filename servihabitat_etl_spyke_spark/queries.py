@@ -592,8 +592,9 @@ ORDER BY id
 """)
 def etl_keyed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S6: keyed upsert (DynamoDB PutItem overwrite) — incoming replaces
-    existing on key collision, new keys append. Anti-join + union; at scale
-    the incoming side broadcasts."""
+    existing on key collision, new keys append. One keyed aggregate over
+    the union of both sides: a single hash shuffle on the key, in which
+    the existing rows cross the exchange too."""
     orders = load_table(spark, sf_dir, "orders")
     existing = orders.filter(F.col("o_orderkey") < 1000).select(
         F.col("o_orderkey").alias("id"), F.lit("old").alias("version"),

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.etl import overwrite_via_tmp as _overwrite_via_tmp
 from ..operators.etl import read_commit as _read_commit
+from ..operators.etl import read_snapshot as _read_snapshot
 from ..operators.etl import recover_snapshot as _recover_snapshot
 from ..operators.etl import upsert_into_path
 
@@ -127,7 +128,8 @@ def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
 
     1. heals ``path`` and skips a batch id its record already holds;
     2. reduces to its own partial (``partial_fn(batch)``), merged with
-       the stored snapshot if one exists (``merge_fn(existing, part)``);
+       the stored snapshot if one exists (``merge_fn(existing, part)``,
+       the snapshot read with its footer schema by ``read_snapshot``);
     3. swaps the result in with ``overwrite_via_tmp``, the first write
        included, carrying the record advanced to this batch id.
 
@@ -143,7 +145,7 @@ def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
             return                      # replayed batch: already merged
         part = partial_fn(batch)
         if has:
-            part = merge_fn(batch.sparkSession.read.parquet(path), part)
+            part = merge_fn(_read_snapshot(batch.sparkSession, path), part)
         _overwrite_via_tmp(part, path,
                            commit={"batches": {**batches, qid: bid}})
 

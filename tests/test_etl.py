@@ -109,6 +109,69 @@ def test_keyed_upsert_replaces_and_appends(spark):
     out = {r["id"]: r["v"] for r in keyed_upsert(existing, incoming).collect()}
     assert out == {"1": "old1", "2": "new2", "3": "new3"}
 
+    # NULL keys match nothing: every stored null-id row survives, equal
+    # ones included, and the incoming null-id rows collapse to one; the
+    # result has the key first and the other stored columns in their
+    # order, with or without _ingest_order
+    existing = spark.createDataFrame(
+        [("old1", "1", 1), ("old2", "2", 2), ("oldnull", None, 3),
+         ("oldnull", None, 3), ("oldnull2", None, 4)],
+        "v string, id string, n long")
+    incoming = spark.createDataFrame(
+        [("2", "new2a", 20, 0), ("3", "new3", 30, 1), ("2", "new2b", 21, 2),
+         (None, "newnull1", 40, 3), (None, "newnull2", 41, 4)],
+        "id string, v string, n long, _ingest_order long")
+    for ordered in (True, False):
+        inc = incoming if ordered else incoming.drop("_ingest_order")
+        out = keyed_upsert(existing, inc)
+        assert out.columns == ["id", "v", "n"]
+        # a first write: key first when ordered, input order otherwise
+        first = keyed_upsert(None, inc.select("v", *[
+            c for c in inc.columns if c != "v"]))
+        assert first.columns == (["id", "v", "n"] if ordered
+                                 else ["v", "id", "n"])
+        rows = out.collect()
+        by_id = {r["id"]: tuple(r) for r in rows if r["id"] is not None}
+        nulls = sorted(tuple(r) for r in rows if r["id"] is None)
+        assert len(rows) == len(by_id) + len(nulls) == 7
+        assert by_id["1"] == ("1", "old1", 1)
+        assert by_id["3"] == ("3", "new3", 30)
+        stored = [(None, "oldnull", 3), (None, "oldnull", 3),
+                  (None, "oldnull2", 4)]
+        if ordered:                       # the LAST write wins
+            assert by_id["2"] == ("2", "new2b", 21)
+            assert nulls == sorted(stored + [(None, "newnull2", 41)])
+        else:                             # one whole incoming row wins
+            assert by_id["2"] in {("2", "new2a", 20), ("2", "new2b", 21)}
+            assert [t for t in nulls if t not in stored] in (
+                [(None, "newnull1", 40)], [(None, "newnull2", 41)])
+
+
+@pytest.mark.parametrize("case", ["missing", "extra", "widen"])
+def test_keyed_upsert_unions_by_name(spark, case):
+    """The stored and incoming rows are matched by column name: an
+    incoming column the store lacks, or a stored column incoming lacks,
+    raises; int and long widen to long."""
+    from pyspark.errors import AnalysisException
+
+    existing = spark.createDataFrame(
+        [(1, 10, "a"), (2, 20, "b")], "id int, n int, v string")
+    if case == "widen":
+        incoming = spark.createDataFrame(
+            [("c", 3 << 40, 2, 0), ("d", 30, 3, 1)],
+            "v string, n long, id long, _ingest_order long")
+        out = keyed_upsert(existing, incoming)
+        assert [(f.name, f.dataType.simpleString())
+                for f in out.schema.fields] == [
+            ("id", "bigint"), ("n", "bigint"), ("v", "string")]
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 10, "a"), (2, 3 << 40, "c"), (3, 30, "d")]
+        return
+    incoming = (existing.drop("v") if case == "missing"
+                else existing.withColumn("w", existing["v"]))
+    with pytest.raises(AnalysisException):
+        keyed_upsert(existing, incoming).collect()
+
 
 def test_upsert_into_path_full_cycle(spark, tmp_path):
     path = str(tmp_path / "table")
@@ -118,6 +181,65 @@ def test_upsert_into_path_full_cycle(spark, tmp_path):
     assert upsert_into_path(spark, v2, path) is None
     out = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert out == {"1": "a", "2": "B", "3": "c"}
+
+
+def test_upsert_into_path_incremental_batch_runs_two_jobs(spark, tmp_path):
+    """An incremental batch of a non-promotions entity is one shuffle-map
+    job (scan, decode, union with the stored rows, partial merge) and one
+    write job: no schema-inference job for the store and no separate job
+    for the incoming key set."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "store")
+    for b in range(2):
+        p = tmp_path / f"products{b}.jsonl"
+        _write_jsonl(p, [{"Item": {"id": {"S": f"p{i + 3 * b}"},
+                                   "name": {"S": f"n{b}"},
+                                   "price": {"N": str(i)}}}
+                         for i in range(6)])
+        group = f"etl-jobs-{tmp_path.name}-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            upsert_into_path(spark, run_entity_pipeline(
+                spark, "products", str(p)), path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    out = {r["id"]: r["name"] for r in spark.read.parquet(path).collect()}
+    assert out == {f"p{i}": "n0" if i < 3 else "n1" for i in range(9)}
+
+
+def test_read_snapshot_schema_from_footer(spark, tmp_path):
+    """read_snapshot takes a Spark-written store's schema from its footer,
+    and it equals what spark.read.parquet infers; a store written by
+    another tool (no Spark footer key) still reads by inference."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from servihabitat_etl_spyke_spark.operators.etl import read_snapshot
+
+    path = str(tmp_path / "spark_store")
+    spark.createDataFrame(
+        [("a", 1.5, ["x", "y"], datetime.date(2024, 1, 2),
+          datetime.datetime(2024, 1, 2, 3, 4, 5), (1, "s")),
+         (None, None, None, None, None, None)],
+        "s string, d double, arr array<string>, dt date, ts timestamp, "
+        "st struct<k:int, t:string>").write.parquet(path)
+    got = read_snapshot(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(map(str, got.collect())) == sorted(
+        map(str, spark.read.parquet(path).collect()))
+
+    other = tmp_path / "pyarrow_store"
+    other.mkdir()
+    pq.write_table(pa.table({"id": ["p1", "p2"], "n": [1, 2]}),
+                   str(other / "data.parquet"))
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in (
+        pq.read_metadata(str(other / "data.parquet")).metadata or {})
+    got = read_snapshot(spark, str(other))
+    assert got.schema == spark.read.parquet(str(other)).schema
+    assert sorted(map(tuple, got.collect())) == [("p1", 1), ("p2", 2)]
 
 
 def test_read_jsonl_malformed_lines_survive(spark, tmp_path):
