@@ -12,9 +12,9 @@ Two paths:
 - **IVF-style ANN**: coarse quantizer = per-label centroids (k-means stand-in;
   any trained codebook drops in); probe the nearest n_probe centroids.
 
-A vectorized pandas-UDF scorer (`cosine_topk_pandas`) is provided for the
-bench path — numpy matmul over Arrow batches beats per-element JVM
-expression trees on wide vectors.
+Every top-k operator returns its rows unsorted: the ``rank`` column
+carries the order, and a global ``orderBy`` would add a range-sampling
+job that re-executes the scoring plan.
 """
 
 from __future__ import annotations
@@ -141,17 +141,13 @@ def _dim_of(df: DataFrame, vec_col: str, op: str) -> int:
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                ordered: bool = True) -> DataFrame:
+                id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
     """Exact top-k neighbors per query vector.
 
     Returns (query_id, neighbor_id, rank) — integer output so results are
     hash-stable across engines (scores drive the order but stay internal;
-    ties broken by neighbor id). ``ordered=False`` (r9) skips the final
-    presentational global sort — the ``rank`` column already carries the
-    order, and an order-insensitive consumer (hash gate, aggregation,
-    join) pays a range-sampling re-execution of the child plan for
-    nothing (the r8 sweep's lesson, extended into the operators)."""
+    ties broken by neighbor id)."""
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qvec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
@@ -160,64 +156,9 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
-
-
-def cosine_topk_pandas(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       ordered: bool = True) -> DataFrame:
-    """Vectorized scorer: numpy matmul per Arrow batch (the bench/scale
-    variant of :func:`cosine_topk`; identical results, verified in tests).
-
-    The query matrix is closed over (broadcast by pickling — small by
-    contract); each partition scores its batch against ALL queries in one
-    GEMM, keeps a local top-k, and the final global top-k per query is a
-    tiny shuffle of k*partitions rows."""
-    qrows = queries.select(id_col, vec_col).collect()  # queries are small by contract
-    if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _to_matrix([r[1] for r in qrows], qids,
-                      "cosine_topk_pandas(queries)")
-    qmat = qmat / np.maximum(
-        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-300)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _to_matrix(pdf[vec_col], ids, "cosine_topk_pandas")
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
-            sims = mat @ qmat.T                      # (batch, nq)
-            out = []
-            for qi, qid in enumerate(qids):
-                s = sims[:, qi]
-                mask = ids != qid
-                cand_ids, cand_s = ids[mask], s[mask]
-                idx = _topk_idx(cand_s, cand_ids, k)
-                if len(idx) == 0:
-                    continue
-                out.append(pd.DataFrame({
-                    "query_id": qid, "neighbor_id": cand_ids[idx],
-                    "score": cand_s[idx]}))
-            yield (pd.concat(out) if out
-                   else pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                                      "neighbor_id": pd.Series([], dtype="int64"),
-                                      "score": pd.Series([], dtype="float64")}))
-
-    partial = corpus.mapInPandas(
-        score, schema="query_id long, neighbor_id long, score double")
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (partial.select("query_id", "neighbor_id",
+    return (scored.select("query_id", "neighbor_id",
                           F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    # ordered=False (r9): rank carries the order; the global sort's
-    # range-sample re-executes the GEMM child (see cosine_topk)
-    return out.orderBy("query_id", "rank") if ordered else out
+            .filter(F.col("rank") <= k))
 
 
 # -- Random-hyperplane LSH -----------------------------------------------------
@@ -248,8 +189,8 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  n_planes: int = 8, multiprobe: bool = True,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """ANN: hyperplane-LSH bucket join + exact re-rank inside the bucket.
 
     Sub-linear: each query only scores vectors sharing its bucket (expected
@@ -284,10 +225,9 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return (scored.select("query_id", "neighbor_id",
+                          F.row_number().over(w).alias("rank"))
+            .filter(F.col("rank") <= k))
 
 
 # -- IVF-style coarse quantization ---------------------------------------------
@@ -313,7 +253,7 @@ def nearest_centroid(centroids: list[list[float]]) -> "Column":
     ``array_min`` — was measured 5-7 s SLOWER per job here: Catalyst spends
     seconds analyzing/codegen'ing the k*dim-literal tree every iteration.
     numpy GEMM over Arrow batches is the pragmatic production shape for
-    wide vectors, same as ``cosine_topk_pandas``.)"""
+    wide vectors.)"""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)          # (k, dim)
@@ -455,8 +395,7 @@ def assign_to_centroids(corpus: DataFrame, centroids: list[list[float]],
 def ann_ivf_topk_trained(corpus: DataFrame, queries: DataFrame,
                          centroids: list[list[float]], k: int = 10,
                          n_probe: int = 2, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         ordered: bool = True) -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """IVF ANN over a TRAINED codebook (kmeans_fit) instead of the label
     stand-in: assign corpus once, probe the n_probe nearest centroids per
     query, exact re-rank inside."""
@@ -465,12 +404,12 @@ def ann_ivf_topk_trained(corpus: DataFrame, queries: DataFrame,
         [(i, c) for i, c in enumerate(centroids)],
         "centroid_id int, cvec array<double>")
     return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col,
-                      vec_col, ordered=ordered)
+                      vec_col)
 
 
 def _ivf_probe(assigned: DataFrame, queries: DataFrame, cdf: DataFrame,
-               k: int, n_probe: int, id_col: str, vec_col: str,
-               ordered: bool = True) -> DataFrame:
+               k: int, n_probe: int, id_col: str,
+               vec_col: str) -> DataFrame:
     """Shared IVF probe + re-rank: rank centroids by the SAME metric used
     for corpus assignment (squared euclidean — probing by a different
     metric would skip exactly the cell holding a query's true neighbors),
@@ -493,10 +432,9 @@ def _ivf_probe(assigned: DataFrame, queries: DataFrame, cdf: DataFrame,
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return (scored.select("query_id", "neighbor_id",
+                          F.row_number().over(w).alias("rank"))
+            .filter(F.col("rank") <= k))
 
 
 def ivf_centroids(corpus: DataFrame, label_col: str = "label",
@@ -516,8 +454,8 @@ def ivf_centroids(corpus: DataFrame, label_col: str = "label",
 
 def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  n_probe: int = 2, label_col: str = "label",
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """IVF probe over the label stand-in codebook: per-label centroids,
     probe via the shared :func:`_ivf_probe` (same metric as assignment),
     exact re-rank inside. At scale the corpus is partitioned by label so
@@ -526,7 +464,7 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
            .select("centroid_id", F.col("centroid").alias("cvec")))
     assigned = corpus.withColumn("centroid_id", F.col(label_col))
     return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col,
-                      vec_col, ordered=ordered)
+                      vec_col)
 
 
 # -- int8 storage quantization ------------------------------------------------
@@ -654,20 +592,19 @@ def pca_project(corpus: DataFrame, model: dict, id_col: str = "vec_id",
 def knn_graph(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
               vec_col: str = "embedding",
               with_score: bool = False,
-              max_closure_cells: int = 200_000_000,
-              ordered: bool = True) -> DataFrame:
+              max_closure_cells: int = 200_000_000) -> DataFrame:
     """Exact k-nearest-neighbor GRAPH: cosine top-k neighbors for EVERY
     corpus vector (queries == corpus) — the building block for kNN-graph
     near-dup clustering, SemDeDup-style pruning, and retrieval-augmented
     mixing. Returns (query_id, neighbor_id, rank), integers only.
 
     Blocked GEMM, one pass, zero shuffle: the unit-normalized corpus
-    matrix ships to every task as a closure constant (same "small by
-    contract" rule as :func:`cosine_topk_pandas` — fine to ~1e6 x 128
-    float64); each partition scores its block against the whole matrix in
-    one matmul and emits its OWN rows' top-k directly. Each row sees every
-    candidate, so no second aggregation/window is needed — the output is
-    exactly n*k rows straight out of the map stage.
+    matrix ships to every task as a closure constant ("small by
+    contract" — fine to ~1e6 x 128 float64); each partition scores its
+    block against the whole matrix in one matmul and emits its OWN
+    rows' top-k directly. Each row sees every candidate, so no second
+    aggregation/window is needed — the output is exactly n*k rows
+    straight out of the map stage.
 
     O(n^2) work by definition of an exact graph. Beyond closure size use
     :func:`knn_graph_ivf` (cluster-pruned, approximate) — same output
@@ -746,12 +683,7 @@ def knn_graph(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
     schema = "query_id long, neighbor_id long, rank int"
     if with_score:
         schema += ", score double"
-    out = corpus.mapInPandas(score, schema=schema)
-    # ordered=False (r9): the range-sampling pass of a global sort
-    # RE-EXECUTES the child plan — here that child is the full blocked
-    # GEMM, so a presentational sort on a hash-checked or aggregated
-    # output runs the O(n^2) scoring twice (measured ~2x at sf0.1)
-    return out.orderBy("query_id", "rank") if ordered else out
+    return corpus.mapInPandas(score, schema=schema)
 
 
 def _probes_udf(centroids: list[list[float]], n_probe: int):
@@ -850,23 +782,41 @@ def ivf_index(corpus: DataFrame, centroids: list[list[float]],
             .select(id_col, vec_col, "centroid_id", "probes", "n_probe"))
 
 
-def _ivf_probe_side(corpus: DataFrame, centroids: list[list[float]],
-                    n_probe: int, id_col: str,
-                    vec_col: str) -> DataFrame:
-    """(query_id, qvec, centroid_id) — one row per (vector, probed
-    cell). Probe selection is ROW-LOCAL (see :func:`_probes_udf`)."""
-    probes = _probes_udf(centroids, n_probe)
-    return (corpus.select(F.col(id_col).alias("query_id"),
-                          F.col(vec_col).alias("qvec"),
-                          probes(F.col(vec_col)).alias("_probes"))
-            .select("query_id", "qvec",
-                    F.explode("_probes").alias("centroid_id")))
+def _check_index(index: DataFrame, n_probe: int, np_eff: int,
+                 caller: str, id_col: str, vec_col: str,
+                 built: int | None = None) -> None:
+    """A stored :func:`ivf_index` table's contract against a request:
+    every column present, and its build width (``built``, or
+    :func:`_index_n_probe` when not yet known) equal to the effective
+    request ``np_eff``. A width mismatch in EITHER direction changes
+    which cells' members are candidates, so it raises."""
+    need = {id_col, vec_col, "centroid_id", "probes", "n_probe"}
+    missing = need - set(index.columns)
+    if missing:
+        raise ValueError(
+            f"{caller}: index is missing column(s) {sorted(missing)} — "
+            f"build it with ivf_index(corpus, centroids, n_probe)")
+    if built is None:
+        built = _index_n_probe(index, caller)
+    if built is not None and built != np_eff:
+        raise ValueError(
+            f"{caller}: index was built with n_probe={built} but "
+            f"n_probe={n_probe} (effective {np_eff}) was requested — "
+            f"rebuild the index or match the request")
 
 
-def _ivf_members_side(assigned: DataFrame, id_col: str,
-                      vec_col: str) -> DataFrame:
-    return assigned.select(F.col(id_col).alias("neighbor_id"),
+def _cell_sides(index: DataFrame, id_col: str,
+                vec_col: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the cell equi-join, read off an :func:`ivf_index`
+    table: the probe stream (query_id, qvec, centroid_id) — one row per
+    (vector, probed cell) — and the membership stream (neighbor_id,
+    cvec, centroid_id) — one row per vector, in its assigned cell."""
+    q = index.select(F.col(id_col).alias("query_id"),
+                     F.col(vec_col).alias("qvec"),
+                     F.explode("probes").alias("centroid_id"))
+    members = index.select(F.col(id_col).alias("neighbor_id"),
                            F.col(vec_col).alias("cvec"), "centroid_id")
+    return q, members
 
 
 def _ivf_cell_scored(q: DataFrame, members: DataFrame,
@@ -925,20 +875,17 @@ def _ivf_cell_scored(q: DataFrame, members: DataFrame,
 
 
 def _cross_cell_topk(scored: DataFrame, k: int,
-                     with_score: bool, ordered: bool = True) -> DataFrame:
+                     with_score: bool) -> DataFrame:
     """Merge per-cell candidate rows into the final per-query top-k:
     (score desc, neighbor_id asc) — the same deterministic total order
     as :func:`_topk_idx`, which is what makes incremental merging
-    exact (top-k of a union == top-k of per-part top-k unioned).
-    ``ordered=False`` skips the presentational global sort so a caller
-    unioning further branches pays it once, at the end."""
+    exact (top-k of a union == top-k of per-part top-k unioned)."""
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(),
                                           "neighbor_id")
     cols = ["query_id", "neighbor_id", F.row_number().over(w).alias("rank")]
     if with_score:
         cols.append("score")
-    out = scored.select(*cols).filter(F.col("rank") <= k)
-    return out.orderBy("query_id", "rank") if ordered else out
+    return scored.select(*cols).filter(F.col("rank") <= k)
 
 
 def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
@@ -946,15 +893,15 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
                   vec_col: str = "embedding",
                   with_score: bool = False,
                   centroids: list[list[float]] | None = None,
-                  ordered: bool = True,
                   index: DataFrame | None = None) -> DataFrame:
     """Approximate kNN graph at corpus scale: k-means coarse partition,
     each vector scores only the vectors in its ``n_probe`` nearest cells.
 
     The 100 TB shape: cost drops from O(n^2) to O(sum_c n_c * m_c) where
-    m_c is the probed-cell population. Probe selection is ROW-LOCAL (the
-    kc x dim centroid matrix rides in the pandas UDF closure — no join,
-    no shuffle); the only shuffle is the equi-join on centroid_id, whose
+    m_c is the probed-cell population. Cells and probes come from ONE
+    :func:`ivf_index` table — ROW-LOCAL probe selection (the kc x dim
+    centroid matrix rides in the pandas UDF closure — no join, no
+    shuffle); the only shuffle is the equi-join on centroid_id, whose
     skew is the cluster-size distribution (for pathological clusters,
     split cells or salt the join — see operators/scale.py).
 
@@ -978,95 +925,50 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
     from the scoring task — the IVF path never collects the corpus, so
     the check lives executor-side at zero extra scans).
 
-    ``ordered=False`` (r8) skips the final presentational global sort —
-    a graph headed for a TABLE WRITE (the stored-graph build the
-    incremental path consumes) pays a range exchange + sort for
-    nothing; row content is identical either way.
-
-    ``index`` (r9, VERDICT r8 #4): the persisted :func:`ivf_index`
-    table. When given, BOTH sides of the cell equi-join read the
-    stored assignment/probe columns and the probe UDF never runs —
-    ``corpus``/``centroids``/``kc``/``iters`` are then unused (corpus
-    may be None); only ``k`` and ``n_probe`` remain live, and
-    ``n_probe`` is validated against the index's pinned build column
-    outright (same unconditional contract as
-    :func:`knn_graph_ivf_incremental` — a width mismatch silently
-    changes which cells' members are candidates). This is what the
-    IVF consumers (classify / degrees / pagerank) feed so assignment
-    is computed ONCE per corpus build instead of once per consumer;
-    byte-equality with the direct path is pytest-pinned
+    ``index``: a persisted :func:`ivf_index` table to read instead of
+    building one from ``corpus`` — ``corpus``/``kc``/``iters`` are then
+    unused (corpus may be None) and ``n_probe`` is validated against the
+    index's pinned build column (a width mismatch silently changes
+    which cells' members are candidates). The IVF consumers (classify /
+    degrees / pagerank) feed one index so assignment is computed ONCE
+    per corpus build instead of once per consumer; byte-equality with
+    the ``corpus`` path is pytest-pinned
     (test_knn_graph_ivf_from_index_byte_equal)."""
     if index is not None:
-        need = {id_col, vec_col, "centroid_id", "probes", "n_probe"}
-        missing_cols = need - set(index.columns)
-        if missing_cols:
-            raise ValueError(
-                f"knn_graph_ivf: index is missing column(s) "
-                f"{sorted(missing_cols)} — build it with "
-                f"ivf_index(corpus, centroids, n_probe)")
-        built = _index_n_probe(index, "knn_graph_ivf")
         np_eff = (min(n_probe, len(centroids))
                   if centroids is not None else n_probe)
-        if built is not None and built != np_eff:
-            raise ValueError(
-                f"knn_graph_ivf: index was built with "
-                f"n_probe={built} but n_probe={n_probe} (effective "
-                f"{np_eff}) was requested — rebuild the index or match "
-                f"the request")
-        members = index.select(F.col(id_col).alias("neighbor_id"),
-                               F.col(vec_col).alias("cvec"),
-                               "centroid_id")
-        q = index.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("qvec"),
-                         F.explode("probes").alias("centroid_id"))
-        return _cross_cell_topk(_ivf_cell_scored(q, members, k), k,
-                                with_score, ordered=ordered)
-    if corpus is None:
+        _check_index(index, n_probe, np_eff, "knn_graph_ivf",
+                     id_col, vec_col)
+    elif corpus is None:
         raise ValueError("knn_graph_ivf: pass corpus, or index (the "
                          "persisted ivf_index table)")
-    cents = (centroids if centroids is not None
-             else kmeans_fit(corpus, k=kc, iters=iters,
-                             id_col=id_col, vec_col=vec_col))
-    assigned = assign_to_centroids(corpus, cents, id_col, vec_col)
-    q = _ivf_probe_side(corpus, cents, n_probe, id_col, vec_col)
-    members = _ivf_members_side(assigned, id_col, vec_col)
-    return _cross_cell_topk(_ivf_cell_scored(q, members, k), k,
-                            with_score, ordered=ordered)
+    else:
+        cents = (centroids if centroids is not None
+                 else kmeans_fit(corpus, k=kc, iters=iters,
+                                 id_col=id_col, vec_col=vec_col))
+        index = ivf_index(corpus, cents, n_probe, id_col, vec_col)
+    q, members = _cell_sides(index, id_col, vec_col)
+    return _cross_cell_topk(_ivf_cell_scored(q, members, k), k, with_score)
 
 
-def _incremental_candidates(old_corpus: DataFrame | None,
-                            new_batch: DataFrame,
+def _incremental_candidates(old_index: DataFrame, new_batch: DataFrame,
                             centroids: list[list[float]],
                             k: int, n_probe: int, id_col: str,
-                            vec_col: str,
-                            old_index: DataFrame | None) -> DataFrame:
+                            vec_col: str) -> DataFrame:
     """The LAZY fresh-candidate plan of :func:`knn_graph_ivf_incremental`
     (split out so the plan gate can count the quiet-day scan shape
     before the operator's localCheckpoint materializes it):
-    part_old ∪ part_new as (query_id, neighbor_id, score)."""
-    assigned_new = assign_to_centroids(new_batch, centroids,
-                                       id_col, vec_col)
-    members_new = _ivf_members_side(assigned_new, id_col, vec_col)
+    part_old ∪ part_new as (query_id, neighbor_id, score).
 
-    # Old-side cell membership and probe streams: read from the
-    # persisted index when given (no UDF over stored vectors — the
-    # broadcast-semi-join prunes below then land on a plain table
-    # column, nothing sits between them and the scan), else recompute
-    # from the corpus (the fallback pays the full-corpus UDF pass).
-    if old_index is not None:
-        members_old = old_index.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"), "centroid_id")
-        q_old_all = old_index.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.explode("probes").alias("centroid_id"))
-    else:
-        assigned_old = assign_to_centroids(old_corpus, centroids,
-                                           id_col, vec_col)
-        members_old = _ivf_members_side(assigned_old, id_col, vec_col)
-        q_old_all = _ivf_probe_side(old_corpus, centroids, n_probe,
-                                    id_col, vec_col)
+    Both sides read cells and probe lists off :func:`ivf_index` rows:
+    the stored index for the old side (no UDF over stored vectors — the
+    broadcast-semi-join prunes below land on a plain table column,
+    nothing sits between them and the scan), and one index build over
+    the new batch."""
+    q_old_all, members_old = _cell_sides(old_index, id_col, vec_col)
+    q_new, members_new = _cell_sides(
+        ivf_index(new_batch, centroids, n_probe, id_col, vec_col),
+        id_col, vec_col)
 
     # NEW anchors: full candidate set of their probed cells (old + new
     # members) — a brand-new query has no stored edges to merge. The
@@ -1075,8 +977,6 @@ def _incremental_candidates(old_corpus: DataFrame | None,
     # the cogroup shuffle: without this, every daily run would
     # hash-exchange the ENTIRE old corpus's vectors even for a tiny
     # batch — the prune is what makes a quiet day ship almost nothing.
-    q_new = _ivf_probe_side(new_batch, centroids, n_probe,
-                            id_col, vec_col)
     cells_new_probes = q_new.select("centroid_id").distinct()
     members_all = (members_old.unionByName(members_new)
                    .join(F.broadcast(cells_new_probes), "centroid_id",
@@ -1093,7 +993,7 @@ def _incremental_candidates(old_corpus: DataFrame | None,
     return part_old.unionByName(part_new)
 
 
-def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
+def knn_graph_ivf_incremental(old_index: DataFrame,
                               old_graph: DataFrame,
                               new_batch: DataFrame,
                               centroids: list[list[float]],
@@ -1102,14 +1002,19 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
                               vec_col: str = "embedding",
                               with_score: bool = False,
                               validate: bool = True,
-                              old_index: DataFrame | None = None,
-                              ordered: bool = True,
                               index_width_checked: int | None = None,
                               ) -> DataFrame:
     """Daily-ingest kNN-graph maintenance: update the stored graph with
     a new embedding batch WITHOUT rescoring old-vs-old — the ANN leg of
     the incremental trilogy next to ``dedup_incremental`` and
     ``dedup_snapshot_incremental``.
+
+    ``old_index`` is the persisted :func:`ivf_index` table of the stored
+    corpus (build once per batch, the ``stored_sig`` pattern): old-side
+    cells and probe lists are read from it, so the assignment/probe UDF
+    NEVER runs over the stored corpus, and the broadcast-semi-join
+    prunes apply directly to its ``centroid_id`` column with no UDF
+    barrier above the scan.
 
     EXACT against the full rebuild: returns byte-identical
     (query_id, neighbor_id, rank) to
@@ -1151,18 +1056,9 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
       the full stored graph (r8, VERDICT r7 #2b). Provably identical:
       with no new candidates, top-k over stored-only candidates IS the
       stored ranking.
-    - With ``old_index`` (the persisted :func:`ivf_index` table —
-      build once per batch, the ``stored_sig`` pattern), the
-      assignment/probe UDF NEVER runs over the stored corpus: old-side
-      cells and probe lists are read from the table, and the
-      broadcast-semi-join prunes apply directly to its ``centroid_id``
-      column with no UDF barrier above the scan (r8, VERDICT r7 #2a).
-      ``old_corpus`` is then never scanned and may be None. Without
-      ``old_index`` the recompute fallback scans ``old_corpus`` as
-      before.
 
     SIZE CONTRACT: the broadcast prunes assume the incremental regime
-    |new_batch| << |old_corpus| (the touched-query-id list is bounded
+    |new_batch| << |stored corpus| (the touched-query-id list is bounded
     by |new| + |old anchors probing affected cells|). A batch
     comparable to the corpus should use :func:`knn_graph_ivf` on the
     union instead — same output by the exactness contract.
@@ -1177,20 +1073,23 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
       old-vs-old candidates beyond the stored truncation unrecoverable
       (wrong neighbors fill ranks k_stored+1..k with no cardinality
       signal); ``validate=True`` (default) runs a one-job rank probe
-      that catches it. ``n_probe`` must EQUAL the stored build's — a
-      mismatch in EITHER direction changes which cells' old members
-      were candidates; an ``old_index`` REQUIRES its ``n_probe``
-      column and is checked against the request outright — without an
-      index the n_probe mismatch is not detectable from the edge table
-      and stays the caller's contract.
+      that catches it. ``n_probe`` must EQUAL the index's build width —
+      a mismatch in EITHER direction changes which cells' old members
+      were candidates; the index's ``n_probe`` column is REQUIRED and
+      checked against the request outright, whatever ``validate``
+      says.
     - Old and new ids must be disjoint (re-ingest = delete upstream
       INCLUDING the deleted vector's stored edges, then add).
       ``validate=True`` probes for an overlap and raises.
+
+    ``index_width_checked`` short-circuits the index's uniformity
+    aggregate ONLY: it is the caller's attestation that
+    ``_index_n_probe`` already ran on this same store (a streaming sink
+    validating once per stream instead of re-scanning the index every
+    micro-batch). The width-vs-request comparison still runs on the
+    attested value, so a wrong attestation fails loudly unless it
+    happens to equal the request.
     """
-    if old_index is None and old_corpus is None:
-        raise ValueError(
-            "knn_graph_ivf_incremental: pass old_corpus, or old_index "
-            "(the persisted ivf_index table) to skip the old-side scan")
     if "score" not in old_graph.columns:
         raise ValueError(
             "knn_graph_ivf_incremental: old_graph has no 'score' column "
@@ -1204,44 +1103,9 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
             "— pass the stored graph as knn_graph_ivf(with_score=True) "
             "produced it (untouched queries reuse stored ranks instead "
             "of re-entering the merge window)")
-    if old_index is not None:
-        # n_probe is REQUIRED, not best-effort: without it the
-        # mismatch guard below silently skips and a probe-width drift
-        # changes which cells' members are candidates (r8 review)
-        need = {id_col, vec_col, "centroid_id", "probes", "n_probe"}
-        missing_cols = need - set(old_index.columns)
-        if missing_cols:
-            raise ValueError(
-                f"knn_graph_ivf_incremental: old_index is missing "
-                f"column(s) {sorted(missing_cols)} — build it with "
-                f"ivf_index(corpus, centroids, n_probe)")
-        # UNgated by validate (r8 review: the docstring promises the
-        # width is "checked against the request outright", and
-        # validate=False exists for sub-k bootstrap corpora, not for
-        # waiving the index contract — a silent width mismatch changes
-        # the candidate cells with no error in either mode).
-        # ``index_width_checked`` short-circuits the uniformity
-        # aggregate ONLY (r11, r10 ADVICE): it is the caller's
-        # attestation that ``_index_n_probe`` already ran on this same
-        # store (e.g. a streaming sink validating once per stream
-        # instead of re-scanning the index every micro-batch) — the
-        # width-vs-request comparison below still runs on the attested
-        # value, so a wrong attestation fails loudly unless it happens
-        # to equal the request (in which case the candidate cells are
-        # the requested ones anyway).
-        built = (index_width_checked if index_width_checked is not None
-                 else _index_n_probe(old_index,
-                                     "knn_graph_ivf_incremental"))
-        np_eff = min(n_probe, len(centroids))
-        if built is not None and built != np_eff:
-            raise ValueError(
-                f"knn_graph_ivf_incremental: old_index was built "
-                f"with n_probe={built} but n_probe={n_probe} "
-                f"(effective {np_eff}) was requested — a mismatch "
-                f"changes which cells' members were candidates; "
-                f"rebuild the index or match the request")
-    old_ids = (old_index if old_index is not None
-               else old_corpus).select(id_col)
+    _check_index(old_index, n_probe, min(n_probe, len(centroids)),
+                 "knn_graph_ivf_incremental", id_col, vec_col,
+                 built=index_width_checked)
     if validate:
         # stored-k probe: a graph built with a smaller k than requested
         # would merge silently wrong (see PRECONDITIONS). A corpus so
@@ -1255,15 +1119,14 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
                 f"was built with a smaller k (or the old corpus has "
                 f"fewer than k candidates per query; pass validate=False "
                 f"only if you know it is the latter)")
-        # disjointness probe: one limit-capped semi-join job (against
-        # the index when present — old_corpus is then never scanned)
+        # disjointness probe: one limit-capped semi-join job
         overlap = (new_batch.select(id_col)
-                   .join(old_ids, id_col, "left_semi")
+                   .join(old_index.select(id_col), id_col, "left_semi")
                    .limit(1).collect())
         if overlap:
             raise ValueError(
                 f"knn_graph_ivf_incremental: id {overlap[0][0]} appears "
-                f"in BOTH old_corpus and new_batch — re-ingest must "
+                f"in BOTH old_index and new_batch — re-ingest must "
                 f"delete the old row (and its stored edges) upstream "
                 f"first; duplicate ids would occupy two rank slots per "
                 f"query")
@@ -1279,14 +1142,14 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
     # small by construction (<= touched * k rows of ids+scores) — one
     # eager localCheckpoint runs the candidate GEMMs exactly once
     # instead of re-executing the whole scoring subplan per consumer
-    fresh = _incremental_candidates(old_corpus, new_batch, centroids, k,
-                                    n_probe, id_col, vec_col,
-                                    old_index).localCheckpoint()
+    fresh = _incremental_candidates(old_index, new_batch, centroids, k,
+                                    n_probe, id_col,
+                                    vec_col).localCheckpoint()
     touched = fresh.select("query_id").distinct()
     stored = old_graph.select("query_id", "neighbor_id", "score")
     changed = (stored.join(F.broadcast(touched), "query_id", "left_semi")
                .unionByName(fresh))
-    ranked = _cross_cell_topk(changed, k, with_score, ordered=False)
+    ranked = _cross_cell_topk(changed, k, with_score)
     keep = ["query_id", "neighbor_id", "rank"] + (
         ["score"] if with_score else [])
     # rank <= k: a stored graph built with a LARGER k than requested is
@@ -1298,10 +1161,7 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
                  .join(F.broadcast(touched), "query_id", "left_anti")
                  .filter(F.col("rank") <= k)
                  .select(*keep))
-    out = ranked.unionByName(untouched)
-    # ordered=False: table-write consumers (the streaming sink) skip
-    # the presentational global sort, same contract as knn_graph_ivf
-    return out.orderBy("query_id", "rank") if ordered else out
+    return ranked.unionByName(untouched)
 
 
 # -- product quantization (PQ / ADC search) ------------------------------------
@@ -1420,14 +1280,13 @@ def pq_encode(corpus: DataFrame, codebooks: list,
 
 def pq_search(codes_df: DataFrame, queries: DataFrame, codebooks: list,
               k: int = 10, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              ordered: bool = True) -> DataFrame:
+              vec_col: str = "embedding") -> DataFrame:
     """Asymmetric-distance (ADC) top-k over the PQ-encoded corpus: per
     query a (m x ks) lookup table of exact query-subvector-to-centroid
     squared distances, then every encoded row's approximate distance is
     m table lookups — no float vector is ever read at query time.
-    Queries broadcast via the task closure (small-by-contract, the
-    :func:`cosine_topk_pandas` rule); each partition emits its local
+    Queries broadcast via the task closure (small by contract); each
+    partition emits its local
     top-k per query and one window merges. Returns (query_id,
     neighbor_id, rank)."""
 
@@ -1471,10 +1330,9 @@ def pq_search(codes_df: DataFrame, queries: DataFrame, codebooks: list,
     scored = codes_df.mapInPandas(
         scan, schema="query_id long, neighbor_id long, adc double")
     w = W.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return (scored.select("query_id", "neighbor_id",
+                          F.row_number().over(w).alias("rank"))
+            .filter(F.col("rank") <= k))
 
 
 def recall_report(exact_edges: DataFrame,
@@ -1500,8 +1358,7 @@ def recall_report(exact_edges: DataFrame,
 def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  kc: int = 8, n_probe: int = 2, m: int = 16, ks: int = 64,
                  iters: int = 3, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 vec_col: str = "embedding") -> DataFrame:
     """IVF-PQ (IVFADC, Jegou et al. 2011 §IV): the composition behind
     billion-scale ANN — a coarse k-means quantizer routes vectors to
     cells, each vector stores only the PQ codes of its RESIDUAL
@@ -1555,7 +1412,7 @@ def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
     dsub = B[0].shape[1]
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        # same empty contract as pq_search/cosine_topk_pandas — an empty
+        # same empty contract as pq_search — an empty
         # query batch returns an empty result, never an AxisError
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, rank int")
@@ -1611,10 +1468,9 @@ def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
                              schema="query_id long, neighbor_id long, "
                                     "adc double"))
     w = W.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return (scored.select("query_id", "neighbor_id",
+                          F.row_number().over(w).alias("rank"))
+            .filter(F.col("rank") <= k))
 
 
 def rrf_fuse(rankings: list[DataFrame], id_col: str = "doc_id",
@@ -1653,8 +1509,7 @@ def rrf_fuse(rankings: list[DataFrame], id_col: str = "doc_id",
 def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 10,
                pool: int = 50, lam: float = 0.7,
                id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               ordered: bool = True) -> DataFrame:
+               vec_col: str = "embedding") -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k (Carbonell &
     Goldstein 1998): greedily pick, per query, the candidate maximizing
     ``lam * sim(q, d) - (1 - lam) * max_{s in selected} sim(d, s)`` —
@@ -1721,10 +1576,9 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                  + 0.5).astype(np.int64),
         })
 
-    out = pooled.groupBy("query_id").applyInPandas(
+    return pooled.groupBy("query_id").applyInPandas(
         _mmr, schema="query_id long, neighbor_id long, rank int, "
                      "mmr_nano long")
-    return out.orderBy("query_id", "rank") if ordered else out
 
 
 def jl_project(corpus: DataFrame, out_dim: int = 8, seed: int = 7,

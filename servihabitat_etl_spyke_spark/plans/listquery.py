@@ -267,6 +267,23 @@ def group_options(df: DataFrame, key: str, search: str | None = None,
     return out.orderBy("option").limit(limit)
 
 
+def _filtered(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
+    """The request's filters, then its free-text search."""
+    df = apply_filters(df, params, model)
+    if params.search:
+        df = apply_search(df, model, params.search)
+    return df
+
+
+def _page(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
+    """Order, project, paginate. Order runs BEFORE projection so the
+    stable id tiebreak survives masking; the primary sort's visibility
+    check uses the post-projection columns."""
+    df = apply_order(df, model, params,
+                     visible=model.visible_columns(df.columns, params.view))
+    return paginate(apply_projection(df, model, params.view), params)
+
+
 def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
     """Full list-query plan; returns the page of rows (or group options)."""
     if params.group:
@@ -281,33 +298,19 @@ def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
             return (df.sparkSession.range(0)
                     .select(F.lit(None).cast("string").alias("option")))
         return group_options(df, params.group, params.group_search)
-    df = apply_filters(df, params, model)
-    if params.search:
-        df = apply_search(df, model, params.search)
-    # order BEFORE projection so the stable id tiebreak survives masking;
-    # the primary sort's visibility check uses the post-projection columns
-    df = apply_order(df, model, params,
-                     visible=model.visible_columns(df.columns, params.view))
-    df = apply_projection(df, model, params.view)
-    return paginate(df, params)
+    return _page(_filtered(df, model, params), model, params)
 
 
 def list_page(df: DataFrame, model: Model, params: ListParams) -> dict[str, Any]:
     """Pagination envelope ``{itemsPerPage, items, total, page, pages}``
     (O3; generateApi.ts:194-201). ``items`` stays a DataFrame — the caller
     decides when to materialize."""
-    filtered = apply_filters(df, params, model)
-    if params.search:
-        filtered = apply_search(filtered, model, params.search)
+    filtered = _filtered(df, model, params)
     total = filtered.count()
     n = max(1, int(params.items_per_page))
-    ordered = apply_order(
-        filtered, model, params,
-        visible=model.visible_columns(filtered.columns, params.view))
-    items = paginate(apply_projection(ordered, model, params.view), params)
     return {
         "itemsPerPage": n,
-        "items": items,
+        "items": _page(filtered, model, params),
         "total": total,
         "page": params.page,
         "pages": -(-total // n),

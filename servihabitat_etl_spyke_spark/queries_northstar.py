@@ -456,7 +456,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline. Integer-only output keeps the hash stable across engines."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.cosine_topk(emb, queries, k=10, ordered=False)
+    return SIM.cosine_topk(emb, queries, k=10)
 
 
 @query("ann_lsh_topk")  # approximate -> rows-only; recall asserted in pytest
@@ -466,8 +466,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.ann_lsh_topk(emb, queries, k=10, n_planes=4,
-                            ordered=False)
+    return SIM.ann_lsh_topk(emb, queries, k=10, n_planes=4)
 
 
 @query("ann_ivf_topk")  # approximate -> rows-only; recall asserted in pytest
@@ -476,8 +475,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 nearest partitions, exact re-rank inside."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.ann_ivf_topk(emb, queries, k=10, n_probe=2,
-                            ordered=False)
+    return SIM.ann_ivf_topk(emb, queries, k=10, n_probe=2)
 
 
 @query("ann_knn_graph", oracle="""
@@ -502,7 +500,7 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     each partition emits its own rows' top-k with no second shuffle. The
     oracle replays the full n^2 ranking in SQL."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_graph(emb, k=5, ordered=False)
+    return SIM.knn_graph(emb, k=5)
 
 
 def _ivf_index_for(emb: DataFrame, kc: int = 4, n_probe: int = 2,
@@ -512,10 +510,9 @@ def _ivf_index_for(emb: DataFrame, kc: int = 4, n_probe: int = 2,
     production partitioned-table read — the same convention
     `ann_knn_graph_incremental` uses for its stored graph): every IVF
     consumer below feeds this to `knn_graph_ivf(index=...)`, so the
-    assignment/probe UDF costs one corpus pass per index build instead
-    of two per consumer (r9, VERDICT r8 #4 — the remaining economy of
-    the r8 `ivf_index` work). Byte-equality of the index-fed graph
-    with the direct path is pytest-pinned
+    probe UDF costs one corpus pass per index build instead of passes
+    per consumer (r9). Byte-equality of the index-fed graph with the
+    `corpus=` call is pytest-pinned
     (test_knn_graph_ivf_from_index_byte_equal)."""
     cents = SIM.kmeans_fit(emb, k=kc, iters=iters)
     return SIM.ivf_index(emb, cents, n_probe=n_probe).localCheckpoint()
@@ -530,8 +527,7 @@ def ann_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate by construction — recall vs the exact graph asserted in
     tests."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_graph_ivf(None, k=5, n_probe=2, ordered=False,
-                             index=_ivf_index_for(emb))
+    return SIM.knn_graph_ivf(None, k=5, n_probe=2, index=_ivf_index_for(emb))
 
 
 @query("ann_knn_graph_incremental")  # exact-equality twin in pytest
@@ -562,20 +558,13 @@ def ann_knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run; localCheckpoint stands in for the table read (and keeps the
     # plan honest — the stored graph is consumed by three branches of
     # the merge, which must read a table, not re-execute the build).
-    # ordered=False: a table write needs no presentational global sort.
-    # r11: the stored graph is built FROM the persisted index (byte-
-    # equal to the direct path, test_knn_graph_ivf_from_index_byte_equal)
-    # — the index already carries assignment + probe lists, so the two
-    # full-corpus UDF passes (assign + probe) the direct path paid are
-    # gone; one corpus pass builds the index, everything downstream
-    # reads it.
+    # The stored graph is built FROM the persisted index: one corpus
+    # pass builds it, everything downstream reads it.
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
     old_graph = SIM.knn_graph_ivf(None, k=5, n_probe=2, with_score=True,
-                                  ordered=False,
                                   index=idx).localCheckpoint()
-    return SIM.knn_graph_ivf_incremental(None, old_graph, new, cents,
-                                         k=5, n_probe=2, old_index=idx,
-                                         ordered=False)
+    return SIM.knn_graph_ivf_incremental(idx, old_graph, new, cents,
+                                         k=5, n_probe=2)
 
 
 @query("ann_ivf_index_build")  # k-means codebook -> rows-only; parity
@@ -587,8 +576,9 @@ def ann_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa:
     `ann_knn_graph_incremental` skip the old-corpus rescan entirely
     (assignment is probes[0]: the stable-argsort head IS argmin, so
     one UDF serves both columns). Pure map over the scan — no shuffle,
-    no join (plan-gated). Bit-equality to assign_to_centroids +
-    _ivf_probe_side is pytest-pinned; the k-means codebook itself is
+    no join (plan-gated). Equality of the cells with
+    assign_to_centroids and of the probe lists with a numpy reference
+    is pytest-pinned; the k-means codebook itself is
     not SQL-expressible (COVERAGE.md waiver), so driver evidence is
     rows-only. The probe LIST is posexploded to scalar rows
     (vec_id, probe_seq, probed_centroid) — the driver canonicalizer
@@ -640,7 +630,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-by-contract); the scale path is `ann_hard_negatives_ivf` —
     identical consumer logic fed by the cluster-pruned graph."""
     emb = load_table(spark, sf_dir, "embeddings")
-    graph = SIM.knn_graph(emb, k=10, with_score=True, ordered=False)
+    graph = SIM.knn_graph(emb, k=10, with_score=True)
     return _hard_negatives_from(graph)
 
 
@@ -669,7 +659,7 @@ def ann_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the persisted `ivf_index` (r9) — one assignment pass, not two."""
     emb = load_table(spark, sf_dir, "embeddings")
     graph = SIM.knn_graph_ivf(None, k=10, n_probe=2, with_score=True,
-                              ordered=False, index=_ivf_index_for(emb))
+                              index=_ivf_index_for(emb))
     return _hard_negatives_from(graph)
 
 
@@ -702,7 +692,7 @@ def graph_knn_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-graph oracle baseline; the scale path is
     `graph_knn_degrees_ivf` (same histogram over the pruned graph)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _degree_histogram(SIM.knn_graph(emb, k=5, ordered=False))
+    return _degree_histogram(SIM.knn_graph(emb, k=5))
 
 
 def _degree_histogram(edges: DataFrame) -> DataFrame:
@@ -727,7 +717,7 @@ def graph_knn_degrees_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in pytest). Fed by the persisted `ivf_index` (r9)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _degree_histogram(
-        SIM.knn_graph_ivf(None, k=5, n_probe=2, ordered=False,
+        SIM.knn_graph_ivf(None, k=5, n_probe=2,
                           index=_ivf_index_for(emb)))
 
 
@@ -762,7 +752,7 @@ def graph_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-graph oracle baseline; the scale path is
     `graph_pagerank_knn_ivf` (same PageRank over the pruned graph)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _pagerank_over(SIM.knn_graph(emb, k=5, ordered=False))
+    return _pagerank_over(SIM.knn_graph(emb, k=5))
 
 
 def _pagerank_over(edges: DataFrame) -> DataFrame:
@@ -797,7 +787,7 @@ def graph_pagerank_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest. Fed by the persisted `ivf_index` (r9)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _pagerank_over(
-        SIM.knn_graph_ivf(None, k=5, n_probe=2, ordered=False,
+        SIM.knn_graph_ivf(None, k=5, n_probe=2,
                           index=_ivf_index_for(emb)))
 
 
@@ -809,8 +799,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     cents = SIM.kmeans_fit(emb, k=4, iters=3)
-    return SIM.ann_ivf_topk_trained(emb, queries, cents, k=10, n_probe=2,
-                                    ordered=False)
+    return SIM.ann_ivf_topk_trained(emb, queries, cents, k=10, n_probe=2)
 
 
 # ---------------------------------------------------------------------------
@@ -967,7 +956,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = (MM.extract_features(blobs, dim=16)
              .withColumnRenamed("doc_id", "vec_id"))
     queries = feats.filter(F.col("vec_id") < 3)
-    return SIM.cosine_topk(feats, queries, k=3, ordered=False)
+    return SIM.cosine_topk(feats, queries, k=3)
 
 
 @query("multimodal_audio_meta", oracle="""
@@ -1333,7 +1322,7 @@ def ann_jl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = (SIM.jl_project(emb, out_dim=12)
             .withColumnRenamed("projected", "embedding"))
     qp = proj.filter(F.col("vec_id") < 5)
-    pool = SIM.cosine_topk(proj, qp, k=50, ordered=False)
+    pool = SIM.cosine_topk(proj, qp, k=50)
     cand = pool.select("query_id", "neighbor_id")
     nv = emb.select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("nv"))
@@ -1360,8 +1349,7 @@ def retrieval_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate) and lam=1 equivalence with the relevance-only ranking."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.mmr_rerank(emb, queries, k=10, pool=50, lam=0.7,
-                          ordered=False)
+    return SIM.mmr_rerank(emb, queries, k=10, pool=50, lam=0.7)
 
 
 @query("text_normalize", oracle="""
@@ -2059,7 +2047,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = SIM.pq_train(emb, m=16, ks=64, iters=4)
     codes = SIM.pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.pq_search(codes, queries, books, k=10, ordered=False)
+    return SIM.pq_search(codes, queries, books, k=10)
 
 
 @query("text_winnowing", oracle="""
@@ -2207,8 +2195,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge tables; pytest pins the report against an independently
     computed recall."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = SIM.knn_graph(emb, k=5, ordered=False)
-    approx = SIM.knn_graph_ivf(None, k=5, n_probe=2, ordered=False,
+    exact = SIM.knn_graph(emb, k=5)
+    approx = SIM.knn_graph_ivf(None, k=5, n_probe=2,
                                index=_ivf_index_for(emb))
     return SIM.recall_report(exact, approx)
 
@@ -2273,7 +2261,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.ivfpq_search(emb, queries, k=10, kc=4, n_probe=2,
-                            m=16, ks=64, iters=3, ordered=False)
+                            m=16, ks=64, iters=3)
 
 
 # ---------------------------------------------------------------------------
@@ -2397,8 +2385,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = TX.bm25_topk(docs, ["table", "hash", "join"], k=30)
     w = W.orderBy(F.col("score_nano").desc(), "doc_id")
     bm_r = bm.select("doc_id", F.row_number().over(w).alias("rank"))
-    dense = SIM.cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=30,
-                            ordered=False)
+    dense = SIM.cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=30)
     dense_r = dense.select(F.col("neighbor_id").alias("doc_id"), "rank")
     return SIM.rrf_fuse([bm_r, dense_r], id_col="doc_id", k=10)
 
@@ -2553,7 +2540,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.join(F.broadcast(allowed),
                       emb.vec_id == allowed.doc_id, "left_semi")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.cosine_topk(corpus, queries, k=10, ordered=False)
+    return SIM.cosine_topk(corpus, queries, k=10)
 
 
 @query("text_cms_estimate", oracle="""
@@ -2897,8 +2884,7 @@ def ann_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer, `knn_graph_ivf` edges). Exact-integer output, hash-checked
     end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _knn_classify_over(SIM.knn_graph(emb, k=10, ordered=False),
-                              emb)
+    return _knn_classify_over(SIM.knn_graph(emb, k=10), emb)
 
 
 def _knn_classify_over(edges: DataFrame, emb: DataFrame) -> DataFrame:
@@ -2935,7 +2921,7 @@ def ann_knn_classify_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact composition. Fed by the persisted `ivf_index` (r9)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _knn_classify_over(
-        SIM.knn_graph_ivf(None, k=10, n_probe=2, ordered=False,
+        SIM.knn_graph_ivf(None, k=10, n_probe=2,
                           index=_ivf_index_for(emb)), emb)
 
 

@@ -36,6 +36,19 @@ from ..operators.etl import recover_snapshot as _recover_snapshot
 from ..operators.etl import upsert_into_path
 
 
+def _start(stream: DataFrame, apply_batch, checkpoint: str,
+           available_now: bool) -> StreamingQuery:
+    """Start ``stream`` with ``apply_batch`` as its foreachBatch sink,
+    checkpointed at ``checkpoint``; ``available_now`` drains what is
+    there and stops."""
+    writer = (stream.writeStream
+              .foreachBatch(apply_batch)
+              .option("checkpointLocation", checkpoint))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_keyed_upsert(stream: DataFrame, path: str, key: str,
                         checkpoint: str, *, order_col: str | None = None,
                         available_now: bool = True) -> StreamingQuery:
@@ -91,12 +104,7 @@ def stream_keyed_upsert(stream: DataFrame, path: str, key: str,
             batch = batch.withColumn("_ingest_order", order)
         upsert_into_path(batch.sparkSession, batch, path, key=key)
 
-    writer = (stream.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, apply_batch, checkpoint, available_now)
 
 
 def stream_dedup(stream: DataFrame, keys: list[str], *,
@@ -149,12 +157,7 @@ def _merge_sink(stream: DataFrame, path: str, checkpoint: str,
         _overwrite_via_tmp(part, path,
                            commit={"batches": {**batches, qid: bid}})
 
-    writer = (stream.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, apply_batch, checkpoint, available_now)
 
 
 def stream_rollup_upsert(stream: DataFrame, path: str, checkpoint: str, *,
@@ -453,15 +456,9 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
             # the incremental operator's probe-width guard, ungated
             # there too: a different n_probe would change which cells'
             # members are candidates AND append mixed-width rows
-            built = _pinned_index_width(stored)
-            np_eff = min(n_probe, len(centroids))
-            if built is not None and built != np_eff:
-                raise ValueError(
-                    f"stream_knn_graph_upsert: stored index was "
-                    f"built with n_probe={built} but "
-                    f"n_probe={n_probe} (effective {np_eff}) was "
-                    f"requested — rebuild the index or match the "
-                    f"request")
+            _sim._check_index(stored, n_probe, min(n_probe, len(centroids)),
+                              "stream_knn_graph_upsert", id_col, vec_col,
+                              built=_pinned_index_width(stored))
             # pin the corpus before the append, so the plan cannot see
             # the batch's own rows twice; only unindexed rows append
             corpus = (stored.select(F.col(id_col), F.col(vec_col))
@@ -474,13 +471,13 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
             graph = _sim.knn_graph_ivf(corpus, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
-                                       with_score=True, ordered=False)
+                                       with_score=True)
         elif not has_graph:
             _write_index(rows, "overwrite")
             graph = _sim.knn_graph_ivf(rows, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
-                                       with_score=True, ordered=False)
+                                       with_score=True)
         else:
             if not os.path.exists(index_path):
                 raise RuntimeError(
@@ -510,10 +507,9 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
             # run before the append below, or the batch would collide
             # with its own index rows
             graph = _sim.knn_graph_ivf_incremental(
-                None, old_graph, rows, centroids, k=k,
+                old_index, old_graph, rows, centroids, k=k,
                 n_probe=n_probe, id_col=id_col, vec_col=vec_col,
                 with_score=True, validate=validate,
-                old_index=old_index, ordered=False,
                 index_width_checked=index_width)
             _write_index(rows, "append")
         _overwrite_via_tmp(graph, graph_path, commit={
@@ -524,9 +520,4 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
         # against the request) — pin it so no later batch re-scans
         pinned["width"] = min(n_probe, len(centroids))
 
-    writer = (stream.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, apply_batch, checkpoint, available_now)

@@ -69,3 +69,42 @@ def test_driver_contract_reexports_registry_in_order():
     assert list(o) == list(ORACLES)
     assert all(q[n] is QUERIES[n] for n in QUERIES)
     assert o == ORACLES
+
+
+def test_no_orphaned_private_helpers():
+    """Every module-level ``def _name`` in the package is referenced
+    somewhere in the package outside its own definition (a call, an
+    attribute read, an import): a helper whose last caller was deleted
+    fails here instead of lingering as dead code."""
+    import ast
+
+    pkg = os.path.join(_ROOT, "servihabitat_etl_spyke_spark")
+    defs, refs = [], []
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in tree.body:
+                if (isinstance(node, (ast.FunctionDef,
+                                      ast.AsyncFunctionDef))
+                        and node.name.startswith("_")
+                        and not node.name.endswith("__")):
+                    defs.append((node.name, path, node.lineno,
+                                 node.end_lineno))
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name):
+                    refs.append((node.id, path, node.lineno))
+                elif isinstance(node, ast.Attribute):
+                    refs.append((node.attr, path, node.lineno))
+                elif isinstance(node, ast.alias):
+                    refs.append((node.name, path, node.lineno))
+    orphans = [
+        f"{os.path.relpath(path, _ROOT)}:{first} {fn}"
+        for fn, path, first, last in defs
+        if not any(name == fn and not (where == path
+                                       and first <= line <= last)
+                   for name, where, line in refs)]
+    assert not orphans, f"private helpers referenced nowhere: {orphans}"

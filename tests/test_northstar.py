@@ -26,14 +26,6 @@ def _topk_sets(df):
     return out
 
 
-def test_pandas_topk_matches_exact(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = SIM.cosine_topk(emb, queries, k=10)
-    fast = SIM.cosine_topk_pandas(emb, queries, k=10)
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, fast.collect()))
-
-
 def test_lsh_ann_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -92,14 +84,12 @@ def test_knn_graph_ivf_recall(spark, sf_dir):
 
 
 def test_knn_graph_ivf_from_index_byte_equal(spark, sf_dir):
-    """r9 (VERDICT r8 #4): knn_graph_ivf fed the persisted ivf_index
-    table must be BYTE-IDENTICAL to the direct corpus path with the
-    same codebook — the index stores exactly the assignment (probes[0]
-    == argmin by stable argsort) and probe list the direct path
-    recomputes, so the cell equi-join sees the same candidates. This is
+    """r9 (VERDICT r8 #4): knn_graph_ivf fed a persisted ivf_index
+    table (``index=``) must be BYTE-IDENTICAL to the ``corpus=`` call
+    with the same codebook, which builds the same index itself. This is
     the equality that lets every IVF consumer (classify / degrees /
-    pagerank / hard-negatives) read the index instead of re-running
-    the assignment UDF per consumer."""
+    pagerank / hard-negatives) read one stored index instead of
+    building its own."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 400)
     cents = SIM.kmeans_fit(emb, k=4, iters=3)
@@ -157,7 +147,9 @@ def test_knn_graph_ivf_incremental_equals_full_rebuild(spark, sf_dir):
     (query_id, neighbor_id, rank) to a full rebuild over the union —
     top-k selection commutes with union under the deterministic
     (score desc, id asc) total order, and a vector's probe set never
-    changes once the codebook is pinned."""
+    changes once the codebook is pinned. Stored graph and index are
+    lazy plans here (no checkpoint), so the index's UDF sits inside
+    the operator's plan."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 400)
     old = emb.filter(F.col("vec_id") % 5 != 0)
@@ -166,7 +158,8 @@ def test_knn_graph_ivf_incremental_equals_full_rebuild(spark, sf_dir):
 
     old_graph = SIM.knn_graph_ivf(old, k=5, n_probe=2, centroids=cents,
                                   with_score=True)
-    inc = SIM.knn_graph_ivf_incremental(old, old_graph, new, cents,
+    idx = SIM.ivf_index(old, cents, n_probe=2)
+    inc = SIM.knn_graph_ivf_incremental(idx, old_graph, new, cents,
                                         k=5, n_probe=2)
     full = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents)
     got = sorted(map(tuple, inc.collect()))
@@ -176,10 +169,10 @@ def test_knn_graph_ivf_incremental_equals_full_rebuild(spark, sf_dir):
 
 def test_knn_graph_ivf_incremental_with_index_equals_full_rebuild(
         spark, sf_dir):
-    """r8 (VERDICT r7 #2a): with the persisted ivf_index table the
-    operator must produce the SAME byte-identical rebuild output while
-    never touching the old corpus at all — witnessed by passing
-    old_corpus=None, which would crash on any residual scan."""
+    """r8 (VERDICT r7 #2a): with the persisted ivf_index table (here
+    materialized, as a stored table is) the operator must produce the
+    SAME byte-identical rebuild output, and its with_score output the
+    same ranking."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 400)
     old = emb.filter(F.col("vec_id") % 5 != 0)
@@ -188,8 +181,8 @@ def test_knn_graph_ivf_incremental_with_index_equals_full_rebuild(
     old_graph = SIM.knn_graph_ivf(old, k=5, n_probe=2, centroids=cents,
                                   with_score=True).localCheckpoint()
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
-    inc = SIM.knn_graph_ivf_incremental(None, old_graph, new, cents,
-                                        k=5, n_probe=2, old_index=idx)
+    inc = SIM.knn_graph_ivf_incremental(idx, old_graph, new, cents,
+                                        k=5, n_probe=2)
     full = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents)
     got = sorted(map(tuple, inc.collect()))
     want = sorted(map(tuple, full.collect()))
@@ -197,8 +190,7 @@ def test_knn_graph_ivf_incremental_with_index_equals_full_rebuild(
     # with_score passthrough: untouched stored rows carry their stored
     # scores, touched rows the re-ranked ones — same ranking either way
     scored = SIM.knn_graph_ivf_incremental(
-        None, old_graph, new, cents, k=5, n_probe=2, old_index=idx,
-        with_score=True)
+        idx, old_graph, new, cents, k=5, n_probe=2, with_score=True)
     assert sorted((r["query_id"], r["neighbor_id"], r["rank"])
                   for r in scored.collect()) == want
 
@@ -218,16 +210,15 @@ def test_knn_graph_ivf_incremental_two_day_cycle(spark, sf_dir):
     day2 = emb.filter(F.col("vec_id") % 4 == 3)
     cents = SIM.kmeans_fit(base, k=4, iters=3)
     g0 = SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                           with_score=True,
-                           ordered=False).localCheckpoint()
+                           with_score=True).localCheckpoint()
     idx0 = SIM.ivf_index(base, cents, n_probe=2).localCheckpoint()
     g1 = SIM.knn_graph_ivf_incremental(
-        None, g0, day1, cents, k=5, n_probe=2, with_score=True,
-        old_index=idx0).localCheckpoint()
+        idx0, g0, day1, cents, k=5, n_probe=2,
+        with_score=True).localCheckpoint()
     idx1 = (idx0.unionByName(SIM.ivf_index(day1, cents, n_probe=2))
             .localCheckpoint())
     g2 = SIM.knn_graph_ivf_incremental(
-        None, g1, day2, cents, k=5, n_probe=2, old_index=idx1)
+        idx1, g1, day2, cents, k=5, n_probe=2)
     want = sorted(map(tuple, SIM.knn_graph_ivf(
         emb, k=5, n_probe=2, centroids=cents).collect()))
     assert sorted(map(tuple, g2.collect())) == want and want
@@ -250,12 +241,12 @@ def test_ivf_index_partitioned_parquet_round_trip(spark, sf_dir,
     SIM.ivf_index(old, cents, n_probe=2).write.partitionBy(
         "centroid_id").parquet(str(tmp_path / "idx"))
     SIM.knn_graph_ivf(old, k=5, n_probe=2, centroids=cents,
-                      with_score=True, ordered=False).write.parquet(
+                      with_score=True).write.parquet(
         str(tmp_path / "graph"))
     idx = spark.read.parquet(str(tmp_path / "idx"))
     graph = spark.read.parquet(str(tmp_path / "graph"))
-    inc = SIM.knn_graph_ivf_incremental(None, graph, new, cents,
-                                        k=5, n_probe=2, old_index=idx)
+    inc = SIM.knn_graph_ivf_incremental(idx, graph, new, cents,
+                                        k=5, n_probe=2)
     want = sorted(map(tuple, SIM.knn_graph_ivf(
         emb, k=5, n_probe=2, centroids=cents).collect()))
     assert sorted(map(tuple, inc.collect())) == want and want
@@ -269,23 +260,28 @@ def test_ivf_index_partitioned_parquet_round_trip(spark, sf_dir,
 
 
 def test_ivf_index_matches_assign_and_probe(spark, sf_dir):
-    """The persisted index table must be bit-equal to what the operator
-    would recompute: centroid_id == nearest-centroid assignment (the
-    stable-argsort head IS argmin), exploded probes == the probe side."""
+    """The persisted index table must match the assignment and the
+    probe ranking it stands for: centroid_id == nearest-centroid
+    assignment (the stable-argsort head IS argmin), and each probe
+    list == the n_probe nearest centroids of a numpy reference that
+    ranks by the UDF's ||c||^2 - 2x.c, nearest first, ties to the
+    lower centroid id."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 200)
     cents = SIM.kmeans_fit(emb, k=4, iters=3)
     idx = SIM.ivf_index(emb, cents, n_probe=2)
+    rows = idx.collect()
     assigned = {r["vec_id"]: r["centroid_id"] for r in
                 SIM.assign_to_centroids(emb, cents).collect()}
-    got_assign = {r["vec_id"]: r["centroid_id"] for r in idx.collect()}
-    assert got_assign == assigned
-    probe_rows = sorted((r["query_id"], r["centroid_id"]) for r in
-                        SIM._ivf_probe_side(emb, cents, 2, "vec_id",
-                                            "embedding").collect())
-    got_probes = sorted(
-        (r["vec_id"], c) for r in idx.collect() for c in r["probes"])
-    assert got_probes == probe_rows
+    assert {r["vec_id"]: r["centroid_id"] for r in rows} == assigned
+    C = np.asarray(cents)
+    want = {}
+    for r in emb.select("vec_id", "embedding").collect():
+        d2 = (C * C).sum(axis=1) - 2.0 * (C @ np.asarray(r["embedding"]))
+        # lexsort's last key is primary: distance, then centroid id
+        want[r["vec_id"]] = np.lexsort(
+            (np.arange(len(C)), d2))[:2].tolist()
+    assert {r["vec_id"]: r["probes"] for r in rows} == want
     # n_probe column pins the build parameter (consumer validation)
     assert idx.select("n_probe").distinct().collect()[0][0] == 2
 
@@ -296,8 +292,7 @@ def test_knn_graph_ivf_incremental_larger_stored_k_is_exact(
     requested used to leak ranks k+1..k_stored through the untouched
     passthrough while touched queries re-windowed to k (reproduced:
     max_rank 8 vs the rebuild's 5). Both branches now truncate — a
-    k_stored=8 graph must merge byte-identically to a k=5 rebuild,
-    through both the fallback and the index path."""
+    k_stored=8 graph must merge byte-identically to a k=5 rebuild."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 400)
     old = emb.filter(F.col("vec_id") % 5 != 0)
@@ -308,13 +303,9 @@ def test_knn_graph_ivf_incremental_larger_stored_k_is_exact(
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
     want = sorted(map(tuple, SIM.knn_graph_ivf(
         emb, k=5, n_probe=2, centroids=cents).collect()))
-    inc_fb = SIM.knn_graph_ivf_incremental(old, big, new, cents,
-                                           k=5, n_probe=2)
-    inc_idx = SIM.knn_graph_ivf_incremental(None, big, new, cents,
-                                            k=5, n_probe=2,
-                                            old_index=idx)
-    assert sorted(map(tuple, inc_fb.collect())) == want
-    assert sorted(map(tuple, inc_idx.collect())) == want and want
+    inc = SIM.knn_graph_ivf_incremental(idx, big, new, cents,
+                                        k=5, n_probe=2)
+    assert sorted(map(tuple, inc.collect())) == want and want
 
 
 def test_knn_graph_ivf_incremental_requires_rank_column(spark, sf_dir):
@@ -328,15 +319,16 @@ def test_knn_graph_ivf_incremental_requires_rank_column(spark, sf_dir):
     graph = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents,
                               with_score=True)
     rankless = graph.select("query_id", "neighbor_id", "score")
+    idx = SIM.ivf_index(emb, cents, n_probe=2)
     with pytest.raises(ValueError, match="no 'rank' column"):
-        SIM.knn_graph_ivf_incremental(emb, rankless, emb, cents,
+        SIM.knn_graph_ivf_incremental(idx, rankless, emb, cents,
                                       validate=False)
 
 
 def test_knn_graph_ivf_incremental_index_contract_errors(spark, sf_dir):
     """The index path validates its inputs loudly: an n_probe mismatch
-    (which silently changes the candidate cells), a structurally wrong
-    index table, and a call with NEITHER old side present."""
+    (which silently changes the candidate cells) and a structurally
+    wrong index table."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 200)
     old = emb.filter(F.col("vec_id") % 5 != 0)
@@ -346,21 +338,18 @@ def test_knn_graph_ivf_incremental_index_contract_errors(spark, sf_dir):
                               with_score=True)
     idx3 = SIM.ivf_index(old, cents, n_probe=3)
     with pytest.raises(ValueError, match="built\\s+with n_probe=3 but"):
-        SIM.knn_graph_ivf_incremental(None, graph, new, cents, k=5,
-                                      n_probe=2, old_index=idx3)
+        SIM.knn_graph_ivf_incremental(idx3, graph, new, cents, k=5,
+                                      n_probe=2)
     with pytest.raises(ValueError, match="missing\\s+column"):
-        SIM.knn_graph_ivf_incremental(None, graph, new, cents, k=5,
-                                      n_probe=2, old_index=old)
+        SIM.knn_graph_ivf_incremental(old, graph, new, cents, k=5,
+                                      n_probe=2)
     # r8 review: n_probe is REQUIRED on the index — a hand-selected
     # index without it would silently skip the mismatch guard and a
     # probe-width drift changes the candidate cells with no error
     stripped = idx3.drop("n_probe")
     with pytest.raises(ValueError, match=r"missing\s+column.*n_probe"):
-        SIM.knn_graph_ivf_incremental(None, graph, new, cents, k=5,
-                                      n_probe=3, old_index=stripped)
-    with pytest.raises(ValueError, match="old_corpus, or old_index"):
-        SIM.knn_graph_ivf_incremental(None, graph, new, cents, k=5,
-                                      n_probe=2)
+        SIM.knn_graph_ivf_incremental(stripped, graph, new, cents, k=5,
+                                      n_probe=3)
 
 
 def _near_tie_corpus(spark, eps: float):
@@ -393,12 +382,9 @@ def _inc_vs_rebuild(spark, emb):
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
     want = sorted(map(tuple, SIM.knn_graph_ivf(
         emb, k=5, n_probe=2, centroids=cents).collect()))
-    inc_fb = sorted(map(tuple, SIM.knn_graph_ivf_incremental(
-        old, graph, new, cents, k=5, n_probe=2).collect()))
-    inc_idx = sorted(map(tuple, SIM.knn_graph_ivf_incremental(
-        None, graph, new, cents, k=5, n_probe=2,
-        old_index=idx).collect()))
-    return want, inc_fb, inc_idx
+    inc = sorted(map(tuple, SIM.knn_graph_ivf_incremental(
+        idx, graph, new, cents, k=5, n_probe=2).collect()))
+    return want, inc
 
 
 def test_knn_graph_ivf_incremental_near_tie_rank_equality(spark):
@@ -406,10 +392,10 @@ def test_knn_graph_ivf_incremental_near_tie_rank_equality(spark):
     witnessed on THIS build. At realistic near-tie gaps (1e-9 relative
     perturbations — adjacent cosines differ by far more than a few
     ulps) the incremental merge must be BYTE-identical to the full
-    rebuild via both the fallback and the index path."""
+    rebuild."""
     emb, _ = _near_tie_corpus(spark, 1e-9)
-    want, inc_fb, inc_idx = _inc_vs_rebuild(spark, emb)
-    assert inc_fb == want and inc_idx == want and want
+    want, inc = _inc_vs_rebuild(spark, emb)
+    assert inc == want and want
 
 
 def test_knn_graph_ivf_incremental_subulp_ties_swap_only(spark):
@@ -422,7 +408,7 @@ def test_knn_graph_ivf_incremental_subulp_ties_swap_only(spark):
     1e-12, so no semantically wrong neighbor ever appears."""
     import numpy as np
     emb, vecs = _near_tie_corpus(spark, 1e-15)
-    want, inc_fb, inc_idx = _inc_vs_rebuild(spark, emb)
+    want, inc = _inc_vs_rebuild(spark, emb)
 
     def cos(q, n):
         a, b = vecs[q], vecs[n]
@@ -434,16 +420,14 @@ def test_knn_graph_ivf_incremental_subulp_ties_swap_only(spark):
             m.setdefault(q, []).append(n)
         return m
 
-    want_m = by_query(want)
-    for got in (inc_fb, inc_idx):
-        got_m = by_query(got)
-        assert set(got_m) == set(want_m)
-        for q in want_m:
-            if got_m[q] == want_m[q]:
-                continue
-            gs = sorted(cos(q, n) for n in got_m[q])
-            ws = sorted(cos(q, n) for n in want_m[q])
-            assert np.allclose(gs, ws, rtol=0, atol=1e-12), (q, gs, ws)
+    want_m, got_m = by_query(want), by_query(inc)
+    assert set(got_m) == set(want_m)
+    for q in want_m:
+        if got_m[q] == want_m[q]:
+            continue
+        gs = sorted(cos(q, n) for n in got_m[q])
+        ws = sorted(cos(q, n) for n in want_m[q])
+        assert np.allclose(gs, ws, rtol=0, atol=1e-12), (q, gs, ws)
 
 
 def test_knn_graph_ivf_incremental_empty_batch_is_identity(spark, sf_dir):
@@ -455,19 +439,14 @@ def test_knn_graph_ivf_incremental_empty_batch_is_identity(spark, sf_dir):
     old_graph = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents,
                                   with_score=True)
     empty = emb.filter(F.lit(False))
-    inc = SIM.knn_graph_ivf_incremental(emb, old_graph, empty, cents,
+    # the whole stored graph flows through the untouched anti-join branch
+    idx = SIM.ivf_index(emb, cents, n_probe=2)
+    inc = SIM.knn_graph_ivf_incremental(idx, old_graph, empty, cents,
                                         k=5, n_probe=2)
     got = sorted(map(tuple, inc.collect()))
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                   for r in old_graph.collect())
     assert got == want and want
-    # r8: same identity through the persisted-index path — the whole
-    # stored graph flows through the untouched anti-join branch
-    idx = SIM.ivf_index(emb, cents, n_probe=2)
-    inc_idx = SIM.knn_graph_ivf_incremental(None, old_graph, empty,
-                                            cents, k=5, n_probe=2,
-                                            old_index=idx)
-    assert sorted(map(tuple, inc_idx.collect())) == want
 
 
 def test_knn_graph_ivf_incremental_requires_scores(spark, sf_dir):
@@ -477,8 +456,9 @@ def test_knn_graph_ivf_incremental_requires_scores(spark, sf_dir):
         F.col("vec_id") < 100)
     cents = SIM.kmeans_fit(emb, k=4, iters=3)
     rank_only = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents)
+    idx = SIM.ivf_index(emb, cents, n_probe=2)
     with pytest.raises(ValueError, match="with_score=True"):
-        SIM.knn_graph_ivf_incremental(emb, rank_only, emb, cents)
+        SIM.knn_graph_ivf_incremental(idx, rank_only, emb, cents)
 
 
 def test_knn_graph_ivf_incremental_rejects_stored_k_too_small(
@@ -493,8 +473,9 @@ def test_knn_graph_ivf_incremental_rejects_stored_k_too_small(
     cents = SIM.kmeans_fit(old, k=4, iters=3)
     small = SIM.knn_graph_ivf(old, k=3, n_probe=2, centroids=cents,
                               with_score=True)
+    idx = SIM.ivf_index(old, cents, n_probe=2)
     with pytest.raises(ValueError, match="max rank is 3 but k=5"):
-        SIM.knn_graph_ivf_incremental(old, small, new, cents,
+        SIM.knn_graph_ivf_incremental(idx, small, new, cents,
                                       k=5, n_probe=2)
 
 
@@ -508,8 +489,9 @@ def test_knn_graph_ivf_incremental_rejects_id_overlap(spark, sf_dir):
     graph = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents,
                               with_score=True)
     overlapping = emb.filter(F.col("vec_id") < 10)   # already stored
-    with pytest.raises(ValueError, match="BOTH old_corpus and new_batch"):
-        SIM.knn_graph_ivf_incremental(emb, graph, overlapping, cents,
+    idx = SIM.ivf_index(emb, cents, n_probe=2)
+    with pytest.raises(ValueError, match="BOTH old_index and new_batch"):
+        SIM.knn_graph_ivf_incremental(idx, graph, overlapping, cents,
                                       k=5, n_probe=2)
 
 
@@ -1427,10 +1409,12 @@ def test_mmr_defers_planted_near_copy(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 0")
     rel = [r["neighbor_id"] for r in
-           cosine_topk(emb, q, k=3).collect()]
+           sorted(cosine_topk(emb, q, k=3).collect(),
+                  key=lambda r: r["rank"])]
     assert rel == [1, 2, 3]
     mmr = [r["neighbor_id"] for r in
-           mmr_rerank(emb, q, k=3, pool=3, lam=0.5).collect()]
+           sorted(mmr_rerank(emb, q, k=3, pool=3, lam=0.5).collect(),
+                  key=lambda r: r["rank"])]
     assert mmr == [1, 3, 2]
 
 
@@ -1606,18 +1590,14 @@ def test_distinct_ngrams_short_docs_no_crash_and_zero_grams(spark):
 def test_cosine_zero_norm_vector_never_ranks_first(spark):
     """An all-zero embedding must score 0.0 (not NaN — which Spark sorts
     ABOVE every real score under desc) and so can never displace a real
-    neighbor; the pandas scorer must agree with the column path."""
+    neighbor."""
     rows = [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0]),
             (4, [0.5, 0.5])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 1")
-    col_path = [(r["neighbor_id"], r["rank"]) for r in
-                SIM.cosine_topk(emb, q, k=3).collect()]
-    pd_path = [(r["neighbor_id"], r["rank"]) for r in
-               SIM.cosine_topk_pandas(emb, q, k=3).collect()]
-    assert col_path == pd_path
-    assert col_path[0][0] == 2          # the real nearest, not the zero vec
-    assert col_path[-1][0] == 3         # zero vector ranks last (score 0)
+    ranked = sorted((r["rank"], r["neighbor_id"]) for r in
+                    SIM.cosine_topk(emb, q, k=3).collect())
+    assert ranked == [(1, 2), (2, 4), (3, 3)]   # zero vector last
 
 
 def test_topk_idx_resolves_boundary_ties_by_id():
@@ -1640,7 +1620,7 @@ def test_ann_empty_queries_and_corpus_raise_or_return_empty(spark):
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
     some = spark.createDataFrame([(1, [1.0, 0.0])],
                                  "vec_id long, embedding array<double>")
-    assert SIM.cosine_topk_pandas(some, emb, k=3).count() == 0
+    assert SIM.cosine_topk(some, emb, k=3).count() == 0
     assert SIM.knn_graph(emb, k=2).count() == 0
     with pytest.raises(ValueError, match="empty input"):
         SIM.ann_lsh_topk(emb, some, k=2)
@@ -2045,7 +2025,6 @@ def test_ann_kernels_reject_null_and_ragged_embeddings(spark):
     rows = [(i, [float(i + 1), 2.0, 1.0, 0.5]) for i in range(20)]
     rows[7] = (7, None)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = df.filter(F.col("vec_id") < 3)
 
     with pytest.raises(ValueError, match=r"NULL embedding.*\[7\]"):
         SIM.knn_graph(df, k=3).count()
@@ -2053,8 +2032,6 @@ def test_ann_kernels_reject_null_and_ragged_embeddings(spark):
         SIM.knn_graph_ivf(df, k=3, kc=2, n_probe=1, iters=2).count()
     with pytest.raises(Exception, match="NULL embedding"):
         SIM.kmeans_fit(df, k=2, iters=2)
-    with pytest.raises(Exception, match=r"NULL embedding.*\[7\]"):
-        SIM.cosine_topk_pandas(df, qs, k=3).count()
     with pytest.raises(Exception, match="NULL embedding"):
         SIM.assign_to_centroids(
             df, [[1.0, 2.0, 1.0, 0.5], [3.0, 2.0, 1.0, 0.5]]

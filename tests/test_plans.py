@@ -571,12 +571,11 @@ def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     old-anchor probe stream on the affected-cell list AND the
     membership stream on the cells new queries probe (without the
     latter, every daily run hash-exchanges the entire old corpus even
-    for a tiny batch). With the persisted ivf_index the plan must also
-    contain FEWER pandas-UDF evals than the recompute fallback — the
-    old-side assignment/probe UDF pass (1 assign + 1 probe, each
-    appearing twice through subplan duplication = 4 ArrowEvalPython
-    nodes) is gone; the prunes land directly on the index's
-    centroid_id column. Whole plan free of cartesian/nested-loop joins.
+    for a tiny batch). The old side reads the persisted ivf_index, so
+    the only pandas-UDF evals are the new batch's index build: 11
+    ArrowEvalPython nodes, all of them over the new batch (its one
+    probe UDF, repeated through subplan duplication). Whole plan free
+    of cartesian/nested-loop joins.
     """
     from pyspark.sql import functions as F
 
@@ -588,23 +587,17 @@ def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     new = emb.filter(F.col("vec_id") % 5 == 0)
     cents = SIM.kmeans_fit(old, k=4, iters=3)
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
-        .fromString("simple")
-    plans = {}
-    for name, (corpus, index) in (("idx", (None, idx)),
-                                  ("fb", (old, None))):
-        df = SIM._incremental_candidates(corpus, new, cents, 5, 2,
-                                         "vec_id", "embedding", index)
-        plan = df._jdf.queryExecution().explainString(mode)
-        semi_lines = [ln for ln in plan.splitlines()
-                      if "BroadcastHashJoin" in ln and "LeftSemi" in ln]
-        assert len(semi_lines) >= 2, plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        plans[name] = plan
-    n_idx = plans["idx"].count("ArrowEvalPython")
-    n_fb = plans["fb"].count("ArrowEvalPython")
-    assert n_idx == n_fb - 4, (n_idx, n_fb)
+    df = SIM._incremental_candidates(idx, new, cents, 5, 2,
+                                     "vec_id", "embedding")
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("simple"))
+    semi_lines = [ln for ln in plan.splitlines()
+                  if "BroadcastHashJoin" in ln and "LeftSemi" in ln]
+    assert len(semi_lines) >= 2, plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("ArrowEvalPython") == 11, plan
 
 
 def test_ivf_index_build_is_a_pure_map(spark, sf_dir):

@@ -1145,9 +1145,8 @@ def test_stream_knn_graph_upsert_validates_index_once_per_stream(
              .select("vec_id", "embedding"))
     with pytest.raises(ValueError, match="n_probe"):
         SIM.knn_graph_ivf_incremental(
-            None, stored_graph, extra, cents, k=5, n_probe=2,
-            with_score=True, old_index=stored_idx,
-            index_width_checked=3)
+            stored_idx, stored_graph, extra, cents, k=5, n_probe=2,
+            with_score=True, index_width_checked=3)
 
 
 def test_stream_knn_graph_upsert_custom_columns_and_validate(
@@ -1351,7 +1350,7 @@ def test_stream_knn_graph_upsert_rebuilds_lost_graph_from_index(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     shutil.rmtree(gp)                       # the disaster: graph lost
 
     src = tmp_path / "feed"
@@ -1405,7 +1404,7 @@ def test_stream_knn_graph_upsert_heals_interrupted_swap(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     shutil.copytree(gp, gp + "._tmp")       # mid-swap crash state:
     os.rename(gp, gp + "._old")             # between the two renames
 
@@ -1463,7 +1462,7 @@ def test_stream_knn_graph_upsert_disaster_rebuild_mixed_batch(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     shutil.rmtree(gp)                       # graph + checkpoint lost
 
     src = tmp_path / "feed"
@@ -1522,7 +1521,7 @@ def test_stream_knn_graph_upsert_disaster_rebuild_nprobe_guard(
          .write.partitionBy("centroid_id").parquet(ip))
         if with_graph:
             (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                               with_score=True, ordered=False)
+                               with_score=True)
              .write.parquet(gp))
         return gp, ip
 
@@ -1627,7 +1626,7 @@ def test_stream_knn_graph_upsert_mixed_batch_fresh_checkpoint(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
 
     src = tmp_path / "feed"
     src.mkdir()
