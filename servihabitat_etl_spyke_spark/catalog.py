@@ -37,17 +37,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one named table. Parquet scan → pushdown-friendly.
 
     The synthetic ``events`` parquet stores ``ts`` as TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects; we read nanos as long
-    (``nanosAsLong``) and normalize to a microsecond TimestampType column —
-    matching how DuckDB coerces TIMESTAMP_NS to TIMESTAMP.
-
-    NOTE: ``nanosAsLong`` is a SESSION-global flag and stays set after
-    the first load (restoring it eagerly would be unsafe — the lazy scan
-    reads the conf at action time, after this function returned). Other
-    parquet reads in the same session therefore also see nanos
-    timestamps as longs; register such columns in NANOS_TS_COLUMNS.
+    Spark's vectorized reader rejects; ``session.get_spark`` sets
+    ``nanosAsLong`` for the whole session, so it reads as long, and this
+    normalizes it to a microsecond TimestampType column — matching how
+    DuckDB coerces TIMESTAMP_NS to TIMESTAMP. Other parquet reads in the
+    session also see nanos timestamps as longs; register such columns in
+    NANOS_TS_COLUMNS.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, name))
     for col in NANOS_TS_COLUMNS.get(name, ()):
         if isinstance(df.schema[col].dataType, T.LongType):

@@ -729,13 +729,14 @@ def embedding_neardup_lsh(corpus: DataFrame, threshold: float = 0.45,
 
 
 def _cc_driver_union_find(p: DataFrame, pdf: "pd.DataFrame") -> DataFrame:
-    """The under-cap leg of :func:`connected_components`: classic
-    union-find with path compression over the collected (u, v) pairs,
-    labels = component minimum (identical to min-label propagation by
-    definition of reachability). ``p`` supplies the session and the id
-    type; ``pdf`` is its collected pandas frame. One Arrow
-    createDataFrame back out — the label table stays a DataFrame, so
-    downstream joins/windows are unchanged."""
+    """The driver leg of :func:`connected_components`: classic
+    union-find with path compression over the collected (a, b) pairs,
+    labels = component minimum (by definition of reachability, the
+    star leg's label too). ``p`` supplies the session and the id type;
+    ``pdf`` is its collected pandas frame. Python orders str by code
+    point, which is the UTF-8 byte order Spark compares strings by. One
+    Arrow createDataFrame back out — the label table stays a DataFrame,
+    so downstream joins/windows are unchanged."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -748,7 +749,7 @@ def _cc_driver_union_find(p: DataFrame, pdf: "pd.DataFrame") -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    us, vs = pdf["u"].tolist(), pdf["v"].tolist()
+    us, vs = pdf["a"].tolist(), pdf["b"].tolist()
     for a in us:
         parent.setdefault(a, a)
     for b in vs:
@@ -770,152 +771,148 @@ def _cc_driver_union_find(p: DataFrame, pdf: "pd.DataFrame") -> DataFrame:
     return p.sparkSession.createDataFrame(out, schema)
 
 
+def _cc_star(p: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed leg of :func:`connected_components`: alternating
+    LARGE-STAR / SMALL-STAR (Kiveris et al. 2014, "Connected Components
+    in MapReduce and Beyond") over the checkpointed, NULL-free (a, b)
+    pairs ``p``. Its O(log^2 n) rounds do not grow with a component's
+    DIAMETER (billion-doc chains do happen in crawl dedup):
+
+    - large-star: every node links its larger neighbors to its local
+      minimum (min of itself and its neighborhood);
+    - small-star: every node links its smaller-or-equal neighbors and
+      itself to that local minimum.
+
+    Both operations preserve connectivity and strictly shrink the
+    potential; at fixpoint the edge set is a star forest — every node
+    points at its component minimum. Each half-round is one
+    neighbor-min aggregation + one join, both on the node key — no
+    collect, lineage truncated per round. Convergence = edge multiset
+    unchanged (order-free count + xor-hash checksum, a 2-value
+    aggregate per round); more than ``max_iter`` rounds raises."""
+    e = p.filter(F.col("a") != F.col("b"))
+    # vertices appearing ONLY in self-pairs (a == b) come out as their
+    # own singleton clusters, as the driver leg labels them
+    selfs_only = (p.filter(F.col("a") == F.col("b"))
+                  .select(F.col("a").alias("doc_id")).distinct())
+    if e.isEmpty():
+        return selfs_only.select(
+            "doc_id", F.col("doc_id").alias("cluster_id"))
+
+    def _sig(edges: DataFrame) -> tuple:
+        # pmod folds the full-range hash into [0, 2^31) so the sum can't
+        # overflow a long under ANSI mode (n_edges * 2^31 << 2^63)
+        r = (edges.agg(
+            F.count("*").alias("n"),
+            F.sum(F.pmod(F.xxhash64("a", "b"),
+                         F.lit((1 << 31) - 1))).alias("h")).collect()[0])
+        return (r["n"], r["h"])
+
+    def _halfround(edges: DataFrame, large: bool) -> DataFrame:
+        # full neighbor view: every undirected edge seen from both ends
+        nbr = edges.union(edges.select(F.col("b").alias("a"),
+                                       F.col("a").alias("b")))
+        mins = (nbr.groupBy("a")
+                .agg(F.least(F.first("a"), F.min("b")).alias("m")))
+        j = nbr.join(mins, "a")
+        if large:
+            out = (j.filter(F.col("b") > F.col("a"))
+                   .select(F.col("b").alias("a"), F.col("m").alias("b")))
+        else:
+            out = (j.filter(F.col("b") <= F.col("a"))
+                   .select(F.col("b").alias("a"), F.col("m").alias("b"))
+                   .union(mins.select(F.col("a"), F.col("m").alias("b"))))
+        return (out.filter(F.col("a") != F.col("b"))
+                .distinct().localCheckpoint())
+
+    sig = _sig(e.select(F.least("a", "b").alias("a"),
+                        F.greatest("a", "b").alias("b")).distinct())
+    for _ in range(max_iter):
+        e = _halfround(e, large=True)
+        e = _halfround(e, large=False)
+        new_sig = _sig(e)
+        if new_sig == sig:
+            break
+        sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            f"large-star/small-star rounds")
+    roots = e.select(F.col("b").alias("doc_id"),
+                     F.col("b").alias("cluster_id")).distinct()
+    labeled = (e.select(F.col("a").alias("doc_id"),
+                        F.col("b").alias("cluster_id"))
+               .union(roots).distinct())
+    singletons = (selfs_only.join(labeled, "doc_id", "left_anti")
+                  .select("doc_id", F.col("doc_id").alias("cluster_id")))
+    return labeled.unionByName(singletons)
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iter: int = 25,
-                         star_threshold: int = 5_000_000,
                          driver_cap: int = 1_000_000) -> DataFrame:
     """Cluster near-dup pairs into connected components: (doc_id,
     cluster_id) where cluster_id is the minimum doc id reachable through
     the pair graph — the canonical-representative step every dedup
     pipeline runs after pair generation (keep cluster_id, drop the rest).
+    Every vertex of some pair is emitted; one that appears only in
+    self-pairs is its own cluster. A pair with a NULL id is dropped: a
+    NULL key matches nothing, as in ``etl.keyed_upsert``.
 
-    THREE size-routed implementations, all producing identical labels
-    (pytest-pinned against each other and an independent union-find):
+    The projected pairs are checkpointed once and sized in one
+    aggregate, then take one of two legs with identical labels:
 
-    - up to ``driver_cap`` pairs: DRIVER UNION-FIND (r11). Verified
-      near-dup pairs are a thin slice of any corpus by construction (the
-      candidate generators bound them), and the label table is the
-      decision-pass proxy the optimization guide says to compute on
-      small rows: one Arrow collect of (u, v) longs — ``driver_cap``
-      pairs is ~16 MB, the same small-by-contract class as knn_graph's
-      corpus matrix — then an O(E α(E)) union-find, then one Arrow
-      createDataFrame back. The distributed variants spend ~6 actions
-      (materialize + converge-count per batch) whose per-round shuffles
-      dominate wall-clock at ANY scale where the pair table fits a
-      driver — and at 100 TB a pair table PAST the cap routes to the
-      loops below unchanged.
-    - past the cap: iterative min-label propagation — each round every
-      vertex takes the min of its own label and its neighbors' labels;
-      converges in O(graph diameter) rounds (near-dup clusters are
-      dense and shallow, 2-4 rounds in practice). Each round is one
-      join + one groupBy on the edge partitioning; lineage truncated
-      per round with localCheckpoint. Only vertices that appear in some
-      pair are emitted — singleton docs are their own cluster by
-      definition.
-    - above ``star_threshold`` undirected edges: auto-delegate to
-      :func:`connected_components_star` (alternating large-star/
-      small-star, rounds independent of component diameter — billion-doc
-      chains do happen in crawl dedup).
+    - DRIVER UNION-FIND (:func:`_cc_driver_union_find`) for up to
+      ``driver_cap`` pairs whose two id columns share one integral
+      type, or are both strings holding at most ``16 * driver_cap``
+      bytes. Verified near-dup pairs are a thin slice of any corpus
+      (the candidate generators bound them): one Arrow collect, an
+      O(E α(E)) union-find and one Arrow createDataFrame back — about
+      4 Spark jobs in all, where each distributed round costs several.
+    - LARGE-STAR / SMALL-STAR (:func:`_cc_star`) for everything else:
+      rounds independent of component diameter, ``max_iter`` of them
+      at most (more raises).
 
-    ``driver_cap=0`` disables the union-find path (the convergence-guard
-    tests pin the distributed loop through it).
-
-    Caller-facing memory contract (r12, ADVICE): with the default cap
-    the under-cap leg collects up to ``driver_cap`` (u, v) pairs onto
-    the DRIVER — ~16 MB per million long-id pairs via Arrow. Size
-    ``driver_cap`` to the driver's memory budget, or pass
-    ``driver_cap=0`` on memory-constrained drivers to force the
-    distributed legs. The leg only fires for fixed-width integer id
-    types with zero null ids (checked Spark-side in the same action as
-    the pair count), so unbounded string ids never ride it."""
-    # materialize the pair table ONCE before mirroring: the union's two
-    # branches are separate subplans, so an expensive pairs pipeline
-    # (LSH join, fingerprint index, ...) would otherwise execute twice
-    p = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-         .localCheckpoint())
-    # ONE action over the cached blocks yields the pair count AND the
-    # null count (r12, ADVICE): the previous shape collected up to
-    # driver_cap rows BEFORE discovering a null id, paying a full
-    # driver collect and then running the distributed loop anyway
-    stats = p.agg(F.count(F.lit(1)).alias("n"),
-                  F.count("u").alias("nu"),
-                  F.count("v").alias("nv")).first()
-    n_pairs = stats["n"]               # cached blocks — no recompute
-    n_null_ids = 2 * n_pairs - stats["nu"] - stats["nv"]
-    # AUTO-SWITCH first (its threshold dwarfs driver_cap): past
-    # `star_threshold` edges a high-diameter component would blow the
-    # O(diameter) round count — delegate to the alternating large-star/
-    # small-star variant, whose rounds are O(log^2 n) INDEPENDENT of
-    # diameter (Kiveris et al. 2014 §4). Both produce identical
-    # (doc_id, min-reachable-id) labels, so the switch is invisible to
-    # callers and to the shared oracle. The checkpointed pair table is
-    # reused, not recomputed.
-    if n_pairs > star_threshold:
-        # the star variant owns the full output contract, including
-        # self-pair-only vertices as singleton clusters
-        return connected_components_star(p, id_a="u", id_b="v",
-                                         max_iter=max_iter)
-    # fast path restricted to FIXED-WIDTH integer id types (r12,
-    # ADVICE): the ~16 MB-per-million-pairs sizing contract assumes
-    # 8-byte ids — unbounded string ids have no byte-size guard, so
-    # they take the distributed loop regardless of row count
+    Memory contract: the driver leg holds up to ``driver_cap`` pairs,
+    ~16 MB per million pairs of 8-byte ids, and string ids get the same
+    16 bytes per pair by their UTF-8 length. Size ``driver_cap`` to the
+    driver's memory budget, or pass ``driver_cap=0`` on a
+    memory-constrained driver to keep every call distributed (which is
+    what :func:`connected_components_star` does)."""
     from pyspark.sql import types as T
-    _fixed = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    if (0 < n_pairs <= driver_cap and n_null_ids == 0
-            and isinstance(p.schema[0].dataType, _fixed)
-            and p.schema[0].dataType == p.schema[1].dataType):
-        return _cc_driver_union_find(p, p.toPandas())
-    edges = p.union(p.select(F.col("v").alias("u"),
-                             F.col("u").alias("v")))
-    n_edges = 2 * n_pairs
-    # size the iterative loop's parallelism to the edge table (same
-    # rationale as graph.pagerank): per-task fixed overhead dominates
-    # each round when the default width would hold a few hundred edges
-    # per partition; the width scales back up with the edge count
-    width = max(1, min(edges.sparkSession.sparkContext.defaultParallelism,
-                       n_edges // 65536 + 1))
-    # partition by v, the propagation JOIN key — each round's edge side
-    # then enters the join shuffle-free (only the label table, one row
-    # per vertex, re-shuffles from u to v per round)
-    edges = edges.repartition(width, "v").localCheckpoint()
-    labels = edges.groupBy("u").agg(
-        F.least(F.first("u"), F.min("v")).alias("label"))
 
-    def _propagate(lbl: DataFrame, keep: list[str]) -> DataFrame:
-        """One min-label round: (u, label, *keep) -> same shape."""
-        nbr = (edges.join(lbl.select(F.col("u").alias("v"),
-                                     F.col("label").alias("lv")), "v")
-               .groupBy("u").agg(F.min("lv").alias("nmin")))
-        return (lbl.join(nbr, "u", "left")
-                .select("u",
-                        F.least(F.col("label"),
-                                F.coalesce("nmin", F.col("label")))
-                        .alias("label"),
-                        *keep))
+    # materialize the pair table ONCE: both legs read it more than once,
+    # and an expensive pairs pipeline (LSH join, fingerprint index, ...)
+    # would otherwise execute per read. isNotNull rather than dropna:
+    # a checkpoint keeps its plan's constraints, and dropna's would ride
+    # into every star round's plan (one more job per call, measured)
+    p = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+         .localCheckpoint())
+    typ = p.schema[0].dataType
+    integral = isinstance(typ, T.IntegralType)
+    string = typ == T.StringType()
+    if driver_cap > 0 and (integral or string) and typ == p.schema[1].dataType:
+        size = [F.count(F.lit(1)).alias("n")]
+        if string:
+            size.append(F.sum(F.octet_length("a") + F.octet_length("b"))
+                        .alias("bytes"))
+        stats = p.agg(*size).first()
+        if stats["n"] <= driver_cap and (
+                integral or (stats["bytes"] or 0) <= 16 * driver_cap):
+            return _cc_driver_union_find(p, p.toPandas())
+    return _cc_star(p, max_iter)
 
-    changed = 0
-    # TWO propagation rounds per checkpoint, halving the per-round jobs
-    # (checkpoint + convergence count) whose fixed overhead dominates on
-    # small dedup graphs. Convergence is read off the LAST round only
-    # (label < label1, the label carried from between the two rounds):
-    # propagation is a deterministic monotone map, so one round with
-    # zero changes IS a fixed point — a batch whose first round still
-    # moved labels but whose second didn't terminates immediately, with
-    # no confirm batch. Near-dup components are dense (diameter 2-4),
-    # so most runs finish in a single batch.
-    for _ in range(0, max_iter, 2):
-        stepped = _propagate(labels, [])
-        # checkpoint FIRST (one eager job running both rounds' joins),
-        # then derive the convergence count from the checkpointed rows —
-        # counting off the live plan would execute the whole batch a
-        # second time
-        merged = _propagate(stepped.withColumn("label1", F.col("label")),
-                            ["label1"]).localCheckpoint()
-        changed = merged.filter(F.col("label") < F.col("label1")).count()
-        labels = merged.select("u", "label")
-        if changed == 0:
-            break
-    if changed != 0:
-        # exiting by iteration cap with labels still moving would return
-        # silently-wrong cluster ids — fail loudly instead (a dedup graph
-        # with diameter > max_iter needs a larger cap or the alternating
-        # large-star/small-star variant)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations ({changed} labels still changing)")
-    return labels.select(F.col("u").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
+
+def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
+                              id_b: str = "id_b",
+                              max_iter: int = 25) -> DataFrame:
+    """:func:`connected_components` held to its distributed leg
+    (``driver_cap=0``): alternating large-star/small-star rounds
+    (:func:`_cc_star`) at any input size, with the same output contract
+    and the same labels."""
+    return connected_components(pairs, id_a, id_b, max_iter, driver_cap=0)
 
 
 def canonical_selection(docs: DataFrame, clusters: DataFrame,
@@ -1537,97 +1534,6 @@ def simhash_neardup(docs: DataFrame, max_hamming: int = 3, bands: int = 4,
             .distinct())
 
 
-def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
-                              id_b: str = "id_b",
-                              max_iter: int = 25) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the O(log^2 n)-round variant that stays fast when a
-    component's DIAMETER is large (billion-doc chains), where plain
-    min-label propagation (:func:`connected_components`) needs
-    O(diameter) rounds:
-
-    - large-star: every node links its larger neighbors to its local
-      minimum (min of itself and its neighborhood);
-    - small-star: every node links its smaller-or-equal neighbors and
-      itself to that local minimum.
-
-    Both operations preserve connectivity and strictly shrink the
-    potential; at fixpoint the edge set is a star forest — every node
-    points at its component minimum. Same output contract as
-    :func:`connected_components`: (doc_id, cluster_id = min reachable
-    id), only nodes appearing in some pair.
-
-    Each half-round is one neighbor-min aggregation + one join, both on
-    the node key — no collect, lineage truncated per round. Convergence
-    = edge multiset unchanged (order-free count + xor-hash checksum, a
-    2-value aggregate per round)."""
-    spark = pairs.sparkSession
-    # checkpoint the INPUT once: both e and selfs_only derive from it, and
-    # an un-materialized p0 would re-run the caller's whole pair pipeline
-    # (e.g. a full LSH candidate+verify pass) a second time at action time
-    p0 = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-          .localCheckpoint())
-    e = p0.filter(F.col("a") != F.col("b"))
-    # vertices appearing ONLY in self-pairs (a == b) must come out as
-    # their own singleton clusters — the propagation variant labels
-    # them, and the "same output contract" promise holds for DIRECT
-    # callers too, not just the auto-switch delegation site
-    selfs_only = (p0.filter(F.col("a") == F.col("b"))
-                  .select(F.col("a").alias("doc_id")).distinct())
-    if e.isEmpty():
-        return selfs_only.select(
-            "doc_id", F.col("doc_id").alias("cluster_id"))
-
-    def _sig(edges: DataFrame) -> tuple:
-        # pmod folds the full-range hash into [0, 2^31) so the sum can't
-        # overflow a long under ANSI mode (n_edges * 2^31 << 2^63)
-        r = (edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.pmod(F.xxhash64("a", "b"),
-                         F.lit((1 << 31) - 1))).alias("h")).collect()[0])
-        return (r["n"], r["h"])
-
-    def _halfround(edges: DataFrame, large: bool) -> DataFrame:
-        # full neighbor view: every undirected edge seen from both ends
-        nbr = edges.union(edges.select(F.col("b").alias("a"),
-                                       F.col("a").alias("b")))
-        mins = (nbr.groupBy("a")
-                .agg(F.least(F.first("a"), F.min("b")).alias("m")))
-        j = nbr.join(mins, "a")
-        if large:
-            out = (j.filter(F.col("b") > F.col("a"))
-                   .select(F.col("b").alias("a"), F.col("m").alias("b")))
-        else:
-            out = (j.filter(F.col("b") <= F.col("a"))
-                   .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                   .union(mins.select(F.col("a"), F.col("m").alias("b"))))
-        return (out.filter(F.col("a") != F.col("b"))
-                .distinct().localCheckpoint())
-
-    sig = _sig(e.select(F.least("a", "b").alias("a"),
-                        F.greatest("a", "b").alias("b")).distinct())
-    for _ in range(max_iter):
-        e = _halfround(e, large=True)
-        e = _halfround(e, large=False)
-        new_sig = _sig(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            f"rounds")
-    roots = e.select(F.col("b").alias("doc_id"),
-                     F.col("b").alias("cluster_id")).distinct()
-    labeled = (e.select(F.col("a").alias("doc_id"),
-                        F.col("b").alias("cluster_id"))
-               .union(roots).distinct())
-    singletons = (selfs_only.join(labeled, "doc_id", "left_anti")
-                  .select("doc_id", F.col("doc_id").alias("cluster_id")))
-    return labeled.unionByName(singletons)
-
-
 def connected_components_incremental(labels: DataFrame,
                                      new_pairs: DataFrame,
                                      id_a: str = "id_a",
@@ -1642,11 +1548,13 @@ def connected_components_incremental(labels: DataFrame,
     the historical pair set (quadratically larger in dense clusters, and
     possibly no longer retained) never participates.
 
-    Propagation restarts from the near-converged star shape, so
-    incremental rounds are few even when new pairs bridge old clusters.
-    Returns the updated (doc_id, cluster_id) covering every doc seen in
-    either input. Exactly equal to recomputing over all pairs ever seen
-    (pytest + shared oracle)."""
+    The update graph goes through :func:`connected_components`, so it
+    takes the driver union-find under ``driver_cap`` pairs and the
+    large-star/small-star rounds above it; the stored labels are
+    already star-shaped, so those rounds are few even when new pairs
+    bridge old clusters. Returns the updated (doc_id, cluster_id)
+    covering every doc seen in either input. Exactly equal to
+    recomputing over all pairs ever seen (pytest + shared oracle)."""
     label_edges = (labels
                    .filter(F.col("doc_id") != F.col("cluster_id"))
                    .select(F.col("doc_id").alias(id_a),

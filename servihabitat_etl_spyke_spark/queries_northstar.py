@@ -2636,7 +2636,7 @@ def multimodal_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest id, so every re-encode maps to its source. Returns
     (doc_id, cluster_id, is_canonical) for every doc in some near-dup
     pair. Same shuffle budget as its stages: the word equi-join and the
-    CC label propagation over pair ids only — blobs never shuffle."""
+    connected components over pair ids only — blobs never shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = MM.audio_fp_neardup(_audio_lake_with_plants(docs),
                                 min_shared=3)
@@ -2684,11 +2684,12 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters by the ALTERNATING LARGE-STAR / SMALL-STAR
     algorithm (Kiveris et al. 2014) over the same MinHash-LSH pair
-    graph as `dedup_clusters` — the O(log^2 n)-round variant that stays
-    fast when component DIAMETER explodes (billion-doc chains), where
-    min-label propagation pays O(diameter) rounds. Same recursive-CTE
-    oracle as `dedup_clusters`: two different distributed algorithms,
-    one exact hash-checked answer."""
+    graph as `dedup_clusters` — `connected_components`' distributed
+    leg, held there at any size (`dedup_clusters` takes the driver
+    union-find under its cap). Its O(log^2 n) rounds stay few when
+    component DIAMETER explodes (billion-doc chains), where min-label
+    propagation pays O(diameter) rounds. Same recursive-CTE oracle as
+    `dedup_clusters`: two algorithms, one exact hash-checked answer."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_neardup(docs, threshold=0.5)
     # no presentational global orderBy (r8) — see dedup_prefix_filter

@@ -11,6 +11,9 @@ also matter on a real cluster:
   we allow are vectorized pandas UDFs).
 - Session timezone pinned to UTC so results are reproducible and comparable
   against the DuckDB oracle (DuckDB timestamps are UTC-naive).
+- ``nanosAsLong`` on, so every parquet read of a TIMESTAMP(NANOS) file
+  works (Spark's reader rejects the type otherwise); see
+  ``catalog.NANOS_TS_COLUMNS``.
 """
 
 from __future__ import annotations
@@ -58,6 +61,9 @@ def get_spark(app_name: str = "servihabitat_etl_spyke_spark",
         # single-line JSON protocols (the bench driver reads a stdout tail)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # parquet TIMESTAMP(NANOS) columns read as long; catalog.load_table
+        # turns the registered ones back into timestamps
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

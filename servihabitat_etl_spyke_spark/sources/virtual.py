@@ -43,8 +43,6 @@ def catalog_table(spark: SparkSession, sf_dir: str,
     """Datasets-as-rows (the ``databases`` virtual table): one row per
     registered table with its column count — catalog introspection over
     parquet footers, no data scan."""
-    # footer peek must tolerate TIMESTAMP(NANOS) columns (see catalog.py)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     rows = []
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")

@@ -32,11 +32,6 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``catalog.load_table`` does, so stream and batch twins agree.
     """
     path = os.path.join(sf_dir, "events.parquet")
-    # session-wide ON PURPOSE, same as the batch catalog.load_table: every
-    # reader of the TIMESTAMP(NANOS) testdata in this repo expects the
-    # nanos-as-long convention (the ts normalization below undoes it), and
-    # a set/restore here would race the stream's deferred schema use
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
         stream = spark.readStream.schema(schema).parquet(path)

@@ -375,20 +375,21 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
       out; a remaining id found in the graph raises (the stores have
       diverged); the rest runs through the operator against the
       stored index, is appended to the index, and the graph swaps in;
-    - no graph, no index: day-1 bootstrap — the batch is the corpus;
-    - no graph, index present (a lost graph, or a day-1 crash before
-      the graph commit): the graph is rebuilt from the index, which
-      holds every ingested vector, plus the batch's unindexed rows
-      (warning emitted, full-rebuild cost). By the operator's exactness
-      twin the rebuild equals the incrementally maintained graph;
+    - no graph: the graph is rebuilt from the stored index plus the
+      batch's unindexed rows, which are appended to the index. The
+      index counts as present only if it holds a data file. With one
+      (a lost graph, or a day-1 crash before the graph commit) the
+      rebuild warns and costs a full rebuild; by the operator's
+      exactness twin it equals the incrementally maintained graph.
+      Without one (day 1, or a day-1 index write killed before it left
+      a data file) whatever sits at ``index_path`` is removed and the
+      stored index is empty, so the batch is the corpus;
     - index lost, graph present: unrecoverable (the graph holds no
       vectors); raises a named error.
-
-    The day-1 index write is a direct overwrite, so a hard kill inside
-    it is not healed.
     """
     import contextlib
     import os
+    import shutil
     import warnings
 
     from pyspark.sql import functions as F
@@ -418,9 +419,10 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                       for f in files if f[0] not in "_."]
         return sorted(found)
 
-    def _write_index(rows: DataFrame, mode: str) -> None:
+    def _write_index(rows: DataFrame) -> None:
         (_sim.ivf_index(rows, centroids, n_probe, id_col, vec_col)
-         .write.partitionBy("centroid_id").mode(mode).parquet(index_path))
+         .write.partitionBy("centroid_id").mode("append")
+         .parquet(index_path))
 
     def _unindexed(rows: DataFrame, index: DataFrame) -> DataFrame:
         present = (index.select(id_col)
@@ -437,28 +439,42 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
         batches = rec.get("batches", {})
         if bid <= batches.get(qid, -1):
             return                      # replayed batch: already merged
+        index_files = set(_index_files())
         if "index_files" in rec:        # roll back a stranded append
-            for f in set(_index_files()) - set(rec["index_files"]):
+            for f in index_files - set(rec["index_files"]):
                 head, name = os.path.split(os.path.join(index_path, f))
                 os.remove(os.path.join(head, name))
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(os.path.join(head, f".{name}.crc"))
+            index_files &= set(rec["index_files"])
         rows = batch.select(id_col, vec_col).localCheckpoint()
         if rows.isEmpty():
             return
-        if not has_graph and os.path.exists(index_path):
-            warnings.warn(
-                f"stream_knn_graph_upsert: stored graph at {graph_path}"
-                f" is missing but the index at {index_path} survives —"
-                f" rebuilding the graph from the index (disaster-"
-                f"recovery path, full-rebuild cost)", stacklevel=2)
-            stored = spark.read.parquet(index_path)
-            # the incremental operator's probe-width guard, ungated
-            # there too: a different n_probe would change which cells'
-            # members are candidates AND append mixed-width rows
-            _sim._check_index(stored, n_probe, min(n_probe, len(centroids)),
-                              "stream_knn_graph_upsert", id_col, vec_col,
-                              built=_pinned_index_width(stored))
+        has_index = bool(index_files)
+        if not has_graph:
+            if has_index:
+                warnings.warn(
+                    f"stream_knn_graph_upsert: stored graph at "
+                    f"{graph_path} is missing but the index at "
+                    f"{index_path} survives — rebuilding the graph from "
+                    f"the index (disaster-recovery path, full-rebuild "
+                    f"cost)", stacklevel=2)
+                stored = spark.read.parquet(index_path)
+                # the incremental operator's probe-width guard, ungated
+                # there too: a different n_probe would change which
+                # cells' members are candidates AND append mixed-width
+                # rows
+                _sim._check_index(stored, n_probe,
+                                  min(n_probe, len(centroids)),
+                                  "stream_knn_graph_upsert", id_col,
+                                  vec_col, built=_pinned_index_width(stored))
+            else:
+                # day 1, or a day-1 index write killed before it left a
+                # data file: clear what the killed write left and start
+                # from an empty index
+                shutil.rmtree(index_path, ignore_errors=True)
+                stored = _sim.ivf_index(rows.limit(0), centroids, n_probe,
+                                        id_col, vec_col)
             # pin the corpus before the append, so the plan cannot see
             # the batch's own rows twice; only unindexed rows append
             corpus = (stored.select(F.col(id_col), F.col(vec_col))
@@ -467,19 +483,13 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                       .unionByName(rows).localCheckpoint())
             missing = _unindexed(rows, stored)
             if not missing.isEmpty():
-                _write_index(missing, "append")
+                _write_index(missing)
             graph = _sim.knn_graph_ivf(corpus, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
                                        with_score=True)
-        elif not has_graph:
-            _write_index(rows, "overwrite")
-            graph = _sim.knn_graph_ivf(rows, k=k, n_probe=n_probe,
-                                       id_col=id_col, vec_col=vec_col,
-                                       centroids=centroids,
-                                       with_score=True)
         else:
-            if not os.path.exists(index_path):
+            if not has_index:
                 raise RuntimeError(
                     f"stream_knn_graph_upsert: stored graph at "
                     f"{graph_path} exists but the index at "
@@ -511,7 +521,7 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                 n_probe=n_probe, id_col=id_col, vec_col=vec_col,
                 with_score=True, validate=validate,
                 index_width_checked=index_width)
-            _write_index(rows, "append")
+            _write_index(rows)
         _overwrite_via_tmp(graph, graph_path, commit={
             "batches": {**batches, qid: bid},
             "index_files": _index_files()})

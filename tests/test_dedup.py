@@ -13,7 +13,7 @@ def test_signature_ops_drop_null_text(spark):
 def test_connected_components_chain_and_island(spark):
     from servihabitat_etl_spyke_spark.operators.dedup import (
         connected_components)
-    # chain 1-2-3-4 (diameter 3, needs >1 propagation round) + island 10-11
+    # chain 1-2-3-4 (diameter 3) + island 10-11
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
     out = {r["doc_id"]: r["cluster_id"]
@@ -22,80 +22,131 @@ def test_connected_components_chain_and_island(spark):
 
 
 def test_connected_components_auto_switch_matches_simple(spark):
-    """star_threshold=0 forces the auto-delegation to the star variant;
-    labels must be identical to the simple propagation on the same graph
-    (chain + island, so both diameter and multi-component paths run)."""
+    """The default entry (driver union-find under ``driver_cap``) and
+    ``connected_components_star`` (the large-star/small-star leg at any
+    size) label a chain + island identically."""
     from servihabitat_etl_spyke_spark.operators.dedup import (
-        connected_components)
+        connected_components, connected_components_star)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
     simple = {r["doc_id"]: r["cluster_id"]
               for r in connected_components(pairs).collect()}
     starred = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(
-                   pairs, star_threshold=0).collect()}
+               for r in connected_components_star(pairs).collect()}
     assert starred == simple == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
-    """Seeded random multigraphs (self-loops included): both CC variants
-    must match an independent pure-Python union-find — guards the
-    batched two-rounds-per-checkpoint propagation (r6) on graphs with
-    mixed component shapes, not just hand-built chains."""
+def _union_find_truth(edges):
+    """{vertex: min vertex of its component} by a pure-Python union-find."""
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    return {v: min(u for u in parent if find(u) == find(v)) for v in parent}
+
+
+def _labels_by_leg(monkeypatch, pairs):
+    """(driver leg labels, star leg labels) of ``pairs``; asserts that the
+    default entry took the driver union-find."""
+    from servihabitat_etl_spyke_spark.operators import dedup as D
+    calls = []
+    real = D._cc_driver_union_find
+
+    def spy(p, pdf):
+        calls.append(len(pdf))
+        return real(p, pdf)
+
+    monkeypatch.setattr(D, "_cc_driver_union_find", spy)
+    driver = {r.doc_id: r.cluster_id
+              for r in D.connected_components(pairs).collect()}
+    assert calls, "the default entry did not take the driver leg"
+    star = {r.doc_id: r.cluster_id
+            for r in D.connected_components_star(pairs).collect()}
+    return driver, star
+
+
+def test_connected_components_random_graphs_match_union_find(
+        spark, monkeypatch):
+    """Seeded random multigraphs (self-loops included): both legs — the
+    driver union-find and large-star/small-star — match an independent
+    pure-Python union-find on graphs with mixed component shapes, not
+    just hand-built chains."""
     import random
-    from servihabitat_etl_spyke_spark.operators.dedup import (
-        connected_components)
     rng = random.Random(6)
     for _ in range(3):
         n = 30
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(35)]
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        seen = {v for e in edges for v in e}
-        truth = {v: min(u for u in seen if find(u) == find(v))
-                 for v in seen}
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {r.doc_id: r.cluster_id
-               for r in connected_components(pairs).collect()}
-        # driver_cap=0 pins the distributed propagation loop (the
-        # default routes an under-cap graph to the r11 driver
-        # union-find, which this test would otherwise compare against
-        # itself)
-        prop = {r.doc_id: r.cluster_id
-                for r in connected_components(
-                    pairs, driver_cap=0).collect()}
-        star = {r.doc_id: r.cluster_id
-                for r in connected_components(
-                    pairs, star_threshold=0).collect()}
-        assert got == truth
-        assert prop == truth
-        assert star == truth
+        driver, star = _labels_by_leg(monkeypatch, pairs)
+        assert driver == star == _union_find_truth(edges)
+
+
+def test_connected_components_string_random_graphs_match_union_find(
+        spark, monkeypatch):
+    """String ids take the driver union-find under the cap too, and both
+    legs match the pure-Python union-find. Non-ASCII ids pin the order:
+    Python compares str by code point, Spark by UTF-8 bytes, and the
+    two orders agree."""
+    import random
+    rng = random.Random(11)
+    names = [f"d{i}" for i in range(24)] + ["é1", "Ω", "z", "ß9", "中"]
+    for _ in range(3):
+        edges = [(rng.choice(names), rng.choice(names)) for _ in range(30)]
+        pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+        driver, star = _labels_by_leg(monkeypatch, pairs)
+        assert driver == star == _union_find_truth(edges)
+
+
+def test_connected_components_string_chain_converges(spark):
+    """A 61-vertex string-id chain: the min label must reach the far end
+    through the default entry and through the large-star/small-star
+    leg, whose round count does not grow with the diameter."""
+    from servihabitat_etl_spyke_spark.operators.dedup import (
+        connected_components, connected_components_star)
+    pairs = spark.createDataFrame(
+        [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(60)],
+        "id_a string, id_b string")
+    want = {(f"v{i:03d}", "v000") for i in range(61)}
+    assert set(map(tuple, connected_components(pairs).collect())) == want
+    assert set(map(tuple,
+                   connected_components_star(pairs).collect())) == want
+
+
+def test_connected_components_drops_null_id_pairs(spark):
+    """A pair with a NULL id is dropped by both legs (a NULL key matches
+    nothing); the rest of the graph is labelled as usual."""
+    from servihabitat_etl_spyke_spark.operators.dedup import (
+        connected_components, connected_components_star)
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 3), (4, None), (5, 5)], "id_a long, id_b long")
+    want = {(1, 1), (2, 1), (5, 5)}
+    assert set(map(tuple, connected_components(pairs).collect())) == want
+    assert set(map(tuple,
+                   connected_components_star(pairs).collect())) == want
 
 
 def test_connected_components_long_path_converges(spark):
     from servihabitat_etl_spyke_spark.operators.dedup import (
-        connected_components)
+        connected_components_star)
     # path 0-1-2-...-12: min label must travel the full diameter
-    # (driver_cap=0 pins the distributed propagation loop)
+    # through the distributed leg
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    out = connected_components(pairs, driver_cap=0).collect()
+    out = connected_components_star(pairs).collect()
     assert {r["cluster_id"] for r in out} == {0}
     assert len(out) == 13
 
 
 def test_connected_components_driver_cap_routing(spark):
-    """r11: the under-cap driver union-find and the distributed loop
+    """The under-cap driver union-find and the large-star/small-star leg
     must label identically (self-pairs included), and a graph past
-    ``driver_cap`` must route to the distributed loop unchanged."""
+    ``driver_cap`` must route to the distributed leg unchanged."""
     from servihabitat_etl_spyke_spark.operators.dedup import (
         connected_components)
     pairs = spark.createDataFrame(
@@ -105,7 +156,7 @@ def test_connected_components_driver_cap_routing(spark):
     fast = {r.doc_id: r.cluster_id
             for r in connected_components(pairs).collect()}
     # driver_cap below the pair count: the same call must take the
-    # distributed loop (no collect) and produce the same labels
+    # distributed leg (no collect) and produce the same labels
     slow = {r.doc_id: r.cluster_id
             for r in connected_components(pairs, driver_cap=3).collect()}
     assert fast == want
@@ -164,19 +215,18 @@ def test_incremental_equals_full_restricted(spark, sf_dir):
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
-    """Exiting by iteration cap with labels still moving must raise, not
-    return silently-wrong cluster ids."""
+    """Exiting by the round cap with edges still moving must raise, not
+    return silently-wrong cluster ids. The guard lives in the
+    large-star/small-star leg (the driver union-find needs no rounds):
+    one round does not turn a path into a star."""
     import pytest
 
     from servihabitat_etl_spyke_spark.operators.dedup import (
-        connected_components)
+        connected_components_star)
     path_graph = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        # driver_cap=0: the guard lives in the distributed loop (the
-        # r11 driver union-find needs no iterations, so the default
-        # routing would never reach it on a graph this small)
-        connected_components(path_graph, max_iter=1, driver_cap=0)
+        connected_components_star(path_graph, max_iter=1)
 
 
 def test_embedding_neardup_drops_zero_vectors(spark):
@@ -707,15 +757,16 @@ def test_cc_star_matches_label_propagation(spark):
     edges += [(rnd.randrange(50), rnd.randrange(50)) for _ in range(15)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    want = sorted(map(tuple, connected_components(df, max_iter=60).collect()))
+    # the default entry takes the driver union-find on a graph this size
+    want = sorted(map(tuple, connected_components(df).collect()))
     got = sorted(map(tuple, connected_components_star(df).collect()))
     assert got == want and len(got) > 0
 
 
 def test_cc_star_empty_and_selfloop_only(spark):
-    """The star variant owns the SAME output contract as label
-    propagation for direct callers too: a vertex appearing only in
-    self-pairs is its own singleton cluster, not silently dropped."""
+    """The star leg keeps the driver leg's output contract for direct
+    callers too: a vertex appearing only in self-pairs is its own
+    singleton cluster, not silently dropped."""
     from servihabitat_etl_spyke_spark.operators.dedup import (
         connected_components, connected_components_star)
     empty = spark.createDataFrame([], "id_a long, id_b long")
@@ -789,18 +840,16 @@ def test_corpus_overlap_matrix_identical_and_disjoint_groups(spark):
 
 
 def test_cc_auto_switch_keeps_selfpair_only_vertices(spark):
-    """A vertex appearing ONLY in self-pairs must survive the star
-    auto-switch as its own singleton cluster — the propagation path
-    labels it, so the star path must too (identical-label contract).
-    Regression: r4 ADVICE (self-pair vertices vanished from star path)."""
+    """A vertex appearing ONLY in self-pairs must survive the star leg
+    as its own singleton cluster — the driver leg labels it, so the
+    star leg must too (identical-label contract). Regression: r4 ADVICE
+    (self-pair vertices vanished from the star path)."""
     from servihabitat_etl_spyke_spark.operators.dedup import (
-        connected_components)
+        connected_components, connected_components_star)
     edges = [(1, 2), (2, 3), (7, 7), (9, 9), (3, 3)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     want = sorted(map(tuple, connected_components(df).collect()))
-    # star_threshold=0 forces the auto-switch branch on the same input
-    got = sorted(map(tuple,
-                     connected_components(df, star_threshold=0).collect()))
+    got = sorted(map(tuple, connected_components_star(df).collect()))
     assert got == want
     assert (7, 7) in got and (9, 9) in got and (3, 1) in got
 

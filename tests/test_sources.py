@@ -63,6 +63,32 @@ def test_catalog_table(spark, sf_dir):
     assert rows == {"region": 2, "nation": 3}
 
 
+def test_get_spark_sets_nanos_as_long(spark, tmp_path):
+    """``get_spark`` sets ``nanosAsLong`` for the whole session, so a plain
+    parquet read of a TIMESTAMP(NANOS) file works before any
+    ``load_table`` call: unset it, ask for the session again, and the
+    read sees the nanos column as long."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from servihabitat_etl_spyke_spark.session import get_spark
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_700_000_000_123_456_789],
+                                            pa.timestamp("ns"))}),
+                   path, version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    cpus = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.unset(key)
+    try:
+        assert get_spark("tests", cpus=cpus).conf.get(key) == "true"
+        df = spark.read.parquet(path)
+        assert isinstance(df.schema["ts"].dataType, T.LongType)
+        assert df.first()["ts"] == 1_700_000_000_123_456_789
+    finally:
+        spark.conf.set(key, "true")
+
+
 def test_registry_table(spark):
     df = registry_table(spark, {"m1": "idle", "m2": "running"})
     assert df.filter("state = 'running'").count() == 1

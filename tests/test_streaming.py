@@ -1377,6 +1377,56 @@ def test_stream_knn_graph_upsert_rebuilds_lost_graph_from_index(
                     "left_semi").count() == n_day1
 
 
+def test_stream_knn_graph_upsert_killed_day1_index_write(
+        spark, sf_dir, tmp_path, kill_next_parquet_write):
+    """A driver killed inside the day-1 index write, before job commit,
+    leaves only Spark's '_temporary/' at the index path and no graph.
+    That is no index: the replay (same checkpoint) clears it and
+    bootstraps from the batch, with no disaster-rebuild warning, and
+    the graph equals ``knn_graph_ivf`` over the batch, each id indexed
+    once."""
+    import os
+    import warnings as _warnings
+
+    from servihabitat_etl_spyke_spark.operators import similarity as SIM
+    from servihabitat_etl_spyke_spark.streaming.sinks import (
+        stream_knn_graph_upsert)
+
+    emb = (load_table(spark, sf_dir, "embeddings")
+           .filter(F.col("vec_id") < 200)
+           .select("vec_id", "embedding"))
+    cents = SIM.kmeans_fit(emb, k=3, iters=2)
+    gp, ip, cp = (str(tmp_path / n) for n in ("g", "i", "c"))
+    src = tmp_path / "feed"
+    src.mkdir()
+    emb.coalesce(1).write.parquet(str(src / "d1.parquet"))
+
+    def run():
+        stream_knn_graph_upsert(
+            spark.readStream.schema(emb.schema)
+            .parquet(str(src / "d1.parquet")),
+            gp, ip, cp, cents, k=5, n_probe=2).awaitTermination(180)
+
+    kill_next_parquet_write("temporary")
+    with pytest.raises(Exception, match="simulated driver kill"):
+        run()
+    assert os.listdir(ip) == ["_temporary"] and not os.path.exists(gp)
+
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        run()                               # the replay
+    assert not any("rebuilding the graph" in str(w.message)
+                   for w in caught)
+    got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
+                 for r in spark.read.parquet(gp).collect())
+    want = sorted(map(tuple, SIM.knn_graph_ivf(
+        emb, k=5, n_probe=2, centroids=cents).collect()))
+    assert got == want and want
+    idx = spark.read.parquet(ip)
+    assert idx.count() == idx.select("vec_id").distinct().count() \
+        == emb.count()
+
+
 def test_stream_knn_graph_upsert_heals_interrupted_swap(
         spark, sf_dir, tmp_path):
     """The rename-swap's one vulnerable window, witnessed at the sink:
