@@ -26,23 +26,29 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: parquet TIMESTAMP(NANOS) columns per table: read as long via
-#: ``nanosAsLong`` and normalized back to a microsecond TimestampType.
-#: Any table that gains a nanos column MUST be registered here, or its
-#: column is silently served as a raw long (the flag is session-global).
+#: columns per table that a writer may store as parquet TIMESTAMP(NANOS):
+#: such a column reads as long via ``nanosAsLong`` and is normalized back
+#: to a microsecond TimestampType. The shipped ``events.parquet`` files
+#: store ``ts`` as ``timestamp[us]`` (read as TimestampNTZType, untouched
+#: here); the entry covers event files written with nanosecond
+#: timestamps. Any table that gains a nanos column MUST be registered
+#: here, or its column is silently served as a raw long (the flag is
+#: session-global).
 NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one named table. Parquet scan → pushdown-friendly.
 
-    The synthetic ``events`` parquet stores ``ts`` as TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects; ``session.get_spark`` sets
-    ``nanosAsLong`` for the whole session, so it reads as long, and this
-    normalizes it to a microsecond TimestampType column — matching how
-    DuckDB coerces TIMESTAMP_NS to TIMESTAMP. Other parquet reads in the
-    session also see nanos timestamps as longs; register such columns in
-    NANOS_TS_COLUMNS.
+    The shipped ``events`` parquet files store ``ts`` as ``timestamp[us]``
+    without a zone, which Spark reads as TimestampNTZType; it is served
+    as read. A file that stores a NANOS_TS_COLUMNS column as
+    TIMESTAMP(NANOS), which Spark's vectorized reader rejects, reads as
+    long (``session.get_spark`` sets ``nanosAsLong`` for the whole
+    session), and this normalizes it to a microsecond TimestampType
+    column — matching how DuckDB coerces TIMESTAMP_NS to TIMESTAMP. Other
+    parquet reads in the session also see nanos timestamps as longs;
+    register such columns in NANOS_TS_COLUMNS.
     """
     df = spark.read.parquet(table_path(sf_dir, name))
     for col in NANOS_TS_COLUMNS.get(name, ()):

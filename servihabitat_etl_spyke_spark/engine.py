@@ -18,6 +18,8 @@ ETL / streaming entry points — all over one SparkSession.
 from __future__ import annotations
 
 import os
+import weakref
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,10 +28,18 @@ from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from .catalog import TABLES, load_table, table_path
 from .model import Model
-from .plans.listquery import ListParams, list_page, list_query
+from .plans.listquery import (ArrowRelation, Declined, ListParams,
+                              arrow_list_page, arrow_list_query, arrow_read,
+                              list_page, list_query)
 from .session import get_spark
-from .sources.sheets import (arrow_relation, sheet_rows, sheet_upsert,
-                             string_schema)
+from .sources.sheets import (arrow_relation, arrow_table, sheet_rows,
+                             sheet_upsert, string_schema)
+
+#: SQL temp view name -> the relation it was registered from, per
+#: SparkSession. Temp views are global to a session, so every Engine on
+#: it shares one registry and sees when another Engine replaced a view.
+_VIEWS: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+    weakref.WeakKeyDictionary())
 
 
 def _internal_rows(rows, schema: T.StructType) -> list[tuple]:
@@ -62,6 +72,16 @@ def _stamp(path: str) -> tuple:
     return tuple(sorted(out))
 
 
+@dataclass
+class _Held:
+    """A parquet table resolved once: the ``_stamp`` it is keyed by, its
+    DataFrame and, once a list, page or read asks for it, its rows in the
+    driver (False when the table is over the size bound)."""
+    stamp: tuple
+    df: DataFrame
+    rel: ArrowRelation | bool | None = None
+
+
 class Engine:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
@@ -77,15 +97,16 @@ class Engine:
         # rows, or nothing): name -> (schema, internal rows), the store
         # that put/delete update in the driver
         self._rows: dict[str, tuple[T.StructType, list[tuple]]] = {}
+        # a row-held model's rows as an Arrow relation, built on the
+        # first request after a write
+        self._row_rels: dict[str, ArrowRelation] = {}
         # storage backend per runtime model (objectsAPI.ts:169 analog)
         self._storage: dict[str, str] = {}
         # named parameterized automations (UD1, protolib automations)
         self._automations: dict = {}
-        # parquet tables resolved once: name -> (_stamp of the table
-        # path, DataFrame); filled lazily by table()
-        self._held: dict[str, tuple[tuple, DataFrame]] = {}
-        # SQL temp view name -> the relation it was registered from
-        self._views: dict[str, DataFrame] = {}
+        # parquet tables resolved once, filled lazily by table()
+        self._held: dict[str, _Held] = {}
+        self._views = _VIEWS.setdefault(spark, {})
 
     @classmethod
     def local(cls, sf_dir: str, cpus: int | None = None) -> "Engine":
@@ -196,6 +217,7 @@ class Engine:
         """Set a runtime model's store: a DataFrame (bind_to, DataFrame
         bootstrap), or (schema, internal rows) held in the driver."""
         self._runtime_tables[name] = df
+        self._row_rels.pop(name, None)
         if rows is None:
             self._rows.pop(name, None)
         else:
@@ -258,14 +280,24 @@ class Engine:
         via the SAME predicate as the list-query P1 contract
         (listquery._eq_predicate) — a bare str() coercion diverged on
         numeric/boolean ids (read('g', 1) missed a double id the list
-        filter matched: '1' vs cast-string '1.0')."""
+        filter matched: '1' vs cast-string '1.0').
+
+        Over a relation held in the driver (``_relation``) the read is
+        evaluated in the driver when called, over that snapshot, with no
+        Spark job (``listquery.arrow_read``); a read it declines runs on
+        Spark."""
         from .plans.listquery import _eq_predicate
         m = self._models[model_name]
-        df = self.table(model_name)
-        cols = m.visible_columns(df.columns, view)
-        row = (df.filter(_eq_predicate(df, m.id_field, item_id))
-               .select(*cols).limit(1).collect())
-        return row[0].asDict() if row else None
+
+        def on_spark(df):
+            cols = m.visible_columns(df.columns, view)
+            row = (df.filter(_eq_predicate(df, m.id_field, item_id))
+                   .select(*cols).limit(1).collect())
+            return row[0].asDict() if row else None
+
+        return self._answer(model_name,
+                            lambda rel: arrow_read(rel, m, item_id, view),
+                            on_spark)
 
     def delete(self, model_name: str, item_ids: list) -> None:
         """Keyed delete from a runtime model's store (the AutoAPI DELETE
@@ -309,7 +341,9 @@ class Engine:
 
         A row-held runtime model is built into one Arrow-backed local
         relation on the first call after a write, and that relation is
-        returned until the next write.
+        returned until the next write. ``list``, ``page`` and ``read``
+        need no DataFrame for it: they evaluate the held Arrow rows when
+        called (``_relation``).
 
         A parquet table is loaded on first use and held, keyed by the
         inode, size and mtime of its path and, for a directory table, of
@@ -323,8 +357,8 @@ class Engine:
         if name in self._runtime_tables:
             df = self._runtime_tables[name]
             if df is None:
-                df = arrow_relation(self.spark, self._rows[name][1],
-                                    self._rows[name][0])
+                rel = self._relation(name)
+                df = self.spark.createDataFrame(rel.table, rel.schema)
                 self._runtime_tables[name] = df
             return df
         df = self._parquet(name)
@@ -332,19 +366,72 @@ class Engine:
             return load_table(self.spark, self.sf_dir, name)
         return df
 
-    def _parquet(self, name: str) -> DataFrame | None:
-        """The held parquet relation for ``name``; None when its path
-        does not exist."""
+    def _hold(self, name: str) -> _Held | None:
+        """The held parquet table for ``name``; None when its path does
+        not exist."""
         try:
             key = _stamp(table_path(self.sf_dir, name))
         except FileNotFoundError:
             self._held.pop(name, None)
             return None
         held = self._held.get(name)
-        if held is None or held[0] != key:
-            held = (key, load_table(self.spark, self.sf_dir, name))
+        if held is None or held.stamp != key:
+            held = _Held(key, load_table(self.spark, self.sf_dir, name))
             self._held[name] = held
-        return held[1]
+        return held
+
+    def _parquet(self, name: str) -> DataFrame | None:
+        """The held parquet relation for ``name``; None when its path
+        does not exist."""
+        held = self._hold(name)
+        return None if held is None else held.df
+
+    def _relation(self, name: str) -> ArrowRelation | None:
+        """The rows ``name`` holds in the driver, for ``list``, ``page``
+        and ``read``; None sends the request to Spark.
+
+        A row-held runtime model always has them (its rows live in the
+        driver). A ``bind_to`` or DataFrame-declared model never does. A
+        parquet table has them when its optimised plan's estimated size
+        is at most ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own
+        bound for a relation small enough to ship whole): the held
+        DataFrame is collected with ``toArrow()`` on the first request,
+        one Spark job, and kept under the same ``_stamp`` key, so a
+        rewrite reloads both."""
+        if name in self._runtime_tables:
+            if name not in self._rows:
+                return None
+            rel = self._row_rels.get(name)
+            if rel is None:
+                schema, rows = self._rows[name]
+                rel = ArrowRelation(self.spark, arrow_table(rows, schema),
+                                    schema)
+                self._row_rels[name] = rel
+            return rel
+        held = self._hold(name)
+        if held is None:
+            return None
+        if held.rel is None:
+            size = (held.df._jdf.queryExecution().optimizedPlan().stats()
+                    .sizeInBytes())
+            bound = (self.spark._jsparkSession.sessionState().conf()
+                     .autoBroadcastJoinThreshold())
+            held.rel = False
+            if size <= bound:
+                held.rel = ArrowRelation(self.spark, held.df.toArrow(),
+                                         held.df.schema)
+        return held.rel or None
+
+    def _answer(self, name: str, on_arrow, on_spark):
+        """``on_arrow`` over the rows ``name`` holds in the driver; else,
+        or where it raises ``Declined``, ``on_spark`` over ``table()``."""
+        rel = self._relation(name)
+        if rel is not None:
+            try:
+                return on_arrow(rel)
+            except Declined:
+                pass
+        return on_spark(self.table(name))
 
     # -- query surfaces -----------------------------------------------------
 
@@ -372,14 +459,23 @@ class Engine:
         ``order_direction=None`` (not 'asc') so a model's declared
         default_order_direction wins when the caller doesn't specify —
         a literal 'asc' here would shadow EVENTS' newest-first default,
-        the exact trap listquery.ListParams documents."""
+        the exact trap listquery.ListParams documents.
+
+        Over a relation held in the driver (``_relation``) the list is
+        evaluated when called, over that snapshot, and the page comes
+        back as a LocalRelation whose ``collect()`` runs no Spark job
+        (``listquery.arrow_list_query``). A request the driver-side
+        evaluator declines, and every other relation, gets the lazy
+        Spark plan."""
         params = self._params(
             filter=filter, search=search, group=group,
             group_search=group_search, order_by=order_by,
             order_direction=order_direction, page=page,
             items_per_page=items_per_page, all_rows=all_rows, view=view)
-        return list_query(self.table(model_name), self.model(model_name),
-                          params)
+        m = self.model(model_name)
+        return self._answer(model_name,
+                            lambda rel: arrow_list_query(rel, m, params),
+                            lambda df: list_query(df, m, params))
 
     def page(self, model_name: str, *, filter: dict[str, Any] | None = None,
              search: str = "", order_by: str | None = None,
@@ -389,13 +485,16 @@ class Engine:
         """list() plus the pagination envelope
         {itemsPerPage, items, total, page, pages}. Same explicit keywords
         as list() — a misspelled parameter is a TypeError, never silently
-        the default."""
+        the default. A held relation is evaluated as in list(): the total
+        and the page come from one snapshot, with no Spark job."""
         params = self._params(
             filter=filter, search=search, order_by=order_by,
             order_direction=order_direction, page=page,
             items_per_page=items_per_page, all_rows=all_rows, view=view)
-        return list_page(self.table(model_name), self.model(model_name),
-                         params)
+        m = self.model(model_name)
+        return self._answer(model_name,
+                            lambda rel: arrow_list_page(rel, m, params),
+                            lambda df: list_page(df, m, params))
 
     def sql(self, statement: str) -> DataFrame:
         """ANSI SQL over the standard tables AND every registered model,

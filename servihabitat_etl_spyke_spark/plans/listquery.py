@@ -27,8 +27,34 @@ Parity semantics preserved:
 
 Scale notes: pagination is ORDER BY + OFFSET/LIMIT — Spark pushes the limit
 into a TakeOrderedAndProject when the page is small (no global sort
-materialization); deep pages fall back to a single shuffle. No step collects
-to the driver.
+materialization); deep pages fall back to a single shuffle. No step of the
+Spark plan collects to the driver.
+
+Driver-side twin: a relation small enough to be held in the driver as one
+Arrow table (``ArrowRelation``, which ``engine.Engine`` holds) is answered
+by ``arrow_list_query`` / ``arrow_list_page`` / ``arrow_read`` with
+``pyarrow.compute``, and the page comes back as a LocalRelation DataFrame
+whose ``collect()`` runs no Spark job. Each plan step has its Arrow twin
+beside it, mirroring it step for step: Spark's null order (nulls first
+ascending, last descending), NaN above every number and equal to itself,
+-0.0 equal to 0.0, binary string order. A request a twin cannot answer
+exactly raises ``Declined`` and the caller runs the Spark plan:
+
+- a string-coerced comparison (P1 across families, P3 tags, P4 free
+  text, P12 option search) on a column that is neither string nor
+  integral, or a lowercase comparison on a string column holding
+  non-ASCII text (Python's and the JVM's case tables may differ);
+- a P1 same-family numeric comparison on a float, decimal or unsigned
+  column, or with a value that is not a Python int (within long range)
+  or float;
+- a P2 bound of a different type family than its column (numbers
+  against integral or double columns, strings against string columns);
+- a P5 prefix on a non-string or missing column;
+- a sort on a column that is not string, integral, floating, boolean,
+  date or timestamp; group options on a column that is not string,
+  integral, boolean, date or timestamp;
+- a point read whose id column is missing or whose projected row holds a
+  value outside those types or decimal.
 """
 
 from __future__ import annotations
@@ -37,9 +63,14 @@ import re
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional
 
+import math
 import numbers
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import (Column, DataFrame, SparkSession, functions as F,
+                         types as T)
 
 from ..model import Model
 
@@ -92,6 +123,68 @@ class ListParams:
     view: str = "list"
 
 
+class Declined(Exception):
+    """The Arrow evaluator cannot answer this request exactly as the Spark
+    plan would; the caller runs the Spark plan instead."""
+
+
+@dataclass(frozen=True)
+class ArrowRelation:
+    """A relation held in the driver: its rows as one Arrow table, and its
+    Spark schema, which types the LocalRelation a result is wrapped in
+    and ``arrow_read``'s values."""
+    spark: SparkSession
+    table: pa.Table
+    schema: T.StructType
+
+    def wrap(self, table: pa.Table, fields: list[T.StructField]) -> DataFrame:
+        """``table`` as a LocalRelation DataFrame: collecting it runs no
+        Spark job."""
+        return self.spark.createDataFrame(table, T.StructType(fields))
+
+
+def _is_string(typ: pa.DataType) -> bool:
+    return pa.types.is_string(typ) or pa.types.is_large_string(typ)
+
+
+def _is_integral(typ: pa.DataType) -> bool:
+    return pa.types.is_signed_integer(typ)
+
+
+def _as_string(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """Twin of ``cast('string')`` for the columns whose cast Arrow renders
+    byte for byte as Spark does: strings, and integers (plain digits)."""
+    if _is_string(col.type):
+        return col
+    if _is_integral(col.type):
+        return pc.cast(col, pa.string())
+    raise Declined(f"string coercion of a {col.type} column")
+
+
+def _num_cmp(col: pa.ChunkedArray, op: str, value: Any) -> pa.ChunkedArray:
+    """Twin of ``col <op> lit(value)`` within the numeric family, for
+    integral and double columns: an integral column meets a float as a
+    double (Spark widens it), NaN equals NaN and is above every number,
+    and -0.0 equals 0.0."""
+    typ = col.type
+    if (type(value) not in (int, float)
+            or not (_is_integral(typ) or pa.types.is_float64(typ))):
+        raise Declined(f"numeric comparison of {type(value).__name__} "
+                       f"with a {typ} column")
+    if type(value) is int:
+        if not -2 ** 63 <= value < 2 ** 63:
+            raise Declined("integer literal outside long range")
+        if _is_integral(typ):
+            return getattr(pc, op)(col, pa.scalar(value, pa.int64()))
+        value = float(value)
+    col = pc.cast(col, pa.float64(), safe=False)
+    if math.isnan(value):
+        return {"equal": pc.is_nan, "greater_equal": pc.is_nan,
+                "less_equal": pc.is_valid}[op](col)
+    out = getattr(pc, op)(col, value)
+    return pc.or_(out, pc.is_nan(col)) if op == "greater_equal" else out
+
+
 def _eq_predicate(df: DataFrame, key: str, value: Any) -> Column:
     # P1: string-coerced equality (ProtoModel.ts:186-188). JS coercion
     # differs from Python's str() — true -> 'true', integral numbers
@@ -117,6 +210,21 @@ def _eq_predicate(df: DataFrame, key: str, value: Any) -> Column:
     return F.col(key).cast("string") == F.lit(str(value))
 
 
+def _eq_mask(col: pa.ChunkedArray, value: Any) -> pa.ChunkedArray:
+    """Arrow twin of ``_eq_predicate``."""
+    if isinstance(value, bool):
+        if pa.types.is_boolean(col.type):
+            return pc.equal(col, value)
+        return pc.equal(_as_string(col), "true" if value else "false")
+    if isinstance(value, numbers.Number) and (
+            pa.types.is_integer(col.type) or pa.types.is_floating(col.type)
+            or pa.types.is_decimal(col.type)):
+        return _num_cmp(col, "equal", value)
+    if isinstance(value, float) and value.is_integer():
+        return pc.equal(_as_string(col), str(int(value)))
+    return pc.equal(_as_string(col), str(value))
+
+
 def _js_string(df: DataFrame, key: str) -> Column:
     """Column rendered the way JS ``value.toString()`` renders it: an
     INTEGRAL double prints without the trailing '.0' ((10.0).toString()
@@ -135,6 +243,17 @@ def _js_string(df: DataFrame, key: str) -> Column:
     return c.cast("string")
 
 
+def _lower_js(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """Arrow twin of ``F.lower(_js_string(...))`` (and of ``F.lower`` of
+    a string cast, which is the same on these columns): integers render
+    as digits; strings lowercase as the JVM does only while they are
+    ASCII."""
+    if _is_string(col.type) and not pc.all(pc.string_is_ascii(col),
+                                           min_count=0).as_py():
+        raise Declined("lowercasing non-ASCII text")
+    return pc.ascii_lower(_as_string(col))
+
+
 def _range_predicate(key: str, bounds: dict[str, Any]) -> Column:
     # P2: inclusive bounds; either side optional (ProtoModel.ts:174-185)
     pred = F.lit(True)
@@ -143,6 +262,27 @@ def _range_predicate(key: str, bounds: dict[str, Any]) -> Column:
     if "to" in bounds and bounds["to"] is not None:
         pred = pred & (F.col(key) <= F.lit(bounds["to"]))
     return pred
+
+
+def _range_filter(table: pa.Table, key: str,
+                  bounds: dict[str, Any]) -> pa.Table:
+    """Arrow twin of filtering on ``_range_predicate``: a numeric bound on
+    an integral or double column, a string bound on a string column
+    (binary order, as Spark compares strings)."""
+    col = table[key]
+    for side, op in (("from", "greater_equal"), ("to", "less_equal")):
+        bound = bounds.get(side)
+        if bound is None:
+            continue
+        if isinstance(bound, str) and _is_string(col.type):
+            mask = getattr(pc, op)(col, bound)
+        elif isinstance(bound, numbers.Number) and not isinstance(bound, bool):
+            mask = _num_cmp(col, op, bound)
+        else:
+            raise Declined(f"range bound {bound!r} on a {col.type} column")
+        table = table.filter(mask)
+        col = table[key]
+    return table
 
 
 def apply_filters(df: DataFrame, params: ListParams,
@@ -174,6 +314,28 @@ def apply_filters(df: DataFrame, params: ListParams,
         else:
             df = df.filter(_eq_predicate(df, key, value))
     return df
+
+
+def _arrow_filters(table: pa.Table, params: ListParams,
+                   model: Model | None = None) -> pa.Table:
+    """Arrow twin of ``apply_filters``."""
+    if params.path_prefix is not None:
+        if (params.path_column not in table.column_names
+                or not _is_string(table[params.path_column].type)):
+            raise Declined("path prefix on a non-string column")
+        table = table.filter(pc.starts_with(table[params.path_column],
+                                            params.path_prefix))
+    for key, value in params.filter.items():
+        if key not in table.column_names or (
+                model is not None and _is_secret(model, key)):
+            table = table.slice(0, 0)
+        elif value is None:
+            table = table.filter(pc.is_null(table[key]))
+        elif isinstance(value, dict):
+            table = _range_filter(table, key, value)
+        else:
+            table = table.filter(_eq_mask(table[key], value))
+    return table
 
 
 def _is_secret(model: Model, key: str) -> bool:
@@ -208,6 +370,25 @@ def apply_search(df: DataFrame, model: Model, search: str) -> DataFrame:
                 free_text.lower())
         df = df.filter(pred)
     return df
+
+
+def _arrow_search(table: pa.Table, model: Model, search: str) -> pa.Table:
+    """Arrow twin of ``apply_search``."""
+    tags, free_text = parse_search(search)
+    for key, value in tags.items():
+        if key in table.column_names and not _is_secret(model, key):
+            table = table.filter(pc.equal(_lower_js(table[key]),
+                                          value.lower()))
+        else:
+            table = table.slice(0, 0)
+    if free_text:
+        cols = model.searchable_columns(table.column_names)
+        if not cols:
+            return table.slice(0, 0)
+        needle = free_text.lower()
+        table = table.filter(reduce(pc.or_kleene, (
+            pc.match_substring(_lower_js(table[c]), needle) for c in cols)))
+    return table
 
 
 def apply_projection(df: DataFrame, model: Model, view: str) -> DataFrame:
@@ -246,6 +427,49 @@ def apply_order(df: DataFrame, model: Model, params: ListParams,
     return df.orderBy(*primary, *tiebreak)
 
 
+def _check_sortable(typ: pa.DataType) -> None:
+    if not (_is_string(typ) or _is_integral(typ) or pa.types.is_floating(typ)
+            or pa.types.is_boolean(typ) or pa.types.is_date32(typ)
+            or pa.types.is_timestamp(typ)):
+        raise Declined(f"sort on a {typ} column")
+
+
+def _sort_indices(keys: list) -> pa.Array:
+    """Stable sort indices over ``(array, order)`` keys."""
+    names = [f"k{i}" for i in range(len(keys))]
+    return pc.sort_indices(
+        pa.table([k for k, _ in keys], names=names),
+        sort_keys=[(n, o) for n, (_, o) in zip(names, keys)])
+
+
+def _sort_keys(col: pa.ChunkedArray, order: str) -> list:
+    """``col``'s Arrow sort keys in Spark's order for one direction: a
+    validity key puts nulls first ascending and last descending, a NaN
+    key puts NaN above every number, then the values (Arrow compares
+    strings bytewise, as Spark does, and -0.0 equal to 0.0)."""
+    _check_sortable(col.type)
+    keys = [(pc.is_valid(col), order)]
+    if pa.types.is_floating(col.type):
+        keys.append((pc.fill_null(pc.is_nan(col), False), order))
+    return keys + [(col, order)]
+
+
+def _arrow_order(table: pa.Table, model: Model, params: ListParams,
+                 visible: list[str]) -> pa.Array | None:
+    """Arrow twin of ``apply_order``: the row indices in page order, or
+    None when the request has no order."""
+    order_by = params.order_by or model.default_order_by
+    direction = (params.order_direction or model.default_order_direction
+                 or "asc").lower()
+    keys = []
+    if order_by is not None and order_by in visible:
+        keys = _sort_keys(table[order_by],
+                          "descending" if direction == "desc" else "ascending")
+    if model.id_field in table.column_names and model.id_field != order_by:
+        keys += _sort_keys(table[model.id_field], "ascending")
+    return _sort_indices(keys) if keys else None
+
+
 def paginate(df: DataFrame, params: ListParams) -> DataFrame:
     if params.all:
         return df
@@ -267,6 +491,24 @@ def group_options(df: DataFrame, key: str, search: str | None = None,
     return out.orderBy("option").limit(limit)
 
 
+def _arrow_group_options(rel: ArrowRelation, key: str,
+                         search: str | None = None,
+                         limit: int = 100) -> DataFrame:
+    """Arrow twin of ``group_options``. Floating columns decline: Spark's
+    distinct folds -0.0 into 0.0."""
+    col = rel.table[key]
+    _check_sortable(col.type)
+    if pa.types.is_floating(col.type):
+        raise Declined("group options on a floating column")
+    opts = col.unique()
+    if search:
+        opts = opts.filter(pc.starts_with(_lower_js(opts), search.lower()))
+    order = _sort_indices(_sort_keys(opts, "ascending"))[:limit]
+    f = rel.schema[key]
+    return rel.wrap(pa.table({"option": opts.take(order)}),
+                    [T.StructField("option", f.dataType, f.nullable)])
+
+
 def _filtered(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
     """The request's filters, then its free-text search."""
     df = apply_filters(df, params, model)
@@ -282,6 +524,30 @@ def _page(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
     df = apply_order(df, model, params,
                      visible=model.visible_columns(df.columns, params.view))
     return paginate(apply_projection(df, model, params.view), params)
+
+
+def _arrow_filtered(table: pa.Table, model: Model,
+                    params: ListParams) -> pa.Table:
+    """Arrow twin of ``_filtered``."""
+    table = _arrow_filters(table, params, model)
+    if params.search:
+        table = _arrow_search(table, model, params.search)
+    return table
+
+
+def _arrow_page(rel: ArrowRelation, table: pa.Table, model: Model,
+                params: ListParams) -> DataFrame:
+    """Arrow twin of ``_page``: order, project, paginate (only the page's
+    rows are taken)."""
+    visible = model.visible_columns(table.column_names, params.view)
+    rows = _arrow_order(table, model, params, visible)
+    if rows is None:
+        rows = pa.array(range(table.num_rows), pa.int64())
+    if not params.all:
+        n = max(1, int(params.items_per_page))
+        rows = rows[max(0, int(params.page)) * n:][:n]
+    return rel.wrap(table.select(visible).take(rows),
+                    [rel.schema[c] for c in visible])
 
 
 def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
@@ -301,6 +567,22 @@ def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
     return _page(_filtered(df, model, params), model, params)
 
 
+def arrow_list_query(rel: ArrowRelation, model: Model,
+                     params: ListParams) -> DataFrame:
+    """``list_query`` evaluated in the driver over a held relation; the
+    page is a LocalRelation. Raises ``Declined`` where it cannot match
+    the Spark plan exactly."""
+    if params.group:
+        declared = {f.name for f in model.group_indexes()}
+        if (params.group not in declared
+                or params.group not in rel.table.column_names):
+            return rel.wrap(pa.table({"option": pa.array([], pa.string())}),
+                            [T.StructField("option", T.StringType())])
+        return _arrow_group_options(rel, params.group, params.group_search)
+    return _arrow_page(rel, _arrow_filtered(rel.table, model, params), model,
+                       params)
+
+
 def list_page(df: DataFrame, model: Model, params: ListParams) -> dict[str, Any]:
     """Pagination envelope ``{itemsPerPage, items, total, page, pages}``
     (O3; generateApi.ts:194-201). ``items`` stays a DataFrame — the caller
@@ -315,3 +597,51 @@ def list_page(df: DataFrame, model: Model, params: ListParams) -> dict[str, Any]
         "page": params.page,
         "pages": -(-total // n),
     }
+
+
+def arrow_list_page(rel: ArrowRelation, model: Model,
+                    params: ListParams) -> dict[str, Any]:
+    """``list_page`` evaluated in the driver over a held relation; raises
+    ``Declined`` as ``arrow_list_query`` does."""
+    filtered = _arrow_filtered(rel.table, model, params)
+    total = filtered.num_rows
+    n = max(1, int(params.items_per_page))
+    return {
+        "itemsPerPage": n,
+        "items": _arrow_page(rel, filtered, model, params),
+        "total": total,
+        "page": params.page,
+        "pages": -(-total // n),
+    }
+
+
+def _internal(col: pa.ChunkedArray) -> list:
+    """A column's values as Spark's internal Python values (dates as epoch
+    days, timestamps as epoch micros) for ``StructType.fromInternal``."""
+    typ = col.type
+    if pa.types.is_date32(typ):
+        col = pc.cast(col, pa.int32())
+    elif pa.types.is_timestamp(typ):
+        col = pc.cast(pc.cast(col, pa.timestamp("us", typ.tz)), pa.int64())
+    elif not (_is_string(typ) or _is_integral(typ)
+              or pa.types.is_floating(typ) or pa.types.is_boolean(typ)
+              or pa.types.is_decimal(typ)):
+        raise Declined(f"reading a {typ} value")
+    return col.to_pylist()
+
+
+def arrow_read(rel: ArrowRelation, model: Model, item_id: Any,
+               view: str = "read") -> dict[str, Any] | None:
+    """The first row whose id matches ``item_id`` by ``_eq_predicate``,
+    projected to ``view`` as a dict equal to Spark's ``Row.asDict()``, or
+    None; raises ``Declined`` as ``arrow_list_query`` does."""
+    if model.id_field not in rel.table.column_names:
+        raise Declined("point read without an id column")
+    cols = model.visible_columns(rel.table.column_names, view)
+    hit = rel.table.filter(_eq_mask(rel.table[model.id_field], item_id))
+    hit = hit.select(cols).slice(0, 1)
+    if hit.num_rows == 0:
+        return None
+    schema = T.StructType([rel.schema[c] for c in cols])
+    return schema.fromInternal(
+        tuple(_internal(hit[c])[0] for c in cols)).asDict()

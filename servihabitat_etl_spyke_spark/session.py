@@ -11,9 +11,11 @@ also matter on a real cluster:
   we allow are vectorized pandas UDFs).
 - Session timezone pinned to UTC so results are reproducible and comparable
   against the DuckDB oracle (DuckDB timestamps are UTC-naive).
-- ``nanosAsLong`` on, so every parquet read of a TIMESTAMP(NANOS) file
-  works (Spark's reader rejects the type otherwise); see
-  ``catalog.NANOS_TS_COLUMNS``.
+- ``nanosAsLong`` on, so a parquet read of a file with a TIMESTAMP(NANOS)
+  column works (Spark's reader rejects the type otherwise); see
+  ``catalog.NANOS_TS_COLUMNS``. The shipped ``events.parquet`` files
+  store ``ts`` as ``timestamp[us]``, which Spark reads as
+  TimestampNTZType without it.
 """
 
 from __future__ import annotations

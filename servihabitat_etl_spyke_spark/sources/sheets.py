@@ -25,17 +25,22 @@ def string_schema(columns: Sequence[str]) -> T.StructType:
     return T.StructType([T.StructField(c, T.StringType()) for c in columns])
 
 
-def arrow_relation(spark: SparkSession, rows: Sequence[tuple],
-                   schema: T.StructType) -> DataFrame:
+def arrow_table(rows: Sequence[tuple], schema: T.StructType) -> pa.Table:
     """Rows of internal values (strings as-is; dates as epoch days and
     timestamps as epoch micros, what ``StructType.toInternal`` gives) as
-    an Arrow-backed local relation: a LocalRelation plan with no pickled
-    Python RDD behind it, so querying it never starts a Python worker."""
+    one Arrow table typed by ``schema``."""
     cols = list(zip(*rows)) or [()] * len(schema.fields)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=to_arrow_type(f.dataType))
          for c, f in zip(cols, schema.fields)], names=schema.names)
-    return spark.createDataFrame(table, schema=schema)
+
+
+def arrow_relation(spark: SparkSession, rows: Sequence[tuple],
+                   schema: T.StructType) -> DataFrame:
+    """``arrow_table`` as an Arrow-backed local relation: a LocalRelation
+    plan with no pickled Python RDD behind it, so querying it never
+    starts a Python worker."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema=schema)
 
 
 def sheet_rows(rows: Sequence[Sequence[str]]

@@ -27,9 +27,11 @@ TOPIC_FMT = "notifications/{model}/{action}/"
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based Structured Streaming source over the events parquet.
 
-    Schema comes from a batch peek (file sources need an explicit schema);
-    the TIMESTAMP(NANOS) column is normalized exactly as the batch
-    ``catalog.load_table`` does, so stream and batch twins agree.
+    Schema comes from a batch peek (file sources need an explicit schema).
+    The shipped files store ``ts`` as ``timestamp[us]`` (TimestampNTZType,
+    converted below); a file written with a TIMESTAMP(NANOS) ``ts`` reads
+    as long and is normalized exactly as the batch ``catalog.load_table``
+    does, so stream and batch twins agree.
     """
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema

@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from servihabitat_etl_spyke_spark.plans import listquery as LQ  # noqa: E402
 from servihabitat_etl_spyke_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -61,3 +62,39 @@ def kill_next_parquet_write(monkeypatch, tmp_path):
         monkeypatch.setattr(DataFrameWriter, "parquet", killed)
 
     return arm
+
+
+class ListPath:
+    """One way to answer a list query: ``"spark"`` runs the Spark plan
+    (``list_query`` / ``list_page``); ``"arrow"`` runs the driver-side
+    evaluator over the relation's rows collected with ``toArrow()`` and,
+    where it declines, the Spark plan, as ``Engine`` does. ``declined``
+    counts those fallbacks."""
+
+    def __init__(self, name: str):
+        self.name = name
+        self.declined = 0
+
+    def _run(self, spark_fn, arrow_fn, df, model, params):
+        if self.name == "spark":
+            return spark_fn(df, model, params)
+        rel = LQ.ArrowRelation(df.sparkSession, df.toArrow(), df.schema)
+        try:
+            return arrow_fn(rel, model, params)
+        except LQ.Declined:
+            self.declined += 1
+            return spark_fn(df, model, params)
+
+    def list(self, df, model, params):
+        return self._run(LQ.list_query, LQ.arrow_list_query, df, model,
+                         params)
+
+    def page(self, df, model, params):
+        return self._run(LQ.list_page, LQ.arrow_list_page, df, model, params)
+
+
+@pytest.fixture(scope="session")
+def list_paths():
+    """A factory of fresh ``[ListPath("spark"), ListPath("arrow")]``: a
+    list-query test runs each of its cases through both."""
+    return lambda: [ListPath("spark"), ListPath("arrow")]

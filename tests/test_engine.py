@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pytest
 
 from servihabitat_etl_spyke_spark.engine import Engine
@@ -485,9 +488,11 @@ def test_runtime_model_rows_are_type_checked(spark, sf_dir):
 def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
                                                  monkeypatch):
     """An unchanged parquet table is loaded once however many requests
-    read it; after a rewrite (Spark overwrite of a directory table, an
-    in-place rewrite of a single-file table, an append into a partition
-    directory) the next list, read and sql all see the new rows."""
+    read it, and its rows are collected into the driver (the Arrow hold
+    that list and read evaluate) once; after a rewrite (Spark overwrite
+    of a directory table, an in-place rewrite of a single-file table, an
+    append into a partition directory) both are loaded again and the
+    next list, read and sql all see the new rows."""
     import os
 
     import pyarrow as pa
@@ -503,6 +508,15 @@ def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
         return real(spark_, sf, name)
 
     monkeypatch.setattr(engine_mod, "load_table", counting)
+    # each Arrow hold of a parquet table: the table's name
+    holds = []
+    real_rel = engine_mod.ArrowRelation
+
+    def holding(spark_, table, schema):
+        holds.append(loads[-1])
+        return real_rel(spark_, table, schema)
+
+    monkeypatch.setattr(engine_mod, "ArrowRelation", holding)
     d_path, f_path = tmp_path / "dir_t.parquet", tmp_path / "file_t.parquet"
     spark.createDataFrame([(1, "a"), (2, "b")], "wid long, v string") \
         .write.parquet(str(d_path))
@@ -520,11 +534,11 @@ def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
 
     for _ in range(10):
         e.list("dir_t", items_per_page=1).collect()
-    assert loads == ["dir_t"]
+    assert loads == ["dir_t"] and holds == ["dir_t"]
     assert seen("dir_t", 1) == ([(1, "a"), (2, "b")], {"wid": 1, "v": "a"},
                                 [(1, "a"), (2, "b")])
     assert seen("file_t", 1) == ([(1, "x")], {"wid": 1, "v": "x"}, [(1, "x")])
-    assert sorted(loads) == ["dir_t", "file_t"]
+    assert sorted(loads) == ["dir_t", "file_t"] == sorted(holds)
 
     spark.createDataFrame([(3, "c")], "wid long, v string") \
         .write.mode("overwrite").parquet(str(d_path))
@@ -533,6 +547,7 @@ def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
     assert seen("file_t", 8) == ([(7, "y"), (8, "z")], {"wid": 8, "v": "z"},
                                  [(7, "y"), (8, "z")])
     assert sorted(loads) == ["dir_t", "dir_t", "file_t", "file_t"]
+    assert sorted(holds) == sorted(loads)
 
     # an append inside an existing partition directory leaves the table
     # directory's own mtime as it was; it is still seen
@@ -542,9 +557,150 @@ def test_parquet_tables_are_held_until_rewritten(spark, tmp_path,
     e.register_model(model("part_t", FieldSpec("wid", is_id=True),
                            FieldSpec("v"), default_order_by="wid"))
     assert e.list("part_t", all_rows=True).count() == 1
+    assert holds[-1] == "part_t"
     top = os.stat(p_path).st_mtime_ns
     pq.write_table(pa.table({"wid": [2], "v": ["b"]}),
                    str(p_path / "p=0" / "appended.parquet"))
     assert os.stat(p_path).st_mtime_ns == top
     assert e.list("part_t", all_rows=True).count() == 2
+    assert holds[-2:] == ["part_t", "part_t"]
     assert e.sql("SELECT count(*) FROM part_t").collect()[0][0] == 2
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark):
+    """Yields a list that, after the block, holds the ids of the Spark
+    jobs the block ran: a job group is set around it and read through
+    ``statusTracker`` once the listener bus has caught up."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_held_relations_answer_without_spark_jobs(spark, tmp_path):
+    """list, page and read over a held relation (a small parquet table, a
+    row-held runtime model) run no Spark job and give the Spark plan's
+    answers; the first hold of a parquet table is one job (its
+    ``toArrow``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from servihabitat_etl_spyke_spark.plans.listquery import (
+        ListParams, list_page, list_query)
+    pq.write_table(pa.table({"hid": [3, 1, 2], "v": ["c", "a", "c"]}),
+                   str(tmp_path / "held_t.parquet"))
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("held_t", FieldSpec("hid", is_id=True),
+                           FieldSpec("v", group_index=True),
+                           default_order_by="hid"))
+    e.create_model({"name": "rows_t", "keys": {
+        "rid": {"modifiers": [{"name": "id"}]},
+        "v": {"modifiers": [{"name": "groupIndex"}]}}},
+        data=[{"rid": "b", "v": "x"}, {"rid": "a", "v": "y"}])
+    e.table("held_t")           # the load and its footer job come first
+    with _spark_jobs(spark) as first:
+        e.list("held_t").collect()
+    assert len(first) == 1
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    for name, rid in (("held_t", 2), ("rows_t", "a")):
+        with _spark_jobs(spark) as jobs:
+            listed = rows(e.list(name, order_by="v", order_direction="desc"))
+            env = e.page(name, items_per_page=1, page=1)
+            env["items"] = rows(env["items"])
+            options = rows(e.list(name, group="v"))
+            hit = e.read(name, rid)
+        assert jobs == [], name
+        df, m = e.table(name), e.model(name)
+        want_env = list_page(df, m, ListParams(items_per_page=1, page=1))
+        want_env["items"] = rows(want_env["items"])
+        assert listed == rows(list_query(df, m, ListParams(
+            order_by="v", order_direction="desc")))
+        assert env == want_env
+        assert options == rows(list_query(df, m, ListParams(group="v")))
+        assert hit == df.filter(df[m.id_field] == rid).collect()[0].asDict()
+
+
+_DECLINED = {
+    # P1 across families on a double column: its cast to string is Java's
+    "string_coercion": ({"filter": {"d": "1.5"}}, [1]),
+    # P3 lowercases a string column holding non-ASCII text
+    "non_ascii_lowercase": ({"search": "s:É"}, [1]),
+    # P1 within the numeric family on a float column
+    "numeric_column_type": ({"filter": {"f": 2.5}}, [2]),
+    # P2 with a string bound on a long column
+    "range_bound_family": ({"filter": {"did": {"from": "2"}}}, [2]),
+    # O1 on a decimal column
+    "sort_column_type": ({"order_by": "dec", "order_direction": "desc"},
+                         [2, 1]),
+    # P12 on a double column (Spark's distinct folds -0.0 into 0.0)
+    "group_options_floating": ({"group": "d"}, [1.5, 2.0]),
+    # a point read whose row holds an array
+    "read_value_type": (None, {"did": 1, "arr": [1]}),
+}
+
+
+@pytest.mark.parametrize("rule", sorted(_DECLINED))
+def test_declined_request_runs_on_spark(spark, tmp_path, rule):
+    """Each rule under which the driver-side evaluator declines: the
+    request runs Spark jobs even though the table is held, and returns
+    the Spark plan's answer."""
+    import datetime as dt
+    from decimal import Decimal
+    spark.createDataFrame(
+        [(1, 1.5, 1.5, Decimal("1.50"), "é", dt.date(2024, 1, 1), [1]),
+         (2, 2.0, 2.5, Decimal("2.00"), "b", dt.date(2024, 1, 2), [2])],
+        "did long, d double, f float, dec decimal(10,2), s string, "
+        "dt date, arr array<int>"
+    ).write.parquet(str(tmp_path / "dec_t.parquet"))
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("dec_t", FieldSpec("did", is_id=True),
+                           FieldSpec("d", group_index=True),
+                           default_order_by="did"))
+    assert e.list("dec_t").count() == 2       # the hold
+    kw, want = _DECLINED[rule]
+    with _spark_jobs(spark) as jobs:
+        if kw is None:
+            got = e.read("dec_t", 1, view="x")
+            got = {k: got[k] for k in want}
+        else:
+            got = [r[0] for r in e.list("dec_t", **kw).collect()]
+    assert jobs, rule
+    assert got == want
+
+
+def test_prefix_on_non_string_column_runs_on_spark(spark, list_paths):
+    """P5 declines on a non-string path column: the Spark plan answers
+    (Spark casts the column to a string)."""
+    from servihabitat_etl_spyke_spark.plans.listquery import ListParams
+    df = spark.createDataFrame([(10,), (2,), (12,)], "pid long")
+    m = model("pfx", FieldSpec("pid", is_id=True))
+    params = ListParams(path_prefix="1", path_column="pid")
+    on_spark, on_arrow = list_paths()
+    got = [r.pid for r in on_arrow.list(df, m, params).collect()]
+    assert on_arrow.declined == 1
+    assert got == [r.pid for r in on_spark.list(df, m, params).collect()]
+    assert got == [10, 12]
+
+
+def test_sql_views_are_shared_by_the_engines_of_a_session(spark, tmp_path):
+    """Temp views belong to the session: two Engines on it that declare
+    same-named models each see their own rows, however their SQL calls
+    alternate."""
+    a, b = Engine(spark, str(tmp_path)), Engine(spark, str(tmp_path))
+    spec = {"name": "shared_v", "keys": {"k": {"modifiers": [{"name": "id"}]}}}
+    a.create_model(spec, data=[{"k": "from-a"}])
+    b.create_model(spec, data=[{"k": "from-b"}])
+    for _ in range(2):
+        for e, want in ((a, "from-a"), (b, "from-b")):
+            assert [r.k for r in e.sql("SELECT k FROM shared_v").collect()
+                    ] == [want]

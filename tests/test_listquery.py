@@ -1,5 +1,6 @@
 """Unit tests for the list-query planner semantics (SURVEY.md §2.2, §2.5,
-§4.3 parity traps)."""
+§4.3 parity traps). Every list-query case runs through both the Spark plan
+and the driver-side Arrow evaluator (the ``list_paths`` fixture)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ from pyspark.sql import functions as F
 
 from servihabitat_etl_spyke_spark.model import FieldSpec, model
 from servihabitat_etl_spyke_spark.plans.listquery import (
-    ListParams, list_page, list_query, parse_search)
+    ListParams, parse_search)
 
 M = model(
     "m",
@@ -43,77 +44,89 @@ def test_parse_search_freetext_only():
     assert tags == {} and free == "hello world"
 
 
-def test_eq_filter_string_coerced(spark):
+def test_eq_filter_string_coerced(spark, list_paths):
     df = make_df(spark)
-    out = list_query(df, M, ListParams(filter={"status": "pending"}))
-    assert {r.id for r in out.collect()} == {"1", "3"}
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(filter={"status": "pending"}))
+        assert {r.id for r in out.collect()} == {"1", "3"}, lq.name
 
 
-def test_tag_search_case_insensitive_value(spark):
+def test_tag_search_case_insensitive_value(spark, list_paths):
     df = make_df(spark)
-    out = list_query(df, M, ListParams(search="status:PENDING"))
-    assert {r.id for r in out.collect()} == {"1", "3"}
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(search="status:PENDING"))
+        assert {r.id for r in out.collect()} == {"1", "3"}, lq.name
 
 
-def test_tag_on_missing_column_drops_all(spark):
+def test_tag_on_missing_column_drops_all(spark, list_paths):
     # parity trap §4.3.3: unknown tag key -> zero rows
     df = make_df(spark)
-    out = list_query(df, M, ListParams(search="nosuchkey:x"))
-    assert out.count() == 0
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(search="nosuchkey:x"))
+        assert out.count() == 0, lq.name
 
 
-def test_free_text_excludes_search_false(spark):
+def test_free_text_excludes_search_false(spark, list_paths):
     # 'findme' only appears in notes which is search(false)
     df = make_df(spark)
-    out = list_query(df, M, ListParams(search="findme"))
-    assert out.count() == 0
-    out2 = list_query(df, M, ListParams(search="tower"))
-    assert {r.id for r in out2.collect()} == {"1", "3"}
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(search="findme"))
+        assert out.count() == 0, lq.name
+        out2 = lq.list(df, M, ListParams(search="tower"))
+        assert {r.id for r in out2.collect()} == {"1", "3"}, lq.name
 
 
-def test_projection_masks_secret(spark):
+def test_projection_masks_secret(spark, list_paths):
     df = make_df(spark)
-    out = list_query(df, M, ListParams())
-    assert "secret_col" not in out.columns
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams())
+        assert "secret_col" not in out.columns, lq.name
 
 
-def test_pagination_envelope(spark):
+def test_pagination_envelope(spark, list_paths):
     df = make_df(spark)
-    env = list_page(df, M, ListParams(items_per_page=3, page=1,
-                                      order_by="id"))
-    assert env["total"] == 4 and env["pages"] == 2
-    assert [r.id for r in env["items"].collect()] == ["4"]
+    for lq in list_paths():
+        env = lq.page(df, M, ListParams(items_per_page=3, page=1,
+                                        order_by="id"))
+        assert env["total"] == 4 and env["pages"] == 2, lq.name
+        assert [r.id for r in env["items"].collect()] == ["4"], lq.name
 
 
-def test_items_per_page_floor_one(spark):
+def test_items_per_page_floor_one(spark, list_paths):
     df = make_df(spark)
-    env = list_page(df, M, ListParams(items_per_page=0, order_by="id"))
-    assert env["itemsPerPage"] == 1
-    assert env["items"].count() == 1
+    for lq in list_paths():
+        env = lq.page(df, M, ListParams(items_per_page=0, order_by="id"))
+        assert env["itemsPerPage"] == 1, lq.name
+        assert env["items"].count() == 1, lq.name
 
 
-def test_all_bypasses_paging(spark):
+def test_all_bypasses_paging(spark, list_paths):
     df = make_df(spark)
-    out = list_query(df, M, ListParams(items_per_page=1, all=True))
-    assert out.count() == 4
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(items_per_page=1, all=True))
+        assert out.count() == 4, lq.name
 
 
-def test_group_options_mode(spark):
+def test_group_options_mode(spark, list_paths):
     df = make_df(spark)
-    out = list_query(df, M, ListParams(group="status"))
-    assert {r.option for r in out.collect()} == {"pending", "in-progress", "done"}
-    out2 = list_query(df, M, ListParams(group="status", group_search="p"))
-    assert {r.option for r in out2.collect()} == {"pending"}
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(group="status"))
+        assert {r.option for r in out.collect()} == {
+            "pending", "in-progress", "done"}, lq.name
+        out2 = lq.list(df, M, ListParams(group="status", group_search="p"))
+        assert {r.option for r in out2.collect()} == {"pending"}, lq.name
 
 
-def test_range_filter_inclusive(spark):
+def test_range_filter_inclusive(spark, list_paths):
     df = spark.createDataFrame([(i, float(i)) for i in range(10)], ["id", "v"])
     m = model("r", FieldSpec("id", is_id=True))
-    out = list_query(df, m, ListParams(filter={"v": {"from": 2, "to": 5}}, all=True))
-    assert sorted(r.id for r in out.collect()) == [2, 3, 4, 5]
+    for lq in list_paths():
+        out = lq.list(df, m, ListParams(filter={"v": {"from": 2, "to": 5}},
+                                        all=True))
+        assert sorted(r.id for r in out.collect()) == [2, 3, 4, 5], lq.name
 
 
-def test_default_order_direction_from_model(spark):
+def test_default_order_direction_from_model(spark, list_paths):
     """The model's declared defaultOrderDirection must win when the
     request doesn't send one (``req.query.orderDirection ??
     defaultOrderDirection``, generateApi.ts:182) — the events
@@ -122,30 +135,31 @@ def test_default_order_direction_from_model(spark):
     m = model("ev", FieldSpec("id", is_id=True),
               default_order_by="id", default_order_direction="desc")
     df = spark.createDataFrame([(1,), (2,), (3,)], ["id"])
-    out = list_query(df, m, ListParams())
-    assert [r.id for r in out.collect()] == [3, 2, 1]
-    # an explicit request direction still overrides the model default
-    out2 = list_query(df, m, ListParams(order_direction="asc"))
-    assert [r.id for r in out2.collect()] == [1, 2, 3]
+    for lq in list_paths():
+        out = lq.list(df, m, ListParams())
+        assert [r.id for r in out.collect()] == [3, 2, 1], lq.name
+        # an explicit request direction still overrides the model default
+        out2 = lq.list(df, m, ListParams(order_direction="asc"))
+        assert [r.id for r in out2.collect()] == [1, 2, 3], lq.name
 
 
-def test_group_options_only_for_declared_indexes(spark):
+def test_group_options_only_for_declared_indexes(spark, list_paths):
     """Parity with db.getGroupIndexOptions (db.ts:291-305): options exist
     only for DECLARED group indexes — an undeclared key (here a secret
     column) enumerates nothing instead of leaking its distinct values."""
     df = make_df(spark)
-    out = list_query(df, M, ListParams(group="secret_col"))
-    assert out.count() == 0
-    assert out.columns == ["option"]
-    # and the options index reflects the whole table: request filters
-    # don't narrow it (the reference group path returns before filters)
-    out2 = list_query(df, M, ListParams(group="status",
-                                        filter={"id": "1"}))
-    assert {r.option for r in out2.collect()} == {
-        "pending", "in-progress", "done"}
+    for lq in list_paths():
+        out = lq.list(df, M, ListParams(group="secret_col"))
+        assert out.count() == 0, lq.name
+        assert out.columns == ["option"], lq.name
+        # and the options index reflects the whole table: request filters
+        # don't narrow it (the reference group path returns before filters)
+        out2 = lq.list(df, M, ListParams(group="status", filter={"id": "1"}))
+        assert {r.option for r in out2.collect()} == {
+            "pending", "in-progress", "done"}, lq.name
 
 
-def test_eq_filter_native_bool_and_number(spark):
+def test_eq_filter_native_bool_and_number(spark, list_paths):
     """JS-coercion parity: filter True must match a boolean column
     (data.toString() 'true', not Python's 'True') and integer 1 must
     match a 1.0 double (JS prints integral doubles without '.0')."""
@@ -153,23 +167,24 @@ def test_eq_filter_native_bool_and_number(spark):
         [(1, True, 1.0), (2, False, 1.5), (3, True, 2.0)],
         "id long, flag boolean, v double")
     m = model("t", FieldSpec("id", is_id=True))
-    got = list_query(df, m, ListParams(filter={"flag": True}, all=True))
-    assert sorted(r.id for r in got.collect()) == [1, 3]
-    got2 = list_query(df, m, ListParams(filter={"v": 1}, all=True))
-    assert [r.id for r in got2.collect()] == [1]
-    # cross-family keeps the loose string coercion: '2' matches long 2
-    got3 = list_query(df, m, ListParams(filter={"id": "2"}, all=True))
-    assert [r.id for r in got3.collect()] == [2]
+    for lq in list_paths():
+        got = lq.list(df, m, ListParams(filter={"flag": True}, all=True))
+        assert sorted(r.id for r in got.collect()) == [1, 3], lq.name
+        got2 = lq.list(df, m, ListParams(filter={"v": 1}, all=True))
+        assert [r.id for r in got2.collect()] == [1], lq.name
+        # cross-family keeps the loose string coercion: '2' matches long 2
+        got3 = lq.list(df, m, ListParams(filter={"id": "2"}, all=True))
+        assert [r.id for r in got3.collect()] == [2], lq.name
+        assert lq.declined == 0
 
 
-def test_r6_listquery_guards(spark):
+def test_r6_listquery_guards(spark, list_paths):
     """Round-6 review fixes: secret columns are unprobeable through tag
     search AND equality filters; a None filter value matches NULL rows
     (not the text 'None'); integral doubles render JS-style in search;
-    unordered pagination falls back to stable id order."""
-    from servihabitat_etl_spyke_spark.model import FieldSpec, model
-    from servihabitat_etl_spyke_spark.plans.listquery import (
-        ListParams, list_query)
+    unordered pagination falls back to stable id order. The two searches
+    that render a double column as a string are the Arrow evaluator's
+    declines: they run on Spark."""
     m = model("things",
               FieldSpec("id", is_id=True),
               FieldSpec("token", secret=True),
@@ -180,30 +195,32 @@ def test_r6_listquery_guards(spark):
          (3, "s3cret", 7.0, "x")],
         "id long, token string, price double, comment string")
 
-    # secret probing: tag search and equality filter both return ZERO
-    # rows regardless of whether the guess is right
-    assert list_query(df, m, ListParams(search="token:s3cret")).count() == 0
-    assert list_query(df, m, ListParams(filter={"token": "s3cret"})).count() == 0
+    for lq in list_paths():
+        # secret probing: tag search and equality filter both return ZERO
+        # rows regardless of whether the guess is right
+        assert lq.list(df, m, ListParams(search="token:s3cret")).count() == 0
+        assert lq.list(df, m, ListParams(
+            filter={"token": "s3cret"})).count() == 0
 
-    # None filter value matches NULL rows, never the literal text 'None'
-    got = [r.id for r in
-           list_query(df, m, ListParams(filter={"comment": None})).collect()]
-    assert got == [2]
+        # None filter value matches NULL rows, never the literal text 'None'
+        got = [r.id for r in lq.list(df, m, ListParams(
+            filter={"comment": None})).collect()]
+        assert got == [2], lq.name
 
-    # JS number rendering: 'price:10' matches the 10.0 double
-    assert [r.id for r in
-            list_query(df, m, ListParams(search="price:10")).collect()] == [1]
-    # free text '10.5' still matches the non-integral double
-    assert [r.id for r in
-            list_query(df, m, ListParams(search="10.5")).collect()] == [2]
+        # JS number rendering: 'price:10' matches the 10.0 double
+        assert [r.id for r in lq.list(df, m, ListParams(
+            search="price:10")).collect()] == [1], lq.name
+        # free text '10.5' still matches the non-integral double
+        assert [r.id for r in lq.list(df, m, ListParams(
+            search="10.5")).collect()] == [2], lq.name
 
-    # no default order -> stable id fallback, so pages never overlap
-    page0 = [r.id for r in
-             list_query(df, m, ListParams(items_per_page=2)).collect()]
-    page1 = [r.id for r in
-             list_query(df, m, ListParams(items_per_page=2,
-                                          page=1)).collect()]
-    assert page0 == [1, 2] and page1 == [3]
+        # no default order -> stable id fallback, so pages never overlap
+        page0 = [r.id for r in lq.list(df, m, ListParams(
+            items_per_page=2)).collect()]
+        page1 = [r.id for r in lq.list(df, m, ListParams(
+            items_per_page=2, page=1)).collect()]
+        assert page0 == [1, 2] and page1 == [3], lq.name
+        assert lq.declined == (2 if lq.name == "arrow" else 0)
 
 
 def test_js_string_rendering_parity_domain(spark):

@@ -349,3 +349,122 @@ def test_batch_writer_chunks_cover_rows_in_order(n, size):
     assert all(len(b) <= size for b in sent)
     assert all(len(b) == size for b in sent[:-1])  # only the tail is short
     assert [r["i"] for b in sent for r in b] == list(range(n))
+
+
+# -- list queries: Spark plan vs the driver-side Arrow evaluator ----------------
+
+_NAN = float("nan")
+_ASCII_STRINGS = ("", "a", "A", "ab", "b", "B1", "1", "10", "2", "true",
+                  "a b")
+_OTHER_STRINGS = ("é", "Éa", "ß", "Ω", "\U0001F600", "ǅ")
+_DOUBLES = (_NAN, 0.0, -0.0, 1.0, -1.0, 1.5, 2.0, 10.0, -2.5, 1e20,
+            float("inf"))
+_DATES = tuple(datetime(2024, 1, d).date() for d in (1, 2, 3))
+_TIMESTAMPS = (datetime(2024, 1, 1), datetime(2024, 1, 1, 0, 0, 0, 5),
+               datetime(1969, 12, 31, 23, 59))
+_COLUMNS = ("id", "s", "d", "n", "b", "dt", "ts", "sec")
+_BOUNDS = st.sampled_from((None, -1, 0, 1, 1.5, _NAN, -0.0, "1", "a", "B",
+                           "é", True))
+_FILTER_VALUE = st.one_of(
+    st.sampled_from((None, 0, 1, -1, 2, 1.0, 1.5, -0.0, _NAN, 10 ** 20,
+                     True, False, "1", "a", "A", "true", "1.0", "", "é")),
+    st.fixed_dictionaries({}, optional={"from": _BOUNDS, "to": _BOUNDS}))
+
+
+def _opt(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+@st.composite
+def _list_relations(draw):
+    """(rows, DDL schema, model): up to 10 rows with unique ids (long or
+    string, non-ASCII included), and columns holding nulls, NaN, ±0.0,
+    integral and non-integral doubles, ASCII-only or non-ASCII strings,
+    dates, timestamps and booleans."""
+    strings = _ASCII_STRINGS + (() if draw(st.booleans()) else _OTHER_STRINGS)
+    if draw(st.booleans()):
+        ids, id_type = draw(st.lists(st.integers(-20, 20), unique=True,
+                                     max_size=10)), "long"
+    else:
+        ids, id_type = draw(st.lists(st.text("aAbé1\U0001F600", max_size=3),
+                                     unique=True, max_size=10)), "string"
+    rows = [(i, draw(_opt(st.sampled_from(strings))),
+             draw(_opt(st.sampled_from(_DOUBLES))),
+             draw(_opt(st.integers(-3, 3))), draw(_opt(st.booleans())),
+             draw(_opt(st.sampled_from(_DATES))),
+             draw(_opt(st.sampled_from(_TIMESTAMPS))),
+             draw(_opt(st.sampled_from(("x", "y"))))) for i in ids]
+    from servihabitat_etl_spyke_spark.model import FieldSpec, model
+    m = model("p", FieldSpec("id", is_id=True),
+              FieldSpec("s", group_index=True),
+              FieldSpec("d", searchable=False, group_index=True),
+              FieldSpec("n", group_index=True),
+              FieldSpec("b", searchable=False, group_index=True),
+              FieldSpec("dt", searchable=False, group_index=True,
+                        hidden_views=frozenset({"read"})),
+              FieldSpec("ts", searchable=False),
+              FieldSpec("sec", secret=True),
+              default_order_by=draw(st.sampled_from((None, "n", "d"))))
+    schema = (f"id {id_type}, s string, d double, n long, b boolean, "
+              "dt date, ts timestamp, sec string")
+    return rows, schema, m
+
+
+_LIST_PARAMS = st.builds(
+    lambda **kw: kw,
+    filter=st.dictionaries(st.sampled_from(_COLUMNS + ("nosuch",)),
+                           _FILTER_VALUE, max_size=2),
+    search=st.sampled_from(("", "a", "A", "1", "s:a", "s:A", "n:1", "id:1",
+                            "b:true", "nosuch:x", "sec:x", 's:"a b"', "é",
+                            "s:é", "1 s:b")),
+    order_by=st.sampled_from((None,) + _COLUMNS + ("nosuch",)),
+    order_direction=st.sampled_from((None, "asc", "desc", "DESC")),
+    page=st.integers(0, 3), items_per_page=st.integers(-1, 4),
+    all=st.booleans(), view=st.sampled_from(("list", "read")),
+    group=st.sampled_from((None, None, None) + _COLUMNS + ("nosuch",)),
+    group_search=st.sampled_from((None, "", "a", "1", "t", "é")))
+
+
+def _plain(value):
+    """Rows, envelopes and errors in a form ``==`` compares exactly: a
+    float by ``repr`` (NaN equal to NaN, -0.0 apart from 0.0)."""
+    if isinstance(value, float):
+        return repr(value)
+    if isinstance(value, dict):
+        return {k: _plain(v) for k, v in value.items()}
+    if isinstance(value, (list, tuple)):
+        return [_plain(v) for v in value]
+    if hasattr(value, "collect"):          # a DataFrame
+        return [value.schema.simpleString(),
+                [_plain(tuple(r)) for r in value.collect()]]
+    return value
+
+
+def _outcome(fn):
+    try:
+        return _plain(fn())
+    except Exception as e:     # both paths must fail alike
+        return ("error", type(e).__name__)
+
+
+@given(rel=_list_relations(), kw=_LIST_PARAMS)
+@settings(max_examples=30, deadline=None)
+def test_list_query_arrow_twin_matches_spark(spark, list_paths, rel, kw):
+    """The driver-side evaluator gives the Spark plan's answer: the same
+    ordered rows and schema from a list, the same envelope from a page,
+    the same group options. A request it declines falls back to Spark
+    (``ListPath``), so a decline is never a difference."""
+    from hypothesis import event
+
+    from servihabitat_etl_spyke_spark.plans.listquery import ListParams
+    rows, schema, m = rel
+    df = spark.createDataFrame(rows, schema)
+    on_spark, on_arrow = list_paths()
+    params = ListParams(**kw)
+    for run in ("list", "page"):
+        if run == "page" and params.group:
+            continue
+        want = _outcome(lambda: getattr(on_spark, run)(df, m, params))
+        got = _outcome(lambda: getattr(on_arrow, run)(df, m, params))
+        assert got == want, (run, params)
+    event(f"declined {on_arrow.declined} of 2")
