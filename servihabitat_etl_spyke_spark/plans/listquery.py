@@ -34,10 +34,10 @@ Driver-side twin: a relation small enough to be held in the driver as one
 Arrow table (``ArrowRelation``, which ``engine.Engine`` holds) is answered
 by ``arrow_list_query`` / ``arrow_list_page`` / ``arrow_read`` with
 ``pyarrow.compute``, and the page comes back as a LocalRelation DataFrame
-whose ``collect()`` runs no Spark job. Each plan step has its Arrow twin
-beside it, mirroring it step for step: Spark's null order (nulls first
-ascending, last descending), NaN above every number and equal to itself,
--0.0 equal to 0.0, binary string order. A request a twin cannot answer
+whose ``collect()`` runs no Spark job. Each plan step but P5 has its
+Arrow twin beside it, mirroring it step for step: Spark's null order
+(nulls first ascending, last descending), NaN above every number and
+equal to itself, -0.0 equal to 0.0, binary string order. A request a twin cannot answer
 exactly raises ``Declined`` and the caller runs the Spark plan:
 
 - a string-coerced comparison (P1 across families, P3 tags, P4 free
@@ -49,7 +49,7 @@ exactly raises ``Declined`` and the caller runs the Spark plan:
   or float;
 - a P2 bound of a different type family than its column (numbers
   against integral or double columns, strings against string columns);
-- a P5 prefix on a non-string or missing column;
+- a P5 path prefix (P5 has no twin: no ``Engine`` request sets one);
 - a sort on a column that is not string, integral, floating, boolean,
   date or timestamp; group options on a column that is not string,
   integral, boolean, date or timestamp;
@@ -320,11 +320,7 @@ def _arrow_filters(table: pa.Table, params: ListParams,
                    model: Model | None = None) -> pa.Table:
     """Arrow twin of ``apply_filters``."""
     if params.path_prefix is not None:
-        if (params.path_column not in table.column_names
-                or not _is_string(table[params.path_column].type)):
-            raise Declined("path prefix on a non-string column")
-        table = table.filter(pc.starts_with(table[params.path_column],
-                                            params.path_prefix))
+        raise Declined("P5 has no twin: no Engine request sets it")
     for key, value in params.filter.items():
         if key not in table.column_names or (
                 model is not None and _is_secret(model, key)):

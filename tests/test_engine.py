@@ -678,18 +678,56 @@ def test_declined_request_runs_on_spark(spark, tmp_path, rule):
     assert got == want
 
 
-def test_prefix_on_non_string_column_runs_on_spark(spark, list_paths):
-    """P5 declines on a non-string path column: the Spark plan answers
-    (Spark casts the column to a string)."""
-    from servihabitat_etl_spyke_spark.plans.listquery import ListParams
-    df = spark.createDataFrame([(10,), (2,), (12,)], "pid long")
-    m = model("pfx", FieldSpec("pid", is_id=True))
-    params = ListParams(path_prefix="1", path_column="pid")
-    on_spark, on_arrow = list_paths()
-    got = [r.pid for r in on_arrow.list(df, m, params).collect()]
-    assert on_arrow.declined == 1
-    assert got == [r.pid for r in on_spark.list(df, m, params).collect()]
-    assert got == [10, 12]
+def test_tables_over_the_hold_cap_run_on_spark(spark, tmp_path,
+                                               monkeypatch):
+    """A parquet table over ``HOLD_MAX_BYTES`` is answered by Spark: one
+    over the cap on disk is never collected; one under it on disk but
+    over it as Arrow is collected once, on its first request, and
+    dropped."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from servihabitat_etl_spyke_spark import engine as engine_mod
+    from servihabitat_etl_spyke_spark.plans.listquery import (
+        ListParams, list_query)
+    path = tmp_path / "big_t.parquet"
+    # one repeated long string: a few KB on disk, 200 KB as Arrow
+    pq.write_table(pa.table({"bid": list(range(200)),
+                             "v": ["x" * 1000] * 200}), str(path))
+    on_disk = os.path.getsize(path)
+    collects = []
+    frame = type(spark.range(0))
+    real = frame.toArrow
+
+    def counting(df):
+        table = real(df)
+        collects.append(table.nbytes)
+        return table
+
+    monkeypatch.setattr(frame, "toArrow", counting)
+    m = model("big_t", FieldSpec("bid", is_id=True), FieldSpec("v"),
+              default_order_by="bid")
+    for cap, want_collects in ((on_disk - 1, 0), (on_disk, 1)):
+        monkeypatch.setattr(engine_mod, "HOLD_MAX_BYTES", cap)
+        collects.clear()
+        e = Engine(spark, str(tmp_path))
+        e.register_model(m)
+        for _ in range(2):
+            with _spark_jobs(spark) as jobs:
+                got = [r.bid for r in e.list(
+                    "big_t", order_by="bid", order_direction="desc",
+                    items_per_page=3).collect()]
+                hit = e.read("big_t", 7)
+            assert jobs, cap
+            assert got == [199, 198, 197] == [
+                r.bid for r in list_query(e.table("big_t"), m, ListParams(
+                    order_by="bid", order_direction="desc",
+                    items_per_page=3)).collect()]
+            assert hit == {"bid": 7, "v": "x" * 1000}
+        assert len(collects) == want_collects, cap
+        assert all(n > cap for n in collects)
 
 
 def test_sql_views_are_shared_by_the_engines_of_a_session(spark, tmp_path):
