@@ -18,6 +18,7 @@ ETL / streaming entry points — all over one SparkSession.
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass
 from typing import Any
 
@@ -518,12 +519,37 @@ class Engine:
         again only when its relation changed (a write, a re-declaration,
         a rewritten parquet table, a backing file that appeared), so SQL
         sees what ``list`` sees. A name with no backing file yet has no
-        view."""
+        view.
+
+        Only the names the statement contains as a whole word, in any
+        case (so a backquoted name counts), are resolved and registered:
+        a statement reaches a view only by naming it, so a write to a
+        model the statement does not name costs it nothing. A view that
+        an earlier statement created over an Engine view reads that view
+        as it was last registered.
+
+        A held relation (a parquet table, or a runtime model declared from
+        rows) that Spark reads as at most one partition, which is every
+        small table on ``local[1]``, is registered as ``coalesce(1)``.
+        Its output partitioning is then a single partition, which already
+        satisfies every distribution an aggregate, a sort, a window or a
+        sort-merge join requires, so SQL over it plans no exchange and
+        runs as one stage. The partition count comes from Spark's own
+        plan of the relation, once per registration. A relation read as
+        more than one partition, and a ``bind_to`` or DataFrame-declared
+        model (a lazy plan, whose partitions AQE would have to run
+        upstream stages to count), keeps its plan."""
         for name in dict.fromkeys((*TABLES, *self._models)):
-            df = (self.table(name) if name in self._runtime_tables
-                  else self._parquet(name))
+            if not re.search(rf"(?<!\w){re.escape(name)}(?!\w)", statement,
+                             re.IGNORECASE):
+                continue
+            if name in self._runtime_tables:
+                df, held = self.table(name), name in self._rows
+            else:
+                df, held = self._parquet(name), True
             if df is not None and self._views.get(name) is not df:
-                df.createOrReplaceTempView(name)
+                one = held and df._jdf.rdd().getNumPartitions() <= 1
+                (df.coalesce(1) if one else df).createOrReplaceTempView(name)
                 self._views[name] = df
         return self.spark.sql(statement)
 

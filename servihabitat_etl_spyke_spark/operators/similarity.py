@@ -951,9 +951,8 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
     return _cross_cell_topk(_ivf_cell_scored(q, members, k), k, with_score)
 
 
-def _incremental_candidates(old_index: DataFrame, new_batch: DataFrame,
-                            centroids: list[list[float]],
-                            k: int, n_probe: int, id_col: str,
+def _incremental_candidates(old_index: DataFrame, new_index: DataFrame,
+                            k: int, id_col: str,
                             vec_col: str) -> DataFrame:
     """The LAZY fresh-candidate plan of :func:`knn_graph_ivf_incremental`
     (split out so the plan gate can count the quiet-day scan shape
@@ -963,12 +962,12 @@ def _incremental_candidates(old_index: DataFrame, new_batch: DataFrame,
     Both sides read cells and probe lists off :func:`ivf_index` rows:
     the stored index for the old side (no UDF over stored vectors — the
     broadcast-semi-join prunes below land on a plain table column,
-    nothing sits between them and the scan), and one index build over
-    the new batch."""
+    nothing sits between them and the scan), and the new batch's index,
+    which the operator materializes first: it feeds the probe stream,
+    the membership union and both cell lists, and each consumer would
+    otherwise re-run the probe UDF."""
     q_old_all, members_old = _cell_sides(old_index, id_col, vec_col)
-    q_new, members_new = _cell_sides(
-        ivf_index(new_batch, centroids, n_probe, id_col, vec_col),
-        id_col, vec_col)
+    q_new, members_new = _cell_sides(new_index, id_col, vec_col)
 
     # NEW anchors: full candidate set of their probed cells (old + new
     # members) — a brand-new query has no stored edges to merge. The
@@ -1138,12 +1137,13 @@ def knn_graph_ivf_incremental(old_index: DataFrame,
     # rows pass through UNCHANGED (top-k of stored-only candidates IS
     # the stored ranking). The window exchange is therefore
     # O(touched * k) per batch, never the full stored graph.
-    # fresh is consumed TWICE (touched-id list + merge union) and is
-    # small by construction (<= touched * k rows of ids+scores) — one
-    # eager localCheckpoint runs the candidate GEMMs exactly once
-    # instead of re-executing the whole scoring subplan per consumer
-    fresh = _incremental_candidates(old_index, new_batch, centroids, k,
-                                    n_probe, id_col,
+    # the new batch's index (batch-sized) and fresh (<= touched * k
+    # rows of ids+scores) are each read by several consumers — one
+    # eager localCheckpoint apiece runs the probe UDF and the candidate
+    # GEMMs exactly once instead of once per consumer
+    new_index = ivf_index(new_batch, centroids, n_probe, id_col,
+                          vec_col).localCheckpoint()
+    fresh = _incremental_candidates(old_index, new_index, k, id_col,
                                     vec_col).localCheckpoint()
     touched = fresh.select("query_id").distinct()
     stored = old_graph.select("query_id", "neighbor_id", "score")

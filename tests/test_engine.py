@@ -742,3 +742,143 @@ def test_sql_views_are_shared_by_the_engines_of_a_session(spark, tmp_path):
         for e, want in ((a, "from-a"), (b, "from-b")):
             assert [r.k for r in e.sql("SELECT k FROM shared_v").collect()
                     ] == [want]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _one_partition_tables(spark, tmp_path):
+    """An Engine over two single-file parquet tables (``sq_a``: id, grp,
+    v; ``sq_b``: grp, label), which Spark reads as one partition each,
+    plus the same files as plain temp views ``plain_a`` / ``plain_b``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    n = 60
+    pq.write_table(pa.table({"id": list(range(n)),
+                             "grp": [f"g{i % 4}" for i in range(n)],
+                             "v": [(i * 37) % 11 for i in range(n)]}),
+                   str(tmp_path / "sq_a.parquet"))
+    pq.write_table(pa.table({"grp": ["g0", "g1", "g2", "g5"],
+                             "label": ["zero", "one", "two", "five"]}),
+                   str(tmp_path / "sq_b.parquet"))
+    for name, plain in (("sq_a", "plain_a"), ("sq_b", "plain_b")):
+        df = spark.read.parquet(str(tmp_path / f"{name}.parquet"))
+        assert df.rdd.getNumPartitions() == 1
+        df.createOrReplaceTempView(plain)
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("sq_a", FieldSpec("id", is_id=True),
+                           FieldSpec("grp"), FieldSpec("v")))
+    e.register_model(model("sq_b", FieldSpec("grp", is_id=True),
+                           FieldSpec("label")))
+    return e
+
+
+_GROUPED = ("SELECT grp, count(*) AS n, max(v) AS top FROM {t} "
+            "WHERE id % {m} = 0 GROUP BY grp ORDER BY grp")
+
+
+def test_grouped_sql_over_one_partition_tables_runs_one_job(spark,
+                                                            tmp_path):
+    """Grouped and ordered SQL over a held relation that Spark reads as
+    one partition (a single-file parquet table, a row-held runtime model)
+    plans no exchange and runs exactly one Spark job, where a plan with
+    an exchange before the aggregate and the sort runs one per stage."""
+    e = _one_partition_tables(spark, tmp_path)
+    # one row: a row-held model's local relation is read as
+    # min(rows, cores) partitions, and this session has several cores
+    e.create_model({"name": "sq_rows", "keys": {
+        "id": {"type": "number", "params": ["int"],
+               "modifiers": [{"name": "id"}]},
+        "grp": {"type": "string"}, "v": {"type": "number",
+                                         "params": ["int"]}}},
+        data=[{"id": 0, "grp": "g0", "v": 5}])
+    e.table("sq_a")             # the load and its footer job come first
+    e.table("sq_rows").createOrReplaceTempView("plain_rows")
+    for name, plain, mod in (("sq_a", "plain_a", 2), ("sq_a", "plain_a", 3),
+                             ("sq_rows", "plain_rows", 1)):
+        with _spark_jobs(spark) as jobs:
+            df = e.sql(_GROUPED.format(t=name, m=mod))
+            got = df.collect()
+        assert len(jobs) == 1, (name, mod)
+        assert "Exchange" not in _plan(df), _plan(df)
+        assert got == spark.sql(_GROUPED.format(t=plain, m=mod)).collect()
+
+
+def test_sql_over_a_multi_partition_table_keeps_its_exchange(spark,
+                                                             tmp_path):
+    """A directory table of several files, which Spark reads as more
+    than one partition, keeps its plan (the exchange stays, so the read
+    keeps its parallelism) and answers as the plain relation does."""
+    path = str(tmp_path / "sq_wide.parquet")
+    spark.range(200).selectExpr("id", "concat('g', id % 4) AS grp",
+                                "id % 7 AS v") \
+        .repartition(4).write.parquet(path)
+    plain = spark.read.parquet(path)
+    assert plain.rdd.getNumPartitions() > 1
+    plain.createOrReplaceTempView("plain_wide")
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("sq_wide", FieldSpec("id", is_id=True),
+                           FieldSpec("grp"), FieldSpec("v")))
+    df = e.sql(_GROUPED.format(t="sq_wide", m=3))
+    assert "Exchange" in _plan(df)
+    assert df.collect() == spark.sql(
+        _GROUPED.format(t="plain_wide", m=3)).collect()
+
+
+_SHAPES = {
+    "group_order": (_GROUPED.format(t="{a}", m=1), True),
+    "window": ("SELECT id, grp, rank() OVER (PARTITION BY grp ORDER BY v, "
+               "id) AS r FROM {a}", False),
+    "count_distinct": ("SELECT grp, count(DISTINCT v) AS d FROM {a} "
+                       "GROUP BY grp", False),
+    "order_limit": ("SELECT id, v FROM {a} ORDER BY v DESC, id LIMIT 7",
+                    True),
+    "join": ("SELECT a.id, b.label FROM {a} a JOIN {b} b ON a.grp = b.grp",
+             False),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_one_partition_views_answer_as_the_plain_relation(spark, tmp_path,
+                                                          shape):
+    """Grouped, windowed, distinct, top-k and joined SQL over the
+    one-partition views return the rows the plain relations give (in
+    order where the statement orders)."""
+    e = _one_partition_tables(spark, tmp_path)
+    stmt, ordered = _SHAPES[shape]
+    got = e.sql(stmt.format(a="sq_a", b="sq_b")).collect()
+    want = spark.sql(stmt.format(a="plain_a", b="plain_b")).collect()
+    assert got
+    if not ordered:
+        got, want = sorted(got), sorted(want)
+    assert got == want
+    if shape != "join":         # a join of small tables broadcasts
+        assert "Exchange" not in _plan(e.sql(stmt.format(a="sq_a")))
+
+
+def test_sql_resolves_only_the_names_it_contains(spark, tmp_path,
+                                                 monkeypatch):
+    """After a write, SQL that does not name the written model builds no
+    relation for it and loads no other table; the next statement that
+    names it (in any case, backquoted or not) sees the write."""
+    from servihabitat_etl_spyke_spark import engine as engine_mod
+    e = _one_partition_tables(spark, tmp_path)
+    e.create_model({"name": "sq_tix", "keys": {
+        "tid": {"modifiers": [{"name": "id"}]}, "s": {}}},
+        data=[{"tid": "a", "s": "open"}])
+    assert e.sql("SELECT count(*) FROM sq_tix").first()[0] == 1
+    e.put("sq_tix", [{"tid": "b", "s": "done"}])
+    built, loads = [], []
+    real_table, real_load = Engine.table, engine_mod.load_table
+    monkeypatch.setattr(Engine, "table", lambda self, name: (
+        built.append(name), real_table(self, name))[1])
+    monkeypatch.setattr(engine_mod, "load_table", lambda spark_, sf, name: (
+        loads.append(name), real_load(spark_, sf, name))[1])
+    # sq_tix_old contains the model's name only as part of a word
+    assert e.sql("SELECT count(*) AS sq_tix_old FROM sq_a").first()[0] == 60
+    assert built == [] and loads == ["sq_a"]
+    for stmt in ("SELECT s FROM SQ_TIX ORDER BY tid",
+                 "SELECT s FROM `Sq_Tix` ORDER BY tid"):
+        assert [r.s for r in e.sql(stmt).collect()] == ["open", "done"]
+    assert built == ["sq_tix", "sq_tix"] and loads == ["sq_a"]

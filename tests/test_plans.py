@@ -571,11 +571,12 @@ def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     old-anchor probe stream on the affected-cell list AND the
     membership stream on the cells new queries probe (without the
     latter, every daily run hash-exchanges the entire old corpus even
-    for a tiny batch). The old side reads the persisted ivf_index, so
-    the only pandas-UDF evals are the new batch's index build: 11
-    ArrowEvalPython nodes, all of them over the new batch (its one
-    probe UDF, repeated through subplan duplication). Whole plan free
-    of cartesian/nested-loop joins.
+    for a tiny batch). The old side reads the persisted ivf_index and
+    the new batch's index is built (one probe-UDF pass) and
+    materialized before the candidate plan, so that plan evaluates no
+    pandas UDF (built inside it, the new batch's one probe UDF was
+    repeated through subplan duplication, 11 times). Whole plan free of
+    cartesian/nested-loop joins.
     """
     from pyspark.sql import functions as F
 
@@ -587,17 +588,20 @@ def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     new = emb.filter(F.col("vec_id") % 5 == 0)
     cents = SIM.kmeans_fit(old, k=4, iters=3)
     idx = SIM.ivf_index(old, cents, n_probe=2).localCheckpoint()
-    df = SIM._incremental_candidates(idx, new, cents, 5, 2,
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("simple")
+    new_idx = SIM.ivf_index(new, cents, n_probe=2)
+    assert new_idx._jdf.queryExecution().explainString(mode).count(
+        "ArrowEvalPython") == 1
+    df = SIM._incremental_candidates(idx, new_idx.localCheckpoint(), 5,
                                      "vec_id", "embedding")
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("simple"))
+    plan = df._jdf.queryExecution().explainString(mode)
     semi_lines = [ln for ln in plan.splitlines()
                   if "BroadcastHashJoin" in ln and "LeftSemi" in ln]
     assert len(semi_lines) >= 2, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("ArrowEvalPython") == 11, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
 
 
 def test_ivf_index_build_is_a_pure_map(spark, sf_dir):
