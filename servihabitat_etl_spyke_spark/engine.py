@@ -480,10 +480,11 @@ class Engine:
 
         Over a relation held in the driver (``_relation``) the list is
         evaluated when called, over that snapshot, and the page comes
-        back as a LocalRelation whose ``collect()`` runs no Spark job
-        (``listquery.arrow_list_query``). A request the driver-side
-        evaluator declines, and every other relation, gets the lazy
-        Spark plan."""
+        back as a ``listquery.ArrowPage``: a DataFrame whose
+        ``collect()`` and ``count()`` are answered in Python, with no
+        Spark job (``listquery.arrow_list_query``). A request the
+        driver-side evaluator declines, and every other relation, gets
+        the lazy Spark plan."""
         params = self._params(
             filter=filter, search=search, group=group,
             group_search=group_search, order_by=order_by,
@@ -503,7 +504,8 @@ class Engine:
         {itemsPerPage, items, total, page, pages}. Same explicit keywords
         as list() — a misspelled parameter is a TypeError, never silently
         the default. A held relation is evaluated as in list(): the total
-        and the page come from one snapshot, with no Spark job."""
+        and the page come from one snapshot, with no Spark job, and the
+        page's ``collect()`` is answered in Python."""
         params = self._params(
             filter=filter, search=search, order_by=order_by,
             order_direction=order_direction, page=page,
@@ -528,27 +530,27 @@ class Engine:
         an earlier statement created over an Engine view reads that view
         as it was last registered.
 
-        A held relation (a parquet table, or a runtime model declared from
-        rows) that Spark reads as at most one partition, which is every
-        small table on ``local[1]``, is registered as ``coalesce(1)``.
-        Its output partitioning is then a single partition, which already
-        satisfies every distribution an aggregate, a sort, a window or a
-        sort-merge join requires, so SQL over it plans no exchange and
-        runs as one stage. The partition count comes from Spark's own
-        plan of the relation, once per registration. A relation read as
-        more than one partition, and a ``bind_to`` or DataFrame-declared
-        model (a lazy plan, whose partitions AQE would have to run
-        upstream stages to count), keeps its plan."""
+        A runtime model declared from rows, whose rows sit in the driver,
+        and a parquet table that Spark reads as at most one partition,
+        which is every small table on ``local[1]``, are registered as
+        ``coalesce(1)``. The view's output partitioning is then a single
+        partition, which already satisfies every distribution an
+        aggregate, a sort, a window or a sort-merge join requires, so SQL
+        over it plans no exchange and runs as one stage. A parquet
+        table's partition count comes from Spark's own plan of the
+        relation, once per registration. A parquet table read as more
+        than one partition, and a ``bind_to`` or DataFrame-declared model
+        (a lazy plan, whose partitions AQE would have to run upstream
+        stages to count), keeps its plan."""
         for name in dict.fromkeys((*TABLES, *self._models)):
             if not re.search(rf"(?<!\w){re.escape(name)}(?!\w)", statement,
                              re.IGNORECASE):
                 continue
-            if name in self._runtime_tables:
-                df, held = self.table(name), name in self._rows
-            else:
-                df, held = self._parquet(name), True
+            runtime = name in self._runtime_tables
+            df = self.table(name) if runtime else self._parquet(name)
             if df is not None and self._views.get(name) is not df:
-                one = held and df._jdf.rdd().getNumPartitions() <= 1
+                one = (name in self._rows if runtime
+                       else df._jdf.rdd().getNumPartitions() <= 1)
                 (df.coalesce(1) if one else df).createOrReplaceTempView(name)
                 self._views[name] = df
         return self.spark.sql(statement)

@@ -903,7 +903,10 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
     centroid matrix rides in the pandas UDF closure — no join, no
     shuffle); the only shuffle is the equi-join on centroid_id, whose
     skew is the cluster-size distribution (for pathological clusters,
-    split cells or salt the join — see operators/scale.py).
+    split cells or salt the join — see operators/scale.py). An index
+    built from ``corpus`` is materialized once (an eager
+    ``localCheckpoint``, one Spark job at call time), since both sides
+    of the join read it: the probe UDF makes one pass over the corpus.
 
     Scoring is a per-cell numpy GEMM (cogrouped applyInPandas): every
     probed (query, cell) pair ships the query vector ONCE, each cell
@@ -946,7 +949,8 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
         cents = (centroids if centroids is not None
                  else kmeans_fit(corpus, k=kc, iters=iters,
                                  id_col=id_col, vec_col=vec_col))
-        index = ivf_index(corpus, cents, n_probe, id_col, vec_col)
+        index = ivf_index(corpus, cents, n_probe, id_col,
+                          vec_col).localCheckpoint()
     q, members = _cell_sides(index, id_col, vec_col)
     return _cross_cell_topk(_ivf_cell_scored(q, members, k), k, with_score)
 

@@ -33,12 +33,15 @@ Spark plan collects to the driver.
 Driver-side twin: a relation small enough to be held in the driver as one
 Arrow table (``ArrowRelation``, which ``engine.Engine`` holds) is answered
 by ``arrow_list_query`` / ``arrow_list_page`` / ``arrow_read`` with
-``pyarrow.compute``, and the page comes back as a LocalRelation DataFrame
-whose ``collect()`` runs no Spark job. Each plan step but P5 has its
-Arrow twin beside it, mirroring it step for step: Spark's null order
-(nulls first ascending, last descending), NaN above every number and
-equal to itself, -0.0 equal to 0.0, binary string order. A request a twin cannot answer
-exactly raises ``Declined`` and the caller runs the Spark plan:
+``pyarrow.compute``, and the page comes back as an ``ArrowPage``: a
+DataFrame whose ``collect()``, ``count()``, ``schema`` and ``columns``
+are answered in Python, with no Spark job, and whose JVM plan (a
+LocalRelation of the page) is built only for any other use. Each plan
+step but P5 has its Arrow twin beside it, mirroring it step for step:
+Spark's null order (nulls first ascending, last descending), NaN above
+every number and equal to itself, -0.0 equal to 0.0, binary string
+order. A request a twin cannot answer exactly raises ``Declined`` and
+the caller runs the Spark plan:
 
 - a string-coerced comparison (P1 across families, P3 tags, P4 free
   text, P12 option search) on a column that is neither string nor
@@ -65,12 +68,14 @@ from typing import Any, Optional
 
 import math
 import numbers
-from functools import reduce
+from functools import cached_property, reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import (Column, DataFrame, SparkSession, functions as F,
                          types as T)
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..model import Model
 
@@ -128,19 +133,85 @@ class Declined(Exception):
     plan would; the caller runs the Spark plan instead."""
 
 
+class ArrowPage(ClassicDataFrame):
+    """A result evaluated in the driver: a classic DataFrame holding its
+    rows as an Arrow table, with their Spark schema.
+
+    ``collect()``, ``count()``, ``schema`` and ``columns`` are answered
+    from the table in Python. Every other use goes through the JVM plan
+    (``_jdf``), the LocalRelation ``createDataFrame(table, schema)``,
+    built once on the first such use, so it behaves as that relation
+    does. ``collect()`` gives the rows the LocalRelation's collect
+    gives: each column as Spark's internal values, then the schema's
+    ``fromInternal``, which is classic collect's own conversion. A
+    column whose Arrow type is not the one ``createDataFrame`` sends for
+    its Spark type, or whose type has no conversion here, is collected
+    by the JVM instead. The JVM is asked nothing else, except for the
+    session's ``binaryAsBytes`` when a column holds binary values."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic __new__ calls __init__ with a JVM plan
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table,
+                 schema: T.StructType):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+        self._page_schema = schema
+
+    @cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table,
+                                             self._page_schema)._jdf
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._page_schema
+
+    @property
+    def columns(self) -> list[str]:
+        return [f.name for f in self._page_schema.fields]
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def collect(self) -> list[T.Row]:
+        fields = self._page_schema.fields
+        if not fields:          # the zip below would drop every row
+            return super().collect()
+        try:
+            cols = [_column_internal(col, f.dataType, self._binary)
+                    for col, f in zip(self._table.columns, fields)]
+        except Declined:
+            return super().collect()
+        return [self._page_schema.fromInternal(row) for row in zip(*cols)]
+
+    def _binary(self):
+        """Classic collect's binary values: ``bytes``, or ``bytearray``
+        when the session sets ``binaryAsBytes`` off."""
+        if self._session.conf.get(
+                "spark.sql.execution.pyspark.binaryAsBytes",
+                "true").lower() == "true":
+            return None
+        return lambda v: None if v is None else bytearray(v)
+
+
 @dataclass(frozen=True)
 class ArrowRelation:
     """A relation held in the driver: its rows as one Arrow table, and its
-    Spark schema, which types the LocalRelation a result is wrapped in
-    and ``arrow_read``'s values."""
+    Spark schema, which types the pages cut from it and ``arrow_read``'s
+    values."""
     spark: SparkSession
     table: pa.Table
     schema: T.StructType
 
     def wrap(self, table: pa.Table, fields: list[T.StructField]) -> DataFrame:
-        """``table`` as a LocalRelation DataFrame: collecting it runs no
-        Spark job."""
-        return self.spark.createDataFrame(table, T.StructType(fields))
+        """``table`` as an ``ArrowPage``: its collect is answered in
+        Python, with no Spark job."""
+        return ArrowPage(self.spark, table, T.StructType(fields))
 
 
 def _is_string(typ: pa.DataType) -> bool:
@@ -566,7 +637,7 @@ def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
 def arrow_list_query(rel: ArrowRelation, model: Model,
                      params: ListParams) -> DataFrame:
     """``list_query`` evaluated in the driver over a held relation; the
-    page is a LocalRelation. Raises ``Declined`` where it cannot match
+    page is an ``ArrowPage``. Raises ``Declined`` where it cannot match
     the Spark plan exactly."""
     if params.group:
         declared = {f.name for f in model.group_indexes()}
@@ -624,6 +695,59 @@ def _internal(col: pa.ChunkedArray) -> list:
               or pa.types.is_decimal(typ)):
         raise Declined(f"reading a {typ} value")
     return col.to_pylist()
+
+
+#: Spark types whose internal value is the one Arrow's ``to_pylist`` gives
+_AS_IS = (T.NullType, T.StringType, T.BooleanType, T.ByteType, T.ShortType,
+          T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
+          T.DecimalType)
+
+
+def _to_internal(dtype: T.DataType, binary):
+    """The function from a value of a ``dtype`` column as Arrow's
+    ``to_pylist`` gives it to Spark's internal value (the one the JVM
+    sends to classic collect), or None where the two are the same;
+    ``binary()`` gives the one for binary values. Raises ``Declined``
+    for a type without one."""
+    if isinstance(dtype, _AS_IS):
+        return None
+    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        return dtype.toInternal
+    if isinstance(dtype, T.BinaryType):
+        return binary()
+    if isinstance(dtype, T.ArrayType):
+        conv = _to_internal(dtype.elementType, binary)
+        if conv is None:
+            return None
+        return lambda v: None if v is None else [conv(x) for x in v]
+    if isinstance(dtype, T.MapType) and isinstance(dtype.keyType, (
+            *_AS_IS, T.DateType, T.TimestampType, T.TimestampNTZType)):
+        key = _to_internal(dtype.keyType, binary) or (lambda k: k)
+        val = _to_internal(dtype.valueType, binary) or (lambda x: x)
+        return lambda v: None if v is None else {
+            key(k): val(x) for k, x in v}
+    if isinstance(dtype, T.StructType) and len(set(dtype.names)) == len(
+            dtype.names):
+        convs = [(f.name, _to_internal(f.dataType, binary) or (lambda x: x))
+                 for f in dtype.fields]
+        return lambda v: None if v is None else tuple(
+            conv(v[name]) for name, conv in convs)
+    raise Declined(f"collecting a {dtype.simpleString()} column")
+
+
+def _column_internal(col: pa.ChunkedArray, dtype: T.DataType,
+                     binary) -> list:
+    """A page column's values as Spark's internal values, where its Arrow
+    type is the one ``createDataFrame`` sends for ``dtype`` (up to large
+    string and binary offsets); raises ``Declined`` otherwise."""
+    conv = _to_internal(dtype, binary)
+    if col.type not in (to_arrow_type(dtype),
+                        to_arrow_type(dtype, prefers_large_types=True)):
+        raise Declined(f"a {col.type} column typed {dtype.simpleString()}")
+    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        return _internal(col)
+    values = col.to_pylist()
+    return values if conv is None else [conv(v) for v in values]
 
 
 def arrow_read(rel: ArrowRelation, model: Model, item_id: Any,

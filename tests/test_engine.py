@@ -630,6 +630,138 @@ def test_held_relations_answer_without_spark_jobs(spark, tmp_path):
         assert hit == df.filter(df[m.id_field] == rid).collect()[0].asDict()
 
 
+def _typed(value):
+    """A collected value with the Python type of every part, in a form
+    ``==`` compares exactly: a float by ``repr`` (NaN equal to NaN,
+    -0.0 apart from 0.0), a Row with its field names, a dict in key
+    order."""
+    from pyspark.sql import Row
+    if isinstance(value, float):
+        return "float", repr(value)
+    if isinstance(value, Row):
+        return "Row", tuple(value.__fields__), [_typed(v) for v in value]
+    if isinstance(value, dict):
+        return "dict", sorted((repr(_typed(k)), _typed(v))
+                              for k, v in value.items())
+    if isinstance(value, (list, tuple)):
+        return type(value).__name__, [_typed(v) for v in value]
+    return type(value).__name__, value
+
+
+_ALL_TYPES = ("tid long, s string, b byte, sh short, i int, f float, "
+              "d double, bo boolean, dec decimal(12,3), dt date, "
+              "ts timestamp, ntz timestamp_ntz, bin binary, "
+              "arr array<timestamp>, m map<string,date>, "
+              "st struct<x: int, y: binary, z: array<string>>")
+
+
+def _all_types_rows():
+    import datetime as dt
+    from decimal import Decimal
+    return [
+        (1, "é", 1, -2, 3, 1.1, float("nan"), True, Decimal("1.500"),
+         dt.date(1969, 12, 31), dt.datetime(2024, 3, 10, 2, 30, 0, 5),
+         dt.datetime(1900, 1, 1, 0, 0, 0, 7), b"\x00ab",
+         [dt.datetime(2024, 1, 1), None], {"k": dt.date(2020, 2, 29),
+                                           "n": None},
+         (1, b"x", ["a", None])),
+        (2,) + (None,) * 15,
+        (3, "", -128, 32767, -2 ** 31, float("-inf"), -0.0, False,
+         Decimal("0.000"), dt.date(1, 1, 1), dt.datetime(1, 1, 2),
+         dt.datetime(9999, 12, 31, 23, 59, 59, 999999), b"", [], {},
+         (None, None, None)),
+        (4, "x", 0, 0, 0, 0.0, 0.0, None, Decimal("-123456789.123"),
+         dt.date(2024, 6, 1), dt.datetime(2024, 10, 27, 2, 30),
+         dt.datetime(2024, 10, 27, 2, 30), b"\xff", [None], {"a": None},
+         None),
+    ]
+
+
+def _answers(df) -> tuple:
+    return ([_typed(r) for r in df.collect()], df.count(), df.schema,
+            df.columns)
+
+
+def test_held_page_collects_as_its_local_relation(spark, tmp_path):
+    """A held list's page, carrying every atomic type, nulls, NaN and
+    ±0.0, arrays, maps and structs, answers ``collect()``, ``count()``,
+    ``schema`` and ``columns`` as the JVM LocalRelation it stands for
+    does, each value's Python type included; so does a page whose
+    timestamps Arrow holds without a zone (``createDataFrame`` reads
+    them in the session zone, so the JVM collects that column). Under
+    the UTC and a non-UTC session zone, and with binary values collected
+    as bytes and as bytearray."""
+    import pyarrow as pa
+
+    from pyspark.sql import types as T
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from servihabitat_etl_spyke_spark.plans.listquery import ArrowPage
+    spark.createDataFrame(_all_types_rows(), _ALL_TYPES) \
+        .write.parquet(str(tmp_path / "typ_t.parquet"))
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("typ_t", FieldSpec("tid", is_id=True),
+                           *(FieldSpec(c.split()[0])
+                             for c in _ALL_TYPES.split(", ")[1:])))
+    naive = pa.table({"ts": pa.array([0, 1_700_000_000_123_456, None],
+                                     pa.timestamp("us"))})
+    conf = spark.conf
+    try:
+        for zone, as_bytes in (("UTC", "true"),
+                               ("America/Los_Angeles", "false")):
+            conf.set("spark.sql.session.timeZone", zone)
+            conf.set("spark.sql.execution.pyspark.binaryAsBytes", as_bytes)
+            pages = [e.list("typ_t", all_rows=True),
+                     e.list("typ_t", order_by="ts", order_direction="desc",
+                            items_per_page=2, page=1),
+                     ArrowPage(spark, naive, T.StructType.fromDDL(
+                         "ts timestamp"))]
+            for page in pages:
+                assert isinstance(page, ArrowPage)
+                got = _answers(page)
+                jvm = ClassicDataFrame(page._jdf, spark)
+                assert got == _answers(jvm), (zone, page.columns)
+            assert len(pages[0].collect()) == 4
+            assert [r.tid for r in pages[1].collect()] == [3, 2]
+    finally:
+        conf.unset("spark.sql.session.timeZone")
+        conf.unset("spark.sql.execution.pyspark.binaryAsBytes")
+
+
+def test_held_page_collects_without_the_jvm(spark, tmp_path):
+    """A held list's ``collect()``, ``count()``, ``schema`` and
+    ``columns`` build no JVM plan; any other use builds it once and
+    answers as the LocalRelation of the same rows does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+    pq.write_table(pa.table({"hid": [3, 1, 2], "v": ["c", "a", None]}),
+                   str(tmp_path / "held_t.parquet"))
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("held_t", FieldSpec("hid", is_id=True),
+                           FieldSpec("v"), default_order_by="hid"))
+    e.create_model({"name": "rows_t", "keys": {
+        "rid": {"modifiers": [{"name": "id"}]}, "v": {}}},
+        data=[{"rid": "b", "v": "x"}, {"rid": "a", "v": None}])
+    for name in ("held_t", "rows_t"):
+        page = e.list(name)
+        with _spark_jobs(spark) as jobs:
+            rows, n = page.collect(), page.count()
+            assert (page.columns, page.schema.names) == (
+                [name[0] + "id", "v"], [name[0] + "id", "v"])
+        assert jobs == [] and "_jdf" not in vars(page), name
+        assert n == len(rows) == 3 - (name == "rows_t")
+        plain = spark.createDataFrame(page._table, page.schema)
+        assert page.filter(F.col("v").isNotNull()).collect() == \
+            plain.filter(F.col("v").isNotNull()).collect()
+        jdf = vars(page)["_jdf"]
+        assert page.toPandas().equals(plain.toPandas())
+        assert page._jdf is jdf
+        assert (rows, page.schema, page.columns) == (
+            plain.collect(), plain.schema, plain.columns)
+
+
 _DECLINED = {
     # P1 across families on a double column: its cast to string is Java's
     "string_coercion": ({"filter": {"d": "1.5"}}, [1]),
@@ -780,23 +912,26 @@ _GROUPED = ("SELECT grp, count(*) AS n, max(v) AS top FROM {t} "
 
 def test_grouped_sql_over_one_partition_tables_runs_one_job(spark,
                                                             tmp_path):
-    """Grouped and ordered SQL over a held relation that Spark reads as
-    one partition (a single-file parquet table, a row-held runtime model)
-    plans no exchange and runs exactly one Spark job, where a plan with
-    an exchange before the aggregate and the sort runs one per stage."""
+    """Grouped and ordered SQL over a held relation (a single-file
+    parquet table, which Spark reads as one partition; a row-held
+    runtime model of 200 rows, whose local relation this several-core
+    session reads as several) plans no exchange and runs exactly one
+    Spark job, where a plan with an exchange before the aggregate and
+    the sort runs one per stage."""
     e = _one_partition_tables(spark, tmp_path)
-    # one row: a row-held model's local relation is read as
-    # min(rows, cores) partitions, and this session has several cores
     e.create_model({"name": "sq_rows", "keys": {
         "id": {"type": "number", "params": ["int"],
                "modifiers": [{"name": "id"}]},
         "grp": {"type": "string"}, "v": {"type": "number",
                                          "params": ["int"]}}},
-        data=[{"id": 0, "grp": "g0", "v": 5}])
+        data=[{"id": i, "grp": f"g{i % 4}", "v": (i * 37) % 11}
+              for i in range(200)])
     e.table("sq_a")             # the load and its footer job come first
     e.table("sq_rows").createOrReplaceTempView("plain_rows")
+    assert e.table("sq_rows").rdd.getNumPartitions() > 1
     for name, plain, mod in (("sq_a", "plain_a", 2), ("sq_a", "plain_a", 3),
-                             ("sq_rows", "plain_rows", 1)):
+                             ("sq_rows", "plain_rows", 1),
+                             ("sq_rows", "plain_rows", 3)):
         with _spark_jobs(spark) as jobs:
             df = e.sql(_GROUPED.format(t=name, m=mod))
             got = df.collect()

@@ -604,6 +604,27 @@ def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     assert plan.count("ArrowEvalPython") == 0, plan
 
 
+def test_knn_graph_ivf_materializes_the_index_it_builds(spark, sf_dir):
+    """knn_graph_ivf(corpus, …) materializes the index it builds before
+    the probe stream and the membership stream both read it, so the
+    graph plan evaluates no pandas UDF: the probe UDF has made its one
+    pass over the corpus (built inside the plan, it ran once per
+    reader, 3 ArrowEvalPython nodes)."""
+    from pyspark.sql import functions as F
+
+    from servihabitat_etl_spyke_spark.catalog import load_table
+    from servihabitat_etl_spyke_spark.operators import similarity as SIM
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < 400)
+    cents = SIM.kmeans_fit(emb, k=4, iters=3)
+    graph = SIM.knn_graph_ivf(emb, k=5, n_probe=2, centroids=cents)
+    plan = graph._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("simple"))
+    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+
+
 def test_ivf_index_build_is_a_pure_map(spark, sf_dir):
     """ann_ivf_index_build (r8): the index build must be a pure map
     over the corpus scan — ONE pandas-UDF eval serving both the

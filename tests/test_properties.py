@@ -426,18 +426,19 @@ _LIST_PARAMS = st.builds(
 
 
 def _plain(value):
-    """Rows, envelopes and errors in a form ``==`` compares exactly: a
-    float by ``repr`` (NaN equal to NaN, -0.0 apart from 0.0)."""
+    """Rows, envelopes and errors in a form ``==`` compares exactly, each
+    value with its Python type: a float by ``repr`` (NaN equal to NaN,
+    -0.0 apart from 0.0)."""
     if isinstance(value, float):
-        return repr(value)
+        return "float", repr(value)
     if isinstance(value, dict):
         return {k: _plain(v) for k, v in value.items()}
     if isinstance(value, (list, tuple)):
-        return [_plain(v) for v in value]
+        return type(value).__name__, [_plain(v) for v in value]
     if hasattr(value, "collect"):          # a DataFrame
-        return [value.schema.simpleString(),
-                [_plain(tuple(r)) for r in value.collect()]]
-    return value
+        return [value.schema.simpleString(), value.columns, value.count(),
+                [_plain(r) for r in value.collect()]]
+    return type(value).__name__, value
 
 
 def _outcome(fn):
