@@ -28,7 +28,7 @@ from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from .catalog import TABLES, load_table, table_path
 from .model import Model
-from .plans.listquery import (ArrowRelation, Declined, ListParams,
+from .plans.listquery import (ArrowPage, Declined, ListParams,
                               arrow_list_page, arrow_list_query, arrow_read,
                               list_page, list_query)
 from .session import get_spark
@@ -94,7 +94,7 @@ class _Held:
     driver (False when the table is over ``HOLD_MAX_BYTES``)."""
     stamp: tuple
     df: DataFrame
-    rel: ArrowRelation | bool | None = None
+    rel: ArrowPage | bool | None = None
 
 
 class Engine:
@@ -102,9 +102,9 @@ class Engine:
         self.spark = spark
         self.sf_dir = sf_dir
         self._models: dict[str, Model] = {}
-        # runtime-declared tables (create_model): name -> DataFrame, or
-        # None for a row-held model whose relation is rebuilt from its
-        # rows on the next table() call. Shadows same-named parquet —
+        # runtime-declared tables (create_model): name -> DataFrame; for
+        # a row-held model its rows as an ArrowPage, or None until the
+        # first request after a write. Shadows same-named parquet —
         # latest declaration wins, like the reference's put handler
         # overwriting an existing object schema.
         self._runtime_tables: dict[str, DataFrame | None] = {}
@@ -112,9 +112,6 @@ class Engine:
         # rows, or nothing): name -> (schema, internal rows), the store
         # that put/delete update in the driver
         self._rows: dict[str, tuple[T.StructType, list[tuple]]] = {}
-        # a row-held model's rows as an Arrow relation, built on the
-        # first request after a write
-        self._row_rels: dict[str, ArrowRelation] = {}
         # storage backend per runtime model (objectsAPI.ts:169 analog)
         self._storage: dict[str, str] = {}
         # named parameterized automations (UD1, protolib automations)
@@ -161,8 +158,8 @@ class Engine:
           sheet semantics (sources/sheets.py): every column is STRING (a
           sheet has no types), bootstrap accepts header+rows lists via
           ``sheet_from_rows`` (short rows pad, extra cells drop), and
-          ``put()`` routes through the keyed update-else-append
-          ``sheet_upsert``. The declared keys still govern list-view
+          ``put()`` is the same keyed update-else-append over string
+          values. The declared keys still govern list-view
           masking / search / paging — the string-coerced list-query
           contract (P1) is storage-agnostic.
         """
@@ -232,7 +229,6 @@ class Engine:
         """Set a runtime model's store: a DataFrame (bind_to, DataFrame
         bootstrap), or (schema, internal rows) held in the driver."""
         self._runtime_tables[name] = df
-        self._row_rels.pop(name, None)
         if rows is None:
             self._rows.pop(name, None)
         else:
@@ -256,8 +252,8 @@ class Engine:
 
         A model declared from rows keeps them in the driver: the replace
         runs there and no Spark job runs, so a write costs the same
-        whether or not a list follows it; the next ``table()`` call builds
-        one local relation from the new rows. A ``bind_to`` or
+        whether or not a list follows it; the next request holds the new
+        rows as one ``ArrowPage``. A ``bind_to`` or
         DataFrame-declared model stays lazy: the write is the
         ``sheet_upsert`` anti-join union over its current plan, which
         grows by one level per write."""
@@ -299,8 +295,10 @@ class Engine:
 
         Over a relation held in the driver (``_relation``) the read is
         evaluated in the driver when called, over that snapshot, with no
-        Spark job (``listquery.arrow_read``); a read it declines runs on
-        Spark."""
+        Spark job: the row is collected as a one-row ``ArrowPage``, by
+        the conversion a held page's ``collect()`` uses
+        (``listquery.arrow_read``). A relation without the id column is
+        read on Spark."""
         from .plans.listquery import _eq_predicate
         m = self._models[model_name]
 
@@ -354,11 +352,12 @@ class Engine:
         """The relation the Engine holds for ``name``: the runtime model's
         current version, else the parquet table, resolved once.
 
-        A row-held runtime model is built into one Arrow-backed local
-        relation on the first call after a write, and that relation is
-        returned until the next write. ``list``, ``page`` and ``read``
-        need no DataFrame for it: they evaluate the held Arrow rows when
-        called (``_relation``).
+        A row-held runtime model is its ``_relation``: the ``ArrowPage``
+        that ``list``, ``page`` and ``read`` evaluate, built on the first
+        request after a write and returned until the next one. Its
+        ``collect()`` and ``count()`` are answered in Python; its JVM
+        plan, a LocalRelation of the rows, is built on the first other
+        use.
 
         A parquet table is loaded on first use and held, keyed by the
         inode, size and mtime of its path and, for a directory table, of
@@ -369,13 +368,10 @@ class Engine:
         does not: a writer that rewrites files in place should swap the
         table in instead (``etl.overwrite_via_tmp``). A missing path is
         not held: the load raises Spark's PATH_NOT_FOUND as before."""
+        if name in self._rows:
+            return self._relation(name)
         if name in self._runtime_tables:
-            df = self._runtime_tables[name]
-            if df is None:
-                rel = self._relation(name)
-                df = self.spark.createDataFrame(rel.table, rel.schema)
-                self._runtime_tables[name] = df
-            return df
+            return self._runtime_tables[name]
         df = self._parquet(name)
         if df is None:
             return load_table(self.spark, self.sf_dir, name)
@@ -401,13 +397,14 @@ class Engine:
         held = self._hold(name)
         return None if held is None else held.df
 
-    def _relation(self, name: str) -> ArrowRelation | None:
-        """The rows ``name`` holds in the driver, for ``list``, ``page``
-        and ``read``; None sends the request to Spark.
+    def _relation(self, name: str) -> ArrowPage | None:
+        """The ``ArrowPage`` of the rows ``name`` holds in the driver, for
+        ``list``, ``page`` and ``read``; None sends the request to Spark.
 
-        A row-held runtime model always has them (its rows live in the
-        driver). A ``bind_to`` or DataFrame-declared model never does. A
-        parquet table has them when it takes at most ``HOLD_MAX_BYTES`` as
+        A row-held runtime model always has one (its rows live in the
+        driver), built from its rows on the first request after a write.
+        A ``bind_to`` or DataFrame-declared model never does. A
+        parquet table has one when it takes at most ``HOLD_MAX_BYTES`` as
         Arrow: the held DataFrame is collected with ``toArrow()`` on the
         first request, one Spark job, and kept under the same ``_stamp``
         key, so a rewrite reloads both. A parquet file is encoded and
@@ -420,13 +417,12 @@ class Engine:
         if name in self._runtime_tables:
             if name not in self._rows:
                 return None
-            rel = self._row_rels.get(name)
-            if rel is None:
+            page = self._runtime_tables[name]
+            if page is None:
                 schema, rows = self._rows[name]
-                rel = ArrowRelation(self.spark, arrow_table(rows, schema),
-                                    schema)
-                self._row_rels[name] = rel
-            return rel
+                page = ArrowPage(self.spark, arrow_table(rows, schema), schema)
+                self._runtime_tables[name] = page
+            return page
         held = self._hold(name)
         if held is None:
             return None
@@ -435,8 +431,7 @@ class Engine:
             if sum(size for _, _, size, _ in held.stamp) <= HOLD_MAX_BYTES:
                 table = held.df.toArrow()
                 if table.nbytes <= HOLD_MAX_BYTES:
-                    held.rel = ArrowRelation(self.spark, table,
-                                             held.df.schema)
+                    held.rel = ArrowPage(self.spark, table, held.df.schema)
         return held.rel or None
 
     def _answer(self, name: str, on_arrow, on_spark):

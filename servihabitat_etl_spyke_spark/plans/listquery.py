@@ -30,13 +30,14 @@ into a TakeOrderedAndProject when the page is small (no global sort
 materialization); deep pages fall back to a single shuffle. No step of the
 Spark plan collects to the driver.
 
-Driver-side twin: a relation small enough to be held in the driver as one
-Arrow table (``ArrowRelation``, which ``engine.Engine`` holds) is answered
-by ``arrow_list_query`` / ``arrow_list_page`` / ``arrow_read`` with
-``pyarrow.compute``, and the page comes back as an ``ArrowPage``: a
-DataFrame whose ``collect()``, ``count()``, ``schema`` and ``columns``
-are answered in Python, with no Spark job, and whose JVM plan (a
-LocalRelation of the page) is built only for any other use. Each plan
+Driver-side twin: a relation small enough to be held in the driver is an
+``ArrowPage`` (which ``engine.Engine`` holds): a DataFrame over one Arrow
+table whose ``collect()``, ``count()``, ``schema`` and ``columns`` are
+answered in Python, with no Spark job, and whose JVM plan (a
+LocalRelation of the rows) is built only for any other use.
+``arrow_list_query`` / ``arrow_list_page`` / ``arrow_read`` answer a
+request over it with ``pyarrow.compute``, and the page or row they cut
+from it is an ``ArrowPage`` too, collected by the same conversion. Each plan
 step but P5 has its Arrow twin beside it, mirroring it step for step:
 Spark's null order (nulls first ascending, last descending), NaN above
 every number and equal to itself, -0.0 equal to 0.0, binary string
@@ -56,8 +57,7 @@ the caller runs the Spark plan:
 - a sort on a column that is not string, integral, floating, boolean,
   date or timestamp; group options on a column that is not string,
   integral, boolean, date or timestamp;
-- a point read whose id column is missing or whose projected row holds a
-  value outside those types or decimal.
+- a point read whose id column is missing.
 """
 
 from __future__ import annotations
@@ -134,8 +134,9 @@ class Declined(Exception):
 
 
 class ArrowPage(ClassicDataFrame):
-    """A result evaluated in the driver: a classic DataFrame holding its
-    rows as an Arrow table, with their Spark schema.
+    """A relation held in the driver, or a page or row cut from one: a
+    classic DataFrame holding its rows as an Arrow table, with their
+    Spark schema.
 
     ``collect()``, ``count()``, ``schema`` and ``columns`` are answered
     from the table in Python. Every other use goes through the JVM plan
@@ -179,15 +180,15 @@ class ArrowPage(ClassicDataFrame):
         return self._table.num_rows
 
     def collect(self) -> list[T.Row]:
-        fields = self._page_schema.fields
-        if not fields:          # the zip below would drop every row
-            return super().collect()
         try:
             cols = [_column_internal(col, f.dataType, self._binary)
-                    for col, f in zip(self._table.columns, fields)]
+                    for col, f in zip(self._table.columns,
+                                      self._page_schema.fields)]
         except Declined:
             return super().collect()
-        return [self._page_schema.fromInternal(row) for row in zip(*cols)]
+        # with no column, zip would drop every row
+        rows = zip(*cols) if cols else [()] * self._table.num_rows
+        return [self._page_schema.fromInternal(row) for row in rows]
 
     def _binary(self):
         """Classic collect's binary values: ``bytes``, or ``bytearray``
@@ -197,21 +198,6 @@ class ArrowPage(ClassicDataFrame):
                 "true").lower() == "true":
             return None
         return lambda v: None if v is None else bytearray(v)
-
-
-@dataclass(frozen=True)
-class ArrowRelation:
-    """A relation held in the driver: its rows as one Arrow table, and its
-    Spark schema, which types the pages cut from it and ``arrow_read``'s
-    values."""
-    spark: SparkSession
-    table: pa.Table
-    schema: T.StructType
-
-    def wrap(self, table: pa.Table, fields: list[T.StructField]) -> DataFrame:
-        """``table`` as an ``ArrowPage``: its collect is answered in
-        Python, with no Spark job."""
-        return ArrowPage(self.spark, table, T.StructType(fields))
 
 
 def _is_string(typ: pa.DataType) -> bool:
@@ -558,12 +544,12 @@ def group_options(df: DataFrame, key: str, search: str | None = None,
     return out.orderBy("option").limit(limit)
 
 
-def _arrow_group_options(rel: ArrowRelation, key: str,
+def _arrow_group_options(rel: ArrowPage, key: str,
                          search: str | None = None,
                          limit: int = 100) -> DataFrame:
     """Arrow twin of ``group_options``. Floating columns decline: Spark's
     distinct folds -0.0 into 0.0."""
-    col = rel.table[key]
+    col = rel._table[key]
     _check_sortable(col.type)
     if pa.types.is_floating(col.type):
         raise Declined("group options on a floating column")
@@ -572,8 +558,9 @@ def _arrow_group_options(rel: ArrowRelation, key: str,
         opts = opts.filter(pc.starts_with(_lower_js(opts), search.lower()))
     order = _sort_indices(_sort_keys(opts, "ascending"))[:limit]
     f = rel.schema[key]
-    return rel.wrap(pa.table({"option": opts.take(order)}),
-                    [T.StructField("option", f.dataType, f.nullable)])
+    return ArrowPage(rel.sparkSession, pa.table({"option": opts.take(order)}),
+                     T.StructType([T.StructField("option", f.dataType,
+                                                 f.nullable)]))
 
 
 def _filtered(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
@@ -602,7 +589,7 @@ def _arrow_filtered(table: pa.Table, model: Model,
     return table
 
 
-def _arrow_page(rel: ArrowRelation, table: pa.Table, model: Model,
+def _arrow_page(rel: ArrowPage, table: pa.Table, model: Model,
                 params: ListParams) -> DataFrame:
     """Arrow twin of ``_page``: order, project, paginate (only the page's
     rows are taken)."""
@@ -613,8 +600,9 @@ def _arrow_page(rel: ArrowRelation, table: pa.Table, model: Model,
     if not params.all:
         n = max(1, int(params.items_per_page))
         rows = rows[max(0, int(params.page)) * n:][:n]
-    return rel.wrap(table.select(visible).take(rows),
-                    [rel.schema[c] for c in visible])
+    # take before select: a table with no column takes no rows
+    return ArrowPage(rel.sparkSession, table.take(rows).select(visible),
+                     T.StructType([rel.schema[c] for c in visible]))
 
 
 def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
@@ -634,7 +622,7 @@ def list_query(df: DataFrame, model: Model, params: ListParams) -> DataFrame:
     return _page(_filtered(df, model, params), model, params)
 
 
-def arrow_list_query(rel: ArrowRelation, model: Model,
+def arrow_list_query(rel: ArrowPage, model: Model,
                      params: ListParams) -> DataFrame:
     """``list_query`` evaluated in the driver over a held relation; the
     page is an ``ArrowPage``. Raises ``Declined`` where it cannot match
@@ -642,11 +630,13 @@ def arrow_list_query(rel: ArrowRelation, model: Model,
     if params.group:
         declared = {f.name for f in model.group_indexes()}
         if (params.group not in declared
-                or params.group not in rel.table.column_names):
-            return rel.wrap(pa.table({"option": pa.array([], pa.string())}),
-                            [T.StructField("option", T.StringType())])
+                or params.group not in rel.columns):
+            return ArrowPage(rel.sparkSession,
+                             pa.table({"option": pa.array([], pa.string())}),
+                             T.StructType([T.StructField("option",
+                                                         T.StringType())]))
         return _arrow_group_options(rel, params.group, params.group_search)
-    return _arrow_page(rel, _arrow_filtered(rel.table, model, params), model,
+    return _arrow_page(rel, _arrow_filtered(rel._table, model, params), model,
                        params)
 
 
@@ -666,11 +656,11 @@ def list_page(df: DataFrame, model: Model, params: ListParams) -> dict[str, Any]
     }
 
 
-def arrow_list_page(rel: ArrowRelation, model: Model,
+def arrow_list_page(rel: ArrowPage, model: Model,
                     params: ListParams) -> dict[str, Any]:
     """``list_page`` evaluated in the driver over a held relation; raises
     ``Declined`` as ``arrow_list_query`` does."""
-    filtered = _arrow_filtered(rel.table, model, params)
+    filtered = _arrow_filtered(rel._table, model, params)
     total = filtered.num_rows
     n = max(1, int(params.items_per_page))
     return {
@@ -680,21 +670,6 @@ def arrow_list_page(rel: ArrowRelation, model: Model,
         "page": params.page,
         "pages": -(-total // n),
     }
-
-
-def _internal(col: pa.ChunkedArray) -> list:
-    """A column's values as Spark's internal Python values (dates as epoch
-    days, timestamps as epoch micros) for ``StructType.fromInternal``."""
-    typ = col.type
-    if pa.types.is_date32(typ):
-        col = pc.cast(col, pa.int32())
-    elif pa.types.is_timestamp(typ):
-        col = pc.cast(pc.cast(col, pa.timestamp("us", typ.tz)), pa.int64())
-    elif not (_is_string(typ) or _is_integral(typ)
-              or pa.types.is_floating(typ) or pa.types.is_boolean(typ)
-              or pa.types.is_decimal(typ)):
-        raise Declined(f"reading a {typ} value")
-    return col.to_pylist()
 
 
 #: Spark types whose internal value is the one Arrow's ``to_pylist`` gives
@@ -739,29 +714,32 @@ def _column_internal(col: pa.ChunkedArray, dtype: T.DataType,
                      binary) -> list:
     """A page column's values as Spark's internal values, where its Arrow
     type is the one ``createDataFrame`` sends for ``dtype`` (up to large
-    string and binary offsets); raises ``Declined`` otherwise."""
+    string and binary offsets); raises ``Declined`` otherwise. A date
+    column casts to its epoch days and a timestamp (microseconds) column
+    to its epoch micros, which are their internal values."""
     conv = _to_internal(dtype, binary)
-    if col.type not in (to_arrow_type(dtype),
-                        to_arrow_type(dtype, prefers_large_types=True)):
+    if (col.type != to_arrow_type(dtype)
+            and col.type != to_arrow_type(dtype, prefers_large_types=True)):
         raise Declined(f"a {col.type} column typed {dtype.simpleString()}")
     if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-        return _internal(col)
+        return pc.cast(col, pa.int32() if isinstance(dtype, T.DateType)
+                       else pa.int64()).to_pylist()
     values = col.to_pylist()
     return values if conv is None else [conv(v) for v in values]
 
 
-def arrow_read(rel: ArrowRelation, model: Model, item_id: Any,
+def arrow_read(rel: ArrowPage, model: Model, item_id: Any,
                view: str = "read") -> dict[str, Any] | None:
     """The first row whose id matches ``item_id`` by ``_eq_predicate``,
     projected to ``view`` as a dict equal to Spark's ``Row.asDict()``, or
-    None; raises ``Declined`` as ``arrow_list_query`` does."""
-    if model.id_field not in rel.table.column_names:
+    None; raises ``Declined`` as ``arrow_list_query`` does. The row is
+    collected as a one-row ``ArrowPage``."""
+    table = rel._table
+    if model.id_field not in table.column_names:
         raise Declined("point read without an id column")
-    cols = model.visible_columns(rel.table.column_names, view)
-    hit = rel.table.filter(_eq_mask(rel.table[model.id_field], item_id))
-    hit = hit.select(cols).slice(0, 1)
+    cols = model.visible_columns(table.column_names, view)
+    hit = table.filter(_eq_mask(table[model.id_field], item_id)).slice(0, 1)
     if hit.num_rows == 0:
         return None
-    schema = T.StructType([rel.schema[c] for c in cols])
-    return schema.fromInternal(
-        tuple(_internal(hit[c])[0] for c in cols)).asDict()
+    return ArrowPage(rel.sparkSession, hit.select(cols), T.StructType(
+        [rel.schema[c] for c in cols])).collect()[0].asDict()

@@ -6,8 +6,11 @@ The reference reads range ``A:Z`` and zips header+rows into objects
 ``''``; its ``put`` finds the row by id and updates in place, else appends
 (``:198-238``). Spark-first: a sheet is a small dimension — ingest via
 ``createDataFrame`` (or CSV-with-header for file-backed sheets) and
-broadcast it into joins; the keyed put is the same anti-join upsert the
-DynamoDB sink uses.
+broadcast it into joins. ``sheet_upsert``, the keyed put as an anti-join
+union, serves the lazy runtime models (``Engine.create_model`` with
+``bind_to`` or a DataFrame) and the ``sheets_keyed_upsert`` registry
+query; the ETL sink merges with ``etl.keyed_upsert``'s one keyed
+aggregate instead.
 """
 
 from __future__ import annotations
@@ -96,8 +99,11 @@ def read_sheet(spark: SparkSession, path: str) -> DataFrame:
 def sheet_upsert(sheet: DataFrame, updates: DataFrame,
                  key: str) -> DataFrame:
     """S9 keyed put, batched: rows whose key exists are replaced in place,
-    new keys are appended — new-version-wins anti-join union (same shape
-    as the DynamoDB S6 upsert; with Delta this is one MERGE INTO)."""
+    new keys are appended — new-version-wins anti-join union (with Delta
+    this is one MERGE INTO). It is the write of a lazy (``bind_to`` or
+    DataFrame-declared) runtime model and of the ``sheets_keyed_upsert``
+    registry query; the ETL sink's merge is ``etl.keyed_upsert``, one
+    keyed aggregate, not this join."""
     kept = sheet.join(updates.select(key), on=key, how="left_anti")
     return kept.unionByName(updates.select(sheet.columns))
 

@@ -78,7 +78,7 @@ class ListPath:
     def _run(self, spark_fn, arrow_fn, df, model, params):
         if self.name == "spark":
             return spark_fn(df, model, params)
-        rel = LQ.ArrowRelation(df.sparkSession, df.toArrow(), df.schema)
+        rel = LQ.ArrowPage(df.sparkSession, df.toArrow(), df.schema)
         try:
             return arrow_fn(rel, model, params)
         except LQ.Declined:
